@@ -1395,20 +1395,17 @@ def q_build_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("k_applied", F.col("k_applied")),
         ("eps_applied", F.col("eps_applied_r")),
     ])
-    # r11: the diffusion physical plan the energy build would run on
-    # THIS corpus shape — tier, message-value bytes, feature-chunk
-    # count (the fp32/chunked at-scale behavior must be diagnostics-
-    # visible, r10 verdict). Pure arithmetic over (N, F, E_sym) +
-    # env-backed budgets; the oracle replays the same formulas.
+    # r11: the diffusion tier the energy build would run on THIS
+    # corpus shape (driver 0 / distributed spool 1). Pure arithmetic
+    # over (N, F) + the env-backed ceiling; the oracle replays it.
     from pyarrowspace_spark.operators import energy as EN
 
     nf = _items(spark, sf_dir).select(
         F.size("features").alias("nf")).first()["nf"]
-    plan = EN.diffuse_plan(
-        int(gsrow["n_items"]), int(nf), 2 * int(gsrow["n_edges"]))
+    plan = EN.diffuse_plan(int(gsrow["n_items"]), int(nf))
     dp = spark.createDataFrame(
-        [("diffuse_plan", m, float(plan[m]))
-         for m in ("distributed_tier", "msg_val_bytes", "feat_chunks")],
+        [("diffuse_plan", "distributed_tier",
+          float(plan["distributed_tier"]))],
         "section string, metric string, value double")
     # r12: the LSH grouped-build physical plan on THIS corpus shape —
     # auto bit width / band count and the env-budgeted group count +
@@ -1615,10 +1612,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_sampling": q_corpus_sampling,
     }
     names = tuple(out)
-    assert names[: len(DRIVER_WINDOW_QUERIES)] == DRIVER_WINDOW_QUERIES, (
-        "driver 50-entry correctness window displaced: "
-        f"{names[:len(DRIVER_WINDOW_QUERIES)]}"
-    )
+    # a real check, not an assert: `python -O` strips asserts
+    if names[: len(DRIVER_WINDOW_QUERIES)] != DRIVER_WINDOW_QUERIES:
+        raise RuntimeError(
+            "driver 50-entry correctness window displaced: "
+            f"{names[:len(DRIVER_WINDOW_QUERIES)]}")
     return out
 
 
@@ -3525,18 +3523,13 @@ FROM stats GROUP BY lang"""
     _lbl_tau = ("CASE " + " ".join(
         f"WHEN tau = {float(_t)!r} THEN '{_t:g}'" for _t in TAU_SWEEP)
         + " END")
-    # diffuse_plan twin constants: the same env-backed budgets
+    # diffuse_plan twin constant: the env-backed tier ceiling
     # energy.diffuse_plan reads, resolved at oracle-build time (the
     # driver compares Spark and SQL in ONE process, so both sides see
     # the same environment).
     from pyarrowspace_spark.operators import energy as _EN
 
     _dp_ceil = int(_EN.DIFFUSE_BROADCAST_MAX_BYTES)
-    _dp_msg = 4 if os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_MSG_DTYPE", "float32").lower() in (
-        "float32", "fp32", "f32") else 8
-    _dp_budget = int(os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES", str(16 * 1024**3)))
     # lsh_plan twin constants (same resolution rule as diffuse_plan's:
     # env-backed budgets read at oracle-build time, design constants
     # embedded so the SQL replays knn.lsh_plan exactly)
@@ -3589,16 +3582,9 @@ SELECT 'auto_params',
                k::DOUBLE, eps_r])
 FROM ({AUTO_PARAMS_SQL})
 UNION ALL
-SELECT 'diffuse_plan',
-       unnest(['distributed_tier', 'msg_val_bytes', 'feat_chunks']),
-       unnest([
-         CASE WHEN n_items * nf * 8 <= {_dp_ceil} THEN 0.0 ELSE 1.0 END,
-         CASE WHEN n_items * nf * 8 <= {_dp_ceil} THEN 8.0
-              ELSE {_dp_msg}.0 END,
-         CASE WHEN n_items * nf * 8 <= {_dp_ceil} THEN 1.0
-              ELSE greatest(1.0, ceil(
-                   (n_edges * 2 * nf * {_dp_msg})::DOUBLE
-                   / {_dp_budget})) END])
+SELECT 'diffuse_plan', 'distributed_tier',
+       (CASE WHEN n_items * nf * 8 <= {_dp_ceil} THEN 0.0
+             ELSE 1.0 END)::DOUBLE
 FROM (SELECT g.*, (SELECT len(embedding) FROM embeddings LIMIT 1) AS nf
       FROM ({_gs_sql}) g)
 UNION ALL

@@ -456,9 +456,8 @@ def main() -> None:
 
             # Distributed diffusion tier (the beyond-4GiB / 100 TB
             # path, which the driver-tier corpora never exercise):
-            # force it for ONE step so the artifact carries a measured
-            # per-step cost for the array-message dataflow, not just
-            # the driver-tier loop.
+            # force it so the artifact carries a measured per-step
+            # cost for the spool plan, not just the driver-tier loop.
             from pyarrowspace_spark.operators import energy as energy_mod
 
             ceil0 = energy_mod.DIFFUSE_BROADCAST_MAX_BYTES
@@ -466,15 +465,9 @@ def main() -> None:
             try:
                 # r7 verdict #3: does step 2+ amortize? ONE instrumented
                 # 2-step run yields both numbers (step 1 pays the
-                # loop-invariant symmetrize+degree materialization; the
-                # step-2 entry is the honest per-step marginal at
-                # scale). The first r8 attempt ran a 1-step job THEN a
-                # 2-step job — three step-shuffles of E·F array
-                # messages (~29 GB each at 313k) whose files all
-                # coexisted, filling the disk; the instrumented loop
-                # eager-checkpoints + GCs between steps so peak scratch
-                # is ~one step. The JVM GC first reclaims the earlier
-                # phases' dead shuffle files too.
+                # loop-invariant edge materialization; the step-2 entry
+                # is the honest per-step marginal at scale). The JVM GC
+                # first reclaims the earlier phases' dead shuffle files.
                 spark.sparkContext._jvm.System.gc()
                 step_secs: list[float] = []
                 timed("diffuse_distributed_2step_at_scale",
@@ -490,15 +483,9 @@ def main() -> None:
                     # extra["diffuse_step1_sec"] here)
                     extra["diffuse_step1_sec"] = step_secs[0]
                     extra["diffuse_step2_marginal_sec"] = step_secs[1]
-                # artifact self-description: r10 defaults the
-                # distributed tier to fp32 edge messages, so cross-
-                # round step-time comparisons need the dtype pinned
-                extra["diffuse_msg_dtype"] = os.environ.get(
-                    "SPARK_GRAFT_DIFFUSE_MSG_DTYPE", "float32")
                 # r14 (VERDICT r13 item 3): record WHICH physical plan
-                # the distributed tier ran (spool vs legacy shuffle) —
-                # the spool plan's bench-contract speedup claim needs
-                # the artifact to say the spool actually engaged.
+                # the distributed tier ran, so the artifact says the
+                # spool actually engaged.
                 info = getattr(energy_mod, "_LAST_DIFFUSE_INFO", None) or {}
                 extra["diffuse_plan"] = info.get("plan", info.get("tier"))
                 extra["diffuse_tier"] = info.get("tier")

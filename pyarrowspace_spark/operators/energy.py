@@ -3,10 +3,13 @@ src/lib.rs:303-376; stage list doc src/lib.rs:305-318).
 
 Stages (Spark-first):
   1. λτ-graph (shared with the standard build).
-  2. Heat diffusion G12: X ← X − η·L·X for `steps` iterations.
-     Driver tier (chunked numpy segment-sum) while X fits; array-
-     message dataflow tier beyond, `localCheckpoint` per step capping
-     lineage (SURVEY §7.3 risk 1). See `diffuse` for the tier split.
+  2. Heat diffusion G12: X ← X − η·L·X for `steps` iterations, exact
+     fp64. Driver tier (chunked numpy segment-sum) while X fits; beyond
+     it one distributed plan: an fp64 iterate spool on worker-visible
+     scratch and one exchange-free gather job per step, written by
+     tasks on `local*` masters and streamed through parquet on
+     multi-host ones. No scratch, too little scratch or duplicate ids
+     raise. See `diffuse` for the tier split.
   3. Edge trim G13a: drop edges below the `trim_quantile` weight
      quantile.
   4. Optical-token compression G14: seeded KMeans to ~optical_tokens
@@ -68,97 +71,35 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 # does). The first formulation of this operator exploded features into
 # (node, fi, v) rows and joined them to the edges — an E x F-row
 # shuffle per step, ~90 GB/step at N=313k, F=384, which filled the
-# bench host's disk. Beyond the ceiling, `diffusion_step` shuffles E
-# array-carrying rows per step instead.
+# bench host's disk. Beyond the ceiling `_diffuse_spool` runs: one
+# exchange-free gather job per step over a shared fp64 iterate spool.
 DIFFUSE_BROADCAST_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_DIFFUSE_BCAST_MAX", str(4 * 1024**3))
 )
 
-# Set by `diffuse` on each invocation: the chosen tier, feature-chunk
-# count, symmetrized edge count, and message dtype. Instrumentation
+# Set by `diffuse` on each invocation: the chosen tier, the spool
+# write mode and the symmetrized edge count. Instrumentation
 # breadcrumb for the measurement harness; `build_energy` copies it
 # into `EnergyIndex.diffusion_info` so an index self-describes the
-# step that produced it (r10 verdict: the fp32/chunked behavior must
-# be visible to callers, not only module globals).
+# step that produced it.
 _LAST_DIFFUSE_INFO: dict | None = None
 
 
-def diffuse_plan(n_items: int, nf: int, n_sym_edges: int,
-                 msg_dtype: str | None = None) -> dict:
-    """Self-description of the physical plan `diffuse` chooses for a
-    corpus of this shape — the size-based tier rule, the message dtype
-    the distributed tier would ship, and its feature-chunk count.
+def diffuse_plan(n_items: int, nf: int) -> dict:
+    """Self-description of the tier `diffuse` chooses for a corpus of
+    this shape: the size-based rule N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES
+    → driver tier (0), else the distributed spool tier (1).
 
-    Pure arithmetic over (N, F, E_sym) + the module's env-backed
-    budgets, so the DuckDB oracle can replay it row-for-row
-    (`build_diagnostics` section 'diffuse_plan'). Runtime eligibility
-    (driver maxResultSize / scratch handoff) can additionally demote
-    the driver tier on constrained sessions; the authoritative record
-    of what a build actually ran is `EnergyIndex.diffusion_info`.
+    Pure arithmetic over (N, F) and the env-backed ceiling, so the
+    DuckDB oracle can replay it row-for-row (`build_diagnostics`
+    section 'diffuse_plan'). Runtime eligibility (driver maxResultSize
+    / scratch handoff) can additionally demote the driver tier on
+    constrained sessions; the authoritative record of what a build
+    actually ran is `EnergyIndex.diffusion_info`.
     """
     driver = int(n_items) * int(nf) * 8 <= DIFFUSE_BROADCAST_MAX_BYTES
-    if msg_dtype is None:
-        msg_dtype = os.environ.get(
-            "SPARK_GRAFT_DIFFUSE_MSG_DTYPE", "float32")
-    fp32 = str(msg_dtype).lower() in ("float32", "fp32", "f32")
-    # the driver tier never ships messages: always exact fp64
-    msg_bytes = 8 if driver else (4 if fp32 else 8)
-    chunk_budget = int(os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES", str(16 * 1024**3)))
-    feat_chunks = 1 if driver else max(
-        1, -(-(int(n_sym_edges) * int(nf) * msg_bytes)
-             // max(chunk_budget, 1)))
-    return {
-        "distributed_tier": 0 if driver else 1,
-        "msg_val_bytes": int(msg_bytes),
-        "feat_chunks": int(feat_chunks),
-    }
+    return {"distributed_tier": 0 if driver else 1}
 
-
-def _make_sum_kernel(fp32_msgs: bool, id_col: str):
-    """Per-destination message-sum kernel shared by the full-width and
-    feature-chunked step variants. fp32 messages stay fp32 through the
-    segment matvec (half the stack memory + 2x gemv bandwidth); the
-    fp64 path is exact.
-
-    Measured negative result (r13-opt, kept so it isn't re-tried): a
-    repartition(dst)+mapInPandas formulation — motivated by
-    FlatMapGroupsInPandas's JVM sort of its input — measured 981
-    task-sec (at the size-formula partition count; the many-way
-    exchange compresses worse, 3.50 vs 2.19 GB written) and 1660
-    task-sec (at 32 partitions; per-task Python materialization of
-    ~145 MB partitions thrashes) vs 171 task-sec for THIS shape on
-    identical persisted inputs (scripts/probe_diffuse_exchange.py).
-    The grouped-map sort is cheap at these row widths; the real cost
-    of a diffusion step sits in the update join downstream."""
-
-    def _sum_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        mdt = np.float32 if fp32_msgs else np.float64
-        M = np.stack(pdf["_xf"].to_numpy()).astype(mdt, copy=False)
-        w = pdf["weight"].to_numpy(mdt)
-        dstv = pdf["dst"].to_numpy(np.int64)
-        order = np.argsort(dstv, kind="stable")
-        dsts, starts = np.unique(dstv[order], return_index=True)
-        Ms, ws = M[order], w[order]
-        bnds = np.append(starts, len(dstv))
-        # fused matvec per segment — see _diffuse_driver for why this
-        # beats np.add.reduceat(…, axis=0) on wide C-ordered rows
-        nsum = np.empty((len(dsts), M.shape[1]))
-        for i in range(len(dsts)):
-            s, e = bnds[i], bnds[i + 1]
-            nsum[i] = ws[s:e] @ Ms[s:e]
-        return pd.DataFrame({id_col: dsts, "_nsum": list(nsum)})
-
-    return _sum_kernel
-
-
-#: Row ceiling for the narrow-shuffle diffusion plan: the iterate
-#: spool is N·F float64 on the shared scratch (twice the λ-gather /
-#: LSH spool byte class, since the iterate must stay exact fp64).
-#: Beyond it the legacy array-message plan runs. Env override:
-#: SPARK_GRAFT_DIFFUSE_SPOOL_MAX_ROWS.
-DIFFUSE_SPOOL_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_DIFFUSE_SPOOL_MAX_ROWS", str(4_000_000)))
 
 # worker-side (pid-scoped) cache of the current step's X-spool mmap —
 # same single-entry policy as knn._WORKER_U_SPOOL_CACHE: each step's
@@ -238,25 +179,20 @@ def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
 
 
 def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
-                            fp32_msgs: bool, id_col: str, feat_col: str,
+                            id_col: str, feat_col: str,
                             out_path: "str | None" = None):
-    """mapInPandas kernel for one narrow-shuffle diffusion step: the
-    partition holds ALL incoming edges of its destinations (narrow
-    (src, dst, weight) rows, hash-partitioned by dst), source rows are
-    gathered from the shared id-sorted X spool, and the kernel emits
-    the fully UPDATED destination rows
-    x' = (1 − η·deg)·x + η·Σ w·x_src — so no update join and no
-    degree aggregation exist in the plan at all (deg is the in-segment
-    fp64 weight sum; the segment holds every incoming edge).
+    """mapInPandas kernel for one diffusion step: the partition holds
+    ALL incoming edges of its destinations (narrow (src, dst, weight)
+    rows, hash-partitioned by dst), source rows are gathered from the
+    shared id-sorted X spool, and the kernel emits the fully UPDATED
+    destination rows x' = (1 − η·deg)·x + η·Σ w·x_src in fp64 — so no
+    update join and no degree aggregation exist in the plan at all
+    (deg is the in-segment weight sum; the segment holds every
+    incoming edge).
 
-    fp32_msgs reproduces the legacy message arithmetic class: gathered
-    source rows and weights are cast to float32 for the segment matvec
-    (the same IEEE rounding the legacy plan's pre-shuffle
-    cast("array<float>") applied), while x and deg stay fp64.
-
-    `out_path` (single-host masters): write the updated rows straight
-    into the pre-allocated NEXT spool at their id-sorted positions
-    (dpos is ascending — a monotonic mmap walk) and emit only a count,
+    `out_path` (task writes): write the updated rows straight into the
+    pre-allocated NEXT spool at their id-sorted positions (dpos is
+    ascending — a monotonic mmap walk) and emit only a count,
     eliminating the per-step parquet write + driver re-spool
     (measured 28 s of serial driver time per step at the bench)."""
     eta_f = float(eta)
@@ -289,13 +225,12 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
             raise RuntimeError(
                 "diffusion X spool does not cover this partition's "
                 "sources — stale spool or corpus mismatch")
-        mdt = np.float32 if fp32_msgs else np.float64
         out = np.empty((len(udst), X.shape[1]))
         for i in range(len(udst)):
             s, e = bounds[i], bounds[i + 1]
-            rows = np.asarray(X[spos[s:e]])
-            msum = w[s:e].astype(mdt, copy=False) @ rows.astype(
-                mdt, copy=False)
+            # fused per-segment matvec — see _diffuse_driver for why
+            # this beats np.add.reduceat(…, axis=0) on wide rows
+            msum = w[s:e] @ np.asarray(X[spos[s:e]])
             deg = float(w[s:e].sum())
             out[i] = ((1.0 - eta_f * deg) * np.asarray(X[dpos[i]])
                       + eta_f * msum)
@@ -345,87 +280,123 @@ def _scatter_parquet_to_spool(files: "list[str]", idc: str, fc: str,
     return total
 
 
+def _single_host_master(spark) -> bool:
+    """True on `local*` masters (local-cluster included): the driver
+    and every executor share one filesystem and one page cache, so the
+    spool plan may use the default temp dir and let tasks write the
+    spool mmaps directly. On a multi-host master mmap write coherence
+    over a shared filesystem is not guaranteed, so spools are built by
+    streaming task-written parquet on the driver instead."""
+    return spark.sparkContext.master.startswith("local")
+
+
+def _drop_scratch_dir(d: str) -> None:
+    shutil.rmtree(d, ignore_errors=True)
+    if d in matrix_mod._SCRATCH_DIRS:
+        matrix_mod._SCRATCH_DIRS.remove(d)
+
+
 def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                    steps: int, id_col: str, feat_col: str, nf: int,
-                   n: int, msg_dtype: str,
-                   step_times: "list[float] | None") -> DataFrame | None:
-    """Narrow-shuffle distributed diffusion (guide §8: shuffle keys
-    and metadata, move heavy bytes once). Where a worker-visible
-    scratch filesystem exists — the same gate and probe as the
-    λ-gather mmap tier and the narrow-shuffle LSH plan — the iterate
-    X_t lives in ONE id-sorted fp64 spool per step, the loop-invariant
-    edge list is persisted pre-partitioned by dst, and each step is a
-    single exchange-free job: gather sources from the shared mmap,
-    emit updated destination rows, re-spool them for the next step.
+                   n: int,
+                   step_times: "list[float] | None") -> DataFrame:
+    """Distributed diffusion (guide §8: shuffle keys and metadata, move
+    heavy bytes once). The iterate X_t lives in ONE id-sorted fp64
+    spool per step on a worker-visible scratch filesystem, the
+    loop-invariant edge list is persisted pre-partitioned by dst, and
+    each step is a single exchange-free job: gather sources from the
+    shared mmap, emit updated destination rows, re-spool them for the
+    next step. Per-step data movement is O(N·F) write + O(N·F) stream
+    (plus page-cache gathers); the arithmetic is exact fp64.
 
-    Per-step data movement is O(N·F) write + O(N·F) stream (plus
-    page-cache gathers) instead of the legacy plan's E·F array-message
-    shuffle + N·F update join — at the 2M anchor that is ~6 GB of
-    sequential I/O per step in place of ~92 GB of raw fp32 shuffle
-    (which needed feature-chunking to even fit a single-disk host; the
-    spool plan never approaches the chunking budget).
+    This is the index-join form of vertex-centric message passing
+    (Pregelix runs it as a dataflow join against the vertex relation):
+    no per-edge message is ever materialized or shuffled.
 
-    Returns None when not eligible (no scratch, N above the spool
-    ceiling, scratch too full, duplicate ids, or
-    SPARK_GRAFT_DIFFUSE_PLAN=shuffle) — the caller runs the legacy
-    array-message plan, which remains the portable fallback."""
-    mode = os.environ.get("SPARK_GRAFT_DIFFUSE_PLAN", "auto").lower()
-    if mode in ("shuffle", "legacy", "vector"):
-        return None
-    if n > DIFFUSE_SPOOL_MAX_ROWS:
-        return None
-    from .lambda_index import _probe_worker_visible, _spool_modes
+    Raises instead of degrading: RuntimeError when a multi-host master
+    has no worker-visible SPARK_GRAFT_SCRATCH_DIR or the scratch
+    filesystem lacks 3·N·F·8 + 64 MiB free; ValueError on duplicate
+    ids. Any failure after the spool dir is created removes it."""
+    from .lambda_index import _probe_worker_visible
 
     spark = items.sparkSession
     scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    master_local = spark.sparkContext.master.startswith("local")
-    if scratch_env and not master_local:
-        mmap_ok = _probe_worker_visible(spark, scratch_env)
-    else:
-        mmap_ok = bool(scratch_env) or master_local
-    if not mmap_ok:
-        return None
+    task_write = _single_host_master(spark)
+    if not task_write and not (
+            scratch_env and _probe_worker_visible(spark, scratch_env)):
+        where = (f"SPARK_GRAFT_SCRATCH_DIR={scratch_env!r} is not "
+                 "visible to every executor" if scratch_env else
+                 "SPARK_GRAFT_SCRATCH_DIR is not set")
+        raise RuntimeError(
+            "diffuse: the distributed tier needs a scratch directory "
+            "that the driver and every executor can read and write "
+            f"(master {spark.sparkContext.master!r}); {where}. Point "
+            "SPARK_GRAFT_SCRATCH_DIR at a shared filesystem path.")
     # budget: two live spools + one step parquet, all ~N·F·8
-    try:
-        free = shutil.disk_usage(
-            scratch_env or tempfile.gettempdir()).free
-    except OSError:
-        return None
-    if free < 3 * n * nf * 8 + (64 << 20):
-        return None
+    root = scratch_env or tempfile.gettempdir()
+    need = 3 * n * nf * 8 + (64 << 20)
+    free = shutil.disk_usage(root).free
+    if free < need:
+        raise RuntimeError(
+            f"diffuse: the distributed tier needs {need} bytes of free "
+            f"scratch (3·N·F·8 + 64 MiB at N={n}, F={nf}) but only "
+            f"{free} bytes are free in {root!r}; point "
+            "SPARK_GRAFT_SCRATCH_DIR at a larger filesystem")
     ids_arr = (items.select(id_col).toPandas()[id_col]
                .to_numpy(np.int64))
     if len(ids_arr) != n:
-        return None
+        raise RuntimeError(
+            f"diffuse: items returned {len(ids_arr)} ids but counted "
+            f"{n} rows — the items frame is not deterministic")
     s_ids = np.sort(ids_arr)
-    if s_ids.size > 1 and np.any(s_ids[1:] == s_ids[:-1]):
-        return None  # duplicate ids → scatter would corrupt rows
-    d = tempfile.mkdtemp(prefix="pyarrowspace-diffspool-",
-                         dir=scratch_env or None)
+    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
+    if dup.size:
+        # a scatter by id would silently overwrite rows
+        raise ValueError(
+            f"diffuse: {id_col} must be unique; {len(np.unique(dup))} "
+            f"ids repeat (e.g. {int(dup[0])})")
+    d = tempfile.mkdtemp(prefix="pyarrowspace-diffspool-", dir=root)
     matrix_mod._SCRATCH_DIRS.append(d)
+    try:
+        out = _spool_steps(items, edges, eta, steps, id_col, feat_col,
+                           nf, s_ids, d, task_write, step_times)
+    except BaseException:
+        _drop_scratch_dir(d)
+        raise
+    if out is None:
+        # no edges: diffusion is the identity
+        _drop_scratch_dir(d)
+        return items.select(id_col, feat_col)
+    return out
+
+
+def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
+                 steps: int, id_col: str, feat_col: str, nf: int,
+                 s_ids: np.ndarray, d: str, task_write: bool,
+                 step_times: "list[float] | None") -> "DataFrame | None":
+    """The seed + step loop of `_diffuse_spool` inside spool dir `d`.
+    Returns None when the graph has no edges.
+
+    Write modes: with `task_write` (single-host masters) the tasks
+    scatter rows straight into the pre-allocated mmap — writers and
+    next-step readers share one page cache, so the whole seed/step
+    materialization is one parallel job with ZERO serial driver I/O.
+    Otherwise (stream writes) every seed/step emits parquet, which the
+    driver streams into the next spool; the final step's parquet is
+    the returned frame."""
+    from .lambda_index import _spool_modes
+
+    spark = items.sparkSession
+    n = len(s_ids)
     dmode, fmode = _spool_modes()
     os.chmod(d, dmode)
     s_path = os.path.join(d, "sids.npy")
     np.save(s_path, s_ids)
     os.chmod(s_path, fmode)
     schema = f"{id_col} long, {feat_col} array<double>"
-    fp32_msgs = str(msg_dtype).lower() in ("float32", "fp32", "f32")
 
     def _part_files(pdir: str) -> "list[str]":
         return sorted(glob.glob(os.path.join(pdir, "part-*.parquet")))
-
-    # Spool WRITE mode: on a single-host master (local / local-cluster)
-    # the tasks scatter rows straight into the pre-allocated mmap —
-    # writers and next-step readers share one page cache, so the whole
-    # seed/step materialization is one parallel job with ZERO serial
-    # driver I/O. On multi-host deployments mmap write coherence over
-    # a shared filesystem is not guaranteed, so spools are built by
-    # streaming a task-written parquet on the driver instead.
-    # Env override SPARK_GRAFT_DIFFUSE_SPOOL_WRITE=task|stream.
-    write_mode = os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_SPOOL_WRITE", "auto").lower()
-    task_write = (write_mode == "task"
-                  or (write_mode == "auto" and master_local))
 
     def _prealloc(path: str) -> None:
         sp = np.lib.format.open_memmap(
@@ -444,27 +415,16 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         wrote = _count_of(items.select(id_col, feat_col).mapInPandas(
             _make_spool_write_kernel(cur_path, s_path, id_col, feat_col),
             "cnt long"))
-        if wrote != n:
-            raise RuntimeError(
-                f"diffusion seed spool wrote {wrote} of {n} rows")
-    elif matrix_mod.collect_eligible(spark, n * nf * 8):
-        got_ids, X0 = collect_id_matrix(items, id_col, feat_col)
-        perm = np.argsort(got_ids, kind="stable")
-        sp = np.lib.format.open_memmap(
-            cur_path, mode="w+", dtype=np.float64, shape=(n, nf))
-        sp[:] = X0[perm]
-        sp.flush()
-        del sp, X0
     else:
         seed_dir = os.path.join(d, "seed")
         items.select(id_col, feat_col).write.mode("overwrite").parquet(
             seed_dir)
         wrote = _scatter_parquet_to_spool(
             _part_files(seed_dir), id_col, feat_col, s_ids, nf, cur_path)
-        if wrote != n:
-            raise RuntimeError(
-                f"diffusion seed spool wrote {wrote} of {n} rows")
         shutil.rmtree(seed_dir, ignore_errors=True)
+    if wrote != n:
+        raise RuntimeError(
+            f"diffusion seed spool wrote {wrote} of {n} rows")
     os.chmod(cur_path, fmode)
 
     # loop-invariant: symmetrized edges hash-partitioned by dst (every
@@ -478,16 +438,11 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     try:
         n_sym = both.count()
         if n_sym == 0:
-            # no edges: diffusion is the identity
-            shutil.rmtree(d, ignore_errors=True)
-            if d in matrix_mod._SCRATCH_DIRS:
-                matrix_mod._SCRATCH_DIRS.remove(d)
-            return items.select(id_col, feat_col)
+            return None
         global _LAST_DIFFUSE_INFO
         _LAST_DIFFUSE_INFO = {"tier": "distributed", "plan": "spool",
-                              "n_sym_edges": int(n_sym),
-                              "feat_chunks": 1,
-                              "msg_dtype": str(msg_dtype)}
+                              "write": "task" if task_write else "stream",
+                              "n_sym_edges": int(n_sym)}
         # isolated nodes (no edges at all) never appear as dst OR src;
         # their rows are the identity under diffusion — captured once
         # from the seed spool and appended to the final output only
@@ -510,18 +465,34 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         step_dir = ""
         for t in range(int(steps)):
             t0 = time.time() if step_times is not None else 0.0
-            last = t == int(steps) - 1
-            if not task_write:
-                # stream mode: every step emits rows → parquet; the
-                # FINAL parquet is the returned frame, intermediate
-                # ones are re-spooled by the driver below
+            nxt_path = os.path.join(d, f"x{t + 1}.npy")
+            if task_write:
+                # one exchange-free job gathers, updates AND scatters
+                # the next iterate — no parquet, no driver stream; the
+                # final step too (the returned frame is a chunked
+                # reader over the final spool, page-cache-warm from the
+                # writers)
+                _prealloc(nxt_path)
+                kernel = _make_spool_step_kernel(
+                    cur_path, s_path, eta, id_col, feat_col,
+                    out_path=nxt_path)
+                wrote = _count_of(both.mapInPandas(kernel, "cnt long"))
+                if wrote != n_dst:
+                    raise RuntimeError(
+                        f"diffusion step {t + 1} spool wrote {wrote} "
+                        f"of {n_dst} rows")
+                os.remove(cur_path)
+                cur_path = nxt_path
+            else:
+                # every step emits rows → parquet; the FINAL parquet is
+                # the returned frame, intermediate ones are re-spooled
+                # by the driver
                 step_dir = os.path.join(d, f"step{t + 1}")
                 kernel = _make_spool_step_kernel(
-                    cur_path, s_path, eta, fp32_msgs, id_col, feat_col)
+                    cur_path, s_path, eta, id_col, feat_col)
                 (both.mapInPandas(kernel, schema)
                  .write.mode("overwrite").parquet(step_dir))
-                if not last:
-                    nxt_path = os.path.join(d, f"x{t + 1}.npy")
+                if t < int(steps) - 1:
                     wrote = _scatter_parquet_to_spool(
                         _part_files(step_dir), id_col, feat_col, s_ids,
                         nf, nxt_path)
@@ -533,35 +504,13 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                     os.remove(cur_path)
                     shutil.rmtree(step_dir, ignore_errors=True)
                     cur_path = nxt_path
-            else:
-                # task-write: one exchange-free job gathers, updates
-                # AND scatters the next iterate — no parquet, no
-                # driver stream. r14: the FINAL step too — it used to
-                # emit rows → parquet (~N·F·8 B written + re-read;
-                # measured 13.7 s vs 3.0 s for the task-write step at
-                # the 78k bench on a 20 MB/s-disk window, §6); the
-                # returned frame is now a chunked reader over the
-                # final spool (page-cache-warm from the writers).
-                nxt_path = os.path.join(d, f"x{t + 1}.npy")
-                _prealloc(nxt_path)
-                kernel = _make_spool_step_kernel(
-                    cur_path, s_path, eta, fp32_msgs, id_col, feat_col,
-                    out_path=nxt_path)
-                wrote = _count_of(both.mapInPandas(kernel, "cnt long"))
-                if wrote != n_dst:
-                    raise RuntimeError(
-                        f"diffusion step {t + 1} spool wrote {wrote} "
-                        f"of {n_dst} rows")
-                os.remove(cur_path)
-                cur_path = nxt_path
             if step_times is not None:
                 step_times.append(round(time.time() - t0, 3))
         if task_write:
             # returned frame = distributed chunked read of the final
             # spool (only dst-covered positions; iso rows appended
-            # below, as in stream mode). The spool + index files live
-            # until the scratch dir is reclaimed at exit — the same
-            # lifetime the returned step parquet had.
+            # below). The spool + index files live until the scratch
+            # dir is reclaimed at exit.
             pos_path = os.path.join(d, "outpos.npy")
             np.save(pos_path, np.where(covered)[0].astype(np.int64))
             os.chmod(pos_path, fmode)
@@ -588,218 +537,6 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         return out
     finally:
         both.unpersist()
-
-
-def _diffusion_step_chunked(
-    items: DataFrame, eta: float, id_col: str, feat_col: str,
-    n_groups: int, both: DataFrame, deg: DataFrame, fp32_msgs: bool,
-    feat_chunks: int, nf: int | None,
-) -> DataFrame:
-    """Feature-block variant of `diffusion_step`: the step is computed
-    per contiguous feature slice [a, b), and each slice's message
-    shuffle is materialized (eager localCheckpoint + JVM GC) before the
-    next begins — so peak scratch disk is ONE chunk's E·(b−a) message
-    volume instead of the full E·F. The per-feature arithmetic is
-    independent across dims, so the split is exact (chunked ≡
-    full-width, pinned in tests/test_round10_fixes.py).
-
-    This is the second half of the r9 verdict's message-volume task:
-    fp32 halves the bytes; chunking bounds the PEAK. The measured need:
-    at N=800k, F=384, fp32, one step's message shuffle is ~61 GB raw —
-    it overran a 93 GB single-disk host mid-step (BENCH_800k_r10.json,
-    78.2 GB peak) even though TOTAL volume was fine. On a multi-disk
-    cluster chunking matters less (shuffle spreads across executors'
-    disks), which is why the default budget only splits steps whose
-    single-stage shuffle exceeds SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES
-    (16 GiB).
-
-    Cost of a chunk: one N·(b−a) items-side exchange against the
-    pre-partitioned edge list plus a repeated E-row argsort in the sum
-    kernel; total matvec work is unchanged."""
-    spark = items.sparkSession
-    if nf is None:
-        row = items.select(F.size(feat_col).alias("f")).first()
-        if row is None:
-            return items.select(id_col, feat_col)
-        nf = int(row["f"])
-    k = max(1, min(int(feat_chunks), int(nf)))
-    bounds = [round(i * nf / k) for i in range(k + 1)]
-    base = items.select(id_col, feat_col)
-    kernel = _make_sum_kernel(fp32_msgs, id_col)
-    parts: list[DataFrame] = []
-    for ci in range(k):
-        a, b = bounds[ci], bounds[ci + 1]
-        xfc = F.slice(F.col(feat_col), a + 1, b - a)
-        if fp32_msgs:
-            xfc = xfc.cast("array<float>")
-        msgs = both.join(
-            base.select(F.col(id_col).alias("src"), xfc.alias("_xf")),
-            "src",
-        ).select("dst", "weight", "_xf")
-        nsum = (
-            msgs.withColumn(
-                "_g", F.pmod(F.xxhash64("dst"), F.lit(int(n_groups))))
-            .groupBy("_g")
-            .applyInPandas(kernel, f"{id_col} long, _nsum array<double>")
-        )
-        scale = F.lit(1.0) - F.lit(eta) * F.coalesce("_deg", F.lit(0.0))
-        filled = F.coalesce("_nsum", F.array_repeat(F.lit(0.0), b - a))
-        part = (
-            base.select(
-                id_col,
-                F.slice(F.col(feat_col), a + 1, b - a).alias("_xc"))
-            .join(deg, id_col, "left")
-            .join(nsum, id_col, "left")
-            .select(
-                id_col,
-                F.lit(ci).alias("_ci"),
-                F.zip_with(
-                    "_xc", filled,
-                    lambda x, s: scale * x + F.lit(eta) * s,
-                ).alias("_c"),
-            )
-        )
-        # THIS bounds peak scratch: the chunk is materialized here and
-        # the previous chunk's now-dead shuffle files reclaimed before
-        # the next chunk's shuffle starts stacking on top of them.
-        part = part.localCheckpoint(eager=True)
-        spark.sparkContext._jvm.System.gc()
-        parts.append(part)
-    # Reassembly as ONE union + groupBy (single exchange regardless of
-    # chunk count): the r10 formulation re-joined the k chunk frames on
-    # id — k−1 extra N-row shuffles per step, growing with E·F/budget
-    # (r10 verdict "what's wrong" #3). collect_list is tiny per group
-    # (k slice arrays per id); array_sort orders the structs by _ci
-    # (first struct field), so concatenation order is positional, not
-    # shuffle-order dependent.
-    if k == 1:
-        return parts[0].select(id_col, F.col("_c").alias(feat_col))
-    allparts = parts[0]
-    for p in parts[1:]:
-        allparts = allparts.unionAll(p)
-    return allparts.groupBy(id_col).agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_ci", "_c"))),
-                lambda s: s["_c"],
-            )
-        ).alias(feat_col))
-
-
-def diffusion_step(
-    items: DataFrame,
-    edges: DataFrame,
-    eta: float,
-    id_col: str = "item_id",
-    feat_col: str = "features",
-    n_groups: int = 512,
-    both: DataFrame | None = None,
-    deg: DataFrame | None = None,
-    msg_dtype: str = "float64",
-    feat_chunks: int = 1,
-    nf: int | None = None,
-) -> DataFrame:
-    """One distributed heat-diffusion step:
-    x_i ← (1 − η·deg_i)·x_i + η·Σ_j w_ij·x_j.
-
-    Scale shape (the beyond-broadcast tier): the edge→feature join
-    shuffles E rows carrying the source feature ARRAY (E·F values, one
-    row per edge — never the E×F exploded rows of the naive plan); the
-    per-destination sums run in Arrow-batched numpy over hash-grouped
-    edge blocks; the final update is a JVM-side `zip_with` — no Python
-    pass over non-edge rows, isolated nodes keep x unchanged via the
-    left joins. Per-step shuffle is O(E·F + 2·N·F) values, linear in
-    the corpus.
-
-    Measured negative result (round 7), kept so it isn't re-tried: a
-    pure-JVM formulation of the per-dst sum —
-    `Summarizer.sum(array_to_vector(_xf), weight)` grouped by dst,
-    avoiding all Arrow→Python transfer — measured 246 s/step vs this
-    kernel's 173 s at N=313k, E_sym=9.4M, F=384 on the same persisted
-    inputs. With N-scale group cardinality the typed-imperative
-    aggregate can't hold its hash map (313k groups × 3 KB vector
-    buffers/partition) and falls back to sort-based merging of the
-    3 KB message rows, which loses to this kernel's batched segment
-    matvec despite the Arrow round-trip.
-
-    `n_groups` bounds each grouped kernel's buffer: applyInPandas
-    materializes a whole group, so a FIXED group count is a hidden
-    per-task O(E/groups·F) — 15 GB/group at E=2.5B, F=384 under the
-    old constant 512. `diffuse` sizes it from the measured edge count
-    so a group stays ~tens of MB at any scale.
-
-    `both`/`deg`: the symmetrized edge list and the degree aggregation
-    are LOOP-INVARIANT — a multi-step caller passes them persisted
-    once instead of re-shuffling E rows for degrees every step.
-
-    Measured (round 8, BENCH_313k_r08.json): steps do NOT amortize —
-    at N=313k, E_sym=9.4M, F=384 the instrumented 2-step run measured
-    step 1 = 272.7 s and step 2 = 299.6 s. The loop-invariant
-    symmetrize+degree materialization that step 1 carries is a
-    rounding error; the per-step constant IS the E·F array-message
-    shuffle through the groupBy(_g) kernel (the items-side exchange is
-    N·F, ~3% of it). Cutting it further means cutting message volume
-    itself, not join choreography — don't re-try partitioning-reuse
-    tweaks expecting step-2 savings. `msg_dtype="float32"` is that
-    volume cut: the source feature array is cast to float<4B> BEFORE
-    the edge→feature shuffle, halving both the E·F shuffle bytes and
-    the Arrow transfer into the sum kernel; the segment matvec then
-    runs in fp32 and the result is emitted back as float64. Relative
-    error vs the fp64 message path is bounded by fp32 representation
-    + a ~deg-term fp32 dot product, ≈1e-6 — pinned by
-    tests/test_round10_fixes.py against the exact numpy step. Default
-    stays float64 so `diffusion_step` in isolation remains exact
-    (test_diffusion_step_matches_numpy, rtol 1e-12); `diffuse` opts
-    its distributed tier into float32 (see there for the measured
-    step-time effect).
-
-    `feat_chunks` > 1 computes the step per contiguous feature slice
-    with eager materialization between slices, bounding peak scratch
-    to one slice's message shuffle — see `_diffusion_step_chunked`.
-    The per-dim arithmetic is independent, so the split is exact.
-    `nf` (the feature width) saves the probe job when the caller
-    already knows it; only consulted when chunking.
-    """
-    if both is None:
-        both = _symmetrize(edges)
-    if deg is None:
-        deg = both.groupBy(F.col("dst").alias(id_col)).agg(
-            F.sum("weight").alias("_deg")
-        )
-    fp32_msgs = str(msg_dtype).lower() in ("float32", "fp32", "f32")
-    if int(feat_chunks) > 1:
-        return _diffusion_step_chunked(
-            items, eta, id_col, feat_col, n_groups, both, deg,
-            fp32_msgs, int(feat_chunks), nf)
-    xf = F.col(feat_col)
-    if fp32_msgs:
-        xf = xf.cast("array<float>")
-    msgs = both.join(
-        items.select(F.col(id_col).alias("src"), xf.alias("_xf")),
-        "src",
-    ).select("dst", "weight", "_xf")
-
-    nsum = (
-        msgs.withColumn("_g", F.pmod(F.xxhash64("dst"), F.lit(int(n_groups))))
-        .groupBy("_g")
-        .applyInPandas(_make_sum_kernel(fp32_msgs, id_col),
-                       f"{id_col} long, _nsum array<double>")
-    )
-    scale = F.lit(1.0) - F.lit(eta) * F.coalesce("_deg", F.lit(0.0))
-    filled = F.coalesce(
-        "_nsum", F.array_repeat(F.lit(0.0), F.size(feat_col)))
-    return (
-        items.select(id_col, feat_col)
-        .join(deg, id_col, "left")
-        .join(nsum, id_col, "left")
-        .select(
-            id_col,
-            F.zip_with(
-                feat_col, filled,
-                lambda x, s: scale * x + F.lit(eta) * s,
-            ).alias(feat_col),
-        )
-    )
 
 
 def _diffuse_driver(
@@ -880,47 +617,32 @@ def _diffuse_driver(
 def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
             id_col: str = "item_id", feat_col: str = "features",
             step_times: "list[float] | None" = None,
-            msg_dtype: str | None = None,
             out_matrix: "list | None" = None) -> DataFrame:
-    """G12 heat diffusion, `steps` iterations. Physical tiers:
+    """G12 heat diffusion, `steps` iterations, exact fp64 on every
+    tier. Physical tiers:
 
     - driver tier (N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES, default 4 GiB
       ≈ 1.4M items at F=384): the whole loop is chunked numpy
       gather/segment-sum on the driver — the narrow edge list is a few
       % of X's size, so it fits whenever X does.
-    - distributed tier beyond, two physical plans:
-      (a) narrow-shuffle spool plan (default wherever a worker-visible
-      scratch exists, `_diffuse_spool`): the iterate lives in one
-      id-sorted fp64 spool per step, edges are persisted
-      pre-partitioned by dst, and each step is a single exchange-free
-      gather/update job — O(N·F) sequential I/O per step instead of an
-      E·F message shuffle;
-      (b) legacy array-message plan (`diffusion_step` per step,
-      lineage capped per step) — the portable fallback (no scratch, N
-      above the spool ceiling, or SPARK_GRAFT_DIFFUSE_PLAN=shuffle).
+    - distributed tier beyond (`_diffuse_spool`): the iterate lives in
+      one id-sorted fp64 spool per step on a worker-visible scratch
+      dir, edges are persisted pre-partitioned by dst, and each step is
+      a single exchange-free gather/update job. On `local*` masters
+      (local-cluster included) tasks write the spools directly; on
+      multi-host masters each step writes parquet that the driver
+      streams into the next spool.
+
+    The distributed tier raises rather than degrade: RuntimeError when
+    a multi-host master has no worker-visible SPARK_GRAFT_SCRATCH_DIR,
+    RuntimeError when the scratch filesystem lacks 3·N·F·8 + 64 MiB
+    free (the message states both byte counts and the directory), and
+    ValueError on duplicate ids. Its spool dir is removed on any error.
 
     `step_times` (bench instrumentation, distributed tier only): pass a
-    list and each step is materialized EAGERLY and its wall time
-    appended — one multi-step run then yields every per-step cost
-    (step 1 carries the loop-invariant symmetrize+degree
-    materialization; later entries are the honest per-step marginal).
-    After each instrumented step a JVM GC is triggered so the previous
-    step's now-unreferenced shuffle files are reclaimed promptly —
-    measuring k steps costs ~1 step of peak scratch disk instead of k
-    (the round-8 bench filled a 62 GB disk timing 1-step + 2-step runs
-    back to back). Default None: production path unchanged (lazy
-    intermediate checkpoints, one job at the consuming action).
-
-    `msg_dtype` (distributed tier only): dtype of the per-edge feature
-    message arrays. Default (None → env SPARK_GRAFT_DIFFUSE_MSG_DTYPE
-    → "float32") halves the per-step E·F shuffle volume — the measured
-    whole of the distributed-tier constant (round-8 note above in
-    `diffusion_step`) — at a pinned ≈1e-6 relative error vs the fp64
-    path (tests/test_round10_fixes.py). Pass "float64" for the exact
-    tier (tests/test_energy.py tier-agreement pin). The driver tier is
-    always fp64 — it never ships messages — so the default-path oracle
-    (`energy_diffusion`, driver tier at oracle scale) is bit-identical
-    either way.
+    list and each step's wall time is appended (every step is one
+    eager job; step 1 also carries the loop-invariant edge
+    materialization).
     """
     if int(steps) <= 0:
         return items.select(id_col, feat_col)
@@ -936,8 +658,7 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     # shared scratch dir, or small enough for the portable fallback) —
     # otherwise a non-local deployment with no scratch dir would do
     # all the driver-side arithmetic and then hit the boxed-row OOM
-    # refusal. The distributed tier below is correct under any
-    # deployment.
+    # refusal.
     if (n * nf * 8 <= DIFFUSE_BROADCAST_MAX_BYTES
             and matrix_mod.collect_eligible(items.sparkSession, n * nf * 8)
             and matrix_mod.handoff_eligible(items.sparkSession, n * nf * 8)
@@ -951,104 +672,11 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
             and matrix_mod.collect_eligible(
                 items.sparkSession, edges.count() * 2 * 24)):
         global _LAST_DIFFUSE_INFO
-        _LAST_DIFFUSE_INFO = {"tier": "driver", "msg_dtype": "float64",
-                              "feat_chunks": 1, "n_sym_edges": None}
+        _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
         return _diffuse_driver(items, edges, eta, steps, id_col, feat_col,
                                out_matrix=out_matrix)
-    # ---- distributed tier ----
-    # message dtype is a property of the TIER, shared by both physical
-    # plans below (the spool plan reproduces the legacy fp32 message
-    # arithmetic in its gather kernel), so resolve + warn once here.
-    if msg_dtype is None:
-        msg_dtype = os.environ.get(
-            "SPARK_GRAFT_DIFFUSE_MSG_DTYPE", "float32")
-        if str(msg_dtype).lower() in ("float32", "fp32", "f32"):
-            # One-time visibility for the tier-boundary precision
-            # cliff (ADVICE r10): the distributed tier defaults to
-            # fp32 messages (≈1e-6 relative error vs fp64, pinned in
-            # tests/test_round10_fixes.py at deg≤topk graphs; very
-            # high-degree graphs can exceed that bound) while the
-            # driver tier is always exact fp64 — an unchanged pipeline
-            # crossing DIFFUSE_BROADCAST_MAX_BYTES shifts results.
-            import warnings
-
-            warnings.warn(
-                "diffuse: distributed tier engaged with default "
-                "float32 messages (≈1e-6 relative error vs the fp64 "
-                "driver tier; set SPARK_GRAFT_DIFFUSE_MSG_DTYPE="
-                "float64 or pass msg_dtype='float64' for the exact "
-                "path)", stacklevel=2)
-    # narrow-shuffle spool plan first (guide §8): zero per-step
-    # exchange where a worker-visible scratch exists; None ⇒ run the
-    # legacy array-message plan below.
-    spooled = _diffuse_spool(items, edges, eta, steps, id_col, feat_col,
-                             nf, n, str(msg_dtype), step_times)
-    if spooled is not None:
-        return spooled
-    # loop-invariant across steps: symmetrized edges + degrees, each
-    # persisted once instead of re-shuffled E rows per step. The edge
-    # list is persisted PRE-PARTITIONED on src (InMemoryRelation keeps
-    # outputPartitioning), so each step's edge→feature join exchanges
-    # only the N-row items side — the E-row side, the big one, stays
-    # put; the per-step shuffle floor is N·F (gather) + E·F (messages)
-    # instead of 2·E·F + N·F.
-    n_part = int(items.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    both = _symmetrize(edges).repartition(n_part, "src").persist()
-    # Size the per-destination sum's hash groups so one group's Arrow
-    # buffer stays ~64 MB of doubles regardless of E and F (the group
-    # kernel materializes its whole group; a fixed count silently
-    # scales the buffer with E). Counting the just-persisted frame
-    # doubles as its materialization — an unpersisted caller edge list
-    # is evaluated exactly once.
-    n_sym_edges = both.count()
-    rows_per_group = max(1, (64 << 20) // (8 * nf))
-    n_groups = int(min(1 << 16, max(64, -(-n_sym_edges // rows_per_group))))
-    deg = both.groupBy(F.col("dst").alias(id_col)).agg(
-        F.sum("weight").alias("_deg")).persist()
-    # Feature-block chunking: split any step whose single-stage message
-    # shuffle would exceed the per-stage budget (default 16 GiB raw) so
-    # peak scratch disk stays bounded regardless of E·F — the N=800k
-    # fp32 step is ~61 GB in one stage and overran a 93 GB single-disk
-    # host (BENCH_800k_r10.json). Exactness of the split is pinned in
-    # tests/test_round10_fixes.py; see _diffusion_step_chunked.
-    msg_val_bytes = 4 if str(msg_dtype).lower() in (
-        "float32", "fp32", "f32") else 8
-    chunk_budget = int(os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES", str(16 * 1024**3)))
-    feat_chunks = max(
-        1, -(-(n_sym_edges * nf * msg_val_bytes) // max(chunk_budget, 1)))
-    # instrumentation breadcrumb for the measurement harness (private)
-    _LAST_DIFFUSE_INFO = {"tier": "distributed", "plan": "shuffle",
-                          "n_sym_edges": int(n_sym_edges),
-                          "feat_chunks": int(feat_chunks),
-                          "msg_dtype": str(msg_dtype)}
-    try:
-        out = items.select(id_col, feat_col)
-        last = int(steps) - 1
-        for i in range(int(steps)):
-            t0 = time.time() if step_times is not None else 0.0
-            out = diffusion_step(out, edges, eta, id_col, feat_col,
-                                 n_groups, both=both, deg=deg,
-                                 msg_dtype=msg_dtype,
-                                 feat_chunks=feat_chunks, nf=nf)
-            # final step checkpoints EAGERLY so the result no longer
-            # depends on both/deg and they can be dropped below, not
-            # leaked
-            out = out.localCheckpoint(
-                eager=(i == last or step_times is not None))
-            if step_times is not None:
-                step_times.append(round(time.time() - t0, 3))
-                # the just-checkpointed step's upstream shuffle files
-                # are dead lineage now — reclaim before the next step
-                # stacks its own on top
-                items.sparkSession.sparkContext._jvm.System.gc()
-        return out
-    finally:
-        # on error too — a failed step must not leak executor storage
-        # for the session lifetime
-        both.unpersist()
-        deg.unpersist()
+    return _diffuse_spool(items, edges, eta, steps, id_col, feat_col,
+                          nf, n, step_times)
 
 
 def trim_edges(edges: DataFrame, trim_quantile: float,
@@ -1084,10 +712,9 @@ class EnergyIndex:
     graph_params: GraphParams
     energy_params: EnergyParams
     tau_synth: float
-    # How the diffusion stage actually ran (tier, msg_dtype,
-    # feat_chunks, n_sym_edges) — an at-scale build's fp32/chunked
-    # step is a user-visible semantic, so the index records it
-    # (r10 verdict "what's wrong" #2/#4). None on steps=0 builds and
+    # How the diffusion stage actually ran (tier; for the distributed
+    # tier also plan, spool write mode and n_sym_edges), so an index
+    # self-describes its physical plan. None on steps=0 builds and
     # indexes saved before round 11.
     diffusion_info: dict | None = None
 
@@ -1251,7 +878,7 @@ def build_energy(
     diffused = diffuse(base, edges, eparams.eta, eparams.steps,
                        out_matrix=_xy_out).persist()
     xy = _xy_out[0] if _xy_out else None
-    # snapshot how the stage ran (tier/dtype/chunks) for the index's
+    # snapshot how the stage ran (tier/plan/write mode) for the index's
     # self-description before any other diffuse call overwrites it
     dinfo = dict(_LAST_DIFFUSE_INFO) if (
         eparams.steps > 0 and _LAST_DIFFUSE_INFO) else None

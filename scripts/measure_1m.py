@@ -400,54 +400,33 @@ def _run_dd_phase(spark, big, idx, out: dict, scratch: str) -> None:
     beyond-broadcast tier — the only tier legal at 100× scale — had
     never been timed past N=313k because the driver tier keeps winning
     eligibility). M1M_DIFFUSE_DIST_STEPS>0 forces the distributed tier
-    on the λτ-graph for that many instrumented steps (eager per-step
-    materialization + shuffle GC, so peak scratch ≈ 1 step regardless
-    of count). Shared by the build path and the M1M_EDGES_PATH
-    (saved-graph) path."""
+    on the λτ-graph for that many instrumented steps (one eager job
+    per step over the fp64 iterate spool, so peak scratch ≈ 3·N·F·8
+    regardless of count). Shared by the build path and the
+    M1M_EDGES_PATH (saved-graph) path."""
     dd_steps = int(os.environ.get("M1M_DIFFUSE_DIST_STEPS", "0"))
     if dd_steps <= 0:
         return
     from pyarrowspace_spark.operators import energy as energy_mod
 
-    dd_dtype = os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_MSG_DTYPE", "float32")
-    # M1M_DIFFUSE_DIST_DTYPES="float32,float64" runs the
-    # instrumented steps once per dtype in the SAME process on
-    # the same graph — the apples-to-apples evidence for the
-    # fp32 message-volume cut (r9 verdict task #3). The first
-    # dtype keeps the unsuffixed field names for ledger
-    # continuity; later ones get _<dtype> suffixes.
-    dd_dtypes = [s.strip() for s in os.environ.get(
-        "M1M_DIFFUSE_DIST_DTYPES", dd_dtype).split(",") if s.strip()]
     ceil0 = energy_mod.DIFFUSE_BROADCAST_MAX_BYTES
     energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = 0
     try:
-        for di, dt in enumerate(dd_dtypes):
-            sfx = "" if di == 0 else f"_{dt}"
-            st: list[float] = []
-            # reset the per-phase peak to CURRENT usage so this
-            # dtype's reported peak is its own, not the
-            # cumulative process max (ADVICE r10)
-            _PHASE_PEAK_GB[0] = (
-                shutil.disk_usage(scratch).used / 1024**3)
-            t0 = time.time()
-            energy_mod.diffuse(big, idx.edges, eta=0.05,
-                               steps=dd_steps, step_times=st,
-                               msg_dtype=dt).count()
-            out[f"diffuse_dist_total_sec{sfx}"] = round(
-                time.time() - t0, 1)
-            out[f"diffuse_dist_step_secs{sfx}"] = st
-            out[f"diffuse_dist_msg_dtype{sfx}"] = dt
-            out[f"diffuse_dist_peak_used_gb{sfx}"] = round(
-                _PHASE_PEAK_GB[0], 1)
-            info = getattr(energy_mod, "_LAST_DIFFUSE_INFO", None)
-            if info:
-                out[f"diffuse_dist_feat_chunks{sfx}"] = info[
-                    "feat_chunks"]
-                out[f"diffuse_dist_n_sym_edges{sfx}"] = info[
-                    "n_sym_edges"]
-                out[f"diffuse_dist_plan{sfx}"] = info.get(
-                    "plan", "shuffle")
+        st: list[float] = []
+        # reset the per-phase peak to CURRENT usage so the reported
+        # peak is this phase's own, not the cumulative process max
+        # (ADVICE r10)
+        _PHASE_PEAK_GB[0] = shutil.disk_usage(scratch).used / 1024**3
+        t0 = time.time()
+        energy_mod.diffuse(big, idx.edges, eta=0.05, steps=dd_steps,
+                           step_times=st).count()
+        out["diffuse_dist_total_sec"] = round(time.time() - t0, 1)
+        out["diffuse_dist_step_secs"] = st
+        out["diffuse_dist_peak_used_gb"] = round(_PHASE_PEAK_GB[0], 1)
+        info = getattr(energy_mod, "_LAST_DIFFUSE_INFO", None)
+        if info:
+            out["diffuse_dist_n_sym_edges"] = info["n_sym_edges"]
+            out["diffuse_dist_plan"] = info.get("plan")
     finally:
         energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = ceil0
 

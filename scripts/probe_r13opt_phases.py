@@ -153,23 +153,17 @@ def main() -> None:
         t0 = time.time()
         ddf.count()
         timers["diffuse_2step_count"] = round(time.time() - t0, 2)
-        # the distributed-tier single-step plan (pre-checkpoint) for
-        # the plans/ deliverable: under the r13 spool plan the step is
-        # one exchange-free mapInPandas over the dst-partitioned edge
-        # cache; otherwise the legacy array-message step
-        info = getattr(energy_mod, "_LAST_DIFFUSE_INFO", None) or {}
-        if info.get("plan") == "spool":
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            both_p = (energy_mod._symmetrize(bidx.edges)
-                      .repartition(n_part, "dst")
-                      .sortWithinPartitions("dst", "src"))
-            spool_kernel = energy_mod._make_spool_step_kernel(
-                "x.npy", "sids.npy", 0.05, True, "item_id", "features")
-            dump_plan("diffuse_distributed_step", both_p.mapInPandas(
-                spool_kernel, "item_id long, features array<double>"))
-        else:
-            dump_plan("diffuse_distributed_step",
-                      energy_mod.diffusion_step(big, bidx.edges, eta=0.05))
+        # the distributed-tier single-step plan for the plans/
+        # deliverable: one exchange-free mapInPandas over the
+        # dst-partitioned edge cache
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        both_p = (energy_mod._symmetrize(bidx.edges)
+                  .repartition(n_part, "dst")
+                  .sortWithinPartitions("dst", "src"))
+        spool_kernel = energy_mod._make_spool_step_kernel(
+            "x.npy", "sids.npy", 0.05, "item_id", "features")
+        dump_plan("diffuse_distributed_step", both_p.mapInPandas(
+            spool_kernel, "item_id long, features array<double>"))
         timers["diffuse_step1"] = step_secs[0] if step_secs else None
         timers["diffuse_step2"] = (step_secs[1]
                                    if len(step_secs) > 1 else None)

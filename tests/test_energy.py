@@ -1,4 +1,4 @@
-"""Energy pipeline tests: diffusion-step exactness vs numpy, full
+"""Energy pipeline tests: diffusion exactness vs numpy, full
 build_energy/search_energy behavior (golden-pinned, SURVEY §2 G12-G15)."""
 
 import numpy as np
@@ -19,9 +19,13 @@ def edges(test0_items_df):
     return knn_ops.knn_edges(test0_items_df, GP, strategy="exact").persist()
 
 
-def test_diffusion_step_matches_numpy(spark, test0_items_df, edges):
+def test_diffuse_one_step_matches_numpy(spark, test0_items_df, edges,
+                                      monkeypatch):
+    """One step of the distributed (spool) tier is exact fp64."""
     eta = 0.1
-    out = E.diffusion_step(test0_items_df, edges, eta)
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    out = E.diffuse(test0_items_df, edges, eta, steps=1)
+    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got = {r["item_id"]: np.array(r["features"])
            for r in out.collect()}
 
@@ -108,17 +112,16 @@ def test_energy_deterministic(energy_index, spark):
 
 
 def test_diffuse_tiers_agree(spark, test0_items_df, edges, monkeypatch):
-    """The broadcast tier (narrow-edge shuffle + broadcast X) and the
-    distributed tier (array-message dataflow) are physical plans for
-    the same operator; multi-step outputs must agree to fp noise."""
+    """The driver tier and the distributed spool tier are physical
+    plans for the same operator; on the default path multi-step
+    outputs must agree to fp noise."""
     a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
+    assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
-    # force the beyond-broadcast tier; msg_dtype="float64" pins the
-    # EXACT distributed tier (the default fp32 message tier's ≈1e-6
-    # error bound is pinned separately in test_round10_fixes.py)
+    # force the beyond-broadcast tier
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3,
-                  msg_dtype="float64")
+    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
+    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
     assert set(got_a) == set(got_b)
     for i in got_a:

@@ -75,11 +75,10 @@ bcast_err = float(np.abs(lf_bcast - idx.feature_laplacian).max())
 dist_err = float(np.abs(lf_dist - idx.feature_laplacian).max())
 
 # Distributed diffusion tier (the 100-TB path) across two executor
-# JVMs; msg_dtype="float64" pins the EXACT tier against the driver
-# tier at 1e-9 (the default fp32 message tier's ~1e-6 bound is pinned
-# in test_round10_fixes.py on the single-JVM session)
+# JVMs: the exact fp64 spool plan with task writes, pinned against the
+# driver tier at 1e-9
 E.DIFFUSE_BROADCAST_MAX_BYTES = 0
-d = E.diffuse(items, idx.edges, eta=0.05, steps=2, msg_dtype="float64")
+d = E.diffuse(items, idx.edges, eta=0.05, steps=2)
 d_sum = float(np.sum([float(np.sum(r["features"])) for r in d.collect()]))
 
 print("RESULT " + json.dumps({

@@ -1,6 +1,9 @@
 """r13 optimization-round pins: the narrow-shuffle LSH plan and the
 hoisted Laplacian diagonal must be value-identical to the plans they
-replace."""
+replace; the spool diffusion plan must match the driver tier and fail
+cleanly (clear errors, no leaked spool dir)."""
+
+import os
 
 import numpy as np
 import pytest
@@ -79,10 +82,9 @@ def test_gather_diag_hoist_matches_driver_tier(spark):
 
 
 def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):
-    """The narrow-shuffle (spool-gather) distributed diffusion plan
-    must agree with the exact driver tier to fp noise (fp64 messages)
-    and with the legacy array-message plan it replaces; per-step
-    instrumentation still reports one entry per step."""
+    """The spool-gather distributed diffusion plan must agree with the
+    exact driver tier to fp noise; per-step instrumentation reports
+    one entry per step."""
     from pyarrowspace_spark.operators import energy as E
 
     items = _corpus(spark, n=400, f=12, seed=5)
@@ -94,42 +96,15 @@ def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
     steps_sec: list = []
     b_df = E.diffuse(items, edges, eta=0.05, steps=3,
-                     msg_dtype="float64", step_times=steps_sec)
+                     step_times=steps_sec)
     b = {r["item_id"]: np.array(r["features"]) for r in b_df.collect()}
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    assert E._LAST_DIFFUSE_INFO["write"] == "task"
     assert len(steps_sec) == 3
+    edges.unpersist()
     assert set(a) == set(b)
     for i in a:
         np.testing.assert_allclose(b[i], a[i], rtol=1e-9)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_PLAN", "shuffle")
-    c = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.05, steps=3,
-                            msg_dtype="float64").collect()}
-    assert E._LAST_DIFFUSE_INFO["plan"] == "shuffle"
-    edges.unpersist()
-    assert set(c) == set(b)
-    for i in b:
-        np.testing.assert_allclose(c[i], b[i], rtol=1e-9)
-
-
-def test_diffuse_spool_fp32_default_bound(spark, monkeypatch):
-    """Default (fp32-message) spool plan stays within the documented
-    ≈1e-6/step bound of the fp64 driver tier."""
-    from pyarrowspace_spark.operators import energy as E
-
-    items = _corpus(spark, n=300, f=16, seed=9)
-    gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0)
-    edges = K.knn_edges(items, gp, strategy="exact")
-    a = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.1, steps=2).collect()}
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    b = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.1, steps=2).collect()}
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
-    assert E._LAST_DIFFUSE_INFO["msg_dtype"] == "float32"
-    assert set(a) == set(b)
-    for i in a:
-        np.testing.assert_allclose(b[i], a[i], rtol=1e-5)
 
 
 def test_diffuse_spool_isolated_nodes_identity(spark, monkeypatch):
@@ -146,8 +121,7 @@ def test_diffuse_spool_isolated_nodes_identity(spark, monkeypatch):
         schema="src long, dst long, weight double")
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
     out = {r["item_id"]: np.array(r["features"])
-           for r in E.diffuse(items, edges, eta=0.1, steps=2,
-                              msg_dtype="float64").collect()}
+           for r in E.diffuse(items, edges, eta=0.1, steps=2).collect()}
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     assert set(out) == set(range(6))
     for i in (4, 5):
@@ -157,11 +131,14 @@ def test_diffuse_spool_isolated_nodes_identity(spark, monkeypatch):
     assert not np.allclose(out[1], rows[1][1])
 
 
-def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch):
-    """The parquet+driver-stream spool build (the multi-host-safe
-    write mode) produces the same values as the default task-write
-    mode and the driver tier."""
+def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch,
+                                                 tmp_path):
+    """The parquet+driver-stream spool build (the write mode of
+    multi-host masters) produces the same values as the driver tier.
+    The master seam reports multi-host, so the scratch-visibility probe
+    runs on the set SPARK_GRAFT_SCRATCH_DIR before the stream path."""
     from pyarrowspace_spark.operators import energy as E
+    from pyarrowspace_spark.operators import lambda_index as LAM
 
     items = _corpus(spark, n=250, f=10, seed=21)
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0)
@@ -169,11 +146,111 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch):
     a = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_SPOOL_WRITE", "stream")
+    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    probed = []
+    real_probe = LAM._probe_worker_visible
+
+    def _probe(spark, d):
+        probed.append(d)
+        return real_probe(spark, d)
+
+    monkeypatch.setattr(LAM, "_probe_worker_visible", _probe)
     b = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.05, steps=2,
-                            msg_dtype="float64").collect()}
+         for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
+    assert probed == [str(tmp_path)]
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    assert E._LAST_DIFFUSE_INFO["write"] == "stream"
     assert set(a) == set(b)
     for i in a:
         np.testing.assert_allclose(b[i], a[i], rtol=1e-9)
+
+
+def _spool_dirs(path) -> list:
+    return [p for p in os.listdir(path)
+            if p.startswith("pyarrowspace-diffspool-")]
+
+
+def test_diffuse_spool_dir_removed_when_step_fails(spark, monkeypatch,
+                                                   tmp_path):
+    """Fault injection: a step kernel that raises mid-diffusion makes
+    `diffuse` raise and leaves no spool dir under the scratch dir, nor
+    a registration in matrix._SCRATCH_DIRS."""
+    from pyarrowspace_spark.functions import matrix as M
+    from pyarrowspace_spark.operators import energy as E
+
+    items = _corpus(spark, n=120, f=6, seed=2)
+    gp = GraphParams(eps=0.9, k=4, topk=4, p=2.0)
+    edges = K.knn_edges(items, gp, strategy="exact")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+
+    def _boom_factory(*a, **k):
+        def kernel(batches):
+            raise RuntimeError("injected diffusion step failure")
+            yield  # pragma: no cover - makes this a generator
+
+        return kernel
+
+    monkeypatch.setattr(E, "_make_spool_step_kernel", _boom_factory)
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(Exception, match="injected diffusion step"):
+        E.diffuse(items, edges, eta=0.05, steps=2).collect()
+    assert _spool_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before
+
+
+def test_diffuse_spool_rejects_duplicate_ids(spark, monkeypatch):
+    """Duplicate ids would make the by-id spool scatter overwrite rows:
+    the distributed tier raises ValueError instead of falling back."""
+    from pyarrowspace_spark.operators import energy as E
+
+    items = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (1, [0.5, 0.5])],
+        schema="item_id long, features array<double>")
+    edges = spark.createDataFrame(
+        [(0, 1, 0.5)], schema="src long, dst long, weight double")
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    with pytest.raises(ValueError, match="unique"):
+        E.diffuse(items, edges, eta=0.1, steps=1)
+
+
+def test_diffuse_spool_refuses_full_scratch(spark, monkeypatch, tmp_path):
+    """Too little free scratch is a clear error stating the bytes
+    needed (3·N·F·8 + 64 MiB), the bytes free and the directory — and
+    no spool dir is created."""
+    import shutil
+    from collections import namedtuple
+
+    from pyarrowspace_spark.operators import energy as E
+
+    items = _corpus(spark, n=50, f=4, seed=1)
+    edges = spark.createDataFrame(
+        [(0, 1, 0.5)], schema="src long, dst long, weight double")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    usage = namedtuple("usage", "total used free")
+    monkeypatch.setattr(shutil, "disk_usage",
+                        lambda p: usage(1 << 30, (1 << 30) - 1000, 1000))
+    need = 3 * 50 * 4 * 8 + (64 << 20)
+    with pytest.raises(RuntimeError) as ei:
+        E.diffuse(items, edges, eta=0.1, steps=1)
+    msg = str(ei.value)
+    assert str(need) in msg and "1000" in msg and str(tmp_path) in msg
+    assert _spool_dirs(tmp_path) == []
+
+
+def test_diffuse_spool_multi_host_needs_scratch(spark, monkeypatch):
+    """A multi-host master with no worker-visible scratch dir cannot
+    run the spool plan: a RuntimeError names SPARK_GRAFT_SCRATCH_DIR
+    (there is no portable fallback plan any more)."""
+    from pyarrowspace_spark.operators import energy as E
+
+    items = _corpus(spark, n=50, f=4, seed=1)
+    edges = spark.createDataFrame(
+        [(0, 1, 0.5)], schema="src long, dst long, weight double")
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
+        E.diffuse(items, edges, eta=0.1, steps=1)

@@ -1,8 +1,7 @@
 """Round-11 contract pins: the adaptive LSH band-group disk budget
 (up-front refusal + measured-free-disk group sizing — the r10 2M abort
-fix), recursive spool accounting, the census-collect cap, the
-diffuse_plan self-description and its EnergyIndex record, and the
-single-exchange chunk reassembly."""
+fix), recursive spool accounting, the census-collect cap, and the
+diffuse_plan self-description and its EnergyIndex record."""
 
 import os
 
@@ -13,8 +12,6 @@ from pyspark.sql import functions as F
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as knn_ops
 from pyarrowspace_spark.params import EnergyParams, GraphParams
-
-from .conftest import TEST0_ITEMS
 
 
 @pytest.fixture(scope="module")
@@ -113,35 +110,18 @@ def test_lsh_census_cap_lazy_fallback(spark, monkeypatch):
 # -------------------------------------------------------------- energy
 
 
-def test_diffuse_plan_driver_tier(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_DIFFUSE_MSG_DTYPE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES",
-                       raising=False)
-    plan = E.diffuse_plan(500, 64, 6000)
-    assert plan == {"distributed_tier": 0, "msg_val_bytes": 8,
-                    "feat_chunks": 1}
+def test_diffuse_plan_driver_tier():
+    assert E.diffuse_plan(500, 64) == {"distributed_tier": 0}
 
 
-def test_diffuse_plan_distributed_chunks(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_DIFFUSE_MSG_DTYPE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES",
-                       raising=False)
-    # N·F·8 = 6.1e9 > the 4 GiB ceiling → distributed, fp32 default,
-    # chunks = ceil(E·F·4 / 16 GiB) = ceil(92.16e9/17.18e9) = 6
-    plan = E.diffuse_plan(2_000_000, 384, 60_000_000)
-    assert plan["distributed_tier"] == 1
-    assert plan["msg_val_bytes"] == 4
-    assert plan["feat_chunks"] == 6
-    # explicit fp64 doubles the message bytes and the chunk count
-    plan64 = E.diffuse_plan(2_000_000, 384, 60_000_000,
-                            msg_dtype="float64")
-    assert plan64["msg_val_bytes"] == 8
-    assert plan64["feat_chunks"] == 11
+def test_diffuse_plan_distributed_chunks():
+    # N·F·8 = 6.1e9 > the 4 GiB ceiling → distributed spool tier
+    assert E.diffuse_plan(2_000_000, 384) == {"distributed_tier": 1}
 
 
 def test_energy_index_records_diffusion_info(spark, sf_items, tmp_path):
     """An EnergyIndex self-describes the diffusion step that produced
-    it (tier/dtype/chunks), and the record survives save/load and
+    it (tier), and the record survives save/load and
     extend (r10 verdict: visible semantics, not module globals)."""
     ep = EnergyParams(optical_tokens=8, eta=0.05, steps=2,
                       trim_quantile=0.1)
@@ -149,8 +129,6 @@ def test_energy_index_records_diffusion_info(spark, sf_items, tmp_path):
     idx = E.build_energy(sf_items, ep, gp)
     assert idx.diffusion_info is not None
     assert idx.diffusion_info["tier"] == "driver"
-    assert idx.diffusion_info["msg_dtype"] == "float64"
-    assert idx.diffusion_info["feat_chunks"] == 1
     path = str(tmp_path / "eidx")
     idx.save(path)
     back = E.EnergyIndex.load(spark, path)
@@ -158,17 +136,3 @@ def test_energy_index_records_diffusion_info(spark, sf_items, tmp_path):
     ext = idx.extend(sf_items.limit(3).select(
         (F.col("item_id") + 10_000).alias("item_id"), "features"))
     assert ext.diffusion_info == idx.diffusion_info
-
-
-def test_chunk_reassembly_plan_has_no_joins(spark, test0_items_df):
-    """The chunked step's reassembly is one union+groupBy — the plan
-    must contain NO join operator (the r10 formulation re-joined the k
-    chunk frames on id: k−1 extra exchanges per step)."""
-    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
-    edges = knn_ops.knn_edges(test0_items_df, gp, strategy="exact")
-    out = E.diffusion_step(test0_items_df, edges, eta=0.1,
-                           feat_chunks=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    got = {r["item_id"]: np.array(r["features"]) for r in out.collect()}
-    assert all(len(v) == len(TEST0_ITEMS[0]) for v in got.values())

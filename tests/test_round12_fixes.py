@@ -8,9 +8,8 @@
   no longer a module-global breadcrumb only measurement scripts read.
 - fp32 X ship for the gather-tier Laplacian (finding 1): error bound
   vs the fp64 path, auto threshold, env override.
-- fp32 message error on a HIGH-DEGREE graph (verdict gap 3): the
-  ≈1e-6 bound was pinned only at deg ≤ topk; a star hub of degree 299
-  quantifies the deg-scaled bound (sum of deg fp32 messages).
+- diffusion on a HIGH-DEGREE graph (verdict gap 3): a star hub of
+  degree 299 through the distributed tier, exact fp64 vs numpy.
 - worker-visibility probe for auto mmap ship mode (ADVICE r11).
 """
 
@@ -151,12 +150,11 @@ def test_lf_x_dtype_auto_threshold(monkeypatch):
     assert 313_841 > LAM.LF_X_F32_MIN_ROWS  # flagship scale ships fp32
 
 
-def test_fp32_messages_high_degree_star(spark):
-    """Verdict gap 3: the fp32 message bound at high degree. A star
-    hub sums `deg` fp32 messages in fp32, so its error grows ~deg·2⁻²⁴;
-    pin the measured error under a 32·deg·2⁻²⁴ + 1e-6 envelope (and
-    the off-hub nodes at the flat ≈1e-6 bound) on a deg=299 graph —
-    the regime the deg ≤ topk pins never exercised."""
+def test_fp32_messages_high_degree_star(spark, monkeypatch):
+    """High-degree pin (the name predates the removal of fp32
+    messages): on a deg=299 star the distributed spool tier sums the
+    hub's 299 contributions in fp64, so one step matches the exact
+    numpy step at rtol 1e-9 on the hub and every leaf."""
     rng = np.random.default_rng(11)
     n, f = 300, 8
     X = rng.standard_normal((n, f))
@@ -168,7 +166,9 @@ def test_fp32_messages_high_degree_star(spark):
         [(0, j, float(w[j - 1])) for j in range(1, n)],
         schema="src long, dst long, weight double")
     eta = 0.001  # keep the hub update contractive at deg≈300
-    out = E.diffusion_step(items, edges, eta, msg_dtype="float32")
+    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    out = E.diffuse(items, edges, eta, steps=1)
+    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got = np.stack([r["features"] for r in
                     out.orderBy("item_id").collect()])
     # exact fp64: x' = x − η(Dx − Wx)
@@ -177,10 +177,7 @@ def test_fp32_messages_high_degree_star(spark):
     W[1:, 0] = w
     deg = W.sum(axis=1)
     exact = X - eta * (deg[:, None] * X - W @ X)
-    rel = np.abs(got - exact) / np.maximum(np.abs(exact), 1e-12)
-    hub_bound = 32 * (n - 1) * 2.0 ** -24 + 1e-6
-    assert float(rel[0].max()) < hub_bound
-    assert float(rel[1:].max()) < 1e-5  # leaves: one message each
+    np.testing.assert_allclose(got, exact, rtol=1e-9)
 
 
 def test_probe_worker_visible(spark, tmp_path):

@@ -112,8 +112,7 @@ def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
 
 def test_fp32_auto_warning_fires_once(spark, test0_items_df, monkeypatch):
     """ADVICE r12: auto fp32 X shipping emits a one-time UserWarning
-    when a corpus crosses LF_X_F32_MIN_ROWS — same policy as the fp32
-    diffusion-message default."""
+    when a corpus crosses LF_X_F32_MIN_ROWS."""
     gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
     edges = K.knn_edges(test0_items_df, gp, strategy="exact").persist()
     edges.count()

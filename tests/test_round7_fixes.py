@@ -98,10 +98,8 @@ def test_diffuse_falls_back_distributed_when_handoff_ineligible(
     got_df = E.diffuse(test0_items_df, edges, eta=0.05, steps=2)
     got = {r["item_id"]: r["features"] for r in got_df.collect()}
     assert set(got) == set(want)
-    # tolerance is the fp32 message bound: this test pins tier ROUTING
-    # on the default path, and the distributed tier defaults to fp32
-    # messages since r10 (exact-tier parity is pinned at 1e-9 by
-    # test_energy.py::test_diffuse_tiers_agree with msg_dtype=float64)
+    # this test pins tier ROUTING; both tiers are exact fp64 (tier
+    # parity at 1e-9 is pinned by test_energy.py::test_diffuse_tiers_agree)
     for k in want:
         assert got[k] == pytest.approx(want[k], rel=1e-5, abs=1e-9)
 
@@ -204,7 +202,7 @@ def test_diffuse_respects_max_result_size(spark, test0_items_df,
            for r in E.diffuse(test0_items_df, edges,
                               eta=0.05, steps=2).collect()}
     assert set(got) == set(want)
-    # fp32 message bound — routing pin, see the handoff test above
+    # routing pin, see the handoff test above
     for k in want:
         assert got[k] == pytest.approx(want[k], rel=1e-5, abs=1e-9)
 

@@ -98,8 +98,8 @@ def test_diffuse_checks_edge_collect_eligibility(spark, test0_items_df,
            for r in E.diffuse(test0_items_df, edges,
                               eta=0.05, steps=2).collect()}
     assert set(got) == set(want)
-    # fp32 message bound — this pins tier ROUTING; the exact-tier
-    # parity pin (msg_dtype=float64, 1e-9) lives in test_energy.py
+    # this pins tier ROUTING; the 1e-9 tier-parity pin lives in
+    # test_energy.py
     for k in want:
         assert got[k] == pytest.approx(want[k], rel=1e-5, abs=1e-9)
 
