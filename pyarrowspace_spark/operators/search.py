@@ -7,20 +7,190 @@ scale and mixing weight ("τ supplied externally … reused both as the
 bounding scale and as the mixing weight", TAUMODE.md) — pinned by the
 reference golden τ=0.9 ranking (tests/test_0.py:35-42).
 
-Physical plan: the query batch is tiny → broadcast join against the
-corpus; scoring is a JVM column expression; top-k is a per-query
-ranking window (or TakeOrderedAndProject for a single query). One
+Physical plan, one for exact `search` and LSH `search_ann`
+(`_score_topk`): the query side (λ_q, norms, ANN bucket codes) is
+computed on the driver and broadcast; one `mapInPandas` kernel scans
+the index in place, scores each Arrow batch against fixed-size query
+blocks — every item, or only an ANN query's bucket candidates — and
+emits per query just the rows that can still reach the global top k;
+a per-query ranking window on (score desc, id asc) picks the k. One
 shuffle per query batch, on query_id.
+
+Scores are bit-identical to the JVM expression
+`V.blended_score(V.cosine_similarity(...))`: dots and norms are
+sequential folds over the features (the order of
+`aggregate(zip_with(...))`) and the blend keeps its operation order. A
+zero-norm vector scores NULL (Spark's non-ANSI x/0) and ranks last; a
+NaN score ranks first, where Spark's descending sort puts NaN.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import vector as V
-from .lambda_index import lambda_for_vectors, with_lambda
+from .lambda_index import _lambda_kernel, lambda_for_vectors
+
+# Queries scored together against one Arrow batch of the index: bounds
+# a batch's working set whatever the number of queries.
+_QUERY_BLOCK = 64
+
+
+def _fold_dot(terms):
+    """Σ_j a_j·b_j over (a_j, b_j) array pairs as one sequential IEEE
+    fold, one multiply and one add per step: Spark's
+    aggregate(zip_with(a, b, x*y), 0.0, acc + x) bit for bit (a BLAS
+    gemm reorders the sum and can flip near-tie ranks)."""
+    acc = 0.0
+    for a, b in terms:
+        acc += a * b
+    return acc
+
+
+def _collect_queries(queries: DataFrame, lf: np.ndarray, tau: float,
+                     query_id_col: str, feat_col: str):
+    """The query-side contract of `search` and `search_ann`: collect a
+    DataFrame[query_id, features] as (query-id type, ids, m×F matrix,
+    λ_q). m·F·8 bytes must fit the session's
+    `spark.sql.autoBroadcastJoinThreshold` (Spark's 10 MB default when
+    it is disabled), and the collect stops at max_q + 1 rows. Ids must
+    be unique and non-null; their type carries through to the result.
+    """
+    n_f = lf.shape[0]
+    budget = queries.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    budget = budget if budget > 0 else 10 << 20
+    max_q = max(1, budget // (8 * n_f))
+    # A sorted limit collects in one job (TakeOrderedAndProject); a bare
+    # limit scans the partitions in rounds of jobs.
+    rows = (queries.select(query_id_col, feat_col).orderBy(query_id_col)
+            .limit(max_q + 1).collect())
+    if len(rows) > max_q:
+        raise ValueError(
+            f"more than {max_q} queries: m >= {len(rows)} × F = {n_f} "
+            f"features × 8 B exceed the {budget} B query budget "
+            "(spark.sql.autoBroadcastJoinThreshold); split the batch")
+    qids = [r[0] for r in rows]
+    dup = [q for q, n in Counter(qids).items() if n > 1 or q is None]
+    if dup:
+        raise ValueError(f"duplicate or null {query_id_col} values "
+                         f"{dup[:5]}: each query needs a unique id")
+    if any(r[1] is None or len(r[1]) != n_f for r in rows):
+        raise ValueError(f"every query needs {n_f} features (the index's)")
+    Q = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, n_f)
+    _, _, q_lam = _lambda_kernel(Q, lf, float(tau))
+    return queries.schema[query_id_col].dataType, np.asarray(qids), Q, q_lam
+
+
+def _ranked(scored: DataFrame, k: int, id_col: str,
+            query_id_col: str) -> DataFrame:
+    """Per-query top k of (query, id, score) rows, rank 1-based on
+    (score desc, id asc)."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("score").desc(), F.col(id_col).asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= F.lit(int(k))))
+
+
+def _block_topk(S, null, valid, k: int) -> np.ndarray:
+    """Mask of one block's (query, row) cells that can still reach their
+    query's global top k: valid cells scoring at least the block's k-th
+    score, ties included. NaN sorts above every number and NULL below,
+    as in Spark's descending sort."""
+    key = np.where(np.isnan(S), np.inf, S)
+    key[null | ~valid] = -np.inf
+    n = S.shape[1]
+    if n <= k:
+        return valid
+    return valid & (key >= np.partition(key, n - k, axis=1)[:, n - k, None])
+
+
+def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
+                query_side, id_col: str, feat_col: str, query_id_col: str,
+                q_buckets: np.ndarray | None = None,
+                probe_hamming1: bool = False) -> DataFrame:
+    """The one scoring plan of `search` and `search_ann`.
+
+    `query_side` is (query-id type, ids, Q, λ_q). Item λ is blended
+    from the build's (e_raw, g) at the search τ when present, else
+    recomputed per batch by `_lambda_kernel`. Given `q_buckets`, an
+    item is a candidate of a query when, in any table, bucket ^ qbucket
+    is 0, or a power of two under `probe_hamming1`: the Hamming-1 probe
+    set, with no duplicates, and only candidates are scored.
+    """
+    import pandas as pd
+    import pyarrow as pa
+
+    qid_type, qids, Q, q_lam = query_side
+    t, k = float(tau), int(k)
+    has_eg = "e_raw" in index.columns and "g" in index.columns
+    bcols = ([] if q_buckets is None
+             else [f"bucket_{i}" for i in range(q_buckets.shape[1])])
+    out_schema = T.StructType([
+        T.StructField(query_id_col, qid_type),
+        T.StructField(id_col, index.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType())])
+    QT = np.ascontiguousarray(Q.T)
+    bq = index.sparkSession.sparkContext.broadcast({
+        "qids": qids, "QT": QT, "lam": q_lam, "qb": q_buckets,
+        "qn": np.sqrt(_fold_dot((c, c) for c in QT)),
+        "lf": None if has_eg else lf})
+
+    def kernel(batches):
+        qv = bq.value
+        m = len(qv["qids"])
+        for pdf in batches:
+            if not (len(pdf) and m):
+                continue
+            X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
+            XT = np.ascontiguousarray(X.T)
+            xn = np.sqrt(_fold_dot((c, c) for c in XT))
+            if has_eg:
+                e = pdf["e_raw"].to_numpy(np.float64)
+                xl = t * (e / (e + t)) + (1.0 - t) * pdf["g"].to_numpy(
+                    np.float64)
+            else:
+                xl = _lambda_kernel(X, qv["lf"], t)[2]
+            ids = pdf[id_col].to_numpy()
+            xb = pdf[bcols].to_numpy(np.int64)
+            for b0 in range(0, m, _QUERY_BLOCK):
+                blk = slice(b0, min(b0 + _QUERY_BLOCK, m))
+                shape = (blk.stop - b0, len(X))
+                if q_buckets is None:
+                    valid = np.ones(shape, dtype=bool)
+                    qi, ri = np.ogrid[:shape[0], :shape[1]]
+                else:
+                    valid = np.zeros(shape, dtype=bool)
+                    for tb in range(len(bcols)):
+                        d = qv["qb"][blk, tb, None] ^ xb[None, :, tb]
+                        valid |= ((d & (d - 1)) == 0 if probe_hamming1
+                                  else d == 0)
+                    qi, ri = np.nonzero(valid)
+                dots = _fold_dot((q[blk][qi], x[ri]) for q, x in zip(QT, XT))
+                den = qv["qn"][blk][qi] * xn[ri]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = dots / den
+                S = np.full(shape, np.nan)
+                null = np.zeros(shape, dtype=bool)
+                S[qi, ri] = t * cos + (1.0 - t) * (
+                    1.0 / (1.0 + np.abs(qv["lam"][blk][qi] - xl[ri])))
+                null[qi, ri] = den == 0
+                oq, orow = np.nonzero(_block_topk(S, null, valid, k))
+                yield pd.DataFrame({
+                    query_id_col: qv["qids"][blk][oq],
+                    id_col: ids[orow],
+                    # Arrow-backed, so NaN stays NaN and x/0 is NULL
+                    "score": pd.arrays.ArrowExtensionArray(
+                        pa.array(S[oq, orow], mask=null[oq, orow]))})
+
+    cols = [id_col, feat_col] + (["e_raw", "g"] if has_eg else []) + bcols
+    return _ranked(index.select(*cols).mapInPandas(kernel, out_schema), k,
+                   id_col, query_id_col)
 
 
 def search(
@@ -33,65 +203,33 @@ def search(
     feat_col: str = "features",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Top-k λ-aware search.
+    """Exact top-k λ-aware search: every item of `index` is scored.
 
-    `index` must carry (id_col, feat_col); item λ is recomputed at the
-    search τ (narrow pass). Queries may be a DataFrame[query_id,
-    features] or a local ndarray (promoted to a broadcast DataFrame —
-    the reference promotes single vectors to ArrowItem, src/lib.rs:168).
+    `index` must carry (id_col, feat_col); with the build's (e_raw, g)
+    item λ at the search τ is their blend, else the kernel recomputes
+    it. Queries may be a DataFrame[query_id, features] (the
+    `_collect_queries` contract) or a local ndarray whose rows get ids
+    0..m-1 (the reference promotes single vectors to ArrowItem,
+    src/lib.rs:168).
 
     Returns DataFrame[query_id, item_id, score, rank], rank 1-based,
-    exactly k rows per query (fewer only if corpus < k).
+    exactly k rows per query (fewer only if corpus < k), both ids typed
+    as in the inputs.
     """
-    spark = index.sparkSession
     if isinstance(queries, np.ndarray):
-        q = np.atleast_2d(np.asarray(queries, dtype=np.float64))
-        if q.shape[1] != lf.shape[0]:
+        Q = np.atleast_2d(np.asarray(queries, dtype=np.float64))
+        if Q.shape[1] != lf.shape[0]:
             # Reference validates query length == nfeatures (src/lib.rs:140-146).
             raise ValueError(
-                f"query has {q.shape[1]} features, index has {lf.shape[0]}"
+                f"query has {Q.shape[1]} features, index has {lf.shape[0]}"
             )
-        lam_q = lambda_for_vectors(q, lf, tau)
-        qdf = spark.createDataFrame(
-            [(int(i), [float(v) for v in row], float(l))
-             for i, (row, l) in enumerate(zip(q, lam_q))],
-            schema=f"{query_id_col} long, q_features array<double>, q_lambda double",
-        )
+        query_side = (T.LongType(), np.arange(len(Q)), Q,
+                      lambda_for_vectors(Q, lf, tau))
     else:
-        qdf = with_lambda(queries, lf, tau, feat_col=feat_col, out_col="q_lambda")
-        qdf = qdf.select(
-            F.col(query_id_col), F.col(feat_col).alias("q_features"), "q_lambda"
-        )
-
-    if "e_raw" in index.columns and "g" in index.columns:
-        # Index built by ArrowSpaceBuilder carries the τ-independent
-        # components: item λ at the search τ is a pure JVM expression —
-        # no Python pass over the corpus per search call.
-        from .lambda_index import blend_lambda_cols
-
-        items = index.withColumn(
-            "x_lambda", blend_lambda_cols(F.col("e_raw"), F.col("g"), tau))
-    else:
-        items = with_lambda(index, lf, tau, feat_col=feat_col,
-                            out_col="x_lambda")
-
-    scored = items.join(F.broadcast(qdf)).select(
-        query_id_col,
-        id_col,
-        V.blended_score(
-            V.cosine_similarity("q_features", feat_col),
-            F.col("q_lambda"),
-            F.col("x_lambda"),
-            tau,
-        ).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(int(k)))
-    )
+        query_side = _collect_queries(queries, lf, tau, query_id_col,
+                                      feat_col)
+    return _score_topk(index, lf, tau, k, query_side, id_col, feat_col,
+                       query_id_col)
 
 
 def search_hybrid(
@@ -126,157 +264,22 @@ def search_ann(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """λ-aware top-k search with SUBLINEAR candidate generation: the
-    same blended score as `search`, rescored only over sign-LSH bucket
-    candidates (Hamming-1 multi-probe on the query side by default)
-    instead of a full corpus scan.
-
-    This is the 100 TB search path: the reference's own search is a
-    full scan (acceptable interactively at its N), but at three orders
-    more corpus the scan IS the query cost — bucket candidates bound it
-    at O(bucket · tables) per query. Recall inherits the ANN operator's
-    contract; `search` remains the exact path. `index` must carry the
-    build's (e_raw, g) columns, so item λ at the caller's τ is a JVM
-    expression over the candidate rows only.
+    score of `search`, bit for bit, for sign-LSH bucket candidates only
+    (Hamming-1 multi-probe on the query side by default), so scoring
+    costs O(bucket · tables) per query instead of a corpus scan. Recall
+    inherits the ANN operator's contract; `search` remains the exact
+    path. `index` must carry the build's (e_raw, g) columns; queries
+    follow the `_collect_queries` contract.
     """
-    import pandas as pd
+    from .simsearch import lsh_bucket_codes, lsh_bucketed
 
-    from .lambda_index import _lambda_kernel
-    from .simsearch import planes_fingerprint, with_lsh_buckets
-
-    n_tables, n_planes = planes.shape[0], planes.shape[1]
-    spark = index.sparkSession
-
-    # Hash-once contract: if the caller pre-bucketed the corpus (one
-    # `with_lsh_buckets` pass persisted at index time), reuse it — a
-    # search call then touches only the bucket join + candidate
-    # rescore, NOT a corpus-wide pass. Per-call hashing remains the
-    # fallback for ad-hoc frames. Reuse is VALIDATED: the frame must
-    # carry exactly n_tables bucket columns, and when the bucketing
-    # pass stamped a planes fingerprint (schema metadata — free to
-    # read, survives parquet), it must match the caller's planes: a
-    # bucket join under mismatched planes silently returns near-empty
-    # wrong candidates instead of erroring.
-    if "bucket_0" in index.columns:
-        have = sorted(c for c in index.columns if c.startswith("bucket_"))
-        want = sorted(f"bucket_{t}" for t in range(n_tables))
-        if have != want:
-            raise ValueError(
-                f"index carries pre-hashed columns {have} but planes "
-                f"define {len(want)} tables ({want}); re-bucket the "
-                f"index with these planes or drop the bucket_* columns")
-        meta = index.schema["bucket_0"].metadata or {}
-        stamped = meta.get("planes_fp")
-        if stamped is not None and int(stamped) != planes_fingerprint(planes):
-            raise ValueError(
-                "index bucket_* columns were hashed with a DIFFERENT "
-                "hyperplane set than the one passed to search_ann "
-                "(planes fingerprint mismatch); re-bucket the index "
-                "with these planes or pass the original planes")
-        hashed = index.select(id_col, feat_col, "e_raw", "g",
-                              *[f"bucket_{t}" for t in range(n_tables)])
-    else:
-        hashed = with_lsh_buckets(
-            index.select(id_col, feat_col, "e_raw", "g"), planes, feat_col)
-
-    # Query side DRIVER-SIDE (guide §1.2 / r14): queries are
-    # interactive-scale (the serving contract — never N-sized), so the
-    # λ pass, the bucket hash, and the Hamming-1 probe enumeration are
-    # a few numpy ops on the driver instead of three Python-worker
-    # jobs + a posexplode/explode subtree under the broadcast. The
-    # arithmetic is the exact op sequence the distributed twins apply:
-    # `_lambda_kernel` IS with_lambda's kernel, and the bucket gemm is
-    # `with_lsh_buckets`' float64 X @ H.T > 0 fold.
-    qrows = queries.select(query_id_col, feat_col).collect()
-    out_schema = (f"{query_id_col} long, {id_col} long, "
-                  "score double")
-    if not qrows:
-        empty = spark.createDataFrame([], out_schema + ", rank int")
-        return empty
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    _, _, q_lam = _lambda_kernel(Q, lf, float(tau))
-    q_norm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-    H = planes.reshape(n_tables * n_planes, planes.shape[-1])
-    signs = (Q @ H.T) > 0
-    pow2 = (2 ** np.arange(n_planes)).astype(np.int64)
-    q_buckets = (signs.reshape(len(qids), n_tables, n_planes)
-                 * pow2).sum(axis=2)
-    probe_rows = []
-    for qi in range(len(qids)):
-        for t in range(n_tables):
-            b = int(q_buckets[qi, t])
-            probes = [b] + ([b ^ (1 << j) for j in range(n_planes)]
-                            if probe_hamming1 else [])
-            probe_rows.extend(
-                (int(t), p, int(qids[qi])) for p in probes)
-    probe_df = spark.createDataFrame(
-        probe_rows, f"t int, bucket long, {query_id_col} long")
-
-    # Candidate generation: ONE corpus pass — posexplode the bucket
-    # columns and probe the broadcast (t, bucket, query) table. No
-    # per-row HOF anywhere on the corpus side.
-    it = hashed.select(
-        id_col, feat_col, "e_raw", "g",
-        F.posexplode(F.array(*[f"bucket_{t}" for t in range(n_tables)]))
-        .alias("t", "bucket"),
-    )
-    cands = it.join(F.broadcast(probe_df), ["t", "bucket"]).select(
-        query_id_col, id_col, feat_col, "e_raw", "g")
-
-    # Rescore in ONE vectorized Arrow kernel (guide §4.2): the r13
-    # expression scoring was measured at ~5 ms/candidate-row — the
-    # interpreted zip_with+aggregate dot fold, ~1,430 CPU-seconds for
-    # 50 queries at the 78k bench corpus (the r13 verdict's 32-core
-    # "ANN serving blowup" was exactly this stage saturating all
-    # cores). The same math as whole-batch numpy is ~100× cheaper;
-    # summation order changes (pairwise vs sequential fold, ~1e-13 on
-    # unit-scale scores), absorbed by the 5-6 decimal rounding every
-    # declared query applies — re-verified against the DuckDB oracle.
-    bq = spark.sparkContext.broadcast(
-        {"qids": qids, "Q": Q, "lam": q_lam, "qn": q_norm})
-    t_f = float(tau)
-
-    def _score_batches(batches):
-        qv = bq.value
-        order = np.argsort(qv["qids"], kind="stable")
-        sq = qv["qids"][order]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
-            qpos = order[np.searchsorted(sq, pdf[query_id_col]
-                                         .to_numpy(np.int64))]
-            Qs = qv["Q"][qpos]
-            dots = np.einsum("ij,ij->i", Qs, X)
-            xn = np.sqrt(np.einsum("ij,ij->i", X, X))
-            cos = dots / (qv["qn"][qpos] * xn)
-            e = pdf["e_raw"].to_numpy(np.float64)
-            g = pdf["g"].to_numpy(np.float64)
-            xl = t_f * (e / (e + t_f)) + (1.0 - t_f) * g
-            score = (t_f * cos
-                     + (1.0 - t_f)
-                     / (1.0 + np.abs(qv["lam"][qpos] - xl)))
-            yield pd.DataFrame({
-                query_id_col: pdf[query_id_col].to_numpy(np.int64),
-                id_col: pdf[id_col].to_numpy(np.int64),
-                "score": score,
-            })
-
-    # Dedupe duplicate (query, item) probe hits AFTER scoring — the
-    # duplicates carry identical inputs → identical doubles, so
-    # max == the value and the agg shuffles 24-byte rows map-side
-    # (guide §2.3); measured duplicate factor at the bench corpus is
-    # only 1.09×, so scoring-before-dedupe costs ~9% extra kernel work
-    # and saves a full-width pre-shuffle.
-    scored = cands.mapInPandas(_score_batches, out_schema).groupBy(
-        query_id_col, id_col).agg(F.max("score").alias("score"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(int(k)))
-    )
+    if "bucket_0" not in index.columns:
+        index = index.select(id_col, feat_col, "e_raw", "g")
+    hashed = lsh_bucketed(index, planes, feat_col)
+    query_side = _collect_queries(queries, lf, tau, query_id_col, feat_col)
+    return _score_topk(hashed, lf, tau, k, query_side, id_col, feat_col,
+                       query_id_col, lsh_bucket_codes(query_side[2], planes),
+                       probe_hamming1)
 
 
 def brute_force_cosine_topk(
@@ -301,10 +304,4 @@ def brute_force_cosine_topk(
         id_col,
         V.cosine_similarity("q_features", feat_col).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(int(k)))
-    )
+    return _ranked(scored, k, id_col, query_id_col)

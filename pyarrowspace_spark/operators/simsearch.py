@@ -142,6 +142,15 @@ def _bucket_expr(feat_col: str, table_planes: np.ndarray):
     return bucket
 
 
+def lsh_bucket_codes(X: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(n, T) int64 bucket codes of float64 rows: ONE gemm against all
+    T×B hyperplanes; bit b of table t is set when x·h_tb > 0."""
+    n_tables, n_planes, dim = planes.shape
+    signs = (X @ planes.reshape(n_tables * n_planes, dim).T) > 0
+    return (signs.reshape(len(X), n_tables, n_planes)
+            * (2 ** np.arange(n_planes)).astype(np.int64)).sum(axis=2)
+
+
 def with_lsh_buckets(df: DataFrame, planes: np.ndarray,
                      feat_col: str = "features") -> DataFrame:
     """Append `bucket_0..bucket_{T-1}` via ONE Arrow-batched gemm
@@ -157,11 +166,9 @@ def with_lsh_buckets(df: DataFrame, planes: np.ndarray,
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    n_tables, n_planes, _dim = planes.shape
-    H = planes.reshape(n_tables * n_planes, planes.shape[-1])
-    pow2 = (2 ** np.arange(n_planes)).astype(np.int64)
+    n_tables = planes.shape[0]
     spark = df.sparkSession
-    b_H = spark.sparkContext.broadcast(H)
+    b_planes = spark.sparkContext.broadcast(planes)
     # Stamp the plane-set fingerprint into the bucket_0 schema metadata:
     # consumers reusing pre-hashed buckets (search_ann's hash-once path)
     # can verify the buckets came from THESE planes without a Spark job.
@@ -178,15 +185,44 @@ def with_lsh_buckets(df: DataFrame, planes: np.ndarray,
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
-            signs = (X @ b_H.value.T) > 0
-            buckets = (signs.reshape(len(pdf), n_tables, n_planes)
-                       * pow2).sum(axis=2)
+            buckets = lsh_bucket_codes(X, b_planes.value)
             out = pdf.copy()
             for t in range(n_tables):
                 out[f"bucket_{t}"] = buckets[:, t]
             yield out
 
     return df.mapInPandas(add_buckets, schema=out_schema)
+
+
+def lsh_bucketed(df: DataFrame, planes: np.ndarray,
+                 feat_col: str = "features") -> DataFrame:
+    """`df` with bucket_0..bucket_{T-1} under `planes`.
+
+    Hash-once contract: a corpus pre-bucketed at index time (one
+    persisted `with_lsh_buckets` pass) is reused, so a search call
+    touches no corpus-wide hashing pass; ad-hoc frames are hashed here.
+    Reuse is VALIDATED: the frame must carry exactly T bucket columns,
+    and when the bucketing pass stamped a planes fingerprint (schema
+    metadata — free to read, survives parquet), it must match `planes`:
+    buckets under mismatched planes silently select near-empty wrong
+    candidates instead of erroring."""
+    if "bucket_0" not in df.columns:
+        return with_lsh_buckets(df, planes, feat_col)
+    have = sorted(c for c in df.columns if c.startswith("bucket_"))
+    want = sorted(f"bucket_{t}" for t in range(planes.shape[0]))
+    if have != want:
+        raise ValueError(
+            f"index carries pre-hashed columns {have} but planes "
+            f"define {len(want)} tables ({want}); re-bucket the "
+            f"index with these planes or drop the bucket_* columns")
+    stamped = (df.schema["bucket_0"].metadata or {}).get("planes_fp")
+    if stamped is not None and int(stamped) != planes_fingerprint(planes):
+        raise ValueError(
+            "index bucket_* columns were hashed with a DIFFERENT "
+            "hyperplane set than the one passed to search_ann "
+            "(planes fingerprint mismatch); re-bucket the index "
+            "with these planes or pass the original planes")
+    return df
 
 
 def with_lsh_buckets_sql(df: DataFrame, planes: np.ndarray,

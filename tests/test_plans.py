@@ -61,12 +61,18 @@ def test_search_has_no_python_row_udf(spark):
                         tau=0.62, k=5))
     # row-at-a-time Python UDFs never appear anywhere
     assert "BatchEvalPython" not in plan
-    # the scoring + ranking operators (everything ABOVE the join in
-    # the tree = before it in the text) are pure JVM; Python kernels
-    # exist only in the cached build lineage / tiny query side
-    scoring = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "EvalPython" not in scoring
-    assert "Window" in scoring
+    # no (query × item) join: one Arrow kernel scans the index in place
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    tree = plan.split("\n\n")[0]
+    assert tree.count("MapInPandas") == 1
+    # the only shuffle is the ranking window's, on the query id
+    assert tree.count("Exchange") == 1
+    assert plan.count("Arguments: hashpartitioning(query_id#") == 1
+    # the ranking operators above the kernel are pure JVM
+    ranking = tree.split("MapInPandas")[0]
+    assert "Window" in ranking
+    assert "EvalPython" not in ranking
 
 
 def test_minhash_no_cartesian(spark):
