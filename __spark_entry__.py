@@ -1408,10 +1408,10 @@ def q_build_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
           float(plan["distributed_tier"]))],
         "section string, metric string, value double")
     # r12: the LSH grouped-build physical plan on THIS corpus shape —
-    # auto bit width / band count and the env-budgeted group count +
+    # auto bit width / band count and the budgeted group count +
     # projected spool/shuffle bytes (r11 verdict: the group machinery
     # must be diagnostics-visible, not a module-global breadcrumb).
-    # Pure arithmetic over (N, F, k); the oracle replays the formulas.
+    # Pure arithmetic over (N, k); the oracle replays the formulas.
     from pyarrowspace_spark.operators import knn as KNN_MOD
 
     lp = KNN_MOD.lsh_plan(int(gsrow["n_items"]), int(nf), KNN_K)
@@ -3530,14 +3530,12 @@ FROM stats GROUP BY lang"""
     from pyarrowspace_spark.operators import energy as _EN
 
     _dp_ceil = int(_EN.DIFFUSE_BROADCAST_MAX_BYTES)
-    # lsh_plan twin constants (same resolution rule as diffuse_plan's:
-    # env-backed budgets read at oracle-build time, design constants
-    # embedded so the SQL replays knn.lsh_plan exactly)
-    from pyarrowspace_spark.functions.matrix import parse_size_bytes as _psb
+    # lsh_plan twin constants: the design constants are embedded so the
+    # SQL replays knn.lsh_plan exactly
     from pyarrowspace_spark.operators import knn as _KNN
 
-    _lp_budget = _psb(os.environ.get("SPARK_GRAFT_LSH_GROUP_BYTES",
-                                     str(8 << 30)), default=8 << 30)
+    _lp_budget = int(_KNN.LSH_GROUP_BYTES)
+    _lp_row_b = int(_KNN.LSH_ROW_BYTES)
     _lp_k = int(KNN_K)
     _lp_spool_b = float(_KNN.LSH_PAIR_SPOOL_BYTES)
     _lp_miss = float(_KNN.LSH_MISS_BUDGET)
@@ -3593,18 +3591,15 @@ SELECT 'lsh_plan',
                'band_shuffle_bytes', 'spool_group_bytes']),
        unnest([bits, bands,
                ceil(bands / ceil(bands / least(bands, greatest(1.0,
-                    ceil(n_items * bands * (nf * 4 + 48)
+                    ceil(n_items * bands * {_lp_row_b}
                          / {_lp_budget}))))),
-               n_items * (nf * 4 + 48),
+               n_items * {_lp_row_b},
                n_items * {_lp_k} * {_lp_spool_b!r}])
 FROM (SELECT *, greatest(16.0, ceil({_lp_miss!r}
              / -ln(1.0 - pow({_lp_coll!r}, bits)))) AS bands
-      FROM (SELECT n_items::DOUBLE AS n_items, nf::DOUBLE AS nf,
+      FROM (SELECT n_items::DOUBLE AS n_items,
                    least(20.0, greatest(6.0, round(log2(
                        greatest(n_items / 256.0, 2.0))))) AS bits
-            FROM (SELECT g.n_items,
-                         (SELECT len(embedding) FROM embeddings
-                          LIMIT 1) AS nf
-                  FROM ({_gs_sql}) g)))"""
+            FROM ({_gs_sql})))"""
     d.pop("search_hybrid")
     return d

@@ -43,11 +43,12 @@ class ArrowSpaceIndex:
     tau_synth: float          # Median-synthesized τ used for stored λ
     n_features: int
     _nitems: int | None = None  # lazily cached count
-    #: Measured record of THIS build's grouped LSH pair stage (group
-    #: count, spool bytes, per-stage metrics — knn.lsh_group_summary),
-    #: None when the build ran exact or single-stage LSH. Session-only
-    #: instrumentation (not persisted by save): the deterministic plan
-    #: twin is the `lsh_plan` build_diagnostics section.
+    #: Measured record of THIS build's LSH pair stage (group count,
+    #: spool bytes, per-stage metrics — knn.lsh_group_summary), None
+    #: only when the build ran the exact strategy or was given its
+    #: edges. Session-only instrumentation (not persisted by save): the
+    #: deterministic plan twin is the `lsh_plan` build_diagnostics
+    #: section.
     lsh_build_info: dict | None = None
 
     @property
@@ -296,9 +297,9 @@ class ArrowSpaceBuilder:
             lsh_info = None
         else:
             # x_src (trivial-scan provenance, resolved above) also
-            # feeds the LSH narrow-shuffle plan's U spool: the spool
-            # streams straight from the corpus parquet instead of a
-            # full collect. Only valid when the graph runs on the
+            # feeds the LSH build's U spool: the spool streams straight
+            # from the corpus parquet instead of a parquet copy of the
+            # input. Only valid when the graph runs on the
             # untransformed input — the same condition the λ gather
             # checks below.
             knn_x_src = (x_src if (graph_input is base
@@ -311,8 +312,7 @@ class ArrowSpaceBuilder:
                                       x_source=knn_x_src).persist()
             # The grouped LSH pair stage runs EAGERLY inside knn_edges
             # (its spools are written group by group), so its measured
-            # record is complete here; None when exact/single-stage
-            # ran.
+            # record is complete here; None when exact ran.
             lsh_info = knn_ops.lsh_group_summary()
         # λ-gather fast path: stream the gather spool from the corpus
         # parquet only when the graph ran on the UNTRANSFORMED input

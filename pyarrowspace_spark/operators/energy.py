@@ -290,6 +290,32 @@ def _single_host_master(spark) -> bool:
     return spark.sparkContext.master.startswith("local")
 
 
+def _spool_scratch(spark, op: str) -> "tuple[str, bool]":
+    """The one scratch rule of the spool plans (distributed diffusion
+    and the LSH build): returns (scratch root, task_write).
+
+    On a single-host master the root is $SPARK_GRAFT_SCRATCH_DIR, else
+    the temp dir, and tasks may write spools directly. On a multi-host
+    master the root must be a SPARK_GRAFT_SCRATCH_DIR that every
+    executor sees (`_probe_worker_visible`); otherwise `op` cannot run
+    and a RuntimeError names the variable."""
+    from .lambda_index import _probe_worker_visible
+
+    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
+    task_write = _single_host_master(spark)
+    if not task_write and not (
+            scratch_env and _probe_worker_visible(spark, scratch_env)):
+        where = (f"SPARK_GRAFT_SCRATCH_DIR={scratch_env!r} is not "
+                 "visible to every executor" if scratch_env else
+                 "SPARK_GRAFT_SCRATCH_DIR is not set")
+        raise RuntimeError(
+            f"{op} needs a scratch directory that the driver and every "
+            "executor can read and write (master "
+            f"{spark.sparkContext.master!r}); {where}. Point "
+            "SPARK_GRAFT_SCRATCH_DIR at a shared filesystem path.")
+    return scratch_env or tempfile.gettempdir(), task_write
+
+
 def _drop_scratch_dir(d: str) -> None:
     shutil.rmtree(d, ignore_errors=True)
     if d in matrix_mod._SCRATCH_DIRS:
@@ -317,23 +343,10 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     has no worker-visible SPARK_GRAFT_SCRATCH_DIR or the scratch
     filesystem lacks 3·N·F·8 + 64 MiB free; ValueError on duplicate
     ids. Any failure after the spool dir is created removes it."""
-    from .lambda_index import _probe_worker_visible
-
     spark = items.sparkSession
-    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    task_write = _single_host_master(spark)
-    if not task_write and not (
-            scratch_env and _probe_worker_visible(spark, scratch_env)):
-        where = (f"SPARK_GRAFT_SCRATCH_DIR={scratch_env!r} is not "
-                 "visible to every executor" if scratch_env else
-                 "SPARK_GRAFT_SCRATCH_DIR is not set")
-        raise RuntimeError(
-            "diffuse: the distributed tier needs a scratch directory "
-            "that the driver and every executor can read and write "
-            f"(master {spark.sparkContext.master!r}); {where}. Point "
-            "SPARK_GRAFT_SCRATCH_DIR at a shared filesystem path.")
+    root, task_write = _spool_scratch(spark,
+                                      "diffuse: the distributed tier")
     # budget: two live spools + one step parquet, all ~N·F·8
-    root = scratch_env or tempfile.gettempdir()
     need = 3 * n * nf * 8 + (64 << 20)
     free = shutil.disk_usage(root).free
     if free < need:

@@ -6,16 +6,19 @@ k smallest per node, symmetrize, then weight w = 1/(1+(d/sigma)^p).
 
 Two physical strategies, one logical contract:
 
-- ``exact``: blocked cross-join + per-node top-k window. O(N^2) —
-  correct at any N but only *sized* for N up to ~10^5. This is the
-  correctness path used by tests and the DuckDB oracle.
+- ``exact``: broadcast corpus + partition-local BLAS scan with a
+  per-node top-k. O(N^2) — correct at any N but only *sized* for N up
+  to ~10^5. This is the correctness path used by tests; the DuckDB
+  oracle is the SQL reference.
 - ``lsh``: sign-random-projection band LSH. Items are hashed into
   ``n_bands`` buckets of ``n_bits`` sign bits each (one broadcast
   gemm), candidates are generated ONLY within each (band, bucket)
   group by a partition-local Arrow gemm, then deduped and re-ranked
-  by the same eps/top-k contract. This is the 100 TB path: candidate
-  generation is bucket-local (one shuffle on the band key), never
-  all-pairs, and nothing N-sized ever touches the driver.
+  by the same eps/top-k contract. The shuffle carries narrow
+  (band, key, id) rows; each bucket gathers its unit vectors from one
+  id-sorted float32 spool on scratch every executor can read.
+  Candidate generation is bucket-local, never all-pairs, and nothing
+  N-sized ever touches the driver.
 
   (An earlier revision used MLlib's BucketedRandomProjectionLSH;
   its approxSimilarityJoin OR-amplifies single-projection buckets,
@@ -29,6 +32,7 @@ Two physical strategies, one logical contract:
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import shutil
@@ -51,12 +55,18 @@ from ..functions import vector as V
 _LAST_LSH_GROUP_INFO: list | None = None
 
 #: Scratch-disk spill multiplier for one band group: the group's
-#: (band,key) shuffle sorts N·gsize vector-carrying rows; measured peak
-#: transient over shuffle-input bytes was ~2.3x at N=800k and ~3.9x at
-#: the N=2M abort (BENCH_800k_r10g.json / BENCH_2000k_r10.json, zstd
-#: codec), so the default budgets the worst observed. Env override:
-#: SPARK_GRAFT_LSH_SPILL_FACTOR.
+#: (band,key) shuffle sorts N·gsize rows; measured peak transient over
+#: shuffle-input bytes was ~2.3x at N=800k and ~3.9x at the N=2M abort
+#: (BENCH_800k_r10g.json / BENCH_2000k_r10.json, zstd codec), so the
+#: default budgets the worst observed.
 LSH_SPILL_FACTOR = 4.0
+#: Exchange bytes per hashed (band int, key long, id long) row: 20 B of
+#: values plus row framing. The group budget and `lsh_plan` price it.
+LSH_ROW_BYTES = 28
+#: Estimated (band, key) exchange bytes above which the bands run in
+#: sequential groups (N·bands·LSH_ROW_BYTES per group at most). At
+#: 8 GiB every corpus up to a few million rows runs one group.
+LSH_GROUP_BYTES = 8 << 30
 #: Free-disk floor the grouped build must never plan into — same 15 GB
 #: margin the measurement watchdog enforces (a spill burst writes
 #: ~200 MB/s across 32 tasks; a thinner floor loses the race). Env
@@ -73,13 +83,6 @@ LSH_PAIR_SPOOL_BYTES = 7.5
 #: on census size is N·bands/LSH_BUCKET_MAX keys; 65536 rows ≈ 1.5 MB
 #: on the driver covers every non-adversarial corpus to ~10^10 rows.
 LSH_CENSUS_COLLECT_MAX = 65536
-
-#: Row ceiling for the narrow-shuffle LSH plan (the unit-vector spool
-#: is N·F float32 on the shared scratch — the same ceiling class as
-#: the λ-gather's X spool). Beyond it the legacy vector-shuffle plan
-#: runs. Env override: SPARK_GRAFT_LSH_SPOOL_MAX_ROWS.
-LSH_SPOOL_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_LSH_SPOOL_MAX_ROWS", str(4_000_000)))
 
 # worker-side (pid-scoped) cache of the most recent U spool mmap: the
 # bucket kernel is called once per (band, key) group — thousands of
@@ -112,25 +115,31 @@ def _normalize_f32(X) -> np.ndarray:
 
 def _stream_u_spool_from_parquet(x_source: dict, n: int, fdim: int,
                                  u_path: str):
-    """Stream the corpus parquet into an id-sorted float32 UNIT-vector
+    """Stream parquet files into an id-sorted float32 UNIT-vector
     spool (the LSH twin of lambda_index._stream_spool_from_parquet —
     same chunked scatter, plus the per-batch `_normalize_f32`).
-    Returns sorted ids on success, None on any mismatch."""
+    Returns sorted ids on success, None when the files do not hold
+    exactly `n` rows of `fdim` values. Raises ValueError on duplicate
+    ids: a by-id scatter would hand every copy one row's vector."""
     import pyarrow.parquet as pq
 
     idc, fc = x_source["id_col"], x_source["feat_col"]
     try:
-        ids_parts = []
-        for f in x_source["files"]:
-            ids_parts.append(
-                pq.read_table(f, columns=[idc])[idc]
-                .to_numpy(zero_copy_only=False))
-        ids_arr = np.concatenate(ids_parts).astype(np.int64, copy=False)
-        if len(ids_arr) != n:
-            return None
-        s_ids = np.sort(ids_arr)
-        if s_ids.size > 1 and np.any(s_ids[1:] == s_ids[:-1]):
-            return None
+        ids_arr = np.concatenate([
+            pq.read_table(f, columns=[idc])[idc]
+            .to_numpy(zero_copy_only=False)
+            for f in x_source["files"]]).astype(np.int64, copy=False)
+    except Exception:
+        return None
+    if len(ids_arr) != n:
+        return None
+    s_ids = np.sort(ids_arr)
+    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
+    if dup.size:
+        raise ValueError(
+            f"knn_edges: item ids must be unique; "
+            f"{len(np.unique(dup))} ids repeat (e.g. {int(dup[0])})")
+    try:
         U = np.lib.format.open_memmap(
             u_path, mode="w+", dtype=np.float32, shape=(n, fdim))
         total = 0
@@ -158,70 +167,38 @@ def _stream_u_spool_from_parquet(x_source: dict, n: int, fdim: int,
 
 
 def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
-                   n: int, fdim: int,
-                   x_source: dict | None) -> "tuple[str, str] | None":
-    """Create the id-sorted float32 unit-vector spool that lets the
-    LSH pair stage shuffle NARROW (band, key, id) rows and gather
-    vectors bucket-locally from one shared page-cache copy (guide §8:
-    shuffle keys, not payloads). None ⇒ caller uses the legacy
-    vector-shuffle plan (no worker-visible scratch, corpus too big to
-    spool, or SPARK_GRAFT_LSH_SHUFFLE=vector)."""
-    from ..functions import matrix as matrix_mod
-    from .lambda_index import _probe_worker_visible, _spool_modes
+                   n: int, fdim: int, x_source: dict | None,
+                   u_path: str, s_path: str) -> None:
+    """Write the id-sorted float32 unit-vector spool (`u_path`) and its
+    sorted ids (`s_path`) into one scratch dir: the payload the LSH
+    pair stage gathers bucket-locally, so its shuffle carries only
+    (band, key, id) rows (guide §8: shuffle keys, not payloads). The
+    input is the corpus parquet when `x_source` proves a trivial scan,
+    else a parquet copy of `items` written into the dir by the tasks
+    and deleted once streamed — nothing N-sized is collected on the
+    driver."""
+    from .lambda_index import _spool_modes
 
-    if os.environ.get("SPARK_GRAFT_LSH_SHUFFLE", "auto").lower() == "vector":
-        return None
-    if n > LSH_SPOOL_MAX_ROWS:
-        return None
-    spark = items.sparkSession
-    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    master_local = spark.sparkContext.master.startswith("local")
-    if scratch_env and not master_local:
-        mmap_ok = _probe_worker_visible(spark, scratch_env)
-    else:
-        mmap_ok = bool(scratch_env) or master_local
-    if not mmap_ok:
-        return None
-    d = tempfile.mkdtemp(prefix="pyarrowspace-lshu-",
-                         dir=scratch_env or None)
-    matrix_mod._SCRATCH_DIRS.append(d)
-    u_path = os.path.join(d, "u.npy")
-    s_ids = None
-    if x_source:
-        s_ids = _stream_u_spool_from_parquet(x_source, n, fdim, u_path)
-        if s_ids is None:
-            try:
-                os.remove(u_path)
-            except OSError:
-                pass
+    d = os.path.dirname(u_path)
+    s_ids = (_stream_u_spool_from_parquet(x_source, n, fdim, u_path)
+             if x_source else None)
     if s_ids is None:
-        if not matrix_mod.collect_eligible(spark, n * fdim * 8):
-            matrix_mod._SCRATCH_DIRS.remove(d)
-            shutil.rmtree(d, ignore_errors=True)
-            return None
-        ids_arr, X = matrix_mod.collect_id_matrix(items, id_col, feat_col)
-        perm = np.argsort(ids_arr, kind="stable")
-        s_ids = ids_arr[perm]
-        np.save(u_path, _normalize_f32(X[perm]))
-        del X
-    s_path = os.path.join(d, "sids.npy")
+        copy_dir = os.path.join(d, "items")
+        items.select(id_col, feat_col).write.parquet(copy_dir)
+        s_ids = _stream_u_spool_from_parquet(
+            {"files": sorted(glob.glob(os.path.join(copy_dir,
+                                                    "part-*.parquet"))),
+             "id_col": id_col, "feat_col": feat_col}, n, fdim, u_path)
+        shutil.rmtree(copy_dir, ignore_errors=True)
+        if s_ids is None:
+            raise RuntimeError(
+                f"knn_edges: the items frame did not re-read as {n} rows "
+                f"of {fdim} features — it is not deterministic")
     np.save(s_path, s_ids)
     dmode, fmode = _spool_modes()
     os.chmod(d, dmode)
     for fn in os.listdir(d):
         os.chmod(os.path.join(d, fn), fmode)
-    return u_path, s_path
-
-
-def _drop_u_spool(spool: "tuple[str, str] | None") -> None:
-    if not spool:
-        return
-    from ..functions import matrix as matrix_mod
-
-    d = os.path.dirname(spool[0])
-    shutil.rmtree(d, ignore_errors=True)
-    if d in matrix_mod._SCRATCH_DIRS:
-        matrix_mod._SCRATCH_DIRS.remove(d)
 
 
 def _scratch_probe_dir(spark) -> str:
@@ -324,36 +301,6 @@ def _stages_since(spark, watermark: int) -> list[dict]:
 # Above this many items the exact all-pairs join is no longer the plan
 # you'd want on a cluster; switch to LSH candidate generation.
 EXACT_PATH_MAX_ROWS = 20_000
-
-
-def _pairwise_candidates_exact(items: DataFrame, id_col: str, feat_col: str) -> DataFrame:
-    """All ordered pairs (a != b) with rectified-cosine distance.
-
-    The join condition a.id != b.id keeps Catalyst from collapsing the
-    self-join; distances are computed with JVM higher-order functions
-    inside codegen. Norms are precomputed once per side to halve work.
-
-    Kept as the pure-SQL reference formulation; the default exact path
-    is `_knn_edges_broadcast_scan` (same math, vectorized) because a
-    per-pair `aggregate` lambda costs ~100x a BLAS matmul.
-    """
-    a = items.select(
-        F.col(id_col).alias("src"),
-        F.col(feat_col).alias("_fa"),
-        V.l2_norm(feat_col).alias("_na"),
-    )
-    b = items.select(
-        F.col(id_col).alias("dst"),
-        F.col(feat_col).alias("_fb"),
-        V.l2_norm(feat_col).alias("_nb"),
-    )
-    pairs = a.join(b, F.col("src") != F.col("dst"))
-    cos = V.dot("_fa", "_fb") / (F.col("_na") * F.col("_nb"))
-    return pairs.select(
-        "src",
-        "dst",
-        (F.lit(1.0) - F.greatest(cos, F.lit(0.0))).alias("dist"),
-    )
 
 
 def _knn_directed_broadcast_scan(
@@ -490,35 +437,36 @@ def auto_lsh_bands(n_bits: int) -> int:
     return max(16, int(_m.ceil(budget / -_m.log(max(1.0 - p, 1e-12)))))
 
 
+def _band_group_size(n_items: int, n_bands: int,
+                     budget: int | None = None) -> int:
+    """Bands per sequential group: enough groups that each group's
+    estimated (band, key) exchange, N·bands·LSH_ROW_BYTES, fits the
+    group budget (LSH_GROUP_BYTES by default)."""
+    budget = LSH_GROUP_BYTES if budget is None else int(budget)
+    est_bytes = n_items * n_bands * LSH_ROW_BYTES
+    n_groups = int(min(n_bands, max(1, -(-est_bytes // budget))))
+    return -(-n_bands // n_groups)
+
+
 def lsh_plan(n_items: int, fdim: int, k: int,
              group_budget_bytes: int | None = None) -> dict:
-    """The LSH physical plan the grouped build would run on THIS corpus
-    shape — pure arithmetic over (N, F, k) plus the env-backed group
-    budget, the `diffuse_plan` pattern (r11 verdict: the group/spool
-    machinery's behavior must be diagnostics-visible, not a module
-    global only measurement scripts read). Returns the auto bit width
-    and band count, the env-CAPPED band-group count, and the projected
-    per-group (k-capped) pair-spool and per-band shuffle bytes. The
-    MEASURED per-run record (spool bytes, stage metrics, wall) lives in
-    `lsh_group_summary()`; this is the deterministic twin the DuckDB
-    oracle replays."""
-    from ..functions.matrix import parse_size_bytes
-
+    """The LSH physical plan the build would run on THIS corpus shape
+    on a healthy disk — pure arithmetic over (N, k) and the group
+    budget, the `diffuse_plan` pattern. Returns the auto bit width and
+    band count, the band-group count, and the projected per-band
+    (band, key) exchange bytes and per-group (k-capped) pair-spool
+    bytes. The hashed rows are narrow, so `fdim` does not enter the
+    exchange price. The MEASURED per-run record (spool bytes, stage
+    metrics, wall) lives in `lsh_group_summary()`; this is the
+    deterministic twin the DuckDB oracle replays."""
     n_bits = int(min(20, max(6, round(math.log2(max(n_items / 256, 2))))))
     n_bands = auto_lsh_bands(n_bits)
-    band_bytes = n_items * (fdim * 4 + 48)
-    budget = (group_budget_bytes if group_budget_bytes is not None
-              else parse_size_bytes(
-                  os.environ.get("SPARK_GRAFT_LSH_GROUP_BYTES",
-                                 str(8 << 30)), default=8 << 30))
-    est_bytes = n_items * n_bands * (fdim * 4 + 48)
-    n_groups = int(min(n_bands, max(1, -(-est_bytes // budget))))
-    gsize = -(-n_bands // n_groups)
+    gsize = _band_group_size(n_items, n_bands, group_budget_bytes)
     return {
         "n_bits": n_bits,
         "n_bands": n_bands,
         "n_band_groups": -(-n_bands // gsize),
-        "band_shuffle_bytes": band_bytes,
+        "band_shuffle_bytes": n_items * LSH_ROW_BYTES,
         "spool_group_bytes": n_items * max(int(k), 1) * LSH_PAIR_SPOOL_BYTES,
     }
 
@@ -527,13 +475,12 @@ def lsh_group_summary() -> dict | None:
     """Measured record of the MOST RECENT grouped LSH pair stage in
     this process: group count, total/max pair-spool bytes, total wall
     seconds, and peak per-stage shuffle-write/spill bytes (when the UI
-    REST API was reachable). None when the last build ran the legacy
-    single-stage (ungrouped) vector-shuffle plan, the exact strategy,
-    or no LSH build has run; the narrow-shuffle plan (r13-opt) always
-    spools per group — a normal build shows one group here. Successor to reading the
-    `_LAST_LSH_GROUP_INFO` breadcrumb directly (r11 verdict finding 2);
-    the raw per-group records stay available for measurement harnesses
-    as the ``groups`` key."""
+    REST API was reachable). Every LSH build spools its pairs per band
+    group, so a normal build shows one group here; None after an exact
+    build, an empty corpus, or when no LSH build has run. Successor to
+    reading the `_LAST_LSH_GROUP_INFO` breadcrumb directly (r11 verdict
+    finding 2); the raw per-group records stay available for
+    measurement harnesses as the ``groups`` key."""
     info = _LAST_LSH_GROUP_INFO
     if not info:
         return None
@@ -574,20 +521,26 @@ def _pairwise_candidates_lsh(
     """Bucketed candidate pairs within the cosine eps-ball via
     sign-random-projection band LSH.
 
-    The 100 TB shape (three narrow/bucket-local stages, no driver
-    materialization of anything N-sized):
+    One plan: the index-join form of a vertex-relation join (as in
+    Pregelix) — keys are shuffled, payloads are gathered. Nothing
+    N-sized is materialized on the driver.
 
-      1. ONE Arrow pass per partition: gemm the unit-normalized batch
-         against a broadcast F×(bands·bits) Gaussian matrix, pack each
-         band's sign bits into an int64 key, emit ``n_bands`` rows
-         (band, key, id, unit_f32) per item.
-      2. Shuffle ONCE on (band, key); per bucket an Arrow gemm computes
-         intra-bucket rectified-cosine distances, applies the eps
-         predicate, and (if ``k``) caps emission at the k smallest per
-         src — lossless for downstream top-k, since any neighbor
-         crowded out of a bucket's top-k is also outside the global
-         top-k.
-      3. groupBy(src,dst) min(dist) dedupes pairs found in >1 band
+      1. The unit vectors are written ONCE to an id-sorted float32
+         spool (`_build_u_spool`) on scratch every executor can read.
+      2. ONE Arrow pass per partition gemms the unit-normalized batch
+         against a broadcast F×(bands·bits) Gaussian matrix, packs each
+         band's sign bits into an int64 key and emits ``n_bands``
+         narrow (band, key, id) rows per item. The table is persisted:
+         the bucket-size census and every band group read it.
+      3. Per band group, shuffle on (band, key); per bucket the kernel
+         gathers its rows' unit vectors from the spool, computes the
+         intra-bucket rectified-cosine distances by an Arrow gemm,
+         applies the eps predicate and (if ``k``) caps emission at the
+         k smallest per src — lossless for downstream top-k, since any
+         neighbor crowded out of a bucket's top-k is also outside the
+         global top-k. The group's pairs are written to a parquet pair
+         spool.
+      4. groupBy(src,dst) min(dist) dedupes pairs found in >1 band
          (map-side combinable).
 
     Collision probability for a pair at angle θ is (1-θ/π)^n_bits per
@@ -596,170 +549,167 @@ def _pairwise_candidates_lsh(
     to log2(N/256) clamped to [6, 20] — buckets of a few hundred rows
     keep the per-bucket gemm cache-friendly while preserving recall.
 
-    Shuffled vectors are float32: half the shuffle bytes; the distance
-    error (~1e-7 relative) is far below any eps/ranking decision and
-    the path is approximate by contract (recall ≥ 0.95, SURVEY §7.3 #2).
+    Unit vectors are float32 (the hash pass and the spool apply the
+    same `_normalize_f32`): the distance error (~1e-7 relative) is far
+    below any eps/ranking decision and the path is approximate by
+    contract (recall ≥ 0.95, SURVEY §7.3 #2).
+
+    An empty `items` frame yields no pairs. Raises ValueError on
+    duplicate ids; RuntimeError when a multi-host master has no
+    worker-visible SPARK_GRAFT_SCRATCH_DIR, or the scratch disk cannot
+    hold the projected build (checked before any spool byte is
+    written). On any failure the U spool, this build's pair spools and
+    the hash cache are released.
     """
     import pandas as pd
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, LongType, StructField,
-                                   StructType)
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   StructField, StructType)
+
+    from ..functions import matrix as matrix_mod
+    from ..functions.matrix import parse_size_bytes, with_scan_parallelism
+    from .energy import _drop_scratch_dir, _spool_scratch
 
     spark = items.sparkSession
-    if n_items is None:
-        n_items = items.count()
-    if n_bits is None:
-        n_bits = int(min(20, max(6, round(math.log2(max(n_items / 256, 2))))))
-    if n_bands is None:
-        n_bands = auto_lsh_bands(n_bits)
-    first = items.select(F.size(feat_col).alias("n")).first()
-    fdim = int(first["n"])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((fdim, n_bands * n_bits)).astype(np.float32)
-    b_planes = spark.sparkContext.broadcast(planes)
-    weights = (1 << np.arange(n_bits, dtype=np.int64))
-    nb, bits = int(n_bands), int(n_bits)
-
-    # Narrow-shuffle plan (r13-opt, guide §8 "shuffle keys and
-    # metadata instead of payloads"): where a worker-visible scratch
-    # exists and the corpus fits the spool ceiling, the unit vectors
-    # are spooled ONCE (id-sorted float32, one shared page-cache copy)
-    # and the pair stage shuffles only (band, key, id) rows — ~28 B
-    # instead of F·4+48 B per row (at N=2M, 39 bands: ~2.3 GB instead
-    # of ~95 GB through the exchange). The bucket kernel gathers its
-    # few-hundred rows from the mmap; U bits are identical to the
-    # shuffled-uvec values (`_normalize_f32` is the same op sequence
-    # the hash pass applies), so every emitted pair is unchanged.
-    # `lsh_plan`'s band_shuffle_bytes continues to describe the
-    # PORTABLE fallback plan (the oracle replays that formula).
-    u_spool = _build_u_spool(items, id_col, feat_col, n_items, fdim,
-                             x_source)
-    narrow = u_spool is not None
-
-    if narrow:
-        hash_schema = StructType([
-            StructField("band", IntegerType(), False),
-            StructField("key", LongType(), False),
-            StructField("id", LongType(), False),
-        ])
-    else:
-        hash_schema = StructType([
-            StructField("band", IntegerType(), False),
-            StructField("key", LongType(), False),
-            StructField("id", LongType(), False),
-            StructField("uvec", ArrayType(FloatType(), False), False),
-        ])
-
-    def make_hash_bands(band_subset=None):
-        """Arrow hash-pass emitter, optionally restricted to a band
-        subset. The grouped build re-hashes the corpus once per band
-        group (the deliberate disk-over-CPU tradeoff); before r11 each
-        group's pass emitted ALL nb bands' rows through the Python→JVM
-        Arrow boundary and filtered JVM-side — at N=2M with ~3-band
-        groups that is ~13x redundant emission per group. Emitting only
-        the group's bands (and slicing the projection matrix to their
-        planes, band-major so keys are bit-identical) cuts each group's
-        hash emission and gemm by nb/group_size; the pair output is
-        unchanged."""
-        bsel = (None if band_subset is None
-                else np.asarray(sorted(band_subset), dtype=np.int32))
-
-        def hash_bands(batches):
-            R = b_planes.value
-            if bsel is None:
-                gbands = np.arange(nb, dtype=np.int32)
-                Rg = R
-            else:
-                gbands = bsel
-                cols = (gbands[:, None].astype(np.int64) * bits
-                        + np.arange(bits, dtype=np.int64)).ravel()
-                Rg = np.ascontiguousarray(R[:, cols])
-            g = len(gbands)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                U = _normalize_f32(
-                    np.stack(pdf[feat_col].to_numpy()).astype(np.float32))
-                signs = (U @ Rg) >= 0.0                 # B × (g·bits)
-                keys = (signs.reshape(len(U), g, bits).astype(np.int64)
-                        @ weights)
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                out = {
-                    "band": np.repeat(gbands, len(U)),
-                    "key": keys.T.ravel(),
-                    "id": np.tile(ids, g),
-                }
-                if not narrow:
-                    out["uvec"] = list(U) * g
-                yield pd.DataFrame(out)
-
-        return hash_bands
-
-    # Spread the hash gemm across all cores: a single-file corpus
-    # arrives split only by maxPartitionBytes (a 0.9 GB parquet at
-    # N=313k → 8 scan tasks feeding 32 cores). Measured r11
-    # (BENCH_313k_r11.json per-group stages): the hash+shuffle-write
-    # stage ran 144 s wall at 461 task-seconds — parallelism-starved
-    # ~4x. One narrow N·F corpus repartition fixes every downstream
-    # hash pass (main pass per band group + the census); where it
-    # engages (single-file corpora ≲1M rows) the extra exchange is
-    # seconds against a ~100 s/group saving, and beyond that the scan
-    # already yields ≥ cores splits so this is a no-op.
-    from ..functions.matrix import with_scan_parallelism
-
-    hash_src = with_scan_parallelism(
-        items.select(id_col, feat_col),
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    hashed = hash_src.mapInPandas(make_hash_bands(), schema=hash_schema)
-    if narrow:
-        # ~28 B/row: cache the full (band, key, id) table once — the
-        # census AND every band group read it, so the corpus is hashed
-        # exactly ONCE per build (the legacy path re-hashes per band
-        # group and runs a separate keys-only census pass).
-        hashed = hashed.persist()
-
     pair_schema = StructType([
         StructField("src", LongType(), False),
         StructField("dst", LongType(), False),
         StructField("dist", DoubleType(), False),
     ])
+    if n_items is None:
+        n_items = items.count()
+    if n_items == 0:
+        return spark.createDataFrame([], pair_schema)
+    if n_bits is None:
+        n_bits = int(min(20, max(6, round(math.log2(max(n_items / 256, 2))))))
+    if n_bands is None:
+        n_bands = auto_lsh_bands(n_bits)
+    fdim = int(items.select(F.size(feat_col).alias("n")).first()["n"])
+    nb, bits = int(n_bands), int(n_bits)
     eps_f = float(eps)
     k_i = int(k) if k is not None else 0
+    b_max = int(bucket_max if bucket_max is not None else LSH_BUCKET_MAX)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    scratch_root, _ = _spool_scratch(spark, "knn_edges: the LSH build")
 
-    u_paths = u_spool if narrow else None
+    # Scratch-disk budget. Each band's (band, key) exchange carries N
+    # narrow rows and its sort spills up to LSH_SPILL_FACTOR times that.
+    # Above LSH_GROUP_BYTES the bands run in SEQUENTIAL groups: each
+    # group's k-capped pairs are spooled to parquet and its shuffle
+    # files are GC'd before the next group runs, so peak scratch
+    # divides by the group count while the pair union is
+    # band-order-invariant — the output is IDENTICAL (pinned by
+    # tests/test_lsh_recall.py). The up-front projection prices what
+    # the build writes — the U spool (N·F·4), the parquet copy it is
+    # streamed from when there is no proven corpus scan (N·F·8), the
+    # final group's shuffle and every group's pair spool — and REFUSES
+    # the build before any of it is written when it cannot fit above
+    # the free-disk floor: a clear arithmetic error beats a watchdog
+    # abort 90 minutes in (the r10 2M failure).
+    gsize = _band_group_size(n_items, nb)
+    probe = _scratch_probe_dir(spark)
+    band_bytes = n_items * LSH_ROW_BYTES
+    # Spool projection UNIT: per GROUP when the per-src k-cap runs
+    # (the cap bounds a group's spool at N·k rows REGARDLESS of how
+    # many bands the group carries), per band otherwise (uncapped
+    # emission really is ~N·k per band). VERDICT r11 finding 3.
+    spool_unit = n_items * (k_i if k_i else 64) * LSH_PAIR_SPOOL_BYTES
+    n_units_end = -(-nb // gsize) if k_i else nb
+    u_bytes = n_items * fdim * (4 if x_source else 12)
+    spill = LSH_SPILL_FACTOR
+    floor_b = parse_size_bytes(
+        os.environ.get("SPARK_GRAFT_LSH_MIN_FREE", str(LSH_MIN_FREE_BYTES)),
+        default=LSH_MIN_FREE_BYTES)
+    free0 = shutil.disk_usage(probe).free
+    fixed_b = band_bytes * spill + u_bytes + floor_b
+    need_end = n_units_end * spool_unit + fixed_b
+    if free0 < need_end:
+        raise RuntimeError(
+            f"LSH grouped build refused up front: scratch "
+            f"'{probe}' has {free0 / 2**30:.1f} GB free but the "
+            f"build is projected to need {need_end / 2**30:.1f} GB = "
+            f"{n_units_end} {'k-capped groups' if k_i else 'bands'} x "
+            f"{spool_unit / 2**30:.2f} GB pair spool + "
+            f"{band_bytes / 2**30:.2f} GB/band shuffle x {spill:.1f} "
+            f"spill + {u_bytes / 2**30:.2f} GB unit-vector spool + "
+            f"{floor_b / 2**30:.0f} GB floor. Free disk, lower k, point "
+            f"SPARK_GRAFT_SCRATCH_DIR at a larger filesystem, or lower "
+            f"the SPARK_GRAFT_LSH_MIN_FREE floor consciously.")
+    # Residual mid-loop risk the up-front check can't cover (ADVICE
+    # r12): under disk pressure the adaptive loop can fragment into up
+    # to nb 1-band groups — each spooling up to N·k rows. A build
+    # accepted here can therefore still stop mid-loop with a clean
+    # RuntimeError (never a corrupt result); warn when even the
+    # worst-case fragmentation would not fit, so the operator can free
+    # disk BEFORE the long job, not after its 60th group.
+    worst_end = nb * spool_unit + fixed_b
+    if k_i and free0 < worst_end:
+        warnings.warn(
+            f"LSH grouped build accepted at the expected "
+            f"{-(-nb // gsize)}-group plan, but worst-case "
+            f"fragmentation ({nb} 1-band groups under disk "
+            f"pressure) projects {worst_end / 2**30:.1f} GB "
+            f"vs {free0 / 2**30:.1f} GB free — the build may "
+            f"stop mid-loop with a clean RuntimeError if the "
+            f"disk tightens.", UserWarning, stacklevel=2)
+
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((fdim, nb * bits)).astype(np.float32)
+    b_planes = spark.sparkContext.broadcast(planes)
+    weights = (1 << np.arange(bits, dtype=np.int64))
+    hash_schema = StructType([
+        StructField("band", IntegerType(), False),
+        StructField("key", LongType(), False),
+        StructField("id", LongType(), False),
+    ])
+
+    def hash_bands(batches):
+        R = b_planes.value
+        bands = np.arange(nb, dtype=np.int32)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            U = _normalize_f32(
+                np.stack(pdf[feat_col].to_numpy()).astype(np.float32))
+            signs = (U @ R) >= 0.0                      # B × (nb·bits)
+            keys = signs.reshape(len(U), nb, bits).astype(np.int64) @ weights
+            yield pd.DataFrame({
+                "band": np.repeat(bands, len(U)),
+                "key": keys.T.ravel(),
+                "id": np.tile(pdf[id_col].to_numpy(dtype=np.int64), nb),
+            })
+
+    # Spread the hash gemm across all cores: a single-file corpus
+    # arrives split only by maxPartitionBytes (a 0.9 GB parquet at
+    # N=313k → 8 scan tasks feeding 32 cores; BENCH_313k_r11.json). One
+    # N·F corpus repartition where it engages (single-file corpora
+    # ≲1M rows) costs seconds; beyond that the scan already yields
+    # ≥ cores splits and this is a no-op.
+    hash_src = with_scan_parallelism(items.select(id_col, feat_col), n_parts)
+
+    u_dir = tempfile.mkdtemp(prefix="pyarrowspace-lshu-", dir=scratch_root)
+    matrix_mod._SCRATCH_DIRS.append(u_dir)
+    u_paths = (os.path.join(u_dir, "u.npy"), os.path.join(u_dir, "sids.npy"))
 
     def bucket_knn(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
                 {"src": np.int64, "dst": np.int64, "dist": np.float64})
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        # Sort the bucket by id so that equal-distance ties resolve to
-        # the LOWER dst by plain stable ordering — the vectorized
+        # Sort the bucket by id so that equal-distance ties resolve
+        # to the LOWER dst by plain stable ordering — the vectorized
         # selection below then matches the reference tie-break
-        # lexsort((dst, dist)) without a per-row Python loop. (The old
-        # per-row mask/nonzero/lexsort cost ~40-60 s of pure numpy
-        # call overhead per build at the 78k bench: ~1.26M row
-        # iterations × 4-6 tiny numpy calls; guide §4.2 — hand whole
-        # batches to vectorized kernels.) Distances are the same
-        # fp32-gemm → fp64 arithmetic as before; only the selection is
-        # vectorized, so the emitted (src, dst, dist) set is
-        # identical.
-        order0 = np.argsort(ids, kind="stable")
-        ids = ids[order0]
-        if u_paths is not None:
-            # narrow plan: gather this bucket's unit vectors from the
-            # shared spool (ascending positions — the ids were just
-            # sorted — so the mmap walk is monotonic)
-            Usp, s_l = _load_u_spool(*u_paths)
-            pos = np.searchsorted(s_l, ids)
-            if pos[-1] >= len(s_l) or not np.array_equal(s_l[pos], ids):
-                raise RuntimeError(
-                    "LSH U-spool does not cover this bucket's ids — "
-                    "stale spool or corpus mismatch")
-            U = np.asarray(Usp[pos])
-        else:
-            U = np.stack(pdf["uvec"].to_numpy())[order0]
+        # lexsort((dst, dist)) without a per-row Python loop (guide
+        # §4.2 — hand whole batches to vectorized kernels). The
+        # ascending ids also make the spool gather a monotonic mmap
+        # walk.
+        ids = np.sort(pdf["id"].to_numpy(dtype=np.int64), kind="stable")
+        Usp, s_l = _load_u_spool(*u_paths)
+        pos = np.searchsorted(s_l, ids)
+        if pos[-1] >= len(s_l) or not np.array_equal(s_l[pos], ids):
+            raise RuntimeError(
+                "LSH U-spool does not cover this bucket's ids — "
+                "stale spool or corpus mismatch")
+        U = np.asarray(Usp[pos])
         out_s, out_d, out_v = [], [], []
         # Chunk rows so the chunk×n distance block stays bounded even
         # in a pathologically skewed bucket.
@@ -769,9 +719,7 @@ def _pairwise_candidates_lsh(
             m = len(Uc)
             cos = Uc @ U.T
             dist = 1.0 - np.maximum(cos.astype(np.float64), 0.0)
-            # invalid = outside the eps ball, or same id (covers both
-            # the self-pair and any duplicated id, matching the old
-            # `ids != ids[row]` exclusion)
+            # invalid = outside the eps ball, or the self-pair
             bad = (dist > eps_f) | (ids[None, :] == ids[c0:c0 + m, None])
             if k_i and n > k_i:
                 d2 = np.where(bad, np.inf, dist)
@@ -797,121 +745,20 @@ def _pairwise_candidates_lsh(
             "dist": np.concatenate([a for a in out_v if a.size]),
         })
 
-    # Skew guard: a degenerate corpus (mass-duplicate vectors — common
-    # in the dedup-adjacent corpora this engine targets) can land one
-    # giant bucket on ONE task; the chunked gemm bounds memory but not
-    # task time (O(bucket²)). Buckets above LSH_BUCKET_MAX are split
-    # into hash-assigned blocks and processed as block-PAIR tasks of
-    # ≤2·LSH_BUCKET_MAX rows each: every pair still meets in exactly
-    # the (min,max) block task, and the per-row k-cap stays lossless
-    # per task (a neighbor crowded out by k closer rows in its task is
-    # outside the global top-k a fortiori). The size census runs a
-    # DEDICATED key-only hash pass — same gemm, but no per-row uvec
-    # list materialization and no vector bytes in its (map-side
-    # combined) shuffle, so the census costs a fraction of the main
-    # pass; when no bucket is oversized the guard reduces to that
-    # census + a broadcast join against an empty key list.
-    b_max = int(bucket_max if bucket_max is not None else LSH_BUCKET_MAX)
-
-    count_schema = StructType([
-        StructField("band", IntegerType(), False),
-        StructField("key", LongType(), False),
-    ])
-
-    def hash_keys_only(batches):
-        R = b_planes.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[feat_col].to_numpy()).astype(np.float32)
-            norms = np.linalg.norm(X, axis=1)
-            norms[norms == 0.0] = 1.0
-            U = X / norms[:, None]
-            signs = (U @ R) >= 0.0
-            keys = signs.reshape(len(U), nb, bits).astype(np.int64) @ weights
-            yield pd.DataFrame({
-                "band": np.repeat(np.arange(nb, dtype=np.int32), len(U)),
-                "key": keys.T.ravel(),
-            })
-
-    if narrow:
-        # the persisted narrow hash table IS the census source: one
-        # hash pass total instead of a dedicated keys-only pass (the
-        # count agg projects (band, key) out of the cache and combines
-        # map-side)
-        sizes = hashed.groupBy("band", "key").agg(
-            F.count("*").alias("_cnt"))
-    else:
-        sizes = (
-            hash_src.mapInPandas(hash_keys_only, schema=count_schema)
-            .groupBy("band", "key").agg(F.count("*").alias("_cnt"))
-        )
-    # Collect the census ONCE and re-broadcast it as a local frame:
-    # `oversized` is joined inside _group_pairs, so as a lazy plan the
-    # full-corpus hash_keys_only pass AND its (map-side combined)
-    # shuffle re-ran per band group — n_groups redundant census passes
-    # at exactly the N≥800k scales the grouping targets (ADVICE r9).
-    # The result is tiny (only keys with >b_max members; empty on a
-    # non-degenerate corpus), the re-hash of the MAIN pass per group
-    # remains the deliberate disk-over-CPU tradeoff. The collect is
-    # capped (ADVICE r10): a mass-duplicate corpus can produce up to
-    # N·bands/b_max oversized keys, so above LSH_CENSUS_COLLECT_MAX
-    # rows the census stays a lazy distributed plan — per-group census
-    # re-runs beat an unbounded driver materialization there.
-    ov_lazy = sizes.filter(F.col("_cnt") > F.lit(b_max))
-    ov_head = ov_lazy.limit(LSH_CENSUS_COLLECT_MAX + 1).collect()
-    if len(ov_head) > LSH_CENSUS_COLLECT_MAX:
-        oversized = ov_lazy
-    else:
-        ov_rows = [(int(r["band"]), int(r["key"]), int(r["_cnt"]))
-                   for r in ov_head]
-        oversized = items.sparkSession.createDataFrame(
-            ov_rows, schema="band int, key long, _cnt long")
-
-    # Scratch-disk budget: the bucket stage shuffles N·bands rows each
-    # carrying a fdim-float32 unit vector, and the groupBy sort spills
-    # ~3x that volume to local disk (measured round 8: an N=800k,
-    # 15-band build spilled >61 GB and filled a 76 GB scratch disk;
-    # N=1M died the same way in round 7). Above the per-stage budget,
-    # bands are processed in SEQUENTIAL groups: each group's shuffle
-    # carries only its bands, its (narrow) pair output is checkpointed
-    # eagerly, and the group's shuffle files are GC'd before the next
-    # group runs — peak scratch divides by the group count while the
-    # pair union is band-order-invariant, so the output is IDENTICAL
-    # (pinned by tests/test_lsh_recall.py). The default budget keeps
-    # corpora ≤ ~400k at one group, so the committed 313k anchors run
-    # the exact same single-stage plan as before. Env override:
-    # SPARK_GRAFT_LSH_GROUP_BYTES (suffix-aware, e.g. "12g").
-    from ..functions.matrix import parse_size_bytes
-
-    # per-row shuffle width: narrow (band,key,id) rows vs full
-    # uvec-carrying rows — the grouping exists to bound scratch disk,
-    # so it must price what actually crosses the exchange
-    row_bytes = 28 if narrow else (fdim * 4 + 48)
-    est_bytes = n_items * nb * row_bytes
-    group_budget = parse_size_bytes(
-        os.environ.get("SPARK_GRAFT_LSH_GROUP_BYTES", str(8 << 30)),
-        default=8 << 30)
-    n_band_groups = int(min(nb, max(1, -(-est_bytes // group_budget))))
-    gsize = -(-nb // n_band_groups)
-
-    def _group_pairs(src_frame: DataFrame) -> DataFrame:
+    def _group_pairs(src_frame: DataFrame,
+                     oversized: DataFrame) -> DataFrame:
         h2 = src_frame.join(F.broadcast(oversized), ["band", "key"], "left")
         normal = h2.filter(F.col("_cnt").isNull()).drop("_cnt")
-        # Explicit (band, key) exchange feeding the bucket kernel —
-        # same reason as the src repartitions below: the narrow plan's
-        # hash rows compress to tens of MB, and AQE's advisory
+        # Explicit (band, key) exchange feeding the bucket kernel: the
+        # narrow hash rows compress to tens of MB, and AQE's advisory
         # coalescing collapsed the kernel's implicit groupBy exchange
         # to 5 partitions at the 78k bench — the build's CORE compute
-        # stage (gather + gemm per bucket) ran 5-wide while 27 cores
-        # idled (r13-opt, SQL exec 4: AQEShuffleRead(5) → Sort →
-        # FlatMapGroupsInPandas). A user-specified repartition is not
-        # coalescible, and the groupBy reuses it (same keys, same
-        # count), so the plan still has exactly one exchange here.
-        n_parts_b = int(src_frame.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
+        # stage ran 5-wide while 27 cores idled. A user-specified
+        # repartition is not coalescible, and the groupBy reuses it
+        # (same keys, same count), so the plan still has exactly one
+        # exchange here.
         bucket_pairs = normal.repartition(
-            n_parts_b, "band", "key"
+            n_parts, "band", "key"
         ).groupBy("band", "key").applyInPandas(
             bucket_knn, schema=pair_schema)
         big = h2.filter(F.col("_cnt").isNotNull())
@@ -930,249 +777,160 @@ def _pairwise_candidates_lsh(
                 )),
             )
             .select("band", "key", F.col("_bp.b1").alias("b1"),
-                    F.col("_bp.b2").alias("b2"), "id",
-                    *([] if narrow else ["uvec"]))
+                    F.col("_bp.b2").alias("b2"), "id")
             # same AQE-coalesce guard as the normal-bucket kernel above
-            .repartition(n_parts_b, "band", "key", "b1", "b2")
+            .repartition(n_parts, "band", "key", "b1", "b2")
             .groupBy("band", "key", "b1", "b2")
             .applyInPandas(bucket_knn, schema=pair_schema)
         )
         return bucket_pairs.unionAll(big_pairs)
 
-    if n_band_groups <= 1 and not narrow:
-        bucket_pairs = _group_pairs(hashed)
-    else:
-        from ..functions import matrix as matrix_mod
-
-        # Group materialization is a PARQUET SPOOL, not localCheckpoint:
-        # at N=1M one group's pre-dedupe pairs are ~125M rows, and the
-        # checkpoint's MEMORY_AND_DISK unroll OOM'd a 16 GB heap
-        # (UnsafeRow.copy in the store path — 32 tasks unrolling
-        # concurrently). The distributed parquet write streams straight
-        # to disk with bounded task memory, and reading it back is a
-        # clean scan with NO lineage to the group's shuffle, so the GC
-        # below actually reclaims the shuffle files. Spool dirs ride
-        # the shared scratch-dir registry (cleaned at exit). Deployable
-        # wherever the matrix handoff is (local master or shared
-        # $SPARK_GRAFT_SCRATCH_DIR); elsewhere fall back to the
-        # eager checkpoint — a multi-JVM cluster has the aggregate
-        # memory the single-JVM harness lacks.
-        spool = matrix_mod.handoff_eligible(spark, 1 << 62)
-        scratch_base = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or None
-        parts = []
-        # Per-group scratch accounting: per-group spool bytes, disk
-        # free, wall time, and (UI reachable) per-stage metrics.
-        global _LAST_LSH_GROUP_INFO
-        _LAST_LSH_GROUP_INFO = []
-        if not spool:
-            # No shared scratch (multi-JVM cluster): eager checkpoints
-            # ride aggregate executor memory/disk, which the single
-            # local filesystem probe below can't see — keep the static
-            # env-budgeted group size.
-            for g0 in range(0, nb, gsize):
-                gband = list(range(g0, min(g0 + gsize, nb)))
-                parts.append(_group_pairs(
-                    hash_src.mapInPandas(make_hash_bands(gband),
-                                         schema=hash_schema)
-                ).localCheckpoint(eager=True))
-                spark.sparkContext._jvm.System.gc()
-            # (narrow mode never lands here: the U spool implies the
-            # shared-scratch condition `spool` tests)
+    pair_dirs: list[str] = []
+    parts: list[DataFrame] = []
+    hashed = None
+    global _LAST_LSH_GROUP_INFO
+    _LAST_LSH_GROUP_INFO = []
+    try:
+        _build_u_spool(items, id_col, feat_col, n_items, fdim, x_source,
+                       *u_paths)
+        # ~28 B/row: the corpus is hashed exactly ONCE per build
+        hashed = hash_src.mapInPandas(hash_bands,
+                                      schema=hash_schema).persist()
+        # Skew guard: a degenerate corpus (mass-duplicate vectors — common
+        # in the dedup-adjacent corpora this engine targets) can land one
+        # giant bucket on ONE task; the chunked gemm bounds memory but not
+        # task time (O(bucket²)). Buckets above b_max are split into
+        # hash-assigned blocks and processed as block-PAIR tasks of
+        # ≤2·b_max rows each: every pair still meets in exactly the
+        # (min,max) block task, and the per-row k-cap stays lossless per
+        # task (a neighbor crowded out by k closer rows in its task is
+        # outside the global top-k a fortiori). The size census counts the
+        # persisted hash table (map-side combined).
+        sizes = hashed.groupBy("band", "key").agg(F.count("*").alias("_cnt"))
+        # Collect the census ONCE and re-broadcast it as a local frame:
+        # `oversized` is joined inside every band group, so as a lazy plan
+        # the census shuffle re-ran per group (ADVICE r9). The result is
+        # tiny (only keys with >b_max members; empty on a non-degenerate
+        # corpus). The collect is capped (ADVICE r10): a mass-duplicate
+        # corpus can produce up to N·bands/b_max oversized keys, so above
+        # LSH_CENSUS_COLLECT_MAX rows the census stays a lazy distributed
+        # plan — per-group census re-runs beat an unbounded driver
+        # materialization there.
+        ov_lazy = sizes.filter(F.col("_cnt") > F.lit(b_max))
+        ov_head = ov_lazy.limit(LSH_CENSUS_COLLECT_MAX + 1).collect()
+        if len(ov_head) > LSH_CENSUS_COLLECT_MAX:
+            oversized = ov_lazy
         else:
-            # ADAPTIVE group sizing against the MEASURED disk. The
-            # round-10 static model sized groups from each group's own
-            # shuffle input only; at N=2M the accumulated pair spools
-            # of finished groups (~1 GB/group measured at 800k) plus
-            # ~30 GB base usage stacked under the live group's sort
-            # spill and the build died at 78.6 GB peak 90 minutes in
-            # (BENCH_2000k_r10.json). Reading the real free space
-            # before EVERY group charges base usage and accumulated
-            # spools automatically; the live group then only needs its
-            # own shuffle·spill + its spool to fit above the floor.
-            # The a-priori spool estimate is replaced by the measured
-            # per-band mean as groups finish, and an up-front
-            # projection REFUSES the build before any group job runs
-            # (only the cheap census has run by then) when even the
-            # final 1-band group (all spools accumulated) cannot fit —
-            # a clear arithmetic error beats a watchdog abort 90
-            # minutes in. The env group budget stays a CAP on
-            # group size (tests force tiny budgets to pin the grouped
-            # path; the 313k/800k anchors keep their committed plans
-            # on a healthy disk).
-            probe = _scratch_probe_dir(spark)
-            band_bytes = n_items * row_bytes
-            est_k = k_i if k_i else 64
-            # Spool projection UNIT: per GROUP when the per-src k-cap
-            # below runs (the cap bounds a group's spool at N·k rows
-            # REGARDLESS of how many bands the group carries), per band
-            # otherwise (uncapped emission really is ~N·k per band).
-            # r11 projected per band even with the cap active,
-            # overstating end-state spool by ~the mean group size
-            # (~11 GB projected vs ~3.5 GB measured at N=2M) — safe
-            # direction, but the up-front refusal could reject a build
-            # that fits (VERDICT r11 finding 3).
-            spool_unit = n_items * est_k * LSH_PAIR_SPOOL_BYTES
-            n_units_end = -(-nb // gsize) if k_i else nb
-            spill = float(os.environ.get(
-                "SPARK_GRAFT_LSH_SPILL_FACTOR", str(LSH_SPILL_FACTOR)))
-            floor_b = parse_size_bytes(
-                os.environ.get("SPARK_GRAFT_LSH_MIN_FREE",
-                               str(LSH_MIN_FREE_BYTES)),
-                default=LSH_MIN_FREE_BYTES)
-            free0 = shutil.disk_usage(probe).free
-            need_end = n_units_end * spool_unit + band_bytes * spill + floor_b
-            if free0 < need_end:
+            oversized = spark.createDataFrame(
+                [(int(r["band"]), int(r["key"]), int(r["_cnt"]))
+                 for r in ov_head],
+                schema="band int, key long, _cnt long")
+
+        # Pair spools are PARQUET, not an eager Spark checkpoint: at N=1M
+        # one group's pre-dedupe pairs are ~125M rows, and the
+        # checkpoint's MEMORY_AND_DISK unroll OOM'd a 16 GB heap. The
+        # distributed parquet write streams to disk with bounded task
+        # memory, and reading it back is a clean scan with NO lineage to
+        # the group's shuffle, so the GC below reclaims the shuffle files.
+        #
+        # ADAPTIVE group sizing against the MEASURED disk: reading the
+        # real free space before EVERY group charges base usage and
+        # accumulated spools automatically; the live group then only
+        # needs its own shuffle·spill + its spool to fit above the
+        # floor. The a-priori spool estimate is replaced by the measured
+        # mean as groups finish. LSH_GROUP_BYTES stays a CAP on group
+        # size.
+        bands_left = list(range(nb))
+        while bands_left:
+            free = shutil.disk_usage(probe).free
+            per_band_need = band_bytes * spill + spool_unit
+            if k_i:
+                # the live group's spool is one k-capped unit no matter how
+                # many bands it takes; only the shuffle scales with bands
+                max_bands = int((free - floor_b - spool_unit)
+                                // max(band_bytes * spill, 1))
+            else:
+                max_bands = int((free - floor_b) // max(per_band_need, 1))
+            if max_bands < 1:
+                done = nb - len(bands_left)
                 raise RuntimeError(
-                    f"LSH grouped build refused up front: scratch "
-                    f"'{probe}' has {free0 / 2**30:.1f} GB free but the "
-                    f"final band group is projected to need "
-                    f"{need_end / 2**30:.1f} GB = {n_units_end} "
-                    f"{'k-capped groups' if k_i else 'bands'} x "
-                    f"{spool_unit / 2**30:.2f} GB pair spool + "
-                    f"{band_bytes / 2**30:.2f} GB/band shuffle x "
-                    f"{spill:.1f} spill + {floor_b / 2**30:.0f} GB "
-                    f"floor. Free disk, lower k, or raise "
-                    f"SPARK_GRAFT_LSH_SPILL_FACTOR/"
-                    f"SPARK_GRAFT_LSH_MIN_FREE consciously.")
-            # Residual mid-loop risk the up-front check can't cover
-            # (ADVICE r12): under disk pressure the adaptive loop can
-            # fragment into up to nb 1-band groups — each spooling up
-            # to N·k rows — and each group's pre-dedupe shuffle is
-            # priced by the band_bytes·spill heuristic only. A build
-            # accepted here can therefore still stop mid-loop with a
-            # clean RuntimeError (never a corrupt result); warn when
-            # even the worst-case fragmentation would not fit, so the
-            # operator can free disk BEFORE the 90-minute job, not
-            # after its 60th group.
-            worst_end = nb * spool_unit + band_bytes * spill + floor_b
-            if k_i and free0 < worst_end:
-                warnings.warn(
-                    f"LSH grouped build accepted at the expected "
-                    f"{-(-nb // gsize)}-group plan, but worst-case "
-                    f"fragmentation ({nb} 1-band groups under disk "
-                    f"pressure) projects {worst_end / 2**30:.1f} GB "
-                    f"vs {free0 / 2**30:.1f} GB free — the build may "
-                    f"stop mid-loop with a clean RuntimeError if the "
-                    f"disk tightens.", UserWarning, stacklevel=2)
-            bands_left = list(range(nb))
-            while bands_left:
-                free = shutil.disk_usage(probe).free
+                    f"LSH grouped build out of scratch disk after "
+                    f"{done}/{nb} bands: {free / 2**30:.1f} GB free "
+                    f"on '{probe}' < 1-band need "
+                    f"{(per_band_need + floor_b) / 2**30:.1f} GB.")
+            gband = bands_left[:min(gsize, max_bands)]
+            del bands_left[:len(gband)]
+            g_t0 = time.time()
+            sid0 = _max_stage_id(spark)
+            # a group is a filter over the persisted hash table: no
+            # per-group corpus re-hash
+            pairs_g = _group_pairs(hashed.filter(
+                F.col("band").isin([int(b) for b in gband])), oversized)
+            if k_i:
+                # Per-src k-cap + dedupe BEFORE spooling: lossless for the
+                # global top-k (a pair crowded out by k closer same-src
+                # pairs in its group is outside the global top-k a
+                # fortiori — the bucket-cap argument one level up), and it
+                # bounds each group's spool at N·k rows regardless of band
+                # count. ONE explicit exchange on src feeds BOTH the dedupe
+                # agg (hash(src) satisfies the (src,dst) clustering) and the
+                # window, and, being user-specified, AQE cannot coalesce it
+                # onto a handful of tasks.
+                wg = Window.partitionBy("src").orderBy(
+                    F.col("dist").asc(), F.col("dst").asc())
+                pairs_g = (
+                    pairs_g.repartition(n_parts, "src")
+                    .groupBy("src", "dst")
+                    .agg(F.min("dist").alias("dist"))
+                    .withColumn("_rn", F.row_number().over(wg))
+                    .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
+            d = tempfile.mkdtemp(prefix="pyarrowspace-lshpairs-",
+                                 dir=scratch_root)
+            matrix_mod._SCRATCH_DIRS.append(d)
+            pair_dirs.append(d)
+            pairs_g.write.mode("overwrite").parquet(d)
+            parts.append(spark.read.parquet(d))
+            try:
+                _LAST_LSH_GROUP_INFO.append(
+                    {"bands": gband, "spool_bytes": int(_dir_bytes(d)),
+                     "disk_free_bytes": int(shutil.disk_usage(probe).free),
+                     "sec": round(time.time() - g_t0, 1),
+                     "stages": _stages_since(spark, sid0)})
+                # replace the a-priori spool estimate with the measured
+                # mean — per GROUP under the k-cap (the unit the projection
+                # charges), per band otherwise — so the remaining groups
+                # (and the out-of-disk check) use ground truth
                 if k_i:
-                    # the live group's spool is one k-capped unit no
-                    # matter how many bands it takes; only the shuffle
-                    # scales with band count
-                    avail = free - floor_b - spool_unit
-                    max_bands = int(avail // max(band_bytes * spill, 1))
-                    per_band_need = band_bytes * spill + spool_unit
+                    meas = [g["spool_bytes"] for g in _LAST_LSH_GROUP_INFO]
                 else:
-                    per_band_need = band_bytes * spill + spool_unit
-                    max_bands = int((free - floor_b) // max(per_band_need, 1))
-                if max_bands < 1:
-                    done = nb - len(bands_left)
-                    raise RuntimeError(
-                        f"LSH grouped build out of scratch disk after "
-                        f"{done}/{nb} bands: {free / 2**30:.1f} GB free "
-                        f"on '{probe}' < 1-band need "
-                        f"{(per_band_need + floor_b) / 2**30:.1f} GB "
-                        f"(accumulated pair spools "
-                        f"{sum(g['spool_bytes'] for g in _LAST_LSH_GROUP_INFO) / 2**30:.1f}"
-                        f" GB are reclaimed at session exit).")
-                gband = bands_left[:min(gsize, max_bands)]
-                del bands_left[:len(gband)]
-                g_t0 = time.time()
-                sid0 = _max_stage_id(spark)
-                if narrow:
-                    # the persisted narrow hash table covers every
-                    # band: a group is a cache filter — no per-group
-                    # corpus re-hash, no per-group gemm
-                    pairs_g = _group_pairs(hashed.filter(
-                        F.col("band").isin([int(b) for b in gband])))
-                else:
-                    # subset-hash: this group's pass gemms, emits, and
-                    # exchanges ONLY its own bands' rows (see
-                    # make_hash_bands) — keys bit-identical to the
-                    # full-width pass
-                    pairs_g = _group_pairs(
-                        hash_src.mapInPandas(make_hash_bands(gband),
-                                             schema=hash_schema))
-                if k_i:
-                    # Per-src k-cap + dedupe BEFORE spooling: lossless
-                    # for the global top-k (a pair crowded out by k
-                    # closer same-src pairs in its group is outside
-                    # the global top-k a fortiori — the bucket-cap
-                    # argument one level up), and it bounds each
-                    # group's spool at N·k rows regardless of band
-                    # count: measured 800k spools carried the FULL
-                    # N·k·bands pre-dedupe emission (1.01 GB per
-                    # 7-band group = ~7x the capped size), and the
-                    # post-loop dedupe+window then re-shuffled all of
-                    # it — the prime suspect for the r10 2M disk
-                    # abort. Narrow rows; Spark 4's window-group-limit
-                    # keeps the per-group sort partial.
-                    wg = Window.partitionBy("src").orderBy(
-                        F.col("dist").asc(), F.col("dst").asc())
-                    # ONE explicit exchange on src feeds BOTH the
-                    # dedupe agg (hash(src) satisfies the (src,dst)
-                    # clustering — subset rule) and the window — and,
-                    # being user-specified, AQE cannot coalesce it:
-                    # the k-capped pairs compress to a few MB, and
-                    # AQE's 1 MB-min coalescing ran this sort+spool
-                    # write on 5 tasks (12 s each) at the 78k bench
-                    # (r13-opt jobs timeline, jid 12).
-                    n_parts_w = int(spark.conf.get(
-                        "spark.sql.shuffle.partitions", "32"))
-                    pairs_g = (
-                        pairs_g.repartition(n_parts_w, "src")
-                        .groupBy("src", "dst")
-                        .agg(F.min("dist").alias("dist"))
-                        .withColumn("_rn", F.row_number().over(wg))
-                        .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
-                d = tempfile.mkdtemp(prefix="pyarrowspace-lshpairs-",
-                                     dir=scratch_base)
-                matrix_mod._SCRATCH_DIRS.append(d)
-                pairs_g.write.mode("overwrite").parquet(d)
-                parts.append(spark.read.parquet(d))
-                try:
-                    spool_bytes = _dir_bytes(d)
-                    _LAST_LSH_GROUP_INFO.append(
-                        {"bands": gband, "spool_bytes": int(spool_bytes),
-                         "disk_free_bytes": int(
-                             shutil.disk_usage(probe).free),
-                         "sec": round(time.time() - g_t0, 1),
-                         "stages": _stages_since(spark, sid0)})
-                    # replace the a-priori spool estimate with the
-                    # measured mean — per GROUP under the k-cap (the
-                    # unit the projection above charges), per band
-                    # otherwise — so the remaining groups (and the
-                    # out-of-disk check) use ground truth
-                    if k_i:
-                        meas = [g["spool_bytes"]
-                                for g in _LAST_LSH_GROUP_INFO]
-                    else:
-                        meas = [g["spool_bytes"] / max(len(g["bands"]), 1)
-                                for g in _LAST_LSH_GROUP_INFO]
-                    spool_unit = max(sum(meas) / len(meas), 1.0)
-                except OSError:
-                    pass
-                spark.sparkContext._jvm.System.gc()
-        if narrow:
-            # every group's pairs are spooled parquet now — the hash
-            # cache and the U spool are dead; release both
-            # deterministically instead of at session exit
+                    meas = [g["spool_bytes"] / max(len(g["bands"]), 1)
+                            for g in _LAST_LSH_GROUP_INFO]
+                spool_unit = max(sum(meas) / len(meas), 1.0)
+            except OSError:
+                pass
+            spark.sparkContext._jvm.System.gc()
+    except BaseException:
+        if hashed is not None:
             hashed.unpersist()
-            _drop_u_spool(u_spool)
-        bucket_pairs = parts[0]
-        for p in parts[1:]:
-            bucket_pairs = bucket_pairs.unionAll(p)
+        for d in [u_dir, *pair_dirs]:
+            _drop_scratch_dir(d)
+        raise
+    # every group's pairs are spooled parquet now — the hash cache and
+    # the U spool are dead; release both deterministically instead of
+    # at session exit
+    hashed.unpersist()
+    _drop_scratch_dir(u_dir)
+    bucket_pairs = parts[0]
+    for p in parts[1:]:
+        bucket_pairs = bucket_pairs.unionAll(p)
     # Dedupe across bands; min() is a no-op on value (the distance is
     # the same pair function in every band) but makes the agg
     # map-side combinable. The explicit src repartition serves this
     # agg (subset rule), the eps filter, AND knn_edges' top-k window
     # downstream with ONE exchange AQE cannot shrink — the deduped
     # pairs compress to a few MB and AQE-coalesced window sorts ran
-    # on a handful of tasks otherwise (see the grouped-loop note).
-    n_parts_f = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (bucket_pairs.repartition(n_parts_f, "src")
+    # on a handful of tasks otherwise.
+    return (bucket_pairs.repartition(n_parts, "src")
             .groupBy("src", "dst").agg(F.min("dist").alias("dist")))
 
 
@@ -1201,8 +959,8 @@ def knn_edges(
     Spark job (an extra eager count per call otherwise).
     """
     # Clear the grouped-stage record up front: without this an earlier
-    # grouped build's record would leak onto a later exact/ungrouped
-    # build's `lsh_group_summary()` / index attachment.
+    # LSH build's record would leak onto a later exact build's
+    # `lsh_group_summary()` / index attachment.
     global _LAST_LSH_GROUP_INFO
     _LAST_LSH_GROUP_INFO = None
     if strategy == "auto":
@@ -1213,16 +971,11 @@ def knn_edges(
         knn = _knn_directed_broadcast_scan(
             items, id_col, feat_col, params.eps, params.k
         )
-    else:
-        if strategy == "exact-sql":
-            cand = _pairwise_candidates_exact(items, id_col, feat_col)
-        elif strategy == "lsh":
-            cand = _pairwise_candidates_lsh(
-                items, id_col, feat_col, params.eps, k=params.k,
-                n_bits=lsh_bits, n_bands=lsh_bands, x_source=x_source,
-            )
-        else:
-            raise ValueError(f"unknown strategy {strategy!r}")
+    elif strategy == "lsh":
+        cand = _pairwise_candidates_lsh(
+            items, id_col, feat_col, params.eps, k=params.k,
+            n_bits=lsh_bits, n_bands=lsh_bands, x_source=x_source,
+        )
 
         # eps predicate BEFORE the top-k window: Catalyst pushes the
         # filter below the shuffle, so the window sorts only survivors.
@@ -1236,6 +989,8 @@ def knn_edges(
         knn = in_ball.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= F.lit(int(params.k))
         ).drop("_rn")
+    else:
+        raise ValueError(f"unknown strategy {strategy!r}")
 
     # Symmetrize: undirected edge survives if EITHER direction kept it.
     # Canonicalize to src < dst and dedupe (dist is symmetric).

@@ -21,11 +21,13 @@ self-description fields (loadavg / memcpy probe) for artifact honesty.
 Disk sizing (round 7, superseded in round 8): the LSH build's shuffle
 spill peaked at ~55-80 GB per million rows at F=384 on this harness,
 and N=1M attempts filled a 76 GB scratch disk. Round 8 fixed this at
-the operator: above SPARK_GRAFT_LSH_GROUP_BYTES of estimated bucket
-shuffle the build processes hash bands in sequential groups with
+the operator: the build processes hash bands in groups with
 parquet-spooled pair output (operators/knn.py), measured 62.7 GB peak
 for the FULL 1M build+ANN+energy suite (BENCH_1M_r08.json) vs 78.2 GB
-for the aborted ungrouped build alone (BENCH_800k_r08.json).
+for the aborted ungrouped build alone (BENCH_800k_r08.json). Since
+then the bucket shuffle carries narrow (band, key, id) rows and
+gathers unit vectors from a scratch spool, so bands are grouped only
+above `knn.LSH_GROUP_BYTES` (8 GiB) of that narrow exchange.
 """
 
 from __future__ import annotations

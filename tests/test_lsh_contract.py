@@ -1,0 +1,136 @@
+"""Input and resource contract of the LSH build (`knn.knn_edges`,
+strategy="lsh"): duplicate ids and empty frames, the scratch rule it
+shares with diffusion, the up-front disk budget, spool cleanup on
+failure, and `lsh_plan` describing the plan that runs."""
+
+import os
+import shutil
+from collections import namedtuple
+
+import numpy as np
+import pytest
+
+from pyarrowspace_spark.functions import matrix as M
+from pyarrowspace_spark.operators import energy as E
+from pyarrowspace_spark.operators import knn as K
+from pyarrowspace_spark.params import GraphParams
+
+GP = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
+
+
+def _rows(n, f=16, seed=4):
+    rng = np.random.default_rng(seed)
+    X = rng.standard_normal((3, f))[rng.integers(0, 3, n)]
+    X += 0.1 * rng.standard_normal((n, f))
+    return [(i, [float(v) for v in X[i]]) for i in range(n)]
+
+
+def _frame(spark, rows):
+    return spark.createDataFrame(
+        rows, schema="item_id long, features array<double>")
+
+
+def _lsh_dirs(path) -> list:
+    return [p for p in os.listdir(path)
+            if p.startswith(("pyarrowspace-lshu-",
+                             "pyarrowspace-lshpairs-"))]
+
+
+def test_lsh_rejects_duplicate_ids(spark, monkeypatch, tmp_path):
+    """A repeated id would make the by-id spool gather hand every copy
+    one row's vector and silently change the edges: ValueError with the
+    count and an example id, and the U spool dir is removed."""
+    rows = _rows(60)
+    rows.append((7, [float(v) for v in -np.asarray(rows[7][1])]))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(ValueError, match=r"unique; 1 ids repeat \(e\.g\. 7\)"):
+        K.knn_edges(_frame(spark, rows), GP, strategy="lsh")
+    assert _lsh_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before
+
+
+def test_lsh_empty_items_typed_empty_edges(spark):
+    """An empty items frame is an empty, typed edge list."""
+    edges = K.knn_edges(_frame(spark, []), GP, strategy="lsh")
+    assert edges.columns == ["src", "dst", "dist", "weight"]
+    assert [t for _, t in edges.dtypes] == ["bigint", "bigint", "double",
+                                            "double"]
+    assert edges.count() == 0
+
+
+def test_lsh_multi_host_needs_scratch(spark, monkeypatch, tmp_path):
+    """The LSH build follows diffusion's scratch rule: a multi-host
+    master with no worker-visible scratch dir is a RuntimeError naming
+    SPARK_GRAFT_SCRATCH_DIR (there is no other plan to fall back to);
+    with one, the probe runs on it and the edges are unchanged."""
+    from pyarrowspace_spark.operators import lambda_index as LAM
+
+    items = _frame(spark, _rows(40))
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    local = K.knn_edges(items, GP, strategy="lsh").collect()
+    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
+        K.knn_edges(items, GP, strategy="lsh")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    probed = []
+    real_probe = LAM._probe_worker_visible
+
+    def _probe(spark, d):
+        probed.append(d)
+        return real_probe(spark, d)
+
+    monkeypatch.setattr(LAM, "_probe_worker_visible", _probe)
+    shared = K.knn_edges(items, GP, strategy="lsh").collect()
+    assert probed == [str(tmp_path)]
+    assert sorted(shared) == sorted(local) and len(local) > 0
+
+
+def test_lsh_refusal_writes_nothing(spark, monkeypatch, tmp_path):
+    """The disk budget is checked before any spool byte is written: a
+    refused build leaves no U-spool or pair-spool dir and no scratch
+    registration."""
+    items = _frame(spark, _rows(80))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    usage = namedtuple("usage", "total used free")
+    monkeypatch.setattr(shutil, "disk_usage",
+                        lambda p: usage(1 << 30, (1 << 30) - 1000, 1000))
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(RuntimeError, match="refused up front"):
+        K.knn_edges(items, GP, strategy="lsh")
+    assert _lsh_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before
+
+
+def test_lsh_failure_mid_build_removes_spools(spark, monkeypatch,
+                                              tmp_path):
+    """A failure after the first band group has spooled its pairs
+    removes the U spool and every pair-spool dir of that build."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+
+    def _boom(spark, watermark):
+        assert _lsh_dirs(tmp_path)  # the spools exist at this point
+        raise RuntimeError("injected group failure")
+
+    monkeypatch.setattr(K, "_stages_since", _boom)
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(RuntimeError, match="injected group failure"):
+        K.knn_edges(_frame(spark, _rows(80)), GP, strategy="lsh")
+    assert _lsh_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before
+
+
+def test_lsh_plan_group_count_matches_build(spark, monkeypatch):
+    """`lsh_plan` prices the rows the build shuffles: under a forced
+    group budget its band-group count is the count the build ran."""
+    n, f, k = 600, 24, 6
+    monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    gp = GraphParams(eps=0.35, k=k, topk=k, p=2.0, sigma=0.2)
+    K.knn_edges(_frame(spark, _rows(n, f=f)), gp, strategy="lsh").count()
+    plan = K.lsh_plan(n, f, k)
+    assert plan["n_band_groups"] >= 2
+    assert K.lsh_group_summary()["n_groups"] == plan["n_band_groups"]

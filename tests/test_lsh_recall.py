@@ -227,8 +227,8 @@ def test_auto_lsh_tables_schedule():
 
 def test_band_group_sequencing_identical_edges(spark, monkeypatch):
     """Scratch-budgeted band grouping (round 8): when the bucket
-    stage's estimated shuffle exceeds SPARK_GRAFT_LSH_GROUP_BYTES,
-    bands are processed in sequential groups with eager checkpoints
+    stage's estimated shuffle exceeds knn.LSH_GROUP_BYTES,
+    bands are processed in sequential groups spooled to parquet
     between them. The pair union is band-order-invariant, so the edge
     list must be IDENTICAL to the single-stage plan."""
     items = loaders.items_from_embeddings(spark, SF_DIR).select(
@@ -238,10 +238,9 @@ def test_band_group_sequencing_identical_edges(spark, monkeypatch):
                         lsh_bands=24)
     rows_one = {(r["src"], r["dst"], round(r["dist"], 12))
                 for r in one.collect()}
-    # force ~4 band groups for the same build (r13-opt: priced at the
-    # narrow-shuffle ~28 B/row — 500 rows × 24 bands × 28 B / 4)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_GROUP_BYTES",
-                       str(500 * 28 * 24 // 4))
+    # force ~4 band groups for the same build (priced at the narrow
+    # 28 B/row — 500 rows × 24 bands × 28 B / 4)
+    monkeypatch.setattr(KNN, "LSH_GROUP_BYTES", 500 * 28 * 24 // 4)
     grouped = KNN.knn_edges(items, params, strategy="lsh", lsh_bits=3,
                             lsh_bands=24)
     rows_grp = {(r["src"], r["dst"], round(r["dist"], 12))

@@ -1,7 +1,8 @@
-"""r13 optimization-round pins: the narrow-shuffle LSH plan and the
-hoisted Laplacian diagonal must be value-identical to the plans they
-replace; the spool diffusion plan must match the driver tier and fail
-cleanly (clear errors, no leaked spool dir)."""
+"""r13 optimization-round pins: the narrow-shuffle LSH plan must match
+the exact strategy and its own unsplit buckets, the hoisted Laplacian
+diagonal must be value-identical to the plan it replaced; the spool
+diffusion plan must match the driver tier and fail cleanly (clear
+errors, no leaked spool dir)."""
 
 import os
 
@@ -23,40 +24,40 @@ def _corpus(spark, n=700, f=24, seed=3):
         schema="item_id long, features array<double>")
 
 
-def test_narrow_shuffle_lsh_identical_to_vector_plan(spark, monkeypatch):
-    """The U-spool narrow-shuffle plan (shuffle (band, key, id), gather
-    vectors from the id-sorted float32 spool) must emit the IDENTICAL
-    edge list — src, dst, AND dist bit-for-bit — as the legacy
-    vector-shuffle plan on the same corpus: `_normalize_f32` is the
-    same op sequence the hash pass applies, so U bits cannot differ."""
+def test_lsh_matches_exact_at_saturating_recall(spark):
+    """Pinned against an independent reference: at recall-saturating
+    band parameters (2-bit keys, 32 bands — a true neighbor misses
+    every band with probability ~0) the LSH plan must emit the exact
+    strategy's edge set, with distances equal to fp32 rounding (the
+    LSH kernel gemms float32 unit vectors gathered from the spool)."""
     items = _corpus(spark)
     gp = GraphParams(eps=0.9, k=8, topk=8, p=2.0)
-    narrow = {(r["src"], r["dst"]): r["dist"]
-              for r in K.knn_edges(items, gp, strategy="lsh").collect()}
-    assert K.lsh_group_summary() is not None  # narrow spools eagerly
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SHUFFLE", "vector")
-    legacy = {(r["src"], r["dst"]): r["dist"]
-              for r in K.knn_edges(items, gp, strategy="lsh").collect()}
-    assert narrow == legacy and len(narrow) > 0
+    lsh = {(r["src"], r["dst"]): r["dist"] for r in K.knn_edges(
+        items, gp, strategy="lsh", lsh_bits=2, lsh_bands=32).collect()}
+    assert K.lsh_group_summary() is not None  # the pair stage spooled
+    exact = {(r["src"], r["dst"]): r["dist"]
+             for r in K.knn_edges(items, gp, strategy="exact").collect()}
+    assert set(lsh) == set(exact) and len(lsh) > 0
+    for e, d in exact.items():
+        assert abs(lsh[e] - d) <= 1e-6
 
 
 def test_narrow_shuffle_skew_guard_identical(spark, monkeypatch):
-    """Oversized-bucket block splitting under the narrow plan (spool
-    gather in block-pair tasks) matches the legacy plan on a
-    mass-duplicate corpus."""
+    """Oversized-bucket block splitting (spool gather in block-pair
+    tasks, LSH_BUCKET_MAX=8) emits the same edges as the unsplit
+    buckets on a mass-duplicate corpus."""
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(40)] + [
         (100 + i, [float(x) for x in v])
         for i, v in enumerate(np.eye(4)[1:] * 1.0)]
     df = spark.createDataFrame(
         rows, schema="item_id long, features array<double>")
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0)
+    unsplit = {(r["src"], r["dst"]) for r in K.knn_edges(
+        df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
     monkeypatch.setattr(K, "LSH_BUCKET_MAX", 8)
-    narrow = {(r["src"], r["dst"]) for r in K.knn_edges(
+    split = {(r["src"], r["dst"]) for r in K.knn_edges(
         df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SHUFFLE", "vector")
-    legacy = {(r["src"], r["dst"]) for r in K.knn_edges(
-        df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
-    assert narrow == legacy and len(narrow) > 0
+    assert split == unsplit and len(split) > 0
 
 
 def test_gather_diag_hoist_matches_driver_tier(spark):

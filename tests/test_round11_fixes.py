@@ -43,7 +43,7 @@ def test_lsh_group_budget_upfront_refusal(spark, sf_items, monkeypatch):
     BEFORE running any Spark job, with the projection arithmetic in the
     message — not crash 90 minutes in on a watchdog (the r10 2M
     failure mode)."""
-    monkeypatch.setenv("SPARK_GRAFT_LSH_GROUP_BYTES", "64k")
+    monkeypatch.setattr(knn_ops, "LSH_GROUP_BYTES", 64 << 10)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1048576g")
     gp = GraphParams(eps=0.9, k=10, topk=5, p=2.0)
     with pytest.raises(RuntimeError, match="refused up front"):
@@ -60,9 +60,7 @@ def test_lsh_adaptive_groups_match_single_stage(spark, sf_items,
     single = {(r["src"], r["dst"]): r["dist"] for r in knn_ops.knn_edges(
         sf_items, gp, strategy="lsh").select(
         "src", "dst", "dist").collect()}
-    # r13-opt: the narrow-shuffle plan prices ~28 B/row, so the budget
-    # that used to force several groups must shrink with it
-    monkeypatch.setenv("SPARK_GRAFT_LSH_GROUP_BYTES", "64k")
+    monkeypatch.setattr(knn_ops, "LSH_GROUP_BYTES", 64 << 10)
     grouped = {(r["src"], r["dst"]): r["dist"] for r in knn_ops.knn_edges(
         sf_items, gp, strategy="lsh").select(
         "src", "dst", "dist").collect()}

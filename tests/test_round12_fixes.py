@@ -50,7 +50,7 @@ def test_lsh_plan_deterministic_twin():
     assert p["n_bits"] == n_bits
     assert p["n_bands"] == K.auto_lsh_bands(n_bits)
     assert p["n_band_groups"] >= 1
-    assert p["band_shuffle_bytes"] == 313_841 * (384 * 4 + 48)
+    assert p["band_shuffle_bytes"] == 313_841 * K.LSH_ROW_BYTES
     assert p["spool_group_bytes"] == 313_841 * 25 * K.LSH_PAIR_SPOOL_BYTES
     # explicit budget: 1-byte budget → every band its own group cap
     tiny = K.lsh_plan(313_841, 384, 25, group_budget_bytes=1)
@@ -61,9 +61,8 @@ def test_group_summary_attached_and_reset(spark, monkeypatch):
     """A grouped LSH build populates lsh_group_summary() and the built
     index's lsh_build_info; a following exact build resets both to
     None (no stale leak across builds — finding 2)."""
-    # r13-opt: narrow-shuffle rows are ~28 B — a smaller budget keeps
-    # this forcing ≥2 groups under the new row pricing
-    monkeypatch.setenv("SPARK_GRAFT_LSH_GROUP_BYTES", "100000")
+    # narrow 28 B rows: a 100 kB budget forces ≥2 groups at N=600
+    monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
     items = _small_corpus(spark)
     gp = GraphParams(eps=0.35, k=6, topk=6, p=2.0, sigma=0.2)
@@ -87,20 +86,23 @@ def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
     up-front refusal must project per GROUP. Fake the free-disk probe
     to a value BETWEEN the r11 per-band projection (would refuse) and
     the per-group need (fits) and assert the build proceeds."""
-    monkeypatch.setenv("SPARK_GRAFT_LSH_GROUP_BYTES", "700000")
+    monkeypatch.setattr(K, "LSH_GROUP_BYTES", 700_000)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SPILL_FACTOR", "4.0")
+    monkeypatch.setattr(K, "LSH_SPILL_FACTOR", 4.0)
     n, f, k = 600, 24, 8
     items = _small_corpus(spark, n=n, f=f)
     # runtime plan at these shapes (auto bits/bands)
-    plan = K.lsh_plan(n, f, k, group_budget_bytes=700_000)
+    plan = K.lsh_plan(n, f, k)
     nb = plan["n_bands"]
-    band_bytes = n * (f * 4 + 48)
+    band_bytes = n * K.LSH_ROW_BYTES
+    # the U spool (N·F·4) plus the parquet copy it streams from (N·F·8):
+    # a createDataFrame input has no proven corpus scan
+    u_bytes = n * f * 12
     spool_unit = n * k * K.LSH_PAIR_SPOOL_BYTES
     floor_b, spill = 1_000_000, 4.0
-    old_need = nb * spool_unit + band_bytes * spill + floor_b
+    old_need = nb * spool_unit + band_bytes * spill + u_bytes + floor_b
     new_need = (plan["n_band_groups"] * spool_unit
-                + band_bytes * spill + floor_b)
+                + band_bytes * spill + u_bytes + floor_b)
     fake_free = int((old_need + new_need) / 2)
     assert new_need < fake_free < old_need  # the scenario is real
     real_usage = K.shutil.disk_usage
