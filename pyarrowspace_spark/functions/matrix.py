@@ -10,7 +10,9 @@ columnar and lands it as numpy in ~2 s: same contract, 30x less wall.
 
 `positions_of` replaces per-edge Python dict lookups with a vectorized
 sorted-search: works for arbitrary int64 ids (including 60-bit hashes),
-no densification assumption.
+no densification assumption. `dst_segments` + `segment_sum` are the
+one neighbour combine W·X of the driver tiers (diffusion steps and the
+feature Laplacian).
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -279,9 +282,19 @@ def laplacian_from_parquet(spark, path: str) -> np.ndarray:
 
 
 def sorted_index(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Precompute (sorted_ids, order) for `positions_of` lookups."""
+    """Precompute (sorted_ids, order) for `positions_of` lookups.
+
+    Raises ValueError on repeated ids: `positions_of` would map every
+    copy's edges to one copy and leave the others isolated — a silently
+    wrong graph, not an error (the LSH and diffusion-spool contract)."""
     order = np.argsort(ids, kind="stable").astype(np.int64)
-    return ids[order], order
+    s_ids = ids[order]
+    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
+    if dup.size:
+        raise ValueError(
+            f"item ids must be unique; {len(np.unique(dup))} ids repeat "
+            f"(e.g. {int(dup[0])})")
+    return s_ids, order
 
 
 def positions_of(
@@ -302,3 +315,54 @@ def positions_of(
             f"{missing.size} edge id(s) absent from the items array "
             f"(first few: {missing[:5].tolist()})")
     return order[pos_c]
+
+
+class DstSegments(NamedTuple):
+    """A weighted edge list grouped by destination row: segment i holds
+    the edges into row `udst[i]`, at `src[bounds[i]:bounds[i+1]]` with
+    weights `w[...]`; `deg` is the weighted in-degree of every row."""
+
+    src: np.ndarray
+    w: np.ndarray
+    udst: np.ndarray
+    bounds: np.ndarray
+    deg: np.ndarray
+
+
+def dst_segments(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
+                 n: int) -> DstSegments:
+    """Group edges (row positions `src` → `dst`, weights `w`) of an
+    n-row matrix by destination, stable in input order."""
+    order = np.argsort(dst, kind="stable")
+    src, dst, w = src[order], dst[order], w[order]
+    udst, starts = np.unique(dst, return_index=True)
+    deg = np.zeros(n)
+    if len(udst):
+        deg[udst] = np.add.reduceat(w, starts)
+    return DstSegments(src, w, udst, np.append(starts, len(dst)), deg)
+
+
+def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:
+    """W·X as a per-destination combine: row d of the result is
+    Σ w·X[src] over the edges into d (zero for rows with none).
+
+    E·F flops and one N×F output. Each destination is one BLAS matvec
+    w[s:e] @ X[src[s:e]] — measured 24 s per step over 9.4M edges at
+    N=313k. The vectorized alternative, np.add.reduceat over a gathered
+    E×F chunk, walks each COLUMN of the C-ordered chunk at a 3 KB
+    stride — measured 8x slower on the reduction alone, plus an E×F
+    buffer the matvec never materializes. A segment longer than X
+    (only repeated edges make one) is summed in X-sized slices, so the
+    gather transient never exceeds N·F whatever the edge count."""
+    out = np.zeros_like(X)
+    cap = max(len(X), 1)
+    src, w, udst, bounds = seg.src, seg.w, seg.udst, seg.bounds
+    for i in range(len(udst)):
+        s, e = bounds[i], bounds[i + 1]
+        if e - s <= cap:
+            out[udst[i]] = w[s:e] @ X[src[s:e]]
+        else:
+            for c in range(s, e, cap):
+                c1 = min(c + cap, e)
+                out[udst[i]] += w[c:c1] @ X[src[c:c1]]
+    return out

@@ -43,8 +43,10 @@ from ..functions import stats
 from ..functions import matrix as matrix_mod
 from ..functions.matrix import (
     collect_id_matrix,
+    dst_segments,
     matrix_to_frame,
     positions_of,
+    segment_sum,
     sorted_index,
 )
 from ..params import EnergyParams, GraphParams
@@ -559,8 +561,10 @@ def _diffuse_driver(
 ) -> DataFrame:
     """Driver-tier diffusion: X and the narrow edge list both fit on
     the driver below the tier ceiling (same policy as lambda_index's
-    driver-BLAS tier), so the whole multi-step loop is chunked numpy
-    gather + segment-sum — no per-step broadcast/collect round trip.
+    driver-BLAS tier), so the whole multi-step loop is numpy — each
+    step one neighbour combine W·X by `matrix.segment_sum`, the helper
+    the driver-tier feature Laplacian shares — with no per-step
+    broadcast/collect round trip.
     A first cut of this tier round-tripped X through a distributed
     kernel every step; the 1 GB broadcast + toPandas + re-stack per
     step cost ~2 min/step at N=313k while the arithmetic itself is
@@ -588,31 +592,13 @@ def _diffuse_driver(
     sids, order = sorted_index(ids)
     src = positions_of(epdf["src"].to_numpy(np.int64), sids, order)
     dst = positions_of(epdf["dst"].to_numpy(np.int64), sids, order)
-    w = epdf["weight"].to_numpy(np.float64)
-    del epdf
-    order = np.argsort(dst, kind="stable")
-    src, dst, w = src[order], dst[order], w[order]
-    udst, starts = np.unique(dst, return_index=True)
-    bounds = np.append(starts, len(dst))
-    deg = np.zeros(len(ids))
-    if len(udst):
-        deg[udst] = np.add.reduceat(w, starts)
+    seg = dst_segments(src, dst, epdf["weight"].to_numpy(np.float64),
+                       len(ids))
+    del epdf, src, dst
     eta_f = float(eta)
-    n_seg = len(udst)
     for _ in range(int(steps)):
-        # Per-destination fused gather·scale·sum as a tiny BLAS matvec
-        # w[s:e] @ X[src[s:e]] — measured 24 s per step over 9.4M
-        # edges at N=313k. The tempting vectorized alternative,
-        # np.add.reduceat(contrib, starts, axis=0) over a gathered
-        # chunk, walks each COLUMN of the C-ordered chunk at a 3 KB
-        # stride — measured 8x slower than this loop on the reduction
-        # alone, plus a multi-GB contrib buffer per chunk that the
-        # matvec never materializes.
-        nsum = np.zeros_like(X)
-        for i in range(n_seg):
-            s, e = bounds[i], bounds[i + 1]
-            nsum[udst[i]] = w[s:e] @ X[src[s:e]]
-        X = (1.0 - eta_f * deg)[:, None] * X + eta_f * nsum
+        X = ((1.0 - eta_f * seg.deg)[:, None] * X
+             + eta_f * segment_sum(X, seg))
     # Hand the diffused matrix back as a parquet scan, NOT a
     # createDataFrame: the latter embeds X in task binaries (12 MB
     # task-size warnings at 78k×384) and — under a non-Arrow session

@@ -229,73 +229,77 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _completed_stages(spark) -> list[dict]:
-    """Completed-stage records from the Spark UI REST API (empty when
-    the UI is disabled/unreachable — instrumentation only, never
-    load-bearing)."""
+def _completed_stages(spark, watermark: int = -1):
+    """Yield (stage id, py4j `status.api.v1.StageData`) for completed
+    stages above `watermark`, newest first, from the JVM status store.
+    These are the records the UI's REST endpoint serves, without its
+    cost — a session's first REST request starts the UI's servlet
+    (1.7 s) — and the store is there with spark.ui.enabled=false too.
+    Yields nothing more on any error: instrumentation only, never
+    load-bearing."""
     try:
-        import json as _json
-        import urllib.request
-
-        url = spark.sparkContext.uiWebUrl
-        if not url:
-            return []
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-                f"{url}/api/v1/applications/{app_id}/stages"
-                f"?status=complete", timeout=5) as resp:
-            return _json.load(resp)
+        sc = spark.sparkContext
+        statuses = sc._jvm.java.util.ArrayList()
+        statuses.add(sc._jvm.org.apache.spark.status.api.v1
+                     .StageStatus.COMPLETE)
+        stages = sc._jsc.sc().statusStore().stageList(
+            statuses, False, False,
+            sc._gateway.new_array(sc._jvm.double, 0),
+            sc._jvm.java.util.ArrayList())
+        # listed by descending (stageId, attemptId): stop at the
+        # watermark instead of reading every stage of the session
+        it = stages.iterator()
+        while it.hasNext():
+            st = it.next()
+            sid = int(st.stageId())
+            if sid <= watermark:
+                return
+            yield sid, st
     except Exception:
-        return []
+        return
 
 
 def _max_stage_id(spark) -> int:
-    stages = _completed_stages(spark)
-    return max((int(s.get("stageId", -1)) for s in stages), default=-1)
+    return next(_completed_stages(spark), (-1, None))[0]
 
 
 def _stages_since(spark, watermark: int) -> list[dict]:
     """Compact per-stage metrics for stages completed after
     `watermark` — the data that localizes where a band group's wall
     time and scratch disk actually go (sort spill vs shuffle write vs
-    parquet output), per the round-10 2M postmortem."""
-    def _ts(s: str) -> float:
-        from datetime import datetime, timezone
-
-        return datetime.strptime(
-            s.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f"
-        ).replace(tzinfo=timezone.utc).timestamp()
+    parquet output), per the round-10 2M postmortem. Empty on any
+    error."""
+    def _gb(nbytes) -> float:
+        return round(nbytes / 2**30, 3)
 
     out = []
-    for st in _completed_stages(spark):
-        sid = int(st.get("stageId", -1))
-        if sid <= watermark:
-            continue
-        try:
-            wall = round(_ts(st["completionTime"])
-                         - _ts(st["submissionTime"]), 2)
-        except Exception:
-            wall = None
-        out.append({
-            "sid": sid,
-            # keep the TAIL: Spark stage names end in file:line ("col-
-            # lect at .../lambda_index.py:167") — a head-truncation
-            # dropped exactly the locator the metrics exist to record
-            "name": str(st.get("name", ""))[-72:],
-            "num_tasks": int(st.get("numTasks", 0)),
-            "wall_sec": wall,
-            "task_sec": round(st.get("executorRunTime", 0) / 1e3, 1),
-            "disk_spill_gb": round(
-                st.get("diskBytesSpilled", 0) / 2**30, 3),
-            "mem_spill_gb": round(
-                st.get("memoryBytesSpilled", 0) / 2**30, 3),
-            "shuffle_write_gb": round(
-                st.get("shuffleWriteBytes", 0) / 2**30, 3),
-            "shuffle_read_gb": round(
-                st.get("shuffleReadBytes", 0) / 2**30, 3),
-            "input_gb": round(st.get("inputBytes", 0) / 2**30, 3),
-            "output_gb": round(st.get("outputBytes", 0) / 2**30, 3),
-        })
+    try:
+        for sid, st in _completed_stages(spark, watermark):
+            try:
+                wall = round((st.completionTime().get().getTime()
+                              - st.submissionTime().get().getTime())
+                             / 1e3, 2)
+            except Exception:
+                wall = None
+            out.append({
+                "sid": sid,
+                # keep the TAIL: Spark stage names end in file:line
+                # ("collect at .../lambda_index.py:167") — a head-
+                # truncation dropped exactly the locator the metrics
+                # exist to record
+                "name": str(st.name())[-72:],
+                "num_tasks": int(st.numTasks()),
+                "wall_sec": wall,
+                "task_sec": round(st.executorRunTime() / 1e3, 1),
+                "disk_spill_gb": _gb(st.diskBytesSpilled()),
+                "mem_spill_gb": _gb(st.memoryBytesSpilled()),
+                "shuffle_write_gb": _gb(st.shuffleWriteBytes()),
+                "shuffle_read_gb": _gb(st.shuffleReadBytes()),
+                "input_gb": _gb(st.inputBytes()),
+                "output_gb": _gb(st.outputBytes()),
+            })
+    except Exception:
+        return []
     return sorted(out, key=lambda r: r["sid"])
 
 # Above this many items the exact all-pairs join is no longer the plan

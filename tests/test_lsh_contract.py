@@ -1,7 +1,8 @@
 """Input and resource contract of the LSH build (`knn.knn_edges`,
 strategy="lsh"): duplicate ids and empty frames, the scratch rule it
 shares with diffusion, the up-front disk budget, spool cleanup on
-failure, and `lsh_plan` describing the plan that runs."""
+failure, `lsh_plan` describing the plan that runs, and per-group stage
+metrics read without the UI's REST endpoint."""
 
 import os
 import shutil
@@ -134,3 +135,30 @@ def test_lsh_plan_group_count_matches_build(spark, monkeypatch):
     plan = K.lsh_plan(n, f, k)
     assert plan["n_band_groups"] >= 2
     assert K.lsh_group_summary()["n_groups"] == plan["n_band_groups"]
+
+
+def test_lsh_group_stages_without_rest(spark, monkeypatch):
+    """Each band group's stage metrics come from the JVM status store:
+    with every HTTP request failing, a forced-grouping build still
+    records its groups' stages with the per-stage fields."""
+    import urllib.request
+
+    def _no_http(*args, **kwargs):
+        raise OSError("no HTTP in this test")
+
+    monkeypatch.setattr(urllib.request, "urlopen", _no_http)
+    monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    gp = GraphParams(eps=0.35, k=6, topk=6, p=2.0, sigma=0.2)
+    K.knn_edges(_frame(spark, _rows(600, f=24)), gp, strategy="lsh").count()
+    groups = K._LAST_LSH_GROUP_INFO
+    assert len(groups) >= 2
+    for g in groups:
+        assert g["stages"]
+        for st in g["stages"]:
+            for fld in ("sid", "name", "wall_sec", "task_sec",
+                        "disk_spill_gb", "shuffle_write_gb"):
+                assert fld in st
+            assert st["num_tasks"] >= 1 and st["wall_sec"] >= 0
+    sids = [st["sid"] for g in groups for st in g["stages"]]
+    assert sids == sorted(set(sids))  # each group: only its own stages
