@@ -30,10 +30,12 @@ from pyspark.sql import DataFrame
 def collect_id_matrix(
     df: DataFrame, id_col: str, feat_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Collect (ids int64, X float64 N x F) via the Arrow columnar path."""
+    """Collect (ids int64, X float64 N x F) via the Arrow columnar path.
+    `np.stack` already returns a fresh array, so a float64 stack is
+    kept as is: the collect holds one copy of X."""
     pdf = df.select(id_col, feat_col).toPandas()
     ids = pdf[id_col].to_numpy(dtype=np.int64)
-    X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
+    X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64, copy=False)
     return ids, X
 
 

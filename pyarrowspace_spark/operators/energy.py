@@ -20,6 +20,10 @@ Stages (Spark-first):
   6. search_energy G15: cosine-free scoring
      score = w_lambda·1/(1+|λ_q−λ_x|) + w_dirichlet·1/(1+|e_q−e_x|),
      centroid shortlist of `candidate_m` then exact member rescore.
+     The shortlist is ranked on the driver from the (memoized)
+     centroid scalars; one Arrow kernel rescores the shortlisted
+     members in place, with no join, and a ranking window on query_id
+     picks k. Scores equal the SQL expression bit for bit.
 
 The crate's exact energy-edge weighting is unpublished (SURVEY §2.11
 spec gap); formulas here are pinned by our own golden tests.
@@ -32,12 +36,14 @@ import os
 import shutil
 import tempfile
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import stats
 from ..functions import matrix as matrix_mod
@@ -52,6 +58,7 @@ from ..functions.matrix import (
 from ..params import EnergyParams, GraphParams
 from . import knn as knn_ops
 from . import lambda_index as lam_ops
+from .search import _QUERY_BLOCK, _block_topk, _ranked, check_query_ids
 
 # Optical-token / split training matrices are collected driver-side;
 # above this row count the collect runs on a deterministic hash-capped
@@ -716,6 +723,10 @@ class EnergyIndex:
     # self-describes its physical plan. None on steps=0 builds and
     # indexes saved before round 11.
     diffusion_info: dict | None = None
+    # (centroids frame, its scalars) for `search_energy`'s shortlist;
+    # see `_centroid_scalars`
+    _centroid_memo: tuple | None = field(default=None, init=False,
+                                         repr=False, compare=False)
 
     @property
     def nnodes(self) -> int:
@@ -1234,6 +1245,33 @@ def extend_energy(
     )
 
 
+def _centroid_scalars(index: EnergyIndex):
+    """(centroid_id asc, λ_c, e_c) of the index's centroid table: one
+    collect of ≤ ~2·optical_tokens rows, memoized on the index and
+    keyed on the centroids frame object, so a frame swapped in later
+    is read afresh."""
+    memo = index._centroid_memo
+    if memo is None or memo[0] is not index.centroids:
+        rows = sorted(index.centroids.select(
+            "centroid_id", "lambda_c", "e_c").collect())
+        memo = (index.centroids,
+                np.array([r[0] for r in rows], dtype=np.int64),
+                *(np.array([r[j] for r in rows], dtype=np.float64)
+                  for j in (1, 2)))
+        index._centroid_memo = memo
+    return memo[1:]
+
+
+def _energy_score(wl, wd, q_lam, q_e, lam, e):
+    """wl/(1+|λq−λ|) + wd/(1+|eq−e|) for every (query, row) pair, in
+    the operation order of the same expression in Spark SQL (and in
+    the oracle's DuckDB twin), so each IEEE result is the one an SQL
+    engine computes."""
+    with np.errstate(invalid="ignore"):
+        return (wl / (1.0 + np.abs(q_lam[:, None] - lam[None, :]))
+                + wd / (1.0 + np.abs(q_e[:, None] - e[None, :])))
+
+
 def search_energy(
     index: EnergyIndex,
     query: np.ndarray,
@@ -1245,13 +1283,31 @@ def search_energy(
     """Cosine-free energy search (reference src/lib.rs:232-262):
     shortlist `candidate_m` centroids by energy score, exact-rescore
     their members, top-k. Returns DataFrame[query_id, item_id, score,
-    rank].
+    rank], rank 1-based on (score desc, item_id asc).
 
     Batch-first (engine convention, parity-plus vs the reference's
-    single-vector API): `query` may be an (M, F) matrix — all M
-    queries run as ONE plan (one broadcast of the M-row query frame,
-    one shortlist window, one member rescore), not M separate jobs.
-    `query_ids` labels the output rows (default 0..M-1)."""
+    single-vector API): `query` may be an (M, F) matrix, and all M
+    queries run as ONE plan. `query_ids` labels the output rows
+    (default 0..M-1); they must be unique and non-null. An empty
+    (0, F) matrix returns a typed empty frame.
+
+    Plan: the shortlist is computed on the driver. The centroid
+    scalars (centroid_id, λ_c, e_c) are collected once per centroids
+    frame and memoized on the index (`extend_energy` and `load` return
+    new indexes, each with its own memo). Per query the first
+    `candidate_m` centroids by (score desc, centroid_id asc) are kept,
+    the order of a SQL ranking window. One `mapInPandas` kernel then
+    scans only the members of the shortlisted centroids. It
+    broadcasts the query λ/e and the queries×centroids shortlist
+    mask, scores every (query, member) pair the mask admits, and emits
+    per query only the rows that can still reach its top k; the
+    `search._ranked` window picks k. The one shuffle is on query_id;
+    there is no join.
+
+    Scores equal the SQL expression bit for bit (same operation
+    order, fp64). A NaN score, centroid or member, ranks first, where
+    Spark's descending sort puts NaN.
+    """
     q = np.atleast_2d(np.asarray(query, dtype=np.float64))
     lf = index.feature_laplacian
     if q.shape[1] != lf.shape[0]:
@@ -1261,41 +1317,57 @@ def search_energy(
     if len(query_ids) != q.shape[0]:
         raise ValueError(
             f"{len(query_ids)} query_ids for {q.shape[0]} queries")
-    e_raw, _, s_val = lam_ops._lambda_kernel(q, lf, index.tau_synth)
-    spark = index.items.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(qid), float(s), float(e))
-         for qid, s, e in zip(query_ids, s_val, e_raw)],
-        schema="query_id long, q_lambda double, q_e double",
-    )
-    cand_m = int(index.energy_params.candidate_m)
+    check_query_ids(list(query_ids))
+    qids = np.array([int(i) for i in query_ids], dtype=np.int64)
+    q_e, _, q_lam = lam_ops._lambda_kernel(q, lf, index.tau_synth)
+    cand_m, k = max(0, int(index.energy_params.candidate_m)), int(k)
     wl, wd = float(w_lambda), float(w_dirichlet)
 
-    cscore = (
-        F.lit(wl) / (F.lit(1.0) + F.abs(F.col("q_lambda") - F.col("lambda_c")))
-        + F.lit(wd) / (F.lit(1.0) + F.abs(F.col("q_e") - F.col("e_c")))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("cscore").desc(), F.col("centroid_id").asc()
-    )
-    shortlist = (
-        index.centroids.join(F.broadcast(qdf))
-        .withColumn("cscore", cscore)
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= cand_m)
-        .select("query_id", "centroid_id", "q_lambda", "q_e")
-    )
-    members = index.items.select("item_id", "centroid_id", "lambda", "e_raw")
-    rescored = shortlist.join(members, "centroid_id").select(
-        "query_id", "item_id",
-        (F.lit(wl) / (F.lit(1.0) + F.abs(F.col("q_lambda") - F.col("lambda")))
-         + F.lit(wd) / (F.lit(1.0) + F.abs(F.col("q_e") - F.col("e_raw")))
-         ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(int(k)))
-    )
+    cid, lam_c, e_c = _centroid_scalars(index)
+    cs = _energy_score(wl, wd, q_lam, q_e, lam_c, e_c)
+    # window order: NaN first, then score desc; the stable sort keeps
+    # centroid_id asc among ties
+    nan = np.isnan(cs)
+    top = np.lexsort((-np.where(nan, 0.0, cs), ~nan), axis=1)[:, :cand_m]
+    mask = np.zeros(cs.shape, dtype=bool)
+    np.put_along_axis(mask, top, True, axis=1)
+    shortlisted = cid[mask.any(axis=0)]
+
+    out_schema = T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField("item_id", index.items.schema["item_id"].dataType),
+        T.StructField("score", T.DoubleType())])
+    bq = index.items.sparkSession.sparkContext.broadcast({
+        "qids": qids, "lam": q_lam, "e": q_e, "mask": mask, "cid": cid})
+
+    def kernel(batches):
+        qv = bq.value
+        m = len(qv["qids"])
+        for pdf in batches:
+            if not (len(pdf) and m):
+                continue
+            # every row's centroid is shortlisted by the scan's filter
+            pos = np.searchsorted(qv["cid"], pdf["centroid_id"].to_numpy(
+                np.int64))
+            lam = pdf["lambda"].to_numpy(np.float64)
+            e = pdf["e_raw"].to_numpy(np.float64)
+            ids = pdf["item_id"].to_numpy()
+            for b0 in range(0, m, _QUERY_BLOCK):
+                blk = slice(b0, min(b0 + _QUERY_BLOCK, m))
+                valid = qv["mask"][blk][:, pos]
+                S = _energy_score(wl, wd, qv["lam"][blk], qv["e"][blk],
+                                  lam, e)
+                oq, orow = np.nonzero(
+                    _block_topk(S, np.zeros_like(valid), valid, k))
+                yield pd.DataFrame({
+                    "query_id": qv["qids"][blk][oq],
+                    "item_id": ids[orow],
+                    # Arrow-backed, so NaN stays NaN
+                    "score": pd.arrays.ArrowExtensionArray(
+                        pa.array(S[oq, orow]))})
+
+    members = (index.items
+               .filter(F.col("centroid_id").isin(shortlisted.tolist()))
+               .select("item_id", "centroid_id", "lambda", "e_raw"))
+    return _ranked(members.mapInPandas(kernel, out_schema), k, "item_id",
+                   "query_id")

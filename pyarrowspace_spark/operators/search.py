@@ -52,6 +52,15 @@ def _fold_dot(terms):
     return acc
 
 
+def check_query_ids(qids, query_id_col: str = "query_id") -> None:
+    """Query ids label output rows, so they must be unique and non-null:
+    a repeated id would merge two queries' top k into one."""
+    dup = [q for q, n in Counter(qids).items() if n > 1 or q is None]
+    if dup:
+        raise ValueError(f"duplicate or null {query_id_col} values "
+                         f"{dup[:5]}: each query needs a unique id")
+
+
 def _collect_queries(queries: DataFrame, lf: np.ndarray, tau: float,
                      query_id_col: str, feat_col: str):
     """The query-side contract of `search` and `search_ann`: collect a
@@ -76,10 +85,7 @@ def _collect_queries(queries: DataFrame, lf: np.ndarray, tau: float,
             f"features × 8 B exceed the {budget} B query budget "
             "(spark.sql.autoBroadcastJoinThreshold); split the batch")
     qids = [r[0] for r in rows]
-    dup = [q for q, n in Counter(qids).items() if n > 1 or q is None]
-    if dup:
-        raise ValueError(f"duplicate or null {query_id_col} values "
-                         f"{dup[:5]}: each query needs a unique id")
+    check_query_ids(qids, query_id_col)
     if any(r[1] is None or len(r[1]) != n_f for r in rows):
         raise ValueError(f"every query needs {n_f} features (the index's)")
     Q = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, n_f)
@@ -102,6 +108,8 @@ def _block_topk(S, null, valid, k: int) -> np.ndarray:
     query's global top k: valid cells scoring at least the block's k-th
     score, ties included. NaN sorts above every number and NULL below,
     as in Spark's descending sort."""
+    if k < 1:
+        return np.zeros_like(valid)
     key = np.where(np.isnan(S), np.inf, S)
     key[null | ~valid] = -np.inf
     n = S.shape[1]

@@ -1,5 +1,10 @@
 """Energy pipeline tests: diffusion exactness vs numpy, full
-build_energy/search_energy behavior (golden-pinned, SURVEY §2 G12-G15)."""
+build_energy/search_energy behavior (golden-pinned, SURVEY §2 G12-G15),
+the search kernel pinned to a replay of its SQL formula, and
+save/load and extend followed by search."""
+
+import dataclasses
+import math
 
 import numpy as np
 import pytest
@@ -10,6 +15,7 @@ from pyarrowspace_spark.operators import knn as knn_ops
 from pyarrowspace_spark.operators import energy as E
 
 from .conftest import TEST0_ITEMS
+from .test_lsh_recall import SF_DIR
 
 GP = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
 
@@ -60,14 +66,17 @@ def test_diffusion_reduces_dirichlet_energy(spark, test0_items_df, edges):
 
 
 @pytest.fixture(scope="module")
-def energy_index(spark):
+def sf_items(spark):
     from pyarrowspace_spark.sources.loaders import items_from_embeddings
 
-    items = items_from_embeddings(spark, "/root/testdata/sf0.001").select(
-        "item_id", "features"
-    )
+    return items_from_embeddings(spark, SF_DIR).select(
+        "item_id", "features").persist()
+
+
+@pytest.fixture(scope="module")
+def energy_index(sf_items):
     return E.build_energy(
-        items,
+        sf_items,
         EnergyParams(optical_tokens=16, eta=0.05, steps=2, trim_quantile=0.1),
         GraphParams(eps=0.9, k=10, topk=10, p=2.0),
     )
@@ -189,3 +198,227 @@ def test_extend_energy_validates_nfeatures(energy_index, spark):
         schema="item_id long, features array<double>")
     with pytest.raises(ValueError, match="features"):
         energy_index.extend(bad)
+
+
+# The tiny-corpus energy build (test0 items, 3 tokens) and the
+# normalise=True sf0.001 build.
+GP_T0 = GraphParams(eps=0.9, k=4, topk=5, p=2.0)
+EP_T0 = EnergyParams(optical_tokens=3, eta=0.05, steps=2, trim_quantile=0.1)
+EP_SF = EnergyParams(optical_tokens=16, eta=0.05, steps=2, trim_quantile=0.1)
+GPN = GraphParams(eps=0.9, k=10, topk=10, p=2.0, normalise=True)
+
+
+def test_search_energy_batch_equals_per_query(spark, test0_items_df):
+    """An (M, F) query matrix in ONE call returns exactly the union of
+    the M single-vector calls, with caller-supplied query ids."""
+    idx = E.build_energy(test0_items_df, EP_T0, GP_T0)
+    feats = {r["item_id"]: np.array(r["features"])
+             for r in idx.items.select("item_id", "features").collect()}
+    qids = [1, 3]
+    qmat = np.stack([feats[q] for q in qids])
+    batched = {
+        (r["query_id"], r["item_id"], r["rank"], round(r["score"], 9))
+        for r in E.search_energy(idx, qmat, k=3, query_ids=qids).collect()
+    }
+    single = set()
+    for q in qids:
+        for r in E.search_energy(idx, feats[q], k=3).collect():
+            single.add((q, r["item_id"], r["rank"], round(r["score"], 9)))
+    assert batched == single
+    with pytest.raises(ValueError, match="query_ids"):
+        E.search_energy(idx, qmat, k=3, query_ids=[1])
+
+
+def test_energy_index_save_load_roundtrip(spark, test0_items_df, tmp_path):
+    """EnergyIndex.save/load: a reloaded index answers search_energy
+    identically to the in-memory one (params, τ, Laplacian, centroid
+    and member tables all round-trip)."""
+    idx = E.build_energy(test0_items_df, EP_T0, GP_T0)
+    path = str(tmp_path / "eidx")
+    idx.save(path)
+    back = E.EnergyIndex.load(spark, path)
+    assert back.tau_synth == pytest.approx(idx.tau_synth)
+    assert back.graph_params.to_dict() == GP_T0.to_dict()
+    assert back.energy_params.to_dict() == EP_T0.to_dict()
+    np.testing.assert_allclose(back.feature_laplacian,
+                               idx.feature_laplacian)
+    assert back.nnodes == idx.nnodes
+    q = np.array(
+        test0_items_df.filter(F.col("item_id") == 1).first()["features"])
+
+    def _hits(i):
+        return [(r["item_id"], r["rank"], round(r["score"], 9))
+                for r in E.search_energy(i, q, k=3)
+                .orderBy("rank").collect()]
+
+    assert _hits(back) == _hits(idx)
+
+
+def test_build_energy_normalise_extend_roundtrip(spark, sf_items):
+    """Build↔extend scale parity (the consistency the r9 fix exists to
+    guarantee): on a normalise=True energy index, extending with a raw
+    copy and a ×3-scaled copy of the same vector must append IDENTICAL
+    rows — same stored features, λ, e_raw, and frozen-centroid
+    assignment — and both are immediately searchable at rank 1."""
+    idx = E.build_energy(sf_items, EP_SF, GPN)
+    v = sf_items.filter(F.col("item_id") == 3).first()["features"]
+    new = spark.createDataFrame(
+        [(100_000, [float(x) for x in v]),
+         (100_001, [float(x) * 3.0 for x in v])],
+        schema="item_id long, features array<double>")
+    ext = idx.extend(new)
+    rows = {r["item_id"]: r for r in
+            ext.items.filter(F.col("item_id") >= 100_000).collect()}
+    assert set(rows) == {100_000, 100_001}
+    a, b = rows[100_000], rows[100_001]
+    np.testing.assert_allclose(b["features"], a["features"], rtol=1e-12)
+    assert b["lambda"] == pytest.approx(a["lambda"], rel=1e-12)
+    assert b["e_raw"] == pytest.approx(a["e_raw"], rel=1e-12)
+    assert b["centroid_id"] == a["centroid_id"]
+    # stored scale parity: the appended vector lives in the SAME
+    # unit-norm space as the base corpus was stored in
+    assert float(np.linalg.norm(a["features"])) == pytest.approx(1.0)
+    hits = E.search_energy(ext, np.array(a["features"]), k=3).orderBy(
+        "rank").collect()
+    assert hits[0]["item_id"] in (100_000, 100_001)
+
+
+def _score_key(s):
+    # NaN != NaN, so rows compare with NaN scores as a marker
+    return "nan" if s is not None and math.isnan(s) else s
+
+
+def _replay(index, Q, k, qids, wl=1.0, wd=0.5):
+    """The SQL plan replayed in plain Python floats: a centroid score
+    and shortlist window of candidate_m per query, then the member
+    score and a ranking window, each sorted as Spark sorts (score desc
+    with NaN first, id asc)."""
+    from pyarrowspace_spark.operators import lambda_index as lam_ops
+
+    def order(score, ident):
+        return (not math.isnan(score), 0.0 if math.isnan(score) else -score,
+                ident)
+
+    cents = index.centroids.select("centroid_id", "lambda_c", "e_c").collect()
+    items = index.items.select(
+        "item_id", "centroid_id", "lambda", "e_raw").collect()
+    q_e, _, q_lam = lam_ops._lambda_kernel(
+        np.atleast_2d(Q), index.feature_laplacian, index.tau_synth)
+    out = set()
+    for qid, ql, qe in zip(qids, q_lam.tolist(), q_e.tolist()):
+        cs = sorted(order(wl / (1.0 + abs(ql - c["lambda_c"]))
+                          + wd / (1.0 + abs(qe - c["e_c"])),
+                          c["centroid_id"]) for c in cents)
+        keep = {c[2] for c in cs[:index.energy_params.candidate_m]}
+        scored = sorted(
+            (order(wl / (1.0 + abs(ql - r["lambda"]))
+                   + wd / (1.0 + abs(qe - r["e_raw"])), r["item_id"]),
+             r["item_id"],
+             wl / (1.0 + abs(ql - r["lambda"]))
+             + wd / (1.0 + abs(qe - r["e_raw"])))
+            for r in items if r["centroid_id"] in keep)
+        out |= {(qid, iid, rank, _score_key(s))
+                for rank, (_, iid, s) in enumerate(scored[:k], 1)}
+    return out
+
+
+def _got(df):
+    return {(r["query_id"], r["item_id"], r["rank"], _score_key(r["score"]))
+            for r in df.collect()}
+
+
+def _with(index, candidate_m=None, **frames):
+    ep = index.energy_params
+    if candidate_m is not None:
+        ep = dataclasses.replace(ep, candidate_m=candidate_m)
+    return dataclasses.replace(index, energy_params=ep, **frames)
+
+
+def _sf_queries(index, m, seed=11):
+    X = np.array([r["features"] for r in index.items.orderBy("item_id")
+                  .select("features").collect()])
+    rng = np.random.default_rng(seed)
+    return X[rng.choice(len(X), m, replace=False)] * 1.05
+
+
+@pytest.mark.parametrize("m,k,candidate_m", [
+    (1, 5, None),       # one query, default shortlist
+    (20, 10, None),     # a batch
+    (3, 500, 1),        # k above the shortlisted members
+    (3, 8, 1000),       # candidate_m at least the centroid count
+])
+def test_search_energy_matches_sql_replay(energy_index, m, k, candidate_m):
+    """Pin: (query_id, item_id, rank, score) equal, score with ==, to
+    the SQL formula replayed in Python on sf0.001."""
+    idx = _with(energy_index, candidate_m)
+    Q = _sf_queries(idx, m)
+    qids = list(range(40, 40 + m))
+    got = _got(E.search_energy(idx, Q, k=k, query_ids=qids))
+    assert got == _replay(idx, Q, k, qids)
+    if candidate_m == 1:
+        # k exceeds the one shortlisted centroid's members
+        assert len(got) < m * k
+
+
+def test_search_energy_centroid_tie_breaks_on_id(energy_index):
+    """Pin: equal centroid scores shortlist the smaller centroid ids,
+    as the window's (score desc, centroid_id asc) order does. Also the
+    memo contract: a centroids frame swapped in after a search is read
+    afresh."""
+    idx = _with(energy_index, candidate_m=2)
+    Q = _sf_queries(idx, 4)
+    E.search_energy(idx, Q, k=5).collect()  # fills the memo
+    tied = (idx.centroids.withColumn("lambda_c", F.lit(0.25))
+            .withColumn("e_c", F.lit(0.5)))
+    idx.centroids = tied
+    got = _got(E.search_energy(idx, Q, k=600, query_ids=[0, 1, 2, 3]))
+    assert got == _replay(idx, Q, 600, [0, 1, 2, 3])
+    first_two = sorted(r[0] for r in tied.select("centroid_id").collect())[:2]
+    members = {r["item_id"] for r in idx.items.filter(
+        F.col("centroid_id").isin(first_two)).collect()}
+    assert {g[1] for g in got} == members
+
+
+def test_search_energy_nan_score_ranks_first(energy_index):
+    """Pin: a NaN member score ranks first and stays NaN (not NULL),
+    and a NaN centroid score is shortlisted first, as Spark's
+    descending sort orders NaN."""
+    nan = F.lit(float("nan"))
+    cid = energy_index.items.filter(F.col("item_id") == 9).first()[
+        "centroid_id"]
+    idx = _with(
+        energy_index, candidate_m=1,
+        items=energy_index.items.withColumn(
+            "lambda", F.when(F.col("item_id") == 9, nan)
+            .otherwise(F.col("lambda"))),
+        centroids=energy_index.centroids.withColumn(
+            "lambda_c", F.when(F.col("centroid_id") == cid, nan)
+            .otherwise(F.col("lambda_c"))))
+    Q = _sf_queries(idx, 3)
+    got = _got(E.search_energy(idx, Q, k=4))
+    assert got == _replay(idx, Q, 4, [0, 1, 2])
+    assert {g[:3] for g in got if g[2] == 1} == {(q, 9, 1) for q in range(3)}
+    assert all(g[3] == "nan" for g in got if g[2] == 1)
+
+
+def test_search_energy_empty_queries(energy_index):
+    """An empty (0, F) query matrix returns a typed empty frame, and
+    k=0 returns no rows."""
+    nf = energy_index.feature_laplacian.shape[0]
+    out = E.search_energy(energy_index, np.zeros((0, nf)), k=5)
+    assert [(f.name, f.dataType.typeName()) for f in out.schema.fields] == [
+        ("query_id", "long"), ("item_id", "long"), ("score", "double"),
+        ("rank", "integer")]
+    assert out.count() == 0
+    assert E.search_energy(energy_index, _sf_queries(energy_index, 2),
+                           k=0).count() == 0
+
+
+@pytest.mark.parametrize("qids", [[5, 5], [None, 1]])
+def test_search_energy_rejects_duplicate_or_null_query_ids(energy_index,
+                                                           qids):
+    """Contract: query ids label output rows, so a repeated or null id
+    raises (with a repeated id two queries' top k merged into one)."""
+    Q = _sf_queries(energy_index, 2)
+    with pytest.raises(ValueError, match="duplicate or null query_id"):
+        E.search_energy(energy_index, Q, k=3, query_ids=qids)

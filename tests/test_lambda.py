@@ -1,8 +1,8 @@
 """Driver-tier feature Laplacian L_F = Xᵀ(D−W)X and the neighbour
 combine it shares with driver-tier diffusion (`matrix.segment_sum`):
-the dense-numpy pin, the O(N·F) memory contract, the duplicate-id
-contract, and driver diffusion pinned to its per-destination matvec
-loop bit for bit."""
+the dense-numpy pin, the O(N·F) memory contracts of L_F and of the
+X collect, the duplicate-id contract, and driver diffusion pinned to
+its per-destination matvec loop bit for bit."""
 
 import tracemalloc
 
@@ -115,6 +115,27 @@ def test_driver_laplacian_memory_is_o_nf(spark, x_input):
         assert peak <= bound, (n_edges, peak, bound)
         edges.unpersist()
     items.unpersist()
+
+
+def test_collect_id_matrix_holds_x_once(spark):
+    """Contract: collecting X keeps one N×F float64 copy beyond the
+    pandas frame's rows. The collect used to copy the stacked matrix
+    once more (`astype` without copy=False), a peak near 2·N·F·8."""
+    n, f = 2000, 192
+    ids, X = _matrix(n, f, seed=7)
+    items = _items(spark, ids, X).persist()
+    items.count()
+    M.collect_id_matrix(items, "item_id", "features")  # warm the path
+    tracemalloc.start()
+    try:
+        got_ids, got = M.collect_id_matrix(items, "item_id", "features")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    items.unpersist()
+    assert got.dtype == np.float64
+    assert np.array_equal(got[np.argsort(got_ids)], X[np.argsort(ids)])
+    assert peak <= 1.5 * n * f * 8, (peak, n * f * 8)
 
 
 def _dup_rows(n=60, f=16, seed=4):

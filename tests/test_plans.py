@@ -75,6 +75,35 @@ def test_search_has_no_python_row_udf(spark):
     assert "EvalPython" not in ranking
 
 
+def test_energy_search_is_one_kernel_without_joins(spark):
+    """Energy search runs as one Arrow kernel over the shortlisted
+    members: no query×centroid or shortlist×member join, and the only
+    shuffle is the ranking window's, on the query id."""
+    import numpy as np
+
+    from pyarrowspace_spark.operators import energy as E
+    from pyarrowspace_spark.params import EnergyParams, GraphParams
+    from pyarrowspace_spark.sources import loaders
+
+    items = loaders.items_from_embeddings(spark, SF_DIR).select(
+        "item_id", "features")
+    idx = E.build_energy(
+        items, EnergyParams(optical_tokens=8, eta=0.05, steps=1),
+        GraphParams(eps=0.9, k=10, topk=5, p=2.0))
+    q = np.array([r["features"] for r in items.limit(3).collect()])
+    plan = _plan(E.search_energy(idx, q, k=5))
+    # the search's own operators: the tree above the cached items scan
+    # (the build's lineage is printed under it)
+    tree = plan.split("\n\n")[0].split("InMemoryTableScan")[0]
+    for join in ("BroadcastNestedLoopJoin", "BroadcastHashJoin",
+                 "SortMergeJoin", "CartesianProduct"):
+        assert join not in tree
+    assert "BatchEvalPython" not in plan
+    assert tree.count("MapInPandas") == 1
+    assert tree.count("Exchange") == 1
+    assert plan.count("Arguments: hashpartitioning(query_id#") == 1
+
+
 def test_minhash_no_cartesian(spark):
     plan = _plan(em.q_minhash_band_pairs(spark, SF_DIR))
     assert "CartesianProduct" not in plan

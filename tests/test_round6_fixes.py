@@ -1,8 +1,8 @@
 """Round-6 contract fixes: diffuse input validation (ADVICE r5),
-empty-corpus diffusion, batched search_energy, and λτ-graph reuse
-between the standard and energy builds."""
+empty-corpus diffusion, and λτ-graph reuse between the standard and
+energy builds. The batched search_energy and save/load tests live in
+test_energy.py."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,27 +51,6 @@ def test_diffuse_driver_tier_returns_scan_not_tasks(spark, test0_items_df):
     assert "LocalTableScan" not in plan
     assert "Scan ExistingRDD" in plan or "Scan parquet" in plan \
         or "FileScan" in plan
-
-
-def test_search_energy_batch_equals_per_query(spark, test0_items_df):
-    """An (M, F) query matrix in ONE call returns exactly the union of
-    the M single-vector calls, with caller-supplied query ids."""
-    idx = E.build_energy(test0_items_df, EP, GP)
-    feats = {r["item_id"]: np.array(r["features"])
-             for r in idx.items.select("item_id", "features").collect()}
-    qids = [1, 3]
-    qmat = np.stack([feats[q] for q in qids])
-    batched = {
-        (r["query_id"], r["item_id"], r["rank"], round(r["score"], 9))
-        for r in E.search_energy(idx, qmat, k=3, query_ids=qids).collect()
-    }
-    single = set()
-    for q in qids:
-        for r in E.search_energy(idx, feats[q], k=3).collect():
-            single.add((q, r["item_id"], r["rank"], round(r["score"], 9)))
-    assert batched == single
-    with pytest.raises(ValueError, match="query_ids"):
-        E.search_energy(idx, qmat, k=3, query_ids=[1])
 
 
 def test_build_energy_reuses_external_edges(spark, test0_items_df):
@@ -150,28 +129,3 @@ def test_percentile_tier_switch(spark):
     # None = caller-known-small -> exact
     assert df.select(
         stats.percentile_expr("w", 0.25, None)).first()[0] == exact
-
-
-def test_energy_index_save_load_roundtrip(spark, test0_items_df, tmp_path):
-    """EnergyIndex.save/load: a reloaded index answers search_energy
-    identically to the in-memory one (params, τ, Laplacian, centroid
-    and member tables all round-trip)."""
-    idx = E.build_energy(test0_items_df, EP, GP)
-    path = str(tmp_path / "eidx")
-    idx.save(path)
-    back = E.EnergyIndex.load(spark, path)
-    assert back.tau_synth == pytest.approx(idx.tau_synth)
-    assert back.graph_params.to_dict() == GP.to_dict()
-    assert back.energy_params.to_dict() == EP.to_dict()
-    np.testing.assert_allclose(back.feature_laplacian,
-                               idx.feature_laplacian)
-    assert back.nnodes == idx.nnodes
-    q = np.array(
-        test0_items_df.filter(F.col("item_id") == 1).first()["features"])
-
-    def _hits(i):
-        return [(r["item_id"], r["rank"], round(r["score"], 9))
-                for r in E.search_energy(i, q, k=3)
-                .orderBy("rank").collect()]
-
-    assert _hits(back) == _hits(idx)

@@ -168,6 +168,18 @@ def test_empty_index_and_zero_queries_are_typed(spark):
             StringType(), LongType(), DoubleType(), IntegerType()]
 
 
+def test_k_zero_returns_no_rows(spark):
+    """Contract: k=0 asks for no rows and gets none (the kernel's
+    per-block top-k used to index past the batch and fail the task)."""
+    n_f = 4
+    X = np.random.default_rng(5).random((6, n_f)) + 0.1
+    lf = _lf(n_f)
+    planes = lsh_hyperplanes(n_f, n_tables=2, n_planes=2)
+    for df in _both(_tiny_index(spark, X, lf), lf, _qdf(spark, X[:2]), 0,
+                    planes):
+        assert df.collect() == []
+
+
 def test_query_blocks_match_per_query_searches(spark, sf_index,
                                                monkeypatch):
     """Five queries over three query blocks return the rows five
