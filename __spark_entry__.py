@@ -1752,7 +1752,7 @@ def _energy_oracle_literals():
     import numpy as np
     import pyarrow.parquet as pq
 
-    from pyarrowspace_spark.operators.lambda_index import _lambda_kernel
+    from pyarrowspace_spark.operators.lambda_index import lambda_kernel
     from pyarrowspace_spark.operators.simsearch import lloyd_kmeans
 
     t = pq.read_table("/root/testdata/sf0.01/embeddings.parquet",
@@ -1789,7 +1789,7 @@ def _energy_oracle_literals():
     Lt = np.diag(Wt.sum(axis=1)) - Wt
     LF = Xd.T @ Lt @ Xd
     LF = (LF + LF.T) / 2.0
-    e_raw, g, _ = _lambda_kernel(Xd, LF, 1.0)  # tau only affects s_val
+    e_raw, g, _ = lambda_kernel(Xd, LF, 1.0)  # tau only affects s_val
     tau_synth = float(np.median(e_raw))
     lam = (tau_synth * (e_raw / (e_raw + tau_synth))
            + (1.0 - tau_synth) * np.clip(g, 0.0, 1.0))

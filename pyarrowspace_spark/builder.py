@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .params import GraphParams, EnergyParams
+from . import spool
 from .session import debug_print
 from .operators import knn as knn_ops
 from .operators import lambda_index as lam_ops
@@ -236,15 +237,15 @@ class ArrowSpaceBuilder:
             raise ValueError("items must be a non-empty DataFrame of non-empty vectors")
         n_features = int(first["n"])
 
-        # λ-gather fast path provenance — resolved BEFORE base.persist():
+        # Spool-source provenance — resolved BEFORE base.persist():
         # caching substitutes InMemoryRelation into the SOURCE df's
         # optimized plan via plan-fragment matching, which the trivial-
         # scan whitelist (correctly) rejects; checked here the plan is
-        # still the bare parquet scan. Only handed to the gather tier
+        # still the bare parquet scan. Only handed to the λ spool tier
         # below if the graph ran on the untransformed input.
         x_src = None
         if not params.normalise:
-            x_src = lam_ops.parquet_scan_source(items, id_col, feat_col)
+            x_src = spool.parquet_scan_source(items, id_col, feat_col)
         base = items.select(
             F.col(id_col).alias("item_id"), F.col(feat_col).alias("features")
         )
@@ -300,7 +301,7 @@ class ArrowSpaceBuilder:
             # feeds the LSH build's U spool: the spool streams straight
             # from the corpus parquet instead of a parquet copy of the
             # input. Only valid when the graph runs on the
-            # untransformed input — the same condition the λ gather
+            # untransformed input — the same condition the λ spool tier
             # checks below.
             knn_x_src = (x_src if (graph_input is base
                                    and graph_feat == "features") else None)
@@ -314,7 +315,7 @@ class ArrowSpaceBuilder:
             # (its spools are written group by group), so its measured
             # record is complete here; None when exact ran.
             lsh_info = knn_ops.lsh_group_summary()
-        # λ-gather fast path: stream the gather spool from the corpus
+        # λ spool source: stream the X spool from the corpus
         # parquet only when the graph ran on the UNTRANSFORMED input
         # (no sample/projection; normalise already gated x_src above)
         # — values identical, the scan is a proven pure projection.

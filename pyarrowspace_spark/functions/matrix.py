@@ -1,11 +1,11 @@
 """Driver-side matrix collection helpers for the small-N fast paths.
 
-Every "collect X and broadcast it" tier in the engine (exact kNN scan,
-driver-BLAS / broadcast-gather Laplacian, TwoNN, IVF training) needs the
-corpus as an (ids, X) numpy pair. Collecting Spark Row objects for that
-is catastrophically slow for wide array columns — each of N rows
-materializes an F-element Python list (~60 s at N=78k, F=384). The
-Arrow path (`toPandas`, enabled in session.py) moves the same data
+Every driver tier that collects X (exact kNN scan, the driver-tier
+feature Laplacian and one source of its spool tier, TwoNN, IVF
+training) needs the corpus as an (ids, X) numpy pair. Collecting Spark
+Row objects for that is catastrophically slow for wide array columns —
+each of N rows materializes an F-element Python list (~60 s at N=78k,
+F=384). The Arrow path (`toPandas`, enabled in session.py) moves the same data
 columnar and lands it as numpy in ~2 s: same contract, 30x less wall.
 
 `positions_of` replaces per-edge Python dict lookups with a vectorized
@@ -66,9 +66,9 @@ def driver_result_capacity(spark) -> int:
     ("Total size of serialized results ... bigger than
     spark.driver.maxResultSize"). Tier choices that plan to collect
     N·F doubles must therefore consult it up front: the N=600k p_bit
-    measurement crashed exactly here, picking the broadcast-gather
-    Laplacian tier (well under its 2M-row ceiling) on a session whose
-    1 GiB default allowed only ~330k rows at F=384."""
+    measurement crashed exactly here, collecting X for the Laplacian
+    (well under that tier's 2M-row ceiling) on a session whose 1 GiB
+    default allowed only ~330k rows at F=384."""
     import sys
 
     raw = str(spark.conf.get("spark.driver.maxResultSize", "1g"))

@@ -240,7 +240,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float,
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
 
-    from .knn import EXACT_PATH_MAX_ROWS, _pairwise_candidates_lsh
+    from .knn import EXACT_PATH_MAX_ROWS, pairwise_candidates_lsh
     from ..functions.matrix import collect_id_matrix
 
     if strategy == "auto":
@@ -248,7 +248,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float,
         strategy = ("exact" if n <= EXACT_PATH_MAX_ROWS
                     else "lsh")
     if strategy == "lsh":
-        cand = _pairwise_candidates_lsh(
+        cand = pairwise_candidates_lsh(
             emb, id_col, vec_col, eps=1.0 - float(threshold),
             n_bits=lsh_bits, n_bands=lsh_bands)
         return (

@@ -34,7 +34,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
 from dataclasses import dataclass, field
 
@@ -45,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import spool
 from ..functions import stats
 from ..functions import matrix as matrix_mod
 from ..functions.matrix import (
@@ -58,7 +58,7 @@ from ..functions.matrix import (
 from ..params import EnergyParams, GraphParams
 from . import knn as knn_ops
 from . import lambda_index as lam_ops
-from .search import _QUERY_BLOCK, _block_topk, _ranked, check_query_ids
+from .search import QUERY_BLOCK, block_topk, ranked, check_query_ids
 
 # Optical-token / split training matrices are collected driver-side;
 # above this row count the collect runs on a deterministic hash-capped
@@ -255,82 +255,6 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
     return kernel
 
 
-def _scatter_parquet_to_spool(files: "list[str]", idc: str, fc: str,
-                              s_ids: np.ndarray, fdim: int,
-                              x_path: str) -> int:
-    """Stream (id, array<double>) parquet files into an fp64 spool at
-    id-sorted positions (the diffusion twin of
-    lambda_index._stream_spool_from_parquet — but the ids here are
-    produced by our own kernel, so a mismatch RAISES instead of
-    falling back). Returns rows written."""
-    import pyarrow.parquet as pq
-
-    X = np.lib.format.open_memmap(
-        x_path, mode="w+", dtype=np.float64, shape=(len(s_ids), fdim))
-    total = 0
-    for f in files:
-        pf = pq.ParquetFile(f)
-        for batch in pf.iter_batches(batch_size=8192, columns=[idc, fc]):
-            bids = (batch.column(batch.schema.get_field_index(idc))
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False))
-            fcol = batch.column(batch.schema.get_field_index(fc))
-            vals = fcol.flatten().to_numpy(zero_copy_only=False)
-            if vals.size != len(bids) * fdim:
-                raise RuntimeError("ragged diffusion step output")
-            pos = np.searchsorted(s_ids, bids)
-            if len(bids) and (pos.max(initial=0) >= len(s_ids)
-                              or not np.array_equal(s_ids[pos], bids)):
-                raise RuntimeError("diffusion step emitted unknown ids")
-            X[pos] = vals.reshape(len(bids), fdim)
-            total += len(bids)
-    X.flush()
-    del X
-    return total
-
-
-def _single_host_master(spark) -> bool:
-    """True on `local*` masters (local-cluster included): the driver
-    and every executor share one filesystem and one page cache, so the
-    spool plan may use the default temp dir and let tasks write the
-    spool mmaps directly. On a multi-host master mmap write coherence
-    over a shared filesystem is not guaranteed, so spools are built by
-    streaming task-written parquet on the driver instead."""
-    return spark.sparkContext.master.startswith("local")
-
-
-def _spool_scratch(spark, op: str) -> "tuple[str, bool]":
-    """The one scratch rule of the spool plans (distributed diffusion
-    and the LSH build): returns (scratch root, task_write).
-
-    On a single-host master the root is $SPARK_GRAFT_SCRATCH_DIR, else
-    the temp dir, and tasks may write spools directly. On a multi-host
-    master the root must be a SPARK_GRAFT_SCRATCH_DIR that every
-    executor sees (`_probe_worker_visible`); otherwise `op` cannot run
-    and a RuntimeError names the variable."""
-    from .lambda_index import _probe_worker_visible
-
-    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    task_write = _single_host_master(spark)
-    if not task_write and not (
-            scratch_env and _probe_worker_visible(spark, scratch_env)):
-        where = (f"SPARK_GRAFT_SCRATCH_DIR={scratch_env!r} is not "
-                 "visible to every executor" if scratch_env else
-                 "SPARK_GRAFT_SCRATCH_DIR is not set")
-        raise RuntimeError(
-            f"{op} needs a scratch directory that the driver and every "
-            "executor can read and write (master "
-            f"{spark.sparkContext.master!r}); {where}. Point "
-            "SPARK_GRAFT_SCRATCH_DIR at a shared filesystem path.")
-    return scratch_env or tempfile.gettempdir(), task_write
-
-
-def _drop_scratch_dir(d: str) -> None:
-    shutil.rmtree(d, ignore_errors=True)
-    if d in matrix_mod._SCRATCH_DIRS:
-        matrix_mod._SCRATCH_DIRS.remove(d)
-
-
 def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                    steps: int, id_col: str, feat_col: str, nf: int,
                    n: int,
@@ -353,17 +277,11 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     filesystem lacks 3·N·F·8 + 64 MiB free; ValueError on duplicate
     ids. Any failure after the spool dir is created removes it."""
     spark = items.sparkSession
-    root, task_write = _spool_scratch(spark,
-                                      "diffuse: the distributed tier")
+    op = "diffuse: the distributed tier"
+    root, task_write = spool.scratch(spark, op)
     # budget: two live spools + one step parquet, all ~N·F·8
-    need = 3 * n * nf * 8 + (64 << 20)
-    free = shutil.disk_usage(root).free
-    if free < need:
-        raise RuntimeError(
-            f"diffuse: the distributed tier needs {need} bytes of free "
-            f"scratch (3·N·F·8 + 64 MiB at N={n}, F={nf}) but only "
-            f"{free} bytes are free in {root!r}; point "
-            "SPARK_GRAFT_SCRATCH_DIR at a larger filesystem")
+    spool.check_free(root, 3 * n * nf * 8 + (64 << 20), op,
+                     f"3·N·F·8 + 64 MiB at N={n}, F={nf}")
     ids_arr = (items.select(id_col).toPandas()[id_col]
                .to_numpy(np.int64))
     if len(ids_arr) != n:
@@ -377,17 +295,16 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         raise ValueError(
             f"diffuse: {id_col} must be unique; {len(np.unique(dup))} "
             f"ids repeat (e.g. {int(dup[0])})")
-    d = tempfile.mkdtemp(prefix="pyarrowspace-diffspool-", dir=root)
-    matrix_mod._SCRATCH_DIRS.append(d)
+    d = spool.make_dir(root, "pyarrowspace-diffspool-")
     try:
         out = _spool_steps(items, edges, eta, steps, id_col, feat_col,
                            nf, s_ids, d, task_write, step_times)
     except BaseException:
-        _drop_scratch_dir(d)
+        spool.drop_dir(d)
         raise
     if out is None:
         # no edges: diffusion is the identity
-        _drop_scratch_dir(d)
+        spool.drop_dir(d)
         return items.select(id_col, feat_col)
     return out
 
@@ -404,21 +321,18 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
     next-step readers share one page cache, so the whole seed/step
     materialization is one parallel job with ZERO serial driver I/O.
     Otherwise (stream writes) every seed/step emits parquet, which the
-    driver streams into the next spool; the final step's parquet is
-    the returned frame."""
-    from .lambda_index import _spool_modes
-
+    driver streams into the next spool (`spool.from_parquet`); a step
+    emits only the destination rows, so those spools hold exactly the
+    destination ids, in their own id index. The final step's parquet
+    is the returned frame."""
     spark = items.sparkSession
     n = len(s_ids)
-    dmode, fmode = _spool_modes()
+    dmode, fmode = spool.modes()
     os.chmod(d, dmode)
     s_path = os.path.join(d, "sids.npy")
     np.save(s_path, s_ids)
     os.chmod(s_path, fmode)
     schema = f"{id_col} long, {feat_col} array<double>"
-
-    def _part_files(pdir: str) -> "list[str]":
-        return sorted(glob.glob(os.path.join(pdir, "part-*.parquet")))
 
     def _prealloc(path: str) -> None:
         sp = np.lib.format.open_memmap(
@@ -437,17 +351,22 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
         wrote = _count_of(items.select(id_col, feat_col).mapInPandas(
             _make_spool_write_kernel(cur_path, s_path, id_col, feat_col),
             "cnt long"))
+        if wrote != n:
+            raise RuntimeError(
+                f"diffusion seed spool wrote {wrote} of {n} rows")
     else:
         seed_dir = os.path.join(d, "seed")
         items.select(id_col, feat_col).write.mode("overwrite").parquet(
             seed_dir)
-        wrote = _scatter_parquet_to_spool(
-            _part_files(seed_dir), id_col, feat_col, s_ids, nf, cur_path)
+        got = spool.from_parquet(spool.part_files(seed_dir), id_col,
+                                 feat_col, n, nf, cur_path)
         shutil.rmtree(seed_dir, ignore_errors=True)
-    if wrote != n:
-        raise RuntimeError(
-            f"diffusion seed spool wrote {wrote} of {n} rows")
+        if got is None or not np.array_equal(got, s_ids):
+            raise RuntimeError(
+                f"diffusion seed spool does not hold the {n} collected "
+                "ids")
     os.chmod(cur_path, fmode)
+    cur_sids = s_path
 
     # loop-invariant: symmetrized edges hash-partitioned by dst (every
     # incoming edge of a dst in one partition) in deterministic
@@ -511,17 +430,22 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                 # by the driver
                 step_dir = os.path.join(d, f"step{t + 1}")
                 kernel = _make_spool_step_kernel(
-                    cur_path, s_path, eta, id_col, feat_col)
+                    cur_path, cur_sids, eta, id_col, feat_col)
                 (both.mapInPandas(kernel, schema)
                  .write.mode("overwrite").parquet(step_dir))
                 if t < int(steps) - 1:
-                    wrote = _scatter_parquet_to_spool(
-                        _part_files(step_dir), id_col, feat_col, s_ids,
-                        nf, nxt_path)
-                    if wrote != n_dst:
+                    got = spool.from_parquet(
+                        spool.part_files(step_dir), id_col, feat_col,
+                        n_dst, nf, nxt_path)
+                    if got is None or not np.array_equal(
+                            got, s_ids[covered]):
                         raise RuntimeError(
-                            f"diffusion step {t + 1} spool wrote "
-                            f"{wrote} of {n_dst} rows")
+                            f"diffusion step {t + 1} spool does not hold "
+                            f"the {n_dst} destination ids")
+                    if cur_sids == s_path:
+                        cur_sids = os.path.join(d, "dst_sids.npy")
+                        np.save(cur_sids, got)
+                        os.chmod(cur_sids, fmode)
                     os.chmod(nxt_path, fmode)
                     os.remove(cur_path)
                     shutil.rmtree(step_dir, ignore_errors=True)
@@ -544,14 +468,12 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                            id_col, feat_col),
                        schema))
         else:
-            # the final step's input spool and the id index are dead
-            # now — only the final step parquet (the returned scan)
-            # must outlive this call; reclaimed with the scratch dir.
-            for p in (cur_path, s_path):
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
+            # the final step's input spool and the id indexes are
+            # dead now — only the final step parquet (the returned
+            # scan) must outlive this call; reclaimed with the scratch
+            # dir.
+            for p in glob.glob(os.path.join(d, "*.npy")):
+                os.remove(p)
             out = spark.read.schema(schema).parquet(step_dir)
         if len(iso_pos):
             out = out.unionAll(matrix_to_frame(
@@ -1301,7 +1223,7 @@ def search_energy(
     broadcasts the query λ/e and the queries×centroids shortlist
     mask, scores every (query, member) pair the mask admits, and emits
     per query only the rows that can still reach its top k; the
-    `search._ranked` window picks k. The one shuffle is on query_id;
+    `search.ranked` window picks k. The one shuffle is on query_id;
     there is no join.
 
     Scores equal the SQL expression bit for bit (same operation
@@ -1319,7 +1241,7 @@ def search_energy(
             f"{len(query_ids)} query_ids for {q.shape[0]} queries")
     check_query_ids(list(query_ids))
     qids = np.array([int(i) for i in query_ids], dtype=np.int64)
-    q_e, _, q_lam = lam_ops._lambda_kernel(q, lf, index.tau_synth)
+    q_e, _, q_lam = lam_ops.lambda_kernel(q, lf, index.tau_synth)
     cand_m, k = max(0, int(index.energy_params.candidate_m)), int(k)
     wl, wd = float(w_lambda), float(w_dirichlet)
 
@@ -1352,13 +1274,13 @@ def search_energy(
             lam = pdf["lambda"].to_numpy(np.float64)
             e = pdf["e_raw"].to_numpy(np.float64)
             ids = pdf["item_id"].to_numpy()
-            for b0 in range(0, m, _QUERY_BLOCK):
-                blk = slice(b0, min(b0 + _QUERY_BLOCK, m))
+            for b0 in range(0, m, QUERY_BLOCK):
+                blk = slice(b0, min(b0 + QUERY_BLOCK, m))
                 valid = qv["mask"][blk][:, pos]
                 S = _energy_score(wl, wd, qv["lam"][blk], qv["e"][blk],
                                   lam, e)
                 oq, orow = np.nonzero(
-                    _block_topk(S, np.zeros_like(valid), valid, k))
+                    block_topk(S, np.zeros_like(valid), valid, k))
                 yield pd.DataFrame({
                     "query_id": qv["qids"][blk][oq],
                     "item_id": ids[orow],
@@ -1369,5 +1291,5 @@ def search_energy(
     members = (index.items
                .filter(F.col("centroid_id").isin(shortlisted.tolist()))
                .select("item_id", "centroid_id", "lambda", "e_raw"))
-    return _ranked(members.mapInPandas(kernel, out_schema), k, "item_id",
-                   "query_id")
+    return ranked(members.mapInPandas(kernel, out_schema), k, "item_id",
+                  "query_id")

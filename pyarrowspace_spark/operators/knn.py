@@ -32,11 +32,9 @@ Two physical strategies, one logical contract:
 
 from __future__ import annotations
 
-import glob
 import math
 import os
 import shutil
-import tempfile
 import time
 import warnings
 
@@ -44,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import spool
 from ..params import GraphParams
 from ..functions import vector as V
 
@@ -113,59 +112,6 @@ def _normalize_f32(X) -> np.ndarray:
     return X32 / norms[:, None]
 
 
-def _stream_u_spool_from_parquet(x_source: dict, n: int, fdim: int,
-                                 u_path: str):
-    """Stream parquet files into an id-sorted float32 UNIT-vector
-    spool (the LSH twin of lambda_index._stream_spool_from_parquet —
-    same chunked scatter, plus the per-batch `_normalize_f32`).
-    Returns sorted ids on success, None when the files do not hold
-    exactly `n` rows of `fdim` values. Raises ValueError on duplicate
-    ids: a by-id scatter would hand every copy one row's vector."""
-    import pyarrow.parquet as pq
-
-    idc, fc = x_source["id_col"], x_source["feat_col"]
-    try:
-        ids_arr = np.concatenate([
-            pq.read_table(f, columns=[idc])[idc]
-            .to_numpy(zero_copy_only=False)
-            for f in x_source["files"]]).astype(np.int64, copy=False)
-    except Exception:
-        return None
-    if len(ids_arr) != n:
-        return None
-    s_ids = np.sort(ids_arr)
-    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
-    if dup.size:
-        raise ValueError(
-            f"knn_edges: item ids must be unique; "
-            f"{len(np.unique(dup))} ids repeat (e.g. {int(dup[0])})")
-    try:
-        U = np.lib.format.open_memmap(
-            u_path, mode="w+", dtype=np.float32, shape=(n, fdim))
-        total = 0
-        for f in x_source["files"]:
-            pf = pq.ParquetFile(f)
-            for batch in pf.iter_batches(batch_size=16384,
-                                         columns=[idc, fc]):
-                bids = (batch.column(batch.schema.get_field_index(idc))
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64, copy=False))
-                fcol = batch.column(batch.schema.get_field_index(fc))
-                vals = fcol.flatten().to_numpy(zero_copy_only=False)
-                if vals.size != len(bids) * fdim:
-                    return None
-                pos = np.searchsorted(s_ids, bids)
-                U[pos] = _normalize_f32(vals.reshape(len(bids), fdim))
-                total += len(bids)
-        if total != n:
-            return None
-        U.flush()
-        del U
-        return s_ids
-    except Exception:
-        return None
-
-
 def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
                    n: int, fdim: int, x_source: dict | None,
                    u_path: str, s_path: str) -> None:
@@ -176,44 +122,26 @@ def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
     input is the corpus parquet when `x_source` proves a trivial scan,
     else a parquet copy of `items` written into the dir by the tasks
     and deleted once streamed — nothing N-sized is collected on the
-    driver."""
-    from .lambda_index import _spool_modes
-
+    driver. Each batch is normalized by `_normalize_f32`, so U is
+    bit-identical to the hash pass's."""
     d = os.path.dirname(u_path)
-    s_ids = (_stream_u_spool_from_parquet(x_source, n, fdim, u_path)
+    s_ids = (spool.from_parquet(x_source["files"], x_source["id_col"],
+                                x_source["feat_col"], n, fdim, u_path,
+                                np.float32, _normalize_f32)
              if x_source else None)
     if s_ids is None:
         copy_dir = os.path.join(d, "items")
         items.select(id_col, feat_col).write.parquet(copy_dir)
-        s_ids = _stream_u_spool_from_parquet(
-            {"files": sorted(glob.glob(os.path.join(copy_dir,
-                                                    "part-*.parquet"))),
-             "id_col": id_col, "feat_col": feat_col}, n, fdim, u_path)
+        s_ids = spool.from_parquet(spool.part_files(copy_dir), id_col,
+                                   feat_col, n, fdim, u_path, np.float32,
+                                   _normalize_f32)
         shutil.rmtree(copy_dir, ignore_errors=True)
         if s_ids is None:
             raise RuntimeError(
                 f"knn_edges: the items frame did not re-read as {n} rows "
                 f"of {fdim} features — it is not deterministic")
     np.save(s_path, s_ids)
-    dmode, fmode = _spool_modes()
-    os.chmod(d, dmode)
-    for fn in os.listdir(d):
-        os.chmod(os.path.join(d, fn), fmode)
-
-
-def _scratch_probe_dir(spark) -> str:
-    """Filesystem the grouped build's disk budget must watch: where
-    shuffle/spill actually lands — $SPARK_GRAFT_SCRATCH_DIR, else the
-    session's spark.local.dir (first entry), else the tempdir."""
-    p = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    if not p:
-        try:
-            p = spark.conf.get("spark.local.dir")
-        except Exception:
-            p = None
-        p = (p or os.environ.get("SPARK_LOCAL_DIRS")
-             or tempfile.gettempdir()).split(",")[0].strip()
-    return p if os.path.isdir(p) else "/"
+    spool.seal(d)
 
 
 def _dir_bytes(path: str) -> int:
@@ -509,7 +437,7 @@ def lsh_group_summary() -> dict | None:
     }
 
 
-def _pairwise_candidates_lsh(
+def pairwise_candidates_lsh(
     items: DataFrame,
     id_col: str,
     feat_col: str,
@@ -569,9 +497,7 @@ def _pairwise_candidates_lsh(
     from pyspark.sql.types import (DoubleType, IntegerType, LongType,
                                    StructField, StructType)
 
-    from ..functions import matrix as matrix_mod
     from ..functions.matrix import parse_size_bytes, with_scan_parallelism
-    from .energy import _drop_scratch_dir, _spool_scratch
 
     spark = items.sparkSession
     pair_schema = StructType([
@@ -593,7 +519,7 @@ def _pairwise_candidates_lsh(
     k_i = int(k) if k is not None else 0
     b_max = int(bucket_max if bucket_max is not None else LSH_BUCKET_MAX)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    scratch_root, _ = _spool_scratch(spark, "knn_edges: the LSH build")
+    scratch_root, _ = spool.scratch(spark, "knn_edges: the LSH build")
 
     # Scratch-disk budget. Each band's (band, key) exchange carries N
     # narrow rows and its sort spills up to LSH_SPILL_FACTOR times that.
@@ -610,7 +536,7 @@ def _pairwise_candidates_lsh(
     # the free-disk floor: a clear arithmetic error beats a watchdog
     # abort 90 minutes in (the r10 2M failure).
     gsize = _band_group_size(n_items, nb)
-    probe = _scratch_probe_dir(spark)
+    probe = spool.spill_dir(spark)
     band_bytes = n_items * LSH_ROW_BYTES
     # Spool projection UNIT: per GROUP when the per-src k-cap runs
     # (the cap bounds a group's spool at N·k rows REGARDLESS of how
@@ -690,8 +616,7 @@ def _pairwise_candidates_lsh(
     # ≥ cores splits and this is a no-op.
     hash_src = with_scan_parallelism(items.select(id_col, feat_col), n_parts)
 
-    u_dir = tempfile.mkdtemp(prefix="pyarrowspace-lshu-", dir=scratch_root)
-    matrix_mod._SCRATCH_DIRS.append(u_dir)
+    u_dir = spool.make_dir(scratch_root, "pyarrowspace-lshu-")
     u_paths = (os.path.join(u_dir, "u.npy"), os.path.join(u_dir, "sids.npy"))
 
     def bucket_knn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -888,9 +813,7 @@ def _pairwise_candidates_lsh(
                     .agg(F.min("dist").alias("dist"))
                     .withColumn("_rn", F.row_number().over(wg))
                     .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
-            d = tempfile.mkdtemp(prefix="pyarrowspace-lshpairs-",
-                                 dir=scratch_root)
-            matrix_mod._SCRATCH_DIRS.append(d)
+            d = spool.make_dir(scratch_root, "pyarrowspace-lshpairs-")
             pair_dirs.append(d)
             pairs_g.write.mode("overwrite").parquet(d)
             parts.append(spark.read.parquet(d))
@@ -917,13 +840,13 @@ def _pairwise_candidates_lsh(
         if hashed is not None:
             hashed.unpersist()
         for d in [u_dir, *pair_dirs]:
-            _drop_scratch_dir(d)
+            spool.drop_dir(d)
         raise
     # every group's pairs are spooled parquet now — the hash cache and
     # the U spool are dead; release both deterministically instead of
     # at session exit
     hashed.unpersist()
-    _drop_scratch_dir(u_dir)
+    spool.drop_dir(u_dir)
     bucket_pairs = parts[0]
     for p in parts[1:]:
         bucket_pairs = bucket_pairs.unionAll(p)
@@ -976,7 +899,7 @@ def knn_edges(
             items, id_col, feat_col, params.eps, params.k
         )
     elif strategy == "lsh":
-        cand = _pairwise_candidates_lsh(
+        cand = pairwise_candidates_lsh(
             items, id_col, feat_col, params.eps, k=params.k,
             n_bits=lsh_bits, n_bands=lsh_bands, x_source=x_source,
         )

@@ -34,11 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import vector as V
-from .lambda_index import _lambda_kernel, lambda_for_vectors
+from .lambda_index import lambda_kernel, lambda_for_vectors
 
 # Queries scored together against one Arrow batch of the index: bounds
 # a batch's working set whatever the number of queries.
-_QUERY_BLOCK = 64
+QUERY_BLOCK = 64
 
 
 def _fold_dot(terms):
@@ -89,12 +89,12 @@ def _collect_queries(queries: DataFrame, lf: np.ndarray, tau: float,
     if any(r[1] is None or len(r[1]) != n_f for r in rows):
         raise ValueError(f"every query needs {n_f} features (the index's)")
     Q = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, n_f)
-    _, _, q_lam = _lambda_kernel(Q, lf, float(tau))
+    _, _, q_lam = lambda_kernel(Q, lf, float(tau))
     return queries.schema[query_id_col].dataType, np.asarray(qids), Q, q_lam
 
 
-def _ranked(scored: DataFrame, k: int, id_col: str,
-            query_id_col: str) -> DataFrame:
+def ranked(scored: DataFrame, k: int, id_col: str,
+           query_id_col: str) -> DataFrame:
     """Per-query top k of (query, id, score) rows, rank 1-based on
     (score desc, id asc)."""
     w = Window.partitionBy(query_id_col).orderBy(
@@ -103,7 +103,7 @@ def _ranked(scored: DataFrame, k: int, id_col: str,
             .filter(F.col("rank") <= F.lit(int(k))))
 
 
-def _block_topk(S, null, valid, k: int) -> np.ndarray:
+def block_topk(S, null, valid, k: int) -> np.ndarray:
     """Mask of one block's (query, row) cells that can still reach their
     query's global top k: valid cells scoring at least the block's k-th
     score, ties included. NaN sorts above every number and NULL below,
@@ -126,7 +126,7 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
 
     `query_side` is (query-id type, ids, Q, λ_q). Item λ is blended
     from the build's (e_raw, g) at the search τ when present, else
-    recomputed per batch by `_lambda_kernel`. Given `q_buckets`, an
+    recomputed per batch by `lambda_kernel`. Given `q_buckets`, an
     item is a candidate of a query when, in any table, bucket ^ qbucket
     is 0, or a power of two under `probe_hamming1`: the Hamming-1 probe
     set, with no duplicates, and only candidates are scored.
@@ -163,11 +163,11 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
                 xl = t * (e / (e + t)) + (1.0 - t) * pdf["g"].to_numpy(
                     np.float64)
             else:
-                xl = _lambda_kernel(X, qv["lf"], t)[2]
+                xl = lambda_kernel(X, qv["lf"], t)[2]
             ids = pdf[id_col].to_numpy()
             xb = pdf[bcols].to_numpy(np.int64)
-            for b0 in range(0, m, _QUERY_BLOCK):
-                blk = slice(b0, min(b0 + _QUERY_BLOCK, m))
+            for b0 in range(0, m, QUERY_BLOCK):
+                blk = slice(b0, min(b0 + QUERY_BLOCK, m))
                 shape = (blk.stop - b0, len(X))
                 if q_buckets is None:
                     valid = np.ones(shape, dtype=bool)
@@ -188,7 +188,7 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
                 S[qi, ri] = t * cos + (1.0 - t) * (
                     1.0 / (1.0 + np.abs(qv["lam"][blk][qi] - xl[ri])))
                 null[qi, ri] = den == 0
-                oq, orow = np.nonzero(_block_topk(S, null, valid, k))
+                oq, orow = np.nonzero(block_topk(S, null, valid, k))
                 yield pd.DataFrame({
                     query_id_col: qv["qids"][blk][oq],
                     id_col: ids[orow],
@@ -197,8 +197,8 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
                         pa.array(S[oq, orow], mask=null[oq, orow]))})
 
     cols = [id_col, feat_col] + (["e_raw", "g"] if has_eg else []) + bcols
-    return _ranked(index.select(*cols).mapInPandas(kernel, out_schema), k,
-                   id_col, query_id_col)
+    return ranked(index.select(*cols).mapInPandas(kernel, out_schema), k,
+                  id_col, query_id_col)
 
 
 def search(
@@ -312,4 +312,4 @@ def brute_force_cosine_topk(
         id_col,
         V.cosine_similarity("q_features", feat_col).alias("score"),
     )
-    return _ranked(scored, k, id_col, query_id_col)
+    return ranked(scored, k, id_col, query_id_col)

@@ -1,0 +1,294 @@
+"""Spools: id-sorted matrices on scratch that every executor reads.
+
+The distributed tiers of the feature Laplacian, of diffusion and of the
+LSH build shuffle keys, not vectors: each writes its vectors ONCE to an
+id-sorted `.npy` file on scratch every executor can read, and its tasks
+gather rows from that file through the page cache — the index-join form
+of a vertex-relation join (Pregelix). This module holds what those
+plans share:
+
+- the scratch rule (`scratch`, `single_host_master`,
+  `probe_worker_visible`, `spill_dir`) and the file modes (`modes`);
+- an up-front free-disk check (`check_free`);
+- the spool-dir lifecycle (`make_dir`, `seal`, `drop_dir`), registered
+  in `matrix._SCRATCH_DIRS` so a dir no error path reached is still
+  removed at interpreter exit;
+- `parquet_scan_source`, the proof that a frame is a trivial parquet
+  scan whose files can be streamed instead of collected;
+- ONE parquet → id-sorted spool producer (`from_parquet`).
+"""
+
+from __future__ import annotations
+
+import glob
+import os
+import re
+import shutil
+import tempfile
+
+import numpy as np
+from pyspark.sql import DataFrame
+
+from .functions import matrix as matrix_mod
+
+
+def modes() -> tuple[int, int]:
+    """(dir mode, file mode) of a spool. A spool holds corpus vectors,
+    so it is group-readable only; deployments whose executors run
+    under a different primary group opt into other-read with
+    SPARK_GRAFT_SCRATCH_WORLD_READABLE=1."""
+    if os.environ.get("SPARK_GRAFT_SCRATCH_WORLD_READABLE", "0") == "1":
+        return 0o755, 0o644
+    return 0o750, 0o640
+
+
+def single_host_master(spark) -> bool:
+    """True on `local*` masters (local-cluster included): the driver
+    and every executor share one filesystem and one page cache, so a
+    spool may live in the default temp dir and tasks may write spool
+    mmaps directly. On a multi-host master mmap write coherence over a
+    shared filesystem is not guaranteed, so spools are built by
+    streaming task-written parquet on the driver instead."""
+    return spark.sparkContext.master.startswith("local")
+
+
+def probe_worker_visible(spark, scratch_dir: str) -> bool:
+    """True iff executors can read files the driver writes under
+    `scratch_dir`: a marker file is written and one task per
+    defaultParallelism slot must read it back (a single task could land
+    on the one executor that mounts the path). Best effort — task
+    placement is the scheduler's. Any failure (unwritable dir, job
+    error, any False) means 'not visible'."""
+    import uuid
+
+    _, fmode = modes()
+    token = uuid.uuid4().hex
+    try:
+        fd, marker = tempfile.mkstemp(prefix="pyarrowspace-visprobe-",
+                                      suffix=".txt", dir=scratch_dir)
+        with os.fdopen(fd, "w") as fh:
+            fh.write(token)
+        os.chmod(marker, fmode)
+    except OSError:
+        return False
+    try:
+        def _check(it):
+            try:
+                with open(marker) as fh:
+                    ok = fh.read() == token
+            except OSError:
+                ok = False
+            for _ in it:
+                pass
+            yield ok
+
+        sc = spark.sparkContext
+        n_slots = max(2, int(sc.defaultParallelism))
+        got = sc.parallelize(range(n_slots), n_slots).mapPartitions(
+            _check).collect()
+        return bool(got) and all(got)
+    except Exception:
+        return False
+    finally:
+        try:
+            os.remove(marker)
+        except OSError:
+            pass
+
+
+def scratch(spark, op: str) -> "tuple[str, bool]":
+    """The one scratch rule of the spool plans: returns (scratch root,
+    task_write).
+
+    On a single-host master the root is $SPARK_GRAFT_SCRATCH_DIR, else
+    the temp dir, and tasks may write spools directly. On a multi-host
+    master the root must be a SPARK_GRAFT_SCRATCH_DIR that every
+    executor sees (`probe_worker_visible`); otherwise `op` cannot run
+    and a RuntimeError names the variable."""
+    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
+    task_write = single_host_master(spark)
+    if not task_write and not (
+            scratch_env and probe_worker_visible(spark, scratch_env)):
+        where = (f"SPARK_GRAFT_SCRATCH_DIR={scratch_env!r} is not "
+                 "visible to every executor" if scratch_env else
+                 "SPARK_GRAFT_SCRATCH_DIR is not set")
+        raise RuntimeError(
+            f"{op} needs a scratch directory that the driver and every "
+            "executor can read and write (master "
+            f"{spark.sparkContext.master!r}); {where}. Point "
+            "SPARK_GRAFT_SCRATCH_DIR at a shared filesystem path.")
+    return scratch_env or tempfile.gettempdir(), task_write
+
+
+def spill_dir(spark) -> str:
+    """Filesystem where shuffle and spill actually land, for budgets
+    that must watch it: $SPARK_GRAFT_SCRATCH_DIR, else the session's
+    spark.local.dir (first entry), else the temp dir."""
+    p = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
+    if not p:
+        try:
+            p = spark.conf.get("spark.local.dir")
+        except Exception:
+            p = None
+        p = (p or os.environ.get("SPARK_LOCAL_DIRS")
+             or tempfile.gettempdir()).split(",")[0].strip()
+    return p if os.path.isdir(p) else "/"
+
+
+def check_free(root: str, need: int, op: str, what: str) -> None:
+    """Raise RuntimeError, before any spool byte is written, when
+    `root` has fewer than `need` bytes free; the message states both
+    byte counts, the directory and `what` the need prices."""
+    free = shutil.disk_usage(root).free
+    if free < need:
+        raise RuntimeError(
+            f"{op} needs {need} bytes of free scratch ({what}) but only "
+            f"{free} bytes are free in {root!r}; point "
+            "SPARK_GRAFT_SCRATCH_DIR at a larger filesystem")
+
+
+def make_dir(root: str, prefix: str) -> str:
+    """A fresh spool dir under `root`, registered for exit cleanup."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=root)
+    matrix_mod._SCRATCH_DIRS.append(d)
+    return d
+
+
+def seal(d: str) -> None:
+    """Apply `modes` to spool dir `d` and every file in it:
+    `mkdtemp` creates mode 0700, which executors running as another
+    user cannot read."""
+    dmode, fmode = modes()
+    os.chmod(d, dmode)
+    for fn in os.listdir(d):
+        os.chmod(os.path.join(d, fn), fmode)
+
+
+def drop_dir(d: str) -> None:
+    """Remove spool dir `d` and its registration."""
+    shutil.rmtree(d, ignore_errors=True)
+    if d in matrix_mod._SCRATCH_DIRS:
+        matrix_mod._SCRATCH_DIRS.remove(d)
+
+
+def part_files(d: str) -> "list[str]":
+    """The parquet part files a Spark write left in `d`, in name order."""
+    return sorted(glob.glob(os.path.join(d, "part-*.parquet")))
+
+
+_PLAN_ENTRY_RX = re.compile(
+    r"^(\w+)#\d+\w*(?:\s+AS\s+(\w+)#\d+\w*)?$")
+
+
+def parquet_scan_source(df: DataFrame, id_col: str,
+                        feat_col: str) -> dict | None:
+    """When `df` is a TRIVIAL local-parquet scan — pure column
+    projection (plain attribute references / renames only, no
+    expressions, filters, joins, or samples) over one parquet relation
+    — return {"files": [...], "id_col": <source name>,
+    "feat_col": <source name>}; else None.
+
+    A spool built from these files by `from_parquet` skips the Spark
+    collect's JVM serialization pass over all N rows and its ~3×
+    driver-memory transient. Conservative by construction: any plan
+    node or projection entry the whitelist can't PROVE is a plain
+    rename returns None and the caller takes another source."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        files = [re.sub(r"^file:/*", "/", f) if f.startswith("file:")
+                 else f for f in df.inputFiles()]
+    except Exception:
+        return None
+    files = [f for f in files if f]
+    if not files or not all(os.path.isfile(f) for f in files):
+        return None
+    src_of: dict[str, str] = {}
+    n_projects = n_relations = 0
+    for raw in plan.splitlines():
+        line = raw.strip().lstrip(":+- ").strip()
+        if not line:
+            continue
+        if line.startswith("Project ["):
+            n_projects += 1
+            body = line[len("Project ["):]
+            if not body.endswith("]"):
+                return None
+            for entry in body[:-1].split(", "):
+                m = _PLAN_ENTRY_RX.match(entry.strip())
+                if m is None:
+                    return None  # any expression/paren → not trivial
+                src, out = m.group(1), m.group(2) or m.group(1)
+                src_of[out] = src
+        elif line.startswith("Relation"):
+            n_relations += 1
+            if " parquet" not in line:
+                return None
+        else:
+            return None
+    # exactly one relation, at most ONE Project: with a single Project
+    # the out→src mapping is direct (rename chains across stacked
+    # Projects would need composition — Catalyst collapses adjacent
+    # Projects, so requiring one loses nothing and risks nothing)
+    if n_relations != 1 or n_projects > 1:
+        return None
+    return {"files": files, "id_col": src_of.get(id_col, id_col),
+            "feat_col": src_of.get(feat_col, feat_col)}
+
+
+def from_parquet(files: "list[str]", id_col: str, feat_col: str, n: int,
+                 fdim: int, path: str, dtype=np.float64,
+                 transform=None) -> "np.ndarray | None":
+    """Stream (id, array) parquet `files` into the spool `path`, an
+    n×fdim `dtype` .npy in id-SORTED row order, one record batch at a
+    time: driver memory holds one batch, never the matrix. `transform`
+    maps each batch's n_b×fdim float64 rows before the scatter.
+
+    Returns the sorted ids, or None when the files do not hold `n` rows
+    of `fdim` values (or cannot be read as parquet). Raises ValueError
+    on duplicate ids: a by-id scatter would hand every copy one row.
+
+    Sorted storage is load-bearing for the readers: a reader whose
+    keys arrive sorted walks the mmap monotonically instead of
+    random-paging it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        ids = np.concatenate([
+            pq.read_table(f, columns=[id_col])[id_col]
+            .to_numpy(zero_copy_only=False)
+            for f in files]).astype(np.int64, copy=False)
+    except (OSError, KeyError, ValueError, pa.ArrowException):
+        return None
+    if len(ids) != n:
+        return None
+    s_ids = np.sort(ids)
+    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
+    if dup.size:
+        raise ValueError(
+            f"item ids must be unique; {len(np.unique(dup))} ids repeat "
+            f"(e.g. {int(dup[0])})")
+    try:
+        X = np.lib.format.open_memmap(path, mode="w+", dtype=dtype,
+                                      shape=(n, fdim))
+        total = 0
+        for f in files:
+            for batch in pq.ParquetFile(f).iter_batches(
+                    batch_size=16384, columns=[id_col, feat_col]):
+                bids = (batch.column(id_col).to_numpy(zero_copy_only=False)
+                        .astype(np.int64, copy=False))
+                vals = (batch.column(feat_col).flatten()
+                        .to_numpy(zero_copy_only=False))
+                if vals.size != len(bids) * fdim:
+                    return None  # ragged vectors
+                rows = vals.reshape(len(bids), fdim)
+                X[np.searchsorted(s_ids, bids)] = (
+                    transform(rows) if transform is not None else rows)
+                total += len(bids)
+        if total != n:
+            return None
+        X.flush()
+        del X
+        return s_ids
+    except (OSError, KeyError, pa.ArrowException):
+        return None

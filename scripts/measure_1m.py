@@ -608,10 +608,6 @@ def main() -> None:
                     edges=idx.edges)
                 idx_full.items.count()
                 out["lambda_rebuild_sec"] = round(time.time() - t0, 1)
-                from pyarrowspace_spark.operators import (
-                    lambda_index as lam_mod)
-
-                out["lf_gather_spool"] = lam_mod._LAST_GATHER_SPOOL[0]
                 spark.sparkContext._jvm.System.gc()
                 if not _ABORT.is_set():
                     _search_and_energy_phases(spark, big, idx_full, n,
@@ -625,9 +621,6 @@ def main() -> None:
         idx.items.count(), idx.edges.count()
         out["build_sec"] = round(time.time() - t0, 1)
         out["build_items_per_sec"] = round(n / (time.time() - t0), 1)
-        from pyarrowspace_spark.operators import lambda_index as lam_mod
-
-        out["lf_gather_spool"] = lam_mod._LAST_GATHER_SPOOL[0]
         if save_edges:
             t0 = time.time()
             idx.edges.write.mode("overwrite").parquet(save_edges)

@@ -175,7 +175,7 @@ def test_extend_energy_frozen_contract(energy_index, spark):
         F.col("item_id") >= 10_000).collect()}
     assert set(newm) == {10_003, 10_007, 10_011}
     q = np.array([newm[i]["features"] for i in sorted(newm)])
-    e_exp, _, lam_exp = lam_ops._lambda_kernel(
+    e_exp, _, lam_exp = lam_ops.lambda_kernel(
         q, energy_index.feature_laplacian, energy_index.tau_synth)
     for j, i in enumerate(sorted(newm)):
         assert newm[i]["centroid_id"] in c0
@@ -302,7 +302,7 @@ def _replay(index, Q, k, qids, wl=1.0, wd=0.5):
     cents = index.centroids.select("centroid_id", "lambda_c", "e_c").collect()
     items = index.items.select(
         "item_id", "centroid_id", "lambda", "e_raw").collect()
-    q_e, _, q_lam = lam_ops._lambda_kernel(
+    q_e, _, q_lam = lam_ops.lambda_kernel(
         np.atleast_2d(Q), index.feature_laplacian, index.tau_synth)
     out = set()
     for qid, ql, qe in zip(qids, q_lam.tolist(), q_e.tolist()):

@@ -1,17 +1,26 @@
-"""Driver-tier feature Laplacian L_F = Xᵀ(D−W)X and the neighbour
-combine it shares with driver-tier diffusion (`matrix.segment_sum`):
-the dense-numpy pin, the O(N·F) memory contracts of L_F and of the
-X collect, the duplicate-id contract, and driver diffusion pinned to
-its per-destination matvec loop bit for bit."""
+"""Feature Laplacian L_F = Xᵀ(D−W)X on both tiers, and the neighbour
+combine the driver tier shares with driver-tier diffusion
+(`matrix.segment_sum`): the dense-numpy pin, the O(N·F) memory
+contracts of L_F and of the X collect, the duplicate-id contract on
+both tiers, driver diffusion pinned to its per-destination matvec loop
+bit for bit, the spool tier pinned to the driver tier, and the spool
+tier's contracts (scratch rule, disk budget, cleanup) and sources
+(`spool.parquet_scan_source`, `spool.from_parquet`, `spool.modes`)."""
 
+import os
+import shutil
 import tracemalloc
+from collections import namedtuple
 
 import numpy as np
 import pytest
 
-from pyarrowspace_spark import ArrowSpaceBuilder
+from pyspark.sql import functions as F
+
+from pyarrowspace_spark import ArrowSpaceBuilder, spool
 from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
+from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.operators import lambda_index as L
 from pyarrowspace_spark.params import GraphParams
 from pyarrowspace_spark.sources.loaders import items_from_embeddings
@@ -218,3 +227,224 @@ def test_segment_sum_slices_long_segments():
     np.testing.assert_allclose(out[0], w @ X[src], rtol=1e-14)
     assert not out[1:].any()
     assert seg.deg[0] == pytest.approx(w.sum(), rel=1e-14)
+
+
+# ---- spool tier -------------------------------------------------------
+
+
+def _write_corpus(spark, tmp_path, n=300, f=8, seed=3, ids=None):
+    rng = np.random.default_rng(seed)
+    X = rng.standard_normal((n, f)) * 4
+    ids = list(range(n)) if ids is None else ids
+    rows = [(int(i), [float(v) for v in X[k]]) for k, i in enumerate(ids)]
+    p = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(
+        rows, "item_id long, features array<double>").write.parquet(p)
+    return p, X
+
+
+def _lfx_dirs(path) -> list:
+    return [p for p in os.listdir(path) if p.startswith("pyarrowspace-lfx-")]
+
+
+def test_spool_tier_exact_vs_driver_tier(spark, test0_items_df,
+                                         monkeypatch):
+    """Pin: the spool tier ships X in exact fp64 and accumulates its
+    partials in fp64, so L_F equals the driver tier's at 1e-12."""
+    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
+    edges = K.knn_edges(test0_items_df, gp, strategy="exact")
+    lf_exact = L.feature_laplacian(test0_items_df, edges, 24)
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force spool tier
+    lf64 = L.feature_laplacian(test0_items_df, edges, 24)
+    scale = max(float(np.abs(lf_exact).max()), 1e-30)
+    assert float(np.abs(lf64 - lf_exact).max()) / scale < 1e-12
+
+
+def test_parquet_scan_source_whitelist(spark, tmp_path):
+    """Trivial scans and pure renames resolve to source files+names;
+    any plan with compute (transform, filter, cache) returns None —
+    the fast path must never stream values the plan would change."""
+    p, _ = _write_corpus(spark, tmp_path)
+    items = spark.read.parquet(p).select("item_id", "features")
+    src = spool.parquet_scan_source(items, "item_id", "features")
+    assert src is not None
+    assert src["id_col"] == "item_id" and src["feat_col"] == "features"
+    assert all(os.path.isfile(f) for f in src["files"])
+
+    ren = spark.read.parquet(p).select(
+        F.col("item_id").alias("id"), F.col("features").alias("emb"))
+    r = spool.parquet_scan_source(ren, "id", "emb")
+    assert r is not None
+    assert r["id_col"] == "item_id" and r["feat_col"] == "features"
+
+    assert spool.parquet_scan_source(
+        items.filter(F.col("item_id") > 3), "item_id", "features") is None
+    assert spool.parquet_scan_source(
+        items.withColumn("features",
+                         F.transform("features", lambda x: x * 2)),
+        "item_id", "features") is None
+    # a cached PURE scan is still accepted (the cache holds exactly the
+    # source values, so streaming from the files is value-identical);
+    # a cached TRANSFORMED plan must be rejected like its uncached twin
+    cached = items.persist()
+    bad = items.withColumn(
+        "features", F.transform("features", lambda x: x + 1)).persist()
+    try:
+        cached.count(), bad.count()
+        assert spool.parquet_scan_source(
+            cached, "item_id", "features") is not None
+        assert spool.parquet_scan_source(
+            bad, "item_id", "features") is None
+    finally:
+        cached.unpersist()
+        bad.unpersist()
+
+
+def test_spool_from_parquet_matches_source(spark, tmp_path):
+    """Pin: the producer's spool holds exactly the source matrix in
+    id-sorted row order (ids here are already 0..n-1, so sorted ==
+    original), and a per-batch transform is applied to every row."""
+    p, X = _write_corpus(spark, tmp_path, n=257, f=6)
+    items = spark.read.parquet(p).select("item_id", "features")
+    src = spool.parquet_scan_source(items, "item_id", "features")
+    x_path = str(tmp_path / "x.npy")
+    s_ids = spool.from_parquet(src["files"], "item_id", "features", 257, 6,
+                               x_path)
+    assert np.array_equal(s_ids, np.arange(257))
+    assert np.array_equal(np.load(x_path), X)
+    u_path = str(tmp_path / "u.npy")
+    s_ids = spool.from_parquet(src["files"], "item_id", "features", 257, 6,
+                               u_path, np.float32, K._normalize_f32)
+    assert np.array_equal(s_ids, np.arange(257))
+    assert np.array_equal(np.load(u_path), K._normalize_f32(X))
+    # row-count mismatch → None (the caller takes another source)
+    assert spool.from_parquet(src["files"], "item_id", "features", 256, 6,
+                              str(tmp_path / "x2.npy")) is None
+
+
+def test_spool_modes_group_readable_default(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_WORLD_READABLE",
+                       raising=False)
+    assert spool.modes() == (0o750, 0o640)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_WORLD_READABLE", "1")
+    assert spool.modes() == (0o755, 0o644)
+
+
+def test_edges_reuse_build_uses_scan_spool(spark, tmp_path, monkeypatch):
+    """The edges-reuse rebuild (`ArrowSpaceBuilder.build(items, params,
+    edges=saved)` — the fresh-JVM ANN-phase path at 2M) must stream its
+    X spool from the SAME corpus parquet as a fresh build when items is
+    a trivial parquet scan: the kNN stage is skipped, but nothing about
+    reusing edges makes the corpus less scannable. Pins the builder's
+    x_src resolution surviving the `edges is not None` branch, spying
+    on the files the producer streams."""
+    p, _ = _write_corpus(spark, tmp_path, n=220, f=8)
+    items = spark.read.parquet(p).select("item_id", "features")
+    gp = {"eps": 0.9, "k": 5, "topk": 5, "p": 2.0, "sigma": 0.2}
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force spool tier
+    streamed = []
+    real = spool.from_parquet
+
+    def _spy(files, *a, **k):
+        streamed.append(list(files))
+        return real(files, *a, **k)
+
+    monkeypatch.setattr(spool, "from_parquet", _spy)
+    corpus = sorted(spool.parquet_scan_source(
+        items, "item_id", "features")["files"])
+    idx = ArrowSpaceBuilder.build(items, gp, strategy="exact")
+    assert [sorted(f) for f in streamed] == [corpus]
+    saved = str(tmp_path / "edges.parquet")
+    idx.edges.write.parquet(saved)
+
+    streamed.clear()
+    idx2 = ArrowSpaceBuilder.build(
+        items, gp, edges=spark.read.parquet(saved))
+    assert [sorted(f) for f in streamed] == [corpus]
+    # value parity: the reused-graph rebuild reproduces the λ table
+    # (relative tolerance: the edge parquet round-trip reorders rows,
+    # so partial sums accumulate in a different order — measured max
+    # relative delta ~7e-16)
+    a = {r["item_id"]: r["lambda"] for r in idx.lambdas().collect()}
+    b = {r["item_id"]: r["lambda"] for r in idx2.lambdas().collect()}
+    assert a.keys() == b.keys()
+    assert all(abs(a[i] - b[i]) <= 1e-12 * max(abs(a[i]), 1.0)
+               for i in a)
+
+
+@pytest.mark.parametrize("source", ["collect", "parquet"])
+def test_spool_tier_rejects_duplicate_ids(spark, tmp_path, monkeypatch,
+                                          source):
+    """Contract: a repeated id raises ValueError in the spool tier, as in
+    the driver tier, from a collect and from the corpus parquet — it
+    used to return an L_F built from one copy's row, and the spool dir
+    is removed."""
+    p, _ = _write_corpus(spark, tmp_path, n=4, f=3, ids=[0, 1, 1, 2])
+    items = spark.read.parquet(p).select("item_id", "features")
+    edges = spark.createDataFrame([(0, 1, 0.5), (1, 2, 0.25)], EDGE_SCHEMA)
+    src = (spool.parquet_scan_source(items, "item_id", "features")
+           if source == "parquet" else None)
+    assert (src is None) == (source == "collect")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    with pytest.raises(ValueError, match=r"unique; 1 ids repeat \(e\.g\. 1\)"):
+        L.feature_laplacian(items, edges, 3, x_source=src)
+    assert _lfx_dirs(tmp_path) == []
+
+
+def test_spool_tier_refuses_full_scratch(spark, test0_items_df, monkeypatch,
+                                         tmp_path):
+    """Contract: too little free scratch is a clear error stating the
+    bytes needed (N·F·8 + 64 MiB), the bytes free and the directory —
+    and no spool dir is created."""
+    edges = spark.createDataFrame([(0, 1, 0.5)], EDGE_SCHEMA)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    usage = namedtuple("usage", "total used free")
+    monkeypatch.setattr(shutil, "disk_usage",
+                        lambda p: usage(1 << 30, (1 << 30) - 1000, 1000))
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(RuntimeError) as ei:
+        L.feature_laplacian(test0_items_df, edges, 24)
+    msg = str(ei.value)
+    need = 5 * 24 * 8 + (64 << 20)
+    assert str(need) in msg and "1000" in msg and str(tmp_path) in msg
+    assert _lfx_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before
+
+
+def test_spool_tier_multi_host_needs_scratch(spark, test0_items_df,
+                                             monkeypatch):
+    """Contract: a multi-host master with no worker-visible scratch dir
+    cannot run the spool tier: a RuntimeError names
+    SPARK_GRAFT_SCRATCH_DIR, as in diffusion and the LSH build."""
+    edges = spark.createDataFrame([(0, 1, 0.5)], EDGE_SCHEMA)
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
+        L.feature_laplacian(test0_items_df, edges, 24)
+
+
+def test_spool_tier_failure_removes_spool(spark, test0_items_df,
+                                          monkeypatch, tmp_path):
+    """Contract: a failure in the edge-partials kernel leaves no spool
+    dir under the scratch dir and no registration in
+    matrix._SCRATCH_DIRS."""
+    edges = spark.createDataFrame([(0, 1, 0.5), (2, 3, 0.4)], EDGE_SCHEMA)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+
+    def _boom_factory(*a, **k):
+        def kernel(batches):
+            raise RuntimeError("injected edge-partials failure")
+            yield  # pragma: no cover - makes this a generator
+
+        return kernel
+
+    monkeypatch.setattr(L, "_make_edge_partials_kernel", _boom_factory)
+    before = list(M._SCRATCH_DIRS)
+    with pytest.raises(Exception, match="injected edge-partials failure"):
+        L.feature_laplacian(test0_items_df, edges, 24)
+    assert _lfx_dirs(tmp_path) == []
+    assert M._SCRATCH_DIRS == before

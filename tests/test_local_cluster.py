@@ -2,9 +2,9 @@
 branches the monkeypatch tests simulate, exercised under
 ``local-cluster[2,2,2048]`` — two separate executor JVMs, real package
 shipping via addPyFile (executor Python workers cannot see the driver's
-module state), the broadcast-gather Laplacian tier's real broadcast, the
-fully distributed Laplacian join tier, and the distributed diffusion
-tier, with values compared against the in-process local[*] session.
+module state), the Laplacian spool tier from a collect and from a
+task-written parquet copy, and the distributed diffusion tier, with
+values compared against the in-process local[*] session.
 
 Runs the cluster session in a SUBPROCESS: a Python process admits one
 SparkContext and the session fixture already owns a local[*] one.
@@ -29,6 +29,7 @@ import pyspark
 os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
 from pyarrowspace_spark.session import get_spark
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
+from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as knn_mod
 from pyarrowspace_spark.operators import lambda_index as lam_mod
@@ -55,24 +56,20 @@ idx = ArrowSpaceBuilder.build(
     items, {"eps": 0.9, "k": 6, "topk": 6, "p": 2.0}, strategy="exact")
 lam_sum = float(idx.items.agg({"lambda": "sum"}).collect()[0][0])
 
-# Laplacian tiers under real multi-JVM: driver tier (what build used),
-# broadcast-gather tier, fully distributed join tier.
+# Laplacian tiers under real multi-JVM: the driver tier (what build
+# used) against the spool tier, whose X spool comes from a collect and,
+# when X does not fit spark.driver.maxResultSize, from a parquet copy
+# the executor tasks write.
 exact0 = knn_mod.EXACT_PATH_MAX_ROWS
-knn_mod.EXACT_PATH_MAX_ROWS = 0          # -> gather tier
-# Both X-ship modes of the gather tier (r11): the shared-scratch mmap
-# default AND the real TorrentBroadcast fallback a no-shared-scratch
-# cluster would use.
-os.environ["SPARK_GRAFT_LF_SHIP"] = "mmap"
-lf_gather = lam_mod.feature_laplacian(items, idx.edges, 24)
-os.environ["SPARK_GRAFT_LF_SHIP"] = "broadcast"
-lf_bcast = lam_mod.feature_laplacian(items, idx.edges, 24)
-del os.environ["SPARK_GRAFT_LF_SHIP"]
-lam_mod.BROADCAST_GATHER_MAX_ROWS = 0    # -> distributed join tier
-lf_dist = lam_mod.feature_laplacian(items, idx.edges, 24)
+knn_mod.EXACT_PATH_MAX_ROWS = 0          # -> spool tier
+lf_collect = lam_mod.feature_laplacian(items, idx.edges, 24)
+eligible0 = M.collect_eligible
+M.collect_eligible = lambda spark, nbytes: False   # -> parquet copy
+lf_copy = lam_mod.feature_laplacian(items, idx.edges, 24)
+M.collect_eligible = eligible0
 knn_mod.EXACT_PATH_MAX_ROWS = exact0
-gather_err = float(np.abs(lf_gather - idx.feature_laplacian).max())
-bcast_err = float(np.abs(lf_bcast - idx.feature_laplacian).max())
-dist_err = float(np.abs(lf_dist - idx.feature_laplacian).max())
+collect_err = float(np.abs(lf_collect - idx.feature_laplacian).max())
+copy_err = float(np.abs(lf_copy - idx.feature_laplacian).max())
 
 # Distributed diffusion tier (the 100-TB path) across two executor
 # JVMs: the exact fp64 spool plan with task writes, pinned against the
@@ -86,9 +83,8 @@ print("RESULT " + json.dumps({
     "n_edges": idx.edges.count(),
     "tau": idx.tau_synth,
     "lam_sum": lam_sum,
-    "gather_err": gather_err,
-    "bcast_err": bcast_err,
-    "dist_err": dist_err,
+    "collect_err": collect_err,
+    "copy_err": copy_err,
     "d_sum": d_sum,
 }))
 spark.stop()
@@ -112,11 +108,10 @@ def test_local_cluster_distributed_tiers(spark):
     got = json.loads(lines[-1][len("RESULT "):])
     assert got["master"].startswith("local-cluster")
 
-    # All three Laplacian tiers agreed inside the cluster session —
-    # the gather tier in BOTH its X-ship modes (mmap and broadcast)
-    assert got["gather_err"] < 1e-9
-    assert got["bcast_err"] < 1e-9
-    assert got["dist_err"] < 1e-9
+    # The spool tier agreed with the driver tier inside the cluster
+    # session, from both of its X sources
+    assert got["collect_err"] < 1e-9
+    assert got["copy_err"] < 1e-9
 
     # Values identical to the same computation on this local[*] session
     from pyarrowspace_spark.builder import ArrowSpaceBuilder

@@ -11,8 +11,8 @@ from collections import namedtuple
 import numpy as np
 import pytest
 
+from pyarrowspace_spark import spool
 from pyarrowspace_spark.functions import matrix as M
-from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
 
@@ -66,24 +66,22 @@ def test_lsh_multi_host_needs_scratch(spark, monkeypatch, tmp_path):
     master with no worker-visible scratch dir is a RuntimeError naming
     SPARK_GRAFT_SCRATCH_DIR (there is no other plan to fall back to);
     with one, the probe runs on it and the edges are unchanged."""
-    from pyarrowspace_spark.operators import lambda_index as LAM
-
     items = _frame(spark, _rows(40))
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
     local = K.knn_edges(items, GP, strategy="lsh").collect()
-    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
         K.knn_edges(items, GP, strategy="lsh")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     probed = []
-    real_probe = LAM._probe_worker_visible
+    real_probe = spool.probe_worker_visible
 
     def _probe(spark, d):
         probed.append(d)
         return real_probe(spark, d)
 
-    monkeypatch.setattr(LAM, "_probe_worker_visible", _probe)
+    monkeypatch.setattr(spool, "probe_worker_visible", _probe)
     shared = K.knn_edges(items, GP, strategy="lsh").collect()
     assert probed == [str(tmp_path)]
     assert sorted(shared) == sorted(local) and len(local) > 0

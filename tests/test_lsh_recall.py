@@ -82,7 +82,7 @@ def test_skew_guard_blocked_buckets_identical_pairs(spark):
     set whether or not the bucket is split into block-pair tasks —
     the guard changes the physical plan, never the result."""
     import numpy as np
-    from pyarrowspace_spark.operators.knn import _pairwise_candidates_lsh
+    from pyarrowspace_spark.operators.knn import pairwise_candidates_lsh
 
     rng = np.random.default_rng(5)
     base = rng.normal(size=8)
@@ -101,9 +101,9 @@ def test_skew_guard_blocked_buckets_identical_pairs(spark):
     df = spark.createDataFrame(rows, "item_id long, features array<double>")
 
     kw = dict(eps=0.2, k=5, n_bits=6, n_bands=4)
-    unguarded = _pairwise_candidates_lsh(
+    unguarded = pairwise_candidates_lsh(
         df, "item_id", "features", bucket_max=10_000, **kw)
-    guarded = _pairwise_candidates_lsh(
+    guarded = pairwise_candidates_lsh(
         df, "item_id", "features", bucket_max=32, **kw)
     pu = {(r["src"], r["dst"]) for r in unguarded.collect()}
     pg = {(r["src"], r["dst"]) for r in guarded.collect()}

@@ -1,0 +1,93 @@
+"""Source guards over the package: the set of SPARK_GRAFT_* env levers
+it reads, and the rule that an operator module uses no underscore name
+of another operator module (shared helpers are public, or live in
+`spool`/`functions`)."""
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "pyarrowspace_spark"
+OPERATORS = PKG / "operators"
+
+# Each lever added or removed is a deliberate edit of this set.
+ENV_LEVERS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_MAX_RESULT",
+    "SPARK_GRAFT_SCRATCH_DIR",
+    "SPARK_GRAFT_SCRATCH_WORLD_READABLE",
+    "SPARK_GRAFT_DIFFUSE_BCAST_MAX",
+    "SPARK_GRAFT_EXACT_PCT_MAX",
+    "SPARK_GRAFT_LSH_MIN_FREE",
+    "SPARK_GRAFT_LSH_MISS_BUDGET",
+}
+
+
+def _trees(root):
+    for path in sorted(root.rglob("*.py")):
+        yield path, ast.parse(path.read_text(), filename=str(path))
+
+
+def _is_environ(node) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ"
+            and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+
+def _env_key(node):
+    """The constant key of os.environ.get(k) / os.getenv(k) /
+    os.environ[k], else None."""
+    if isinstance(node, ast.Call) and node.args:
+        f = node.func
+        if isinstance(f, ast.Attribute) and (
+                (f.attr == "get" and _is_environ(f.value))
+                or (f.attr == "getenv" and isinstance(f.value, ast.Name)
+                    and f.value.id == "os")):
+            key = node.args[0]
+        else:
+            return None
+    elif isinstance(node, ast.Subscript) and _is_environ(node.value):
+        key = node.slice
+    else:
+        return None
+    return key.value if isinstance(key, ast.Constant) else None
+
+
+def test_env_levers_pinned():
+    """Guard: the package reads exactly the 9 pinned SPARK_GRAFT_* env
+    levers, so a new lever (or a dead one left behind) fails CI."""
+    read = {key for _, tree in _trees(PKG) for node in ast.walk(tree)
+            if isinstance(key := _env_key(node), str)
+            and key.startswith("SPARK_GRAFT_")}
+    assert read == ENV_LEVERS
+
+
+def test_operators_import_no_private_operator_names():
+    """Guard: no module under operators/ imports an underscore name from
+    another operator module, by `from .x import _y` or by `x._y` on an
+    imported operator module."""
+    ops = {p.stem for p in OPERATORS.glob("*.py")} - {"__init__"}
+    bad = []
+    for path, tree in _trees(OPERATORS):
+        aliases = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level == 1 and not mod:
+                    # from . import knn as knn_ops
+                    aliases |= {a.asname or a.name for a in node.names
+                                if a.name in ops}
+                    continue
+                target = (mod if node.level == 1 else
+                          mod.removeprefix("pyarrowspace_spark.operators.")
+                          if mod.startswith("pyarrowspace_spark.operators.")
+                          else None)
+                if target in ops and target != path.stem:
+                    bad += [f"{path.name}: from {target} import {a.name}"
+                            for a in node.names if a.name.startswith("_")]
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in aliases
+                    and node.attr.startswith("_")):
+                bad.append(f"{path.name}: {node.value.id}.{node.attr}")
+    assert bad == []

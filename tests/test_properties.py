@@ -47,7 +47,7 @@ if HAVE_HYP:
         rng = np.random.RandomState(seed)
         X = rng.randn(b, f)
         LF = _random_laplacian(rng, f)
-        e_raw, g, s = lam_ops._lambda_kernel(X, LF, tau)
+        e_raw, g, s = lam_ops.lambda_kernel(X, LF, tau)
         assert (e_raw >= -1e-9).all()
         assert (g >= 0.0).all() and (g <= 1.0).all()
         assert (s >= 0.0).all() and (s <= 1.0 + 1e-12).all()

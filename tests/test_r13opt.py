@@ -138,8 +138,8 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch,
     multi-host masters) produces the same values as the driver tier.
     The master seam reports multi-host, so the scratch-visibility probe
     runs on the set SPARK_GRAFT_SCRATCH_DIR before the stream path."""
+    from pyarrowspace_spark import spool
     from pyarrowspace_spark.operators import energy as E
-    from pyarrowspace_spark.operators import lambda_index as LAM
 
     items = _corpus(spark, n=250, f=10, seed=21)
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0)
@@ -147,16 +147,16 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch,
     a = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     probed = []
-    real_probe = LAM._probe_worker_visible
+    real_probe = spool.probe_worker_visible
 
     def _probe(spark, d):
         probed.append(d)
         return real_probe(spark, d)
 
-    monkeypatch.setattr(LAM, "_probe_worker_visible", _probe)
+    monkeypatch.setattr(spool, "probe_worker_visible", _probe)
     b = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
     assert probed == [str(tmp_path)]
@@ -245,13 +245,14 @@ def test_diffuse_spool_multi_host_needs_scratch(spark, monkeypatch):
     """A multi-host master with no worker-visible scratch dir cannot
     run the spool plan: a RuntimeError names SPARK_GRAFT_SCRATCH_DIR
     (there is no portable fallback plan any more)."""
+    from pyarrowspace_spark import spool
     from pyarrowspace_spark.operators import energy as E
 
     items = _corpus(spark, n=50, f=4, seed=1)
     edges = spark.createDataFrame(
         [(0, 1, 0.5)], schema="src long, dst long, weight double")
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    monkeypatch.setattr(E, "_single_host_master", lambda spark: False)
+    monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
         E.diffuse(items, edges, eta=0.1, steps=1)

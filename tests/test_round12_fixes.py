@@ -6,11 +6,11 @@
 - `lsh_plan` / `lsh_group_summary` diagnostics surface (finding 2):
   the grouped-stage record is a structured accessor + index attachment,
   no longer a module-global breadcrumb only measurement scripts read.
-- fp32 X ship for the gather-tier Laplacian (finding 1): error bound
-  vs the fp64 path, auto threshold, env override.
 - diffusion on a HIGH-DEGREE graph (verdict gap 3): a star hub of
   degree 299 through the distributed tier, exact fp64 vs numpy.
-- worker-visibility probe for auto mmap ship mode (ADVICE r11).
+- worker-visibility probe of the spool scratch rule (ADVICE r11).
+
+The fp64 half of the gather-tier pin lives in tests/test_lambda.py.
 """
 
 import os
@@ -20,10 +20,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyarrowspace_spark import spool
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
-from pyarrowspace_spark.operators import lambda_index as LAM
 from pyarrowspace_spark.params import GraphParams
 
 from .conftest import TEST0_ITEMS
@@ -123,35 +123,6 @@ def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
     assert items is not None
 
 
-def test_lf_x_fp32_ship_error_bound(spark, test0_items_df, monkeypatch):
-    """fp32 X shipping in the gather tier (finding 1): partials still
-    accumulate in fp64, so L_F error vs the fp64 ship is bounded by
-    fp32 rounding of X (~1e-7 relative); fp64 ship stays exact vs the
-    driver-exact tier."""
-    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
-    edges = K.knn_edges(test0_items_df, gp, strategy="exact")
-    lf_exact = LAM.feature_laplacian(test0_items_df, edges, 24)
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force gather tier
-    monkeypatch.setenv("SPARK_GRAFT_LF_X_DTYPE", "float64")
-    lf64 = LAM.feature_laplacian(test0_items_df, edges, 24)
-    monkeypatch.setenv("SPARK_GRAFT_LF_X_DTYPE", "float32")
-    lf32 = LAM.feature_laplacian(test0_items_df, edges, 24)
-    scale = max(float(np.abs(lf_exact).max()), 1e-30)
-    assert float(np.abs(lf64 - lf_exact).max()) / scale < 1e-12
-    assert float(np.abs(lf32 - lf_exact).max()) / scale < 1e-5
-
-
-def test_lf_x_dtype_auto_threshold(monkeypatch):
-    """The auto rule: fp64 at/below LF_X_F32_MIN_ROWS (exactness is
-    free at oracle/test scale), fp32 above (the gather stage is
-    page-in bound at scale). Pinned at the decision level so the
-    threshold can't silently flip the oracle-scale paths."""
-    assert LAM.LF_X_F32_MIN_ROWS >= 10_000  # oracle scale stays fp64
-    # the decision is (env, n) → dtype; replicate its contract
-    monkeypatch.delenv("SPARK_GRAFT_LF_X_DTYPE", raising=False)
-    assert 313_841 > LAM.LF_X_F32_MIN_ROWS  # flagship scale ships fp32
-
-
 def test_fp32_messages_high_degree_star(spark, monkeypatch):
     """High-degree pin (the name predates the removal of fp32
     messages): on a deg=299 star the distributed spool tier sums the
@@ -183,11 +154,11 @@ def test_fp32_messages_high_degree_star(spark, monkeypatch):
 
 
 def test_probe_worker_visible(spark, tmp_path):
-    """Auto ship-mode visibility probe (ADVICE r11): a real shared dir
+    """Scratch-rule visibility probe (ADVICE r11): a real shared dir
     probes True; an unwritable/nonexistent dir probes False without
     raising."""
-    assert LAM._probe_worker_visible(spark, str(tmp_path)) is True
-    assert LAM._probe_worker_visible(
+    assert spool.probe_worker_visible(spark, str(tmp_path)) is True
+    assert spool.probe_worker_visible(
         spark, str(tmp_path / "does-not-exist")) is False
     # no marker corpses left behind
     assert not [p for p in os.listdir(tmp_path)

@@ -1,8 +1,7 @@
 """Round-8 ADVICE fixes: suffix-aware size parsing everywhere a byte
-budget is read ("1p" capacity, "32g" gather budgets), partition-count-
-based coalesce bounding, and the diffusion driver tier's edge-collect
-eligibility (the X collect fitting maxResultSize does not imply the
-symmetrized edge collect does)."""
+budget is read ("1p" capacity), and the diffusion driver tier's
+edge-collect eligibility (the X collect fitting maxResultSize does not
+imply the symmetrized edge collect does)."""
 
 import numpy as np
 import pytest
@@ -44,29 +43,6 @@ def test_driver_result_capacity_accepts_pib():
     fallback — that silently skips driver tiers on a session that
     explicitly RAISED the limit."""
     assert M.driver_result_capacity(_FakeSpark("1p")) == 1024**5
-
-
-def test_gather_mem_env_suffix_does_not_crash(spark, test0_items_df,
-                                              monkeypatch):
-    """ADVICE r7: SPARK_GRAFT_GATHER_MEM='32g' (users will write size
-    suffixes; the sibling vars take them) must not raise ValueError
-    mid-build — the broadcast-gather Laplacian tier parses it
-    suffix-aware and computes the same L_F."""
-    from pyarrowspace_spark.operators import knn as KNN
-    from pyarrowspace_spark.operators import lambda_index as L
-
-    edges = KNN.knn_edges(test0_items_df, GP, strategy="exact")
-    nf = len(test0_items_df.first()["features"])
-    want = L.feature_laplacian(test0_items_df, edges, nf)
-    # force the broadcast-gather tier (exact tier ceiling → 0)
-    monkeypatch.setattr(KNN, "EXACT_PATH_MAX_ROWS", 0)
-    monkeypatch.setenv("SPARK_GRAFT_GATHER_MEM", "32g")
-    got = L.feature_laplacian(test0_items_df, edges, nf)
-    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
-    # malformed value falls back to the default budget, same result
-    monkeypatch.setenv("SPARK_GRAFT_GATHER_MEM", "plenty")
-    got2 = L.feature_laplacian(test0_items_df, edges, nf)
-    np.testing.assert_allclose(got2, want, rtol=1e-9, atol=1e-12)
 
 
 def test_diffuse_checks_edge_collect_eligibility(spark, test0_items_df,

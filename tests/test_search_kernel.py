@@ -7,7 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from pyarrowspace_spark.operators import search as S
-from pyarrowspace_spark.operators.lambda_index import _lambda_kernel
+from pyarrowspace_spark.operators.lambda_index import lambda_kernel
 from pyarrowspace_spark.operators.simsearch import lsh_hyperplanes
 
 from .test_lsh_recall import SF_DIR
@@ -32,7 +32,7 @@ def sf_index(spark):
 
 def _tiny_index(spark, X, lf, id_type="long"):
     """An index frame with the build's (e_raw, g) columns, no build."""
-    e, g, _ = _lambda_kernel(X, lf, TAU)
+    e, g, _ = lambda_kernel(X, lf, TAU)
     return spark.createDataFrame(
         [(i, [float(v) for v in x], float(a), float(b))
          for i, (x, a, b) in enumerate(zip(X, e, g))],
@@ -188,7 +188,7 @@ def test_query_blocks_match_per_query_searches(spark, sf_index,
     lf = idx.feature_laplacian
     planes = lsh_hyperplanes(X.shape[1], n_tables=4, n_planes=6)
     Q = X[[1, 20, 40, 60, 80]] * 1.05
-    monkeypatch.setattr(S, "_QUERY_BLOCK", 2)
+    monkeypatch.setattr(S, "QUERY_BLOCK", 2)
     exact, ann = _both(idx.items, lf, _qdf(spark, Q), 7, planes)
     got_exact, got_ann = _rows(exact), _rows(ann)
     monkeypatch.undo()
