@@ -120,9 +120,21 @@ def matrix_to_frame(
     spark, ids: np.ndarray, X: np.ndarray,
     id_col: str = "item_id", feat_col: str = "features",
     eager_release: bool = False,
+    scalars: "dict[str, np.ndarray] | None" = None,
+    parts: int = 1,
 ) -> DataFrame:
     """Driver-resident (ids, X) matrix → DataFrame[id long, feat
     array<double>] WITHOUT embedding the data in task binaries.
+
+    `scalars` appends one column per entry after the features, in
+    order: a float array becomes a double column, an integer array a
+    long column. `parts` splits the rows into that many contiguous
+    files. A file is the unit Spark reads in parallel (one row group is
+    one task), so the scan, and an eager release's checkpoint, get up
+    to `parts` partitions; Spark packs files below its split size
+    together, up to one partition per core. Values are written without
+    dictionary encoding: continuous doubles rarely repeat, and the
+    dictionary pass only costs writer memory.
 
     `spark.createDataFrame` on a large local matrix ships every
     partition inside its task (12 MB task-size warnings at N=78k,
@@ -158,22 +170,36 @@ def matrix_to_frame(
     ids = np.ascontiguousarray(ids, dtype=np.int64)
     X = np.ascontiguousarray(X, dtype=np.float64)
     n, f = X.shape
-    schema = f"{id_col} long, {feat_col} array<double>"
+    scalars = {c: (np.ascontiguousarray(v, dtype=np.float64)
+                   if np.asarray(v).dtype.kind == "f"
+                   else np.ascontiguousarray(v, dtype=np.int64))
+               for c, v in (scalars or {}).items()}
+    schema = ", ".join(
+        [f"{id_col} long", f"{feat_col} array<double>"]
+        + [f"{c} {'double' if v.dtype.kind == 'f' else 'long'}"
+           for c, v in scalars.items()])
     base = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or None
     master = spark.sparkContext.master
     if base is None and not master.startswith("local"):
-        return _pure_python_frame(spark, ids, X, schema)
+        return _pure_python_frame(spark, ids, X, schema, scalars)
     try:
         d = tempfile.mkdtemp(prefix="pyarrowspace-matrix-", dir=base)
         _SCRATCH_DIRS.append(d)
-        offsets = pa.array(np.arange(0, (n + 1) * f, f, dtype=np.int64),
-                           type=pa.int64())
-        feats = pa.LargeListArray.from_arrays(
-            offsets, pa.array(X.reshape(-1), type=pa.float64()))
-        tbl = pa.table({id_col: pa.array(ids), feat_col: feats})
-        # ~32k rows/group → plenty of split points for the scan
-        pq.write_table(tbl, os.path.join(d, "part-0.parquet"),
-                       row_group_size=32768)
+        n_parts = max(1, min(int(parts), n))
+        for i in range(n_parts):
+            r0, r1 = i * n // n_parts, (i + 1) * n // n_parts
+            offsets = pa.array(
+                np.arange(0, (r1 - r0 + 1) * f, f, dtype=np.int64),
+                type=pa.int64())
+            feats = pa.LargeListArray.from_arrays(
+                offsets, pa.array(X[r0:r1].reshape(-1), type=pa.float64()))
+            tbl = pa.table({id_col: pa.array(ids[r0:r1]), feat_col: feats,
+                            **{c: pa.array(v[r0:r1])
+                               for c, v in scalars.items()}})
+            # ~32k rows/group → plenty of split points for the scan
+            pq.write_table(tbl, os.path.join(d, f"part-{i}.parquet"),
+                           row_group_size=32768, use_dictionary=False)
+            del tbl, feats
         out = spark.read.schema(schema).parquet(d)
         if eager_release:
             out = out.localCheckpoint(eager=True)
@@ -181,7 +207,7 @@ def matrix_to_frame(
             shutil.rmtree(d, ignore_errors=True)
         return out
     except Exception:  # pragma: no cover - scratch dir unavailable
-        return _pure_python_frame(spark, ids, X, schema)
+        return _pure_python_frame(spark, ids, X, schema, scalars)
 
 
 # Above this many raw matrix bytes the pure-python fallback would build
@@ -190,7 +216,7 @@ PURE_PYTHON_MAX_BYTES = 512 * 1024**2
 
 
 def _pure_python_frame(spark, ids: np.ndarray, X: np.ndarray,
-                       schema: str):
+                       schema: str, scalars: dict):
     """Slow-but-portable fallback: rows of builtin floats (accepted by
     any session config, readable under any deployment). Refuses
     matrices whose boxed-object blowup would OOM the driver, with the
@@ -202,8 +228,10 @@ def _pure_python_frame(spark, ids: np.ndarray, X: np.ndarray,
             f"SPARK_GRAFT_SCRATCH_DIR to storage all executors share "
             f"(HDFS/NFS) instead of falling back to "
             f"{X.nbytes * 5 >> 20} MiB of boxed driver rows")
+    cols = [v.tolist() for v in scalars.values()]
     return spark.createDataFrame(
-        [(int(i), [float(v) for v in row]) for i, row in zip(ids, X)],
+        [(int(i), [float(v) for v in row], *(c[r] for c in cols))
+         for r, (i, row) in enumerate(zip(ids, X))],
         schema=schema)
 
 

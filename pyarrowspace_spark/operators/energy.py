@@ -1,7 +1,17 @@
 """Energy/diffusion pipeline (reference build_energy/search_energy,
 src/lib.rs:303-376; stage list doc src/lib.rs:305-318).
 
-Stages (Spark-first):
+Two build tiers. One census aggregate (N, F, E) picks the tier. Below
+`knn.EXACT_PATH_MAX_ROWS` items, when `driver_tier` holds (X and the
+edge list fit the driver, the rule `diffuse` reads), `build_energy`
+collects X once and the edge list once, runs stages 2-5 in numpy in the
+Spark flow's operation order, and hands back one frame: the items, as
+an eager-released parquet handoff (8 Spark jobs for a build plus the
+items and centroids counts, where the Spark flow ran ~42). Beyond it
+the Spark flow runs the stages below as distributed operators. λ,
+e_raw, τ, L_F and the assignment agree between the tiers.
+
+Stages (Spark flow):
   1. λτ-graph (shared with the standard build).
   2. Heat diffusion G12: X ← X − η·L·X for `steps` iterations, exact
      fp64. Driver tier (chunked numpy segment-sum) while X fits; beyond
@@ -58,7 +68,8 @@ from ..functions.matrix import (
 from ..params import EnergyParams, GraphParams
 from . import knn as knn_ops
 from . import lambda_index as lam_ops
-from .search import QUERY_BLOCK, block_topk, ranked, check_query_ids
+from .search import (QUERY_BLOCK, block_topk, check_query_ids, fold_dot,
+                     ranked)
 
 # Optical-token / split training matrices are collected driver-side;
 # above this row count the collect runs on a deterministic hash-capped
@@ -108,6 +119,28 @@ def diffuse_plan(n_items: int, nf: int) -> dict:
     """
     driver = int(n_items) * int(nf) * 8 <= DIFFUSE_BROADCAST_MAX_BYTES
     return {"distributed_tier": 0 if driver else 1}
+
+
+def driver_tier(spark, n: int, nf: int, n_edges: int) -> bool:
+    """The driver-tier rule `diffuse` and `build_energy` share. X
+    (N·F·8 bytes) must be under DIFFUSE_BROADCAST_MAX_BYTES, and:
+
+    - collecting X must survive spark.driver.maxResultSize (a collect
+      over it ABORTS the job; the byte ceiling alone is not
+      eligibility);
+    - the result must be able to go BACK to executors (local master,
+      shared scratch dir, or small enough for the portable fallback),
+      or a non-local deployment with no scratch dir would do all the
+      driver-side arithmetic and then hit the boxed-row OOM refusal;
+    - collecting the symmetrized edge list (2·E rows × 24 B + framing)
+      must survive maxResultSize too: on a session whose limit barely
+      admits X, a high-degree graph's edge collect could still abort
+      after the X collect succeeded."""
+    x_bytes = int(n) * int(nf) * 8
+    return (x_bytes <= DIFFUSE_BROADCAST_MAX_BYTES
+            and matrix_mod.collect_eligible(spark, x_bytes)
+            and matrix_mod.handoff_eligible(spark, x_bytes)
+            and matrix_mod.collect_eligible(spark, int(n_edges) * 2 * 24))
 
 
 # worker-side (pid-scoped) cache of the current step's X-spool mmap —
@@ -483,6 +516,25 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
         both.unpersist()
 
 
+def _diffuse_steps(X: np.ndarray, seg, eta: float,
+                   steps: int) -> np.ndarray:
+    """The driver tiers' step loop: `steps` times X ← (1 − η·deg)∘X +
+    η·W·X, with W·X one neighbour combine (`matrix.segment_sum`) over
+    the directed edges grouped by `matrix.dst_segments`.
+
+    X is updated IN PLACE and returned: the callers own it, and the
+    step then holds X and W·X only, two N×F arrays, where rebinding a
+    new iterate each step held four (the caller's X among them)."""
+    eta_f = float(eta)
+    keep = (1.0 - eta_f * seg.deg)[:, None]
+    for _ in range(int(steps)):
+        wx = segment_sum(X, seg)
+        wx *= eta_f
+        X *= keep
+        X += wx
+    return X
+
+
 def _diffuse_driver(
     items: DataFrame, edges: DataFrame, eta: float, steps: int,
     id_col: str, feat_col: str,
@@ -524,10 +576,7 @@ def _diffuse_driver(
     seg = dst_segments(src, dst, epdf["weight"].to_numpy(np.float64),
                        len(ids))
     del epdf, src, dst
-    eta_f = float(eta)
-    for _ in range(int(steps)):
-        X = ((1.0 - eta_f * seg.deg)[:, None] * X
-             + eta_f * segment_sum(X, seg))
+    X = _diffuse_steps(X, seg, eta, steps)
     # Hand the diffused matrix back as a parquet scan, NOT a
     # createDataFrame: the latter embeds X in task binaries (12 MB
     # task-size warnings at 78k×384) and — under a non-Arrow session
@@ -549,10 +598,10 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     """G12 heat diffusion, `steps` iterations, exact fp64 on every
     tier. Physical tiers:
 
-    - driver tier (N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES, default 4 GiB
-      ≈ 1.4M items at F=384): the whole loop is chunked numpy
-      gather/segment-sum on the driver — the narrow edge list is a few
-      % of X's size, so it fits whenever X does.
+    - driver tier (`driver_tier`: N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES,
+      default 4 GiB ≈ 1.4M items at F=384, and X and the edge list fit
+      the driver's result limit): the whole loop is chunked numpy
+      gather/segment-sum on the driver.
     - distributed tier beyond (`_diffuse_spool`): the iterate lives in
       one id-sorted fp64 spool per step on a worker-visible scratch
       dir, edges are persisted pre-partitioned by dst, and each step is
@@ -579,26 +628,8 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
         return items.select(id_col, feat_col)
     nf = int(row["f"])
     n = items.count()
-    # Driver tier only when (a) collecting X survives the session's
-    # spark.driver.maxResultSize (a collect over it ABORTS the job —
-    # the row/byte ceiling alone is not eligibility), and (b) the
-    # diffused matrix can be handed BACK to executors (local master,
-    # shared scratch dir, or small enough for the portable fallback) —
-    # otherwise a non-local deployment with no scratch dir would do
-    # all the driver-side arithmetic and then hit the boxed-row OOM
-    # refusal.
-    if (n * nf * 8 <= DIFFUSE_BROADCAST_MAX_BYTES
-            and matrix_mod.collect_eligible(items.sparkSession, n * nf * 8)
-            and matrix_mod.handoff_eligible(items.sparkSession, n * nf * 8)
-            # The driver tier ALSO collects the symmetrized edge list
-            # (2·E rows × 24 B + framing, energy.py _diffuse_driver);
-            # on a session whose maxResultSize barely admits X, a
-            # high-degree graph's edge collect can still abort AFTER
-            # the X collect succeeded — so it needs its own
-            # eligibility check. edges.count() is cheap (narrow frame,
-            # usually already persisted by build_energy).
-            and matrix_mod.collect_eligible(
-                items.sparkSession, edges.count() * 2 * 24)):
+    # edges.count() is cheap: a narrow frame, usually already persisted
+    if driver_tier(items.sparkSession, n, nf, edges.count()):
         global _LAST_DIFFUSE_INFO
         _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
         return _diffuse_driver(items, edges, eta, steps, id_col, feat_col,
@@ -718,6 +749,20 @@ class EnergyIndex:
         )
 
 
+def _centroid_moments(M: np.ndarray, lam: np.ndarray,
+                      er: np.ndarray) -> dict:
+    """One token's moments over its members (rows of M, their λ and
+    e_raw): member count, λ/e means, λ dispersion (population std) and
+    the member-mean center. Both build tiers compute them here."""
+    return {"n_members": len(lam), "lambda_c": float(lam.mean()),
+            "e_c": float(er.mean()), "disp_c": float(lam.std()),
+            "center": M.mean(axis=0)}
+
+
+_CENTROID_SCHEMA = ("centroid_id long, n_members long, lambda_c double, "
+                    "e_c double, disp_c double, center array<double>")
+
+
 def _centroid_attrs(wc: DataFrame) -> DataFrame:
     """Scalar moments AND member-mean centers per token, one grouped
     Arrow kernel: a single shuffle of (centroid_id, features, λ, e)
@@ -727,27 +772,186 @@ def _centroid_attrs(wc: DataFrame) -> DataFrame:
     per-call memory is members × F doubles."""
 
     def _agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        M = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-        lam = pdf["lambda"].to_numpy(np.float64)
-        er = pdf["e_raw"].to_numpy(np.float64)
-        return pd.DataFrame({
-            "centroid_id": [int(pdf["centroid_id"].iloc[0])],
-            "n_members": [len(pdf)],
-            "lambda_c": [float(lam.mean())],
-            "e_c": [float(er.mean())],
-            "disp_c": [float(lam.std())],
-            "center": [M.mean(axis=0)],
-        })
+        mom = _centroid_moments(
+            np.stack(pdf["features"].to_numpy()).astype(np.float64),
+            pdf["lambda"].to_numpy(np.float64),
+            pdf["e_raw"].to_numpy(np.float64))
+        return pd.DataFrame({"centroid_id": [int(pdf["centroid_id"].iloc[0])],
+                             **{k: [v] for k, v in mom.items()}})
 
     return (
         wc.select("centroid_id", "features", "lambda", "e_raw")
         .groupBy("centroid_id")
-        .applyInPandas(
-            _agg,
-            "centroid_id long, n_members long, lambda_c double, "
-            "e_c double, disp_c double, center array<double>",
-        )
+        .applyInPandas(_agg, _CENTROID_SCHEMA)
     )
+
+
+def _split_children(M: np.ndarray, split_tau: float) -> "np.ndarray | None":
+    """G13b: the two child centers of a token with members M (rows in
+    item_id order), or None when it cannot split (fewer than two
+    members, or all members equal). `split_tau` is the SPLIT OFFSET
+    MAGNITUDE (reference src/lib.rs:318 "split_tau: split offset
+    magnitude"): children start at c ± split_tau·u along the dominant
+    member direction u, then Lloyd refines from that deterministic
+    init. (Earlier rounds misused split_tau as a threshold offset,
+    which *suppressed* splits as it grew — ADVICE r2 item 5.)"""
+    from .simsearch import lloyd_kmeans
+
+    if len(M) < 2:
+        return None
+    c = M.mean(axis=0)
+    # dominant member direction (top right-singular vector), sign-fixed
+    # so the split is orientation-deterministic
+    _, s, vt = np.linalg.svd(M - c, full_matrices=False)
+    if s[0] <= 1e-12:
+        return None  # degenerate cluster: nothing to split
+    u = vt[0]
+    nz = np.nonzero(np.abs(u) > 1e-12)[0][0]
+    if u[nz] < 0:
+        u = -u
+    tau_off = float(split_tau)
+    init = np.stack([c + tau_off * u, c - tau_off * u])
+    return lloyd_kmeans(M, 2, init=init, iters=10)
+
+
+def _census(base: DataFrame, edges: DataFrame) -> "tuple[int, int, int]":
+    """(N, F, E) of a build in ONE aggregate over both frames (one
+    shuffle of two-int rows): the item count, the longest feature
+    array and the edge count, which the tier rule, the percentile
+    tiers and the λ pass read. An empty items frame raises."""
+    rows = (base.select(F.lit(0).alias("_t"),
+                        F.size("features").alias("_f"))
+            .unionByName(edges.select(F.lit(1).alias("_t"),
+                                      F.lit(0).alias("_f")))
+            .groupBy("_t")
+            .agg(F.count("*").alias("_c"), F.max("_f").alias("_f"))
+            .collect())
+    got = {int(r["_t"]): r for r in rows}
+    if 0 not in got:
+        raise ValueError("build_energy: the items frame is empty")
+    return (int(got[0]["_c"]), int(got[0]["_f"]),
+            int(got[1]["_c"]) if 1 in got else 0)
+
+
+def _build_energy_driver(base: DataFrame, edges: DataFrame,
+                         eparams: EnergyParams, gparams: GraphParams,
+                         k_tokens: int) -> EnergyIndex:
+    """`build_energy`'s driver tier: X and the edge list are collected
+    once each and every stage runs in numpy, in the Spark flow's
+    operation order, so λ, e_raw, τ, L_F and the assignment are the
+    Spark flow's values (centroid moments up to the member order of a
+    mean). One frame goes back: the items, as one eager-released
+    parquet handoff."""
+    from .simsearch import lloyd_kmeans, nearest_cells
+
+    spark = base.sparkSession
+    # row block of the λ and assignment passes: lambda_kernel holds ~7
+    # block×F temporaries, which a bounded block keeps small at any N
+    blk = 1024
+    ids, X = collect_id_matrix(base, "item_id", "features")
+    s_ids, order = sorted_index(ids)
+    if np.any(order[1:] < order[:-1]):
+        X = X[order]
+    del ids, order
+    n = len(s_ids)
+    rows = np.arange(n, dtype=np.int64)
+    epdf = edges.select("src", "dst", "weight").toPandas()
+    src = positions_of(epdf["src"].to_numpy(np.int64), s_ids, rows)
+    dst = positions_of(epdf["dst"].to_numpy(np.int64), s_ids, rows)
+    w = epdf["weight"].to_numpy(np.float64)
+    del epdf
+
+    # G13a: the trim cut `trim_edges` takes, on the untrimmed weights
+    cut = (stats.exact_percentile(w, eparams.trim_quantile)
+           if eparams.trim_quantile > 0 else None)
+    keep = w >= cut if cut is not None else np.ones(len(w), dtype=bool)
+    kept_edges = (edges.filter(F.col("weight") >= F.lit(cut))
+                  if cut is not None else edges).persist()
+
+    # G12 on the untrimmed graph: both orientations in the order
+    # `_diffuse_driver` collects `_symmetrize(edges)`
+    dinfo = None
+    if eparams.steps > 0:
+        seg = dst_segments(np.concatenate([src, dst]),
+                           np.concatenate([dst, src]),
+                           np.concatenate([w, w]), n)
+        X = _diffuse_steps(X, seg, eparams.eta, eparams.steps)
+        del seg
+        global _LAST_DIFFUSE_INFO
+        _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
+        dinfo = dict(_LAST_DIFFUSE_INFO)
+    lf = lam_ops.laplacian_from_edges(X, src[keep], dst[keep], w[keep])
+    del src, dst, w, keep
+
+    e_raw, g = np.empty(n), np.empty(n)
+    for b in range(0, n, blk):
+        e_raw[b:b + blk], g[b:b + blk], _ = (
+            lam_ops.lambda_kernel(X[b:b + blk], lf, tau=1.0))
+    tau_synth = _checked_tau(stats.exact_percentile(e_raw, 0.5))
+    # blend_lambda's SQL operation order
+    lam = tau_synth * (e_raw / (e_raw + tau_synth)) + (1.0 - tau_synth) * g
+    del g
+
+    # G14: the Spark flow's quantizer and ivf_assign's nearest cell
+    centers0 = lloyd_kmeans(X, k_tokens, seed=42)
+    cid = np.concatenate([nearest_cells(X[b:b + blk], centers0)[:, 0]
+                          for b in range(0, n, blk)]).astype(np.int64)
+
+    def moments(c: int) -> dict:
+        m = cid == c
+        return _centroid_moments(X[m], lam[m], e_raw[m])
+
+    attrs = {int(c): moments(c) for c in np.unique(cid)}
+    # G13b: split the tokens above the split_quantile of dispersion;
+    # members move to the child of least d² (child_id breaks ties), d²
+    # folded as the Spark flow's SQL computes it
+    split_cut = stats.exact_percentile(
+        [a["disp_c"] for a in attrs.values()], eparams.split_quantile)
+    next_id = k_tokens
+    for c in sorted(c for c, a in attrs.items() if a["disp_c"] > split_cut):
+        members = np.nonzero(cid == c)[0]
+        children = _split_children(X[members], eparams.split_tau)
+        if children is None:
+            continue
+        MT = X[members].T
+        ff = fold_dot((x, x) for x in MT)
+        d2 = [ff - 2.0 * fold_dot(zip(MT, ch)) + fold_dot(zip(ch, ch))
+              for ch in children]
+        # Spark's ascending sort puts NaN last
+        second = (d2[1] < d2[0]) | (np.isnan(d2[0]) & ~np.isnan(d2[1]))
+        cid[members] = np.where(second, next_id + 1, next_id)
+        del attrs[c]
+        for child in (next_id, next_id + 1):
+            if np.any(cid == child):
+                attrs[child] = moments(child)
+        next_id += 2
+
+    items = matrix_to_frame(
+        spark, s_ids, X, "item_id", "features", eager_release=True,
+        scalars={"e_raw": e_raw, "lambda": lam, "centroid_id": cid},
+        parts=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    # pure-python rows: numpy float64 elements are rejected by the
+    # non-Arrow session verifier (round-5 driver regression)
+    centroids = spark.createDataFrame(
+        [(c, int(a["n_members"]), a["lambda_c"], a["e_c"], a["disp_c"],
+          a["center"].tolist()) for c, a in sorted(attrs.items())],
+        _CENTROID_SCHEMA).coalesce(1).localCheckpoint(eager=False)
+    return EnergyIndex(items=items, centroids=centroids, edges=kept_edges,
+                       feature_laplacian=lf, graph_params=gparams,
+                       energy_params=eparams, tau_synth=tau_synth,
+                       diffusion_info=dinfo)
+
+
+def _checked_tau(median: "float | None") -> float:
+    """τ_synth from the e_raw median; a collapsed spectrum raises."""
+    tau_synth = float(median) if median is not None else 0.0
+    if not (tau_synth > 0.0):
+        raise ValueError(
+            "degenerate energy index: diffusion collapsed the spectrum "
+            f"(median energy {tau_synth}); lower eta/steps "
+            "(reference sweep shows collapse at eta=0.1, steps=8)"
+        )
+    return tau_synth
 
 
 def build_energy(
@@ -761,7 +965,23 @@ def build_energy(
     """Energy pipeline build. Pass `edges` to reuse an already-built
     λτ-graph (e.g. `ArrowSpaceIndex.edges` from the standard build over
     the SAME items/params): a real pipeline building both indexes from
-    one corpus runs the expensive graph build once, not twice."""
+    one corpus runs the expensive graph build once, not twice.
+
+    Two tiers, chosen after one census aggregate (N, F, E):
+
+    - driver tier, when N ≤ knn.EXACT_PATH_MAX_ROWS and `driver_tier`
+      holds (the rule `diffuse` reads): X and the edge list are each
+      collected once, trim cut, diffusion, L_F, e_raw/g, τ, λ, the
+      quantizer, the assignment, the centroid moments and the split all
+      run in numpy (`_build_energy_driver`), and the items go back as
+      one eager-released parquet handoff. λ, e_raw, τ, L_F and the
+      assignment equal the Spark flow's.
+    - the Spark flow beyond: `trim_edges`, `diffuse`,
+      `lambda_index.feature_laplacian` and `with_energy_components`,
+      the ivf_assign pass and the grouped centroid kernel.
+
+    Raises ValueError on an empty items frame, on duplicate ids (driver
+    tier) and on a collapsed spectrum (median energy ≤ 0)."""
     base = items.select(F.col(id_col).alias("item_id"),
                         F.col(feat_col).alias("features"))
     # same single-row-group scan-parallelism guard as the standard
@@ -782,22 +1002,29 @@ def build_energy(
         from ..functions import vector as V
 
         base = base.withColumn("features", V.l2_normalize("features"))
-    base = base.persist()
-    first = base.select(F.size("features").alias("n")).first()
-    n_features = int(first["n"])
 
     if edges is None:
+        base = base.persist()
         edges = knn_ops.knn_edges(base, gparams).persist()
     else:
         # caller-owned frame (usually already persisted by the standard
         # build) — re-persisting it would double-cache the same plan
         edges = edges.select("src", "dst", "weight")
+    n_items, n_features, n_edges = _census(base, edges)
+    k_tokens = int(eparams.optical_tokens or 40)
+    if (n_items <= knn_ops.EXACT_PATH_MAX_ROWS
+            and driver_tier(items.sparkSession, n_items, n_features,
+                            n_edges)):
+        return _build_energy_driver(base, edges, eparams, gparams, k_tokens)
+    if not base.is_cached:
+        base = base.persist()
 
-    # G13a trim cut FIRST: its count+percentile are the first actions
-    # on the persisted edges, so cache materialization rides the cut
+    # G13a trim cut FIRST: its percentile is the first action on the
+    # persisted edges, so cache materialization rides the cut
     # computation instead of being a separate post-diffuse scan
-    # (r5 brief #7); the count also picks the percentile tier.
-    kept_edges = trim_edges(edges, eparams.trim_quantile).persist()
+    # (r5 brief #7); the census count picks the percentile tier.
+    kept_edges = trim_edges(edges, eparams.trim_quantile,
+                            n_edges=n_edges).persist()
 
     # G12: diffusion smoothing (reads the now-cached edges). The
     # driver tier hands the diffused (ids, X) matrix back via
@@ -821,16 +1048,9 @@ def build_energy(
     lf = lam_ops.feature_laplacian(diffused, kept_edges, n_features,
                                    x_matrix=xy)
     comp = lam_ops.with_energy_components(diffused, lf).persist()
-    n_items = base.count()  # cached; picks the τ-median percentile tier
     tau_row = comp.select(
         stats.percentile_expr("_ec.e_raw", 0.5, n_items).alias("m")).first()
-    tau_synth = float(tau_row["m"]) if tau_row["m"] is not None else 0.0
-    if not (tau_synth > 0.0):
-        raise ValueError(
-            "degenerate energy index: diffusion collapsed the spectrum "
-            f"(median energy {tau_synth}); lower eta/steps "
-            "(reference sweep shows collapse at eta=0.1, steps=8)"
-        )
+    tau_synth = _checked_tau(tau_row["m"])
     indexed = comp.select(
         "*", F.col("_ec.e_raw").alias("e_raw")
     ).withColumn(
@@ -846,7 +1066,6 @@ def build_energy(
     # argmin), so the plan scales exactly like IVF.
     from .simsearch import deterministic_cap, ivf_assign, lloyd_kmeans
 
-    k_tokens = int(eparams.optical_tokens or 40)
     if xy is not None and n_items <= COMPRESS_MAX_TRAIN:
         # below the training cap, deterministic_cap is the identity
         # and orderBy(item_id) is exactly the id-sorted diffused
@@ -870,7 +1089,8 @@ def build_energy(
     # the identical rows with zero shuffle.
     with_c = (
         ivf_assign(indexed, centers0, "features", "cells", n_probe=1)
-        .withColumn("centroid_id", F.explode("cells")).drop("cells")
+        .withColumn("centroid_id", F.col("cells")[0].cast("long"))
+        .drop("cells")
         # persisted: consumed by the first attrs pass, the split-member
         # collect, and the reassignment scan
         .persist())
@@ -878,30 +1098,15 @@ def build_energy(
     centroids = _centroid_attrs(with_c).persist()
 
     # G13b: one bounded dispersion-split pass. Centroids above the
-    # `split_quantile` of member-λ dispersion are split in two;
-    # `split_tau` is the SPLIT OFFSET MAGNITUDE applied to the child
-    # centroids (reference src/lib.rs:318 "split_tau: split offset
-    # magnitude") — children start at c ± split_tau·u along the
-    # dominant member direction u, then Lloyd refines from that
-    # deterministic init. (Earlier rounds misused split_tau as a
-    # threshold offset, which *suppressed* splits as it grew —
-    # ADVICE r2 item 5.)
-    # One collect of the (≤ ~2·optical_tokens row) centroid table
-    # replaces the previous percentile job + filter collect; the cut
-    # replays Spark's exact `percentile` interpolation lo + frac·
-    # (hi − lo) DIRECTLY rather than np.percentile — numpy's lerp
-    # switches to hi − (hi − lo)·(1 − frac) when frac ≥ 0.5, which
-    # can differ by 1 ulp and flip the strict disp_c > cut comparison
-    # for a centroid landing exactly on the cut (the oracle computes
-    # the Spark form).
+    # `split_quantile` of member-λ dispersion are split in two (see
+    # `_split_children`). One collect of the (≤ ~2·optical_tokens row)
+    # centroid table replaces a percentile job + filter collect; the
+    # cut is Spark's exact `percentile` replayed on the driver
+    # (`stats.exact_percentile`), bit for bit, so a centroid landing
+    # exactly on the cut compares as the oracle's does.
     crows = centroids.select("centroid_id", "disp_c").collect()
-    disp_sorted = np.sort(
-        np.array([r["disp_c"] for r in crows], dtype=np.float64))
-    pos = float(eparams.split_quantile) * (len(disp_sorted) - 1)
-    lo = int(np.floor(pos))
-    hi = min(lo + 1, len(disp_sorted) - 1)
-    split_cut = float(disp_sorted[lo]
-                      + (pos - lo) * (disp_sorted[hi] - disp_sorted[lo]))
+    split_cut = stats.exact_percentile([r["disp_c"] for r in crows],
+                                       eparams.split_quantile)
     to_split = sorted(
         int(r["centroid_id"]) for r in crows if r["disp_c"] > split_cut)
     if to_split:
@@ -934,23 +1139,11 @@ def build_energy(
         child_rows: list[tuple[int, int, np.ndarray]] = []
         for cid in to_split:
             sub = mem[mem["centroid_id"] == cid].sort_values("item_id")
-            if len(sub) < 2:
+            children = (_split_children(
+                np.stack(sub["features"].to_numpy()).astype(np.float64),
+                eparams.split_tau) if len(sub) else None)
+            if children is None:
                 continue
-            M = np.stack(sub["features"].to_numpy()).astype(np.float64)
-            c = M.mean(axis=0)
-            dev = M - c
-            # dominant member direction (top right-singular vector),
-            # sign-fixed so the split is orientation-deterministic
-            _, s, vt = np.linalg.svd(dev, full_matrices=False)
-            if s[0] <= 1e-12:
-                continue  # degenerate cluster: nothing to split
-            u = vt[0]
-            nz = np.nonzero(np.abs(u) > 1e-12)[0][0]
-            if u[nz] < 0:
-                u = -u
-            tau_off = float(eparams.split_tau)
-            init = np.stack([c + tau_off * u, c - tau_off * u])
-            children = lloyd_kmeans(M, 2, init=init, iters=10)
             child_rows.append((int(cid), int(next_id), children[0]))
             child_rows.append((int(cid), int(next_id) + 1, children[1]))
             next_id += 2
@@ -1114,11 +1307,10 @@ def extend_energy(
     assigned = (
         ivf_assign(indexed.select("item_id", "features"), centers,
                    "features", "cells", n_probe=1)
-        .select("item_id", F.explode("cells").alias("_pos"))
         # element_at is 1-indexed
         .select("item_id",
-                F.element_at(cid_lits, F.col("_pos") + 1)
-                .alias("centroid_id"))
+                F.element_at(cid_lits, F.col("cells")[0] + 1)
+                .cast("long").alias("centroid_id"))
     ).localCheckpoint(eager=True)
     # eager localCheckpoint, NOT persist: it is consumed by the items
     # join below AND the affected-centroid distinct — as a lazy plan

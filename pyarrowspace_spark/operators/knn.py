@@ -534,9 +534,13 @@ def pairwise_candidates_lsh(
     # final group's shuffle and every group's pair spool — and REFUSES
     # the build before any of it is written when it cannot fit above
     # the free-disk floor: a clear arithmetic error beats a watchdog
-    # abort 90 minutes in (the r10 2M failure).
+    # abort 90 minutes in (the r10 2M failure). Each byte is priced on
+    # the disk it lands on: shuffle and spill on `spool.spill_dir`, the
+    # U spool, its parquet copy and the pair spools under the scratch
+    # root; one disk holding both carries the sum.
     gsize = _band_group_size(n_items, nb)
     probe = spool.spill_dir(spark)
+    same_disk = spool.same_device(probe, scratch_root)
     band_bytes = n_items * LSH_ROW_BYTES
     # Spool projection UNIT: per GROUP when the per-src k-cap runs
     # (the cap bounds a group's spool at N·k rows REGARDLESS of how
@@ -549,21 +553,35 @@ def pairwise_candidates_lsh(
     floor_b = parse_size_bytes(
         os.environ.get("SPARK_GRAFT_LSH_MIN_FREE", str(LSH_MIN_FREE_BYTES)),
         default=LSH_MIN_FREE_BYTES)
-    free0 = shutil.disk_usage(probe).free
-    fixed_b = band_bytes * spill + u_bytes + floor_b
-    need_end = n_units_end * spool_unit + fixed_b
-    if free0 < need_end:
-        raise RuntimeError(
-            f"LSH grouped build refused up front: scratch "
-            f"'{probe}' has {free0 / 2**30:.1f} GB free but the "
-            f"build is projected to need {need_end / 2**30:.1f} GB = "
-            f"{n_units_end} {'k-capped groups' if k_i else 'bands'} x "
-            f"{spool_unit / 2**30:.2f} GB pair spool + "
-            f"{band_bytes / 2**30:.2f} GB/band shuffle x {spill:.1f} "
-            f"spill + {u_bytes / 2**30:.2f} GB unit-vector spool + "
-            f"{floor_b / 2**30:.0f} GB floor. Free disk, lower k, point "
-            f"SPARK_GRAFT_SCRATCH_DIR at a larger filesystem, or lower "
-            f"the SPARK_GRAFT_LSH_MIN_FREE floor consciously.")
+    shuffle_b = band_bytes * spill
+
+    def _disks(shuffle: float, spooled: float) -> "list[tuple]":
+        """(dir, free bytes, bytes it must hold incl. the floor) per
+        disk, for `shuffle` shuffle/spill bytes and `spooled` bytes."""
+        if same_disk:
+            return [(probe, shutil.disk_usage(probe).free,
+                     shuffle + spooled + floor_b)]
+        return [(probe, shutil.disk_usage(probe).free, shuffle + floor_b),
+                (scratch_root, shutil.disk_usage(scratch_root).free,
+                 spooled + floor_b)]
+
+    for where, free0, need_end in _disks(
+            shuffle_b, n_units_end * spool_unit + u_bytes):
+        if free0 < need_end:
+            raise RuntimeError(
+                f"LSH grouped build refused up front: scratch "
+                f"'{where}' has {free0 / 2**30:.1f} GB free but the "
+                f"build is projected to need {need_end / 2**30:.1f} GB "
+                f"there, of: {n_units_end} "
+                f"{'k-capped groups' if k_i else 'bands'} x "
+                f"{spool_unit / 2**30:.2f} GB pair spool + "
+                f"{u_bytes / 2**30:.2f} GB unit-vector spool (under "
+                f"'{scratch_root}') + {band_bytes / 2**30:.2f} GB/band "
+                f"shuffle x {spill:.1f} spill (on '{probe}') + "
+                f"{floor_b / 2**30:.0f} GB floor per disk. Free disk, "
+                f"lower k, point SPARK_GRAFT_SCRATCH_DIR at a larger "
+                f"filesystem, or lower the SPARK_GRAFT_LSH_MIN_FREE "
+                f"floor consciously.")
     # Residual mid-loop risk the up-front check can't cover (ADVICE
     # r12): under disk pressure the adaptive loop can fragment into up
     # to nb 1-band groups — each spooling up to N·k rows. A build
@@ -571,15 +589,17 @@ def pairwise_candidates_lsh(
     # RuntimeError (never a corrupt result); warn when even the
     # worst-case fragmentation would not fit, so the operator can free
     # disk BEFORE the long job, not after its 60th group.
-    worst_end = nb * spool_unit + fixed_b
-    if k_i and free0 < worst_end:
+    short = [d for d in _disks(shuffle_b, nb * spool_unit + u_bytes)
+             if d[1] < d[2]]
+    if k_i and short:
+        where, free0, worst_end = short[0]
         warnings.warn(
             f"LSH grouped build accepted at the expected "
             f"{-(-nb // gsize)}-group plan, but worst-case "
             f"fragmentation ({nb} 1-band groups under disk "
             f"pressure) projects {worst_end / 2**30:.1f} GB "
-            f"vs {free0 / 2**30:.1f} GB free — the build may "
-            f"stop mid-loop with a clean RuntimeError if the "
+            f"vs {free0 / 2**30:.1f} GB free on '{where}' — the build "
+            f"may stop mid-loop with a clean RuntimeError if the "
             f"disk tightens.", UserWarning, stacklevel=2)
 
     rng = np.random.default_rng(seed)
@@ -771,22 +791,26 @@ def pairwise_candidates_lsh(
         # size.
         bands_left = list(range(nb))
         while bands_left:
-            free = shutil.disk_usage(probe).free
-            per_band_need = band_bytes * spill + spool_unit
-            if k_i:
-                # the live group's spool is one k-capped unit no matter how
-                # many bands it takes; only the shuffle scales with bands
-                max_bands = int((free - floor_b - spool_unit)
-                                // max(band_bytes * spill, 1))
-            else:
-                max_bands = int((free - floor_b) // max(per_band_need, 1))
+            # the live group's spool is one k-capped unit no matter how
+            # many bands it takes; uncapped, it scales with the bands
+            # as the shuffle does. A disk's need is linear in the
+            # group's band count b, need(0) + b·(need(1) − need(0)); the
+            # tighter disk sets the group.
+            fixed_s, band_s = ((spool_unit, 0.0) if k_i
+                               else (0.0, spool_unit))
+            max_bands, where, free, band_need = min(
+                (int((free - need0) // max(need1 - need0, 1)), where,
+                 free, need1)
+                for (where, free, need0), (_, _, need1) in zip(
+                    _disks(0.0, fixed_s),
+                    _disks(shuffle_b, fixed_s + band_s)))
             if max_bands < 1:
                 done = nb - len(bands_left)
                 raise RuntimeError(
                     f"LSH grouped build out of scratch disk after "
                     f"{done}/{nb} bands: {free / 2**30:.1f} GB free "
-                    f"on '{probe}' < 1-band need "
-                    f"{(per_band_need + floor_b) / 2**30:.1f} GB.")
+                    f"on '{where}' < 1-band need "
+                    f"{band_need / 2**30:.1f} GB.")
             gband = bands_left[:min(gsize, max_bands)]
             del bands_left[:len(gband)]
             g_t0 = time.time()

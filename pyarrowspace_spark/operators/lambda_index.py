@@ -98,8 +98,7 @@ def feature_laplacian(
     from .knn import EXACT_PATH_MAX_ROWS
 
     from ..functions.matrix import (collect_eligible, collect_id_matrix,
-                                    dst_segments, positions_of,
-                                    segment_sum, sorted_index)
+                                    positions_of, sorted_index)
 
     n = items.count()
     # The driver tier collects X (N·F doubles): a collect over
@@ -126,16 +125,7 @@ def feature_laplacian(
         di = positions_of(e_pdf["dst"].to_numpy(dtype=np.int64), s_ids, order)
         w = e_pdf["weight"].to_numpy(dtype=np.float64)
         del e_pdf
-        # L·X = deg∘X − W·X over both orientations of each edge (the
-        # neighbour combine diffusion runs), then one N×F² gemm
-        seg = dst_segments(np.concatenate([si, di]),
-                           np.concatenate([di, si]),
-                           np.concatenate([w, w]), len(ids_arr))
-        del si, di, w
-        LX = seg.deg[:, None] * X
-        LX -= segment_sum(X, seg)
-        lf = X.T @ LX
-        return (lf + lf.T) / 2.0
+        return laplacian_from_edges(X, si, di, w)
 
     op = "feature_laplacian: the spool tier"
     fdim = n_features
@@ -198,6 +188,22 @@ def feature_laplacian(
         spool.drop_dir(d)
     flat = parts_pdf["partial"].to_numpy(dtype=np.float64)
     lf = flat.reshape(-1, fdim, fdim).sum(axis=0) + diag
+    return (lf + lf.T) / 2.0
+
+
+def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
+                         w: np.ndarray) -> np.ndarray:
+    """The driver tier's L_F from X and an undirected edge list given
+    as row positions (si, di) with weights w: L·X = deg∘X − W·X over
+    both orientations of each edge (the neighbour combine diffusion
+    runs, `matrix.segment_sum`), then one N×F² gemm, symmetrized."""
+    from ..functions.matrix import dst_segments, segment_sum
+
+    seg = dst_segments(np.concatenate([si, di]), np.concatenate([di, si]),
+                       np.concatenate([w, w]), len(X))
+    LX = seg.deg[:, None] * X
+    LX -= segment_sum(X, seg)
+    lf = X.T @ LX
     return (lf + lf.T) / 2.0
 
 

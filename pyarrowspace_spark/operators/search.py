@@ -41,7 +41,7 @@ from .lambda_index import lambda_kernel, lambda_for_vectors
 QUERY_BLOCK = 64
 
 
-def _fold_dot(terms):
+def fold_dot(terms):
     """Σ_j a_j·b_j over (a_j, b_j) array pairs as one sequential IEEE
     fold, one multiply and one add per step: Spark's
     aggregate(zip_with(a, b, x*y), 0.0, acc + x) bit for bit (a BLAS
@@ -146,7 +146,7 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
     QT = np.ascontiguousarray(Q.T)
     bq = index.sparkSession.sparkContext.broadcast({
         "qids": qids, "QT": QT, "lam": q_lam, "qb": q_buckets,
-        "qn": np.sqrt(_fold_dot((c, c) for c in QT)),
+        "qn": np.sqrt(fold_dot((c, c) for c in QT)),
         "lf": None if has_eg else lf})
 
     def kernel(batches):
@@ -157,7 +157,7 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
                 continue
             X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
             XT = np.ascontiguousarray(X.T)
-            xn = np.sqrt(_fold_dot((c, c) for c in XT))
+            xn = np.sqrt(fold_dot((c, c) for c in XT))
             if has_eg:
                 e = pdf["e_raw"].to_numpy(np.float64)
                 xl = t * (e / (e + t)) + (1.0 - t) * pdf["g"].to_numpy(
@@ -179,7 +179,7 @@ def _score_topk(index: DataFrame, lf: np.ndarray, tau: float, k: int,
                         valid |= ((d & (d - 1)) == 0 if probe_hamming1
                                   else d == 0)
                     qi, ri = np.nonzero(valid)
-                dots = _fold_dot((q[blk][qi], x[ri]) for q, x in zip(QT, XT))
+                dots = fold_dot((q[blk][qi], x[ri]) for q, x in zip(QT, XT))
                 den = qv["qn"][blk][qi] * xn[ri]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = dots / den

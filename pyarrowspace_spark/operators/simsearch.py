@@ -393,11 +393,33 @@ def ivf_centroids(items: DataFrame, n_centroids: int, seed: int = 42,
     return lloyd_kmeans(X, n_centroids, seed=seed)
 
 
+def nearest_cells(X: np.ndarray, C: np.ndarray,
+                  n_probe: int = 1) -> np.ndarray:
+    """(rows of X) × n_probe positions of the nearest rows of C (L2),
+    nearest first. The gemm distance form ||x||² − 2·x·c + ||c||² is
+    the formula the DuckDB oracle evaluates and the fix lloyd_kmeans
+    got in round 5: the naive broadcasted (batch, k, F) difference
+    tensor is ~1.2 GB of transient per 10k-row batch at k=40, F=384
+    (×32 concurrent tasks ≈ 39 GB, linear in k); this runs the same
+    argmin in BLAS with a (batch, k) scratch. The sort is stable, so FP
+    ties resolve to the lower position, as the oracle's
+    ORDER BY d2 ASC, cell ASC does."""
+    d2 = ((X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T)
+          + (C * C).sum(axis=1)[None, :])
+    return np.argsort(d2, axis=1, kind="stable")[:, :int(n_probe)]
+
+
 def ivf_assign(df: DataFrame, centroids: np.ndarray,
                feat_col: str = "features",
                out_col: str = "cell", n_probe: int = 1) -> DataFrame:
     """Assign each row to its `n_probe` nearest centroid cells
-    (L2), vectorized with a broadcast centroid matrix."""
+    (L2, `nearest_cells`), vectorized with a broadcast centroid matrix.
+
+    The cells column is a Python UDF's output. A filter Spark infers
+    over it (`size(cells) > 0` under a plain `explode`, `isnotnull` on
+    a join key taken from it) is pushed below the projection and
+    evaluates the UDF a second time. Read it with `explode_outer`,
+    which no inferred filter passes, or from a persisted frame."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -409,20 +431,8 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     # them, which the pandas_udf signature parser rejects
     @F.pandas_udf(ArrayType(IntegerType()))
     def cells(feats):
-        C = b_c.value
-        X = np.stack(feats.to_numpy())
-        # gemm distance form ||x||^2 - 2 x.c + ||c||^2 — the same
-        # formula the DuckDB oracle evaluates, and the same fix
-        # lloyd_kmeans got in round 5: the naive broadcasted
-        # (batch, k, F) difference tensor is ~1.2 GB of transient per
-        # 10k-row Arrow batch at k=40 F=384 (×32 concurrent tasks
-        # ≈ 39 GB of simultaneous scratch, linear in k); this runs
-        # the same argmin in BLAS with a (batch, k) scratch.
-        d2 = ((X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T)
-              + (C * C).sum(axis=1)[None, :])
-        # stable: FP ties resolve to the lower cell id, matching the
-        # oracle's ORDER BY d2 ASC, cell ASC
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :np_probe]
+        idx = nearest_cells(np.stack(feats.to_numpy()), b_c.value,
+                            np_probe)
         return pd.Series([row.tolist() for row in idx])
 
     return df.withColumn(out_col, cells(F.col(feat_col)))
@@ -446,13 +456,13 @@ def ivf_cosine_topk(
     it = ivf_assign(items.select(id_col, feat_col), centroids,
                     feat_col, "cells", n_probe=1)
     it = it.withColumn("_xn", V.l2_norm(feat_col)).select(
-        id_col, feat_col, "_xn", F.explode("cells").alias("cell"))
+        id_col, feat_col, "_xn", F.explode_outer("cells").alias("cell"))
     qu = ivf_assign(
         queries.select(query_id_col, F.col(feat_col).alias("q_features")),
         centroids, "q_features", "cells", n_probe=n_probe,
     ).withColumn("_qn", V.l2_norm("q_features")).select(
         query_id_col, "q_features", "_qn",
-        F.explode("cells").alias("cell"))
+        F.explode_outer("cells").alias("cell"))
     scored = (
         qu.join(it, "cell")
         .select(

@@ -9,7 +9,8 @@ plans share:
 
 - the scratch rule (`scratch`, `single_host_master`,
   `probe_worker_visible`, `spill_dir`) and the file modes (`modes`);
-- an up-front free-disk check (`check_free`);
+- an up-front free-disk check (`check_free`), and `same_device` for
+  budgets that write to both the scratch root and the spill dir;
 - the spool-dir lifecycle (`make_dir`, `seal`, `drop_dir`), registered
   in `matrix._SCRATCH_DIRS` so a dir no error path reached is still
   removed at interpreter exit;
@@ -133,6 +134,16 @@ def spill_dir(spark) -> str:
         p = (p or os.environ.get("SPARK_LOCAL_DIRS")
              or tempfile.gettempdir()).split(",")[0].strip()
     return p if os.path.isdir(p) else "/"
+
+
+def same_device(a: str, b: str) -> bool:
+    """True when paths `a` and `b` live on one filesystem, so a budget
+    must sum what it writes to both; True as well when either cannot
+    be stat'ed (summing is the conservative answer)."""
+    try:
+        return os.stat(a).st_dev == os.stat(b).st_dev
+    except OSError:
+        return True
 
 
 def check_free(root: str, need: int, op: str, what: str) -> None:

@@ -103,6 +103,41 @@ def test_lsh_refusal_writes_nothing(spark, monkeypatch, tmp_path):
     assert M._SCRATCH_DIRS == before
 
 
+def test_lsh_prices_spools_on_the_scratch_root(spark, monkeypatch,
+                                              tmp_path):
+    """The U spool, its parquet copy and the pair spools are priced on
+    the scratch root they are written under, the shuffle on the spill
+    dir: with the two on different disks and only the scratch root
+    short, the build refuses up front and names the scratch root."""
+    spill, root = tmp_path / "spill", tmp_path / "root"
+    spill.mkdir()
+    root.mkdir()
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    monkeypatch.setattr(spool, "spill_dir", lambda spark: str(spill))
+    monkeypatch.setattr(spool, "scratch", lambda spark, op: (str(root), True))
+    # both tmp dirs share one filesystem here; the build must treat
+    # them as two disks
+    monkeypatch.setattr(spool, "same_device", lambda a, b: False,
+                        raising=False)
+    usage = namedtuple("usage", "total used free")
+    monkeypatch.setattr(shutil, "disk_usage", lambda p: usage(
+        1 << 40, 0, 500_000 if str(p).startswith(str(root)) else 1 << 40))
+    with pytest.raises(RuntimeError, match="refused up front") as err:
+        K.knn_edges(_frame(spark, _rows(80)), GP, strategy="lsh")
+    assert f"'{root}' has" in str(err.value)
+    assert _lsh_dirs(root) == []
+    # with room on both disks the two-disk group loop builds the graph
+    # one disk builds
+    items = _frame(spark, _rows(80))
+    monkeypatch.setattr(shutil, "disk_usage",
+                        lambda p: usage(1 << 40, 0, 1 << 40))
+    two = sorted(K.knn_edges(items, GP, strategy="lsh").collect())
+    monkeypatch.setattr(spool, "same_device", lambda a, b: True)
+    assert two == sorted(K.knn_edges(items, GP, strategy="lsh").collect())
+    assert len(two) > 0
+
+
 def test_lsh_failure_mid_build_removes_spools(spark, monkeypatch,
                                               tmp_path):
     """A failure after the first band group has spooled its pairs
