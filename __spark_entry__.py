@@ -1397,12 +1397,13 @@ def q_build_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     # r11: the diffusion tier the energy build would run on THIS
     # corpus shape (driver 0 / distributed spool 1). Pure arithmetic
-    # over (N, F) + the env-backed ceiling; the oracle replays it.
+    # over (N, F, E) + the env-backed budget; the oracle replays it.
     from pyarrowspace_spark.operators import energy as EN
 
     nf = _items(spark, sf_dir).select(
         F.size("features").alias("nf")).first()["nf"]
-    plan = EN.diffuse_plan(int(gsrow["n_items"]), int(nf))
+    plan = EN.diffuse_plan(int(gsrow["n_items"]), int(nf),
+                           int(gsrow["n_edges"]))
     dp = spark.createDataFrame(
         [("diffuse_plan", "distributed_tier",
           float(plan["distributed_tier"]))],
@@ -3523,13 +3524,14 @@ FROM stats GROUP BY lang"""
     _lbl_tau = ("CASE " + " ".join(
         f"WHEN tau = {float(_t)!r} THEN '{_t:g}'" for _t in TAU_SWEEP)
         + " END")
-    # diffuse_plan twin constant: the env-backed tier ceiling
-    # energy.diffuse_plan reads, resolved at oracle-build time (the
-    # driver compares Spark and SQL in ONE process, so both sides see
-    # the same environment).
-    from pyarrowspace_spark.operators import energy as _EN
+    # diffuse_plan twin constants: the env-backed driver-tier budget
+    # and diffusion's N×F copy count that energy.diffuse_plan prices
+    # with, resolved at oracle-build time (the driver compares Spark
+    # and SQL in ONE process, so both sides see the same environment).
+    from pyarrowspace_spark.functions import matrix as _MX
 
-    _dp_ceil = int(_EN.DIFFUSE_BROADCAST_MAX_BYTES)
+    _dp_budget = int(_MX.DRIVER_BUDGET_BYTES)
+    _dp_copies = int(_MX.DIFFUSE_X_COPIES)
     # lsh_plan twin constants: the design constants are embedded so the
     # SQL replays knn.lsh_plan exactly
     from pyarrowspace_spark.operators import knn as _KNN
@@ -3581,7 +3583,9 @@ SELECT 'auto_params',
 FROM ({AUTO_PARAMS_SQL})
 UNION ALL
 SELECT 'diffuse_plan', 'distributed_tier',
-       (CASE WHEN n_items * nf * 8 <= {_dp_ceil} THEN 0.0
+       (CASE WHEN {_dp_copies} * n_items * nf * 8 + 384 * n_edges
+                  <= {_dp_budget}
+             THEN 0.0
              ELSE 1.0 END)::DOUBLE
 FROM (SELECT g.*, (SELECT len(embedding) FROM embeddings LIMIT 1) AS nf
       FROM ({_gs_sql}) g)

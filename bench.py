@@ -458,10 +458,11 @@ def main() -> None:
             # path, which the driver-tier corpora never exercise):
             # force it so the artifact carries a measured per-step
             # cost for the spool plan, not just the driver-tier loop.
+            from pyarrowspace_spark.functions import matrix as matrix_mod
             from pyarrowspace_spark.operators import energy as energy_mod
 
-            ceil0 = energy_mod.DIFFUSE_BROADCAST_MAX_BYTES
-            energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = 0
+            budget0 = matrix_mod.DRIVER_BUDGET_BYTES
+            matrix_mod.DRIVER_BUDGET_BYTES = 0
             try:
                 # r7 verdict #3: does step 2+ amortize? ONE instrumented
                 # 2-step run yields both numbers (step 1 pays the
@@ -490,7 +491,7 @@ def main() -> None:
                 extra["diffuse_plan"] = info.get("plan", info.get("tier"))
                 extra["diffuse_tier"] = info.get("tier")
             finally:
-                energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = ceil0
+                matrix_mod.DRIVER_BUDGET_BYTES = budget0
 
     extra["loadavg_end"] = [round(v, 2) for v in os.getloadavg()]
     # Write the final (non-partial) sidecar FIRST so the result

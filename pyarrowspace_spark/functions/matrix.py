@@ -8,6 +8,9 @@ each of N rows materializes an F-element Python list (~60 s at N=78k,
 F=384). The Arrow path (`toPandas`, enabled in session.py) moves the same data
 columnar and lands it as numpy in ~2 s: same contract, 30x less wall.
 
+`driver_fits` is the one driver-tier rule, and `collect_graph` the one
+collect of every driver pass (diffusion, L_F, the energy build).
+
 `positions_of` replaces per-edge Python dict lookups with a vectorized
 sorted-search: works for arbitrary int64 ids (including 60-bit hashes),
 no densification assumption. `dst_segments` + `segment_sum` are the
@@ -25,6 +28,7 @@ from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def collect_id_matrix(
@@ -114,6 +118,89 @@ def handoff_eligible(spark, nbytes: int) -> bool:
     if os.environ.get("SPARK_GRAFT_SCRATCH_DIR"):
         return True
     return spark.sparkContext.master.startswith("local")
+
+
+# The one driver-tier budget for `driver_price`. The default admits a
+# 78,580×384 build with 1.18M edges (≈1.4 GB), diffusion of the
+# 313,841×384 anchor with 5.9M edges (≈4.2 GB), and no 1M×384 build.
+DRIVER_BUDGET_BYTES = int(
+    os.environ.get("SPARK_GRAFT_DIFFUSE_BCAST_MAX", str(4 * 1024**3)))
+DIFFUSE_X_COPIES = 2  # diffusion holds X and one step's W·X
+
+
+def driver_price(n: int, nf: int, n_edges: int, x_copies: int = 4) -> int:
+    """Priced driver peak of a pass over N×F float64 items and E
+    undirected edges: `x_copies` N×F matrices plus 384·E bytes of edge
+    arrays (both orientations, their sort and segment indexes). L_F and
+    the energy driver pass hold 4 (X, the combine's output, L·X and a
+    gather or collect transient), diffusion `DIFFUSE_X_COPIES`; each
+    pass's traced peak is pinned to its price by a tracemalloc test."""
+    return int(x_copies) * int(n) * int(nf) * 8 + 384 * int(n_edges)
+
+
+def driver_fits(spark, n: int, nf: int, n_edges: int,
+                handoff: bool, x_copies: int = 4) -> bool:
+    """THE driver-tier rule, read by `energy.diffuse`,
+    `lambda_index.feature_laplacian` and `energy.build_energy` and by
+    nothing else: the pass's `driver_price` is within
+    DRIVER_BUDGET_BYTES (env `SPARK_GRAFT_DIFFUSE_BCAST_MAX`), and
+
+    - collecting X (N·F·8 bytes) survives spark.driver.maxResultSize (a
+      collect over it ABORTS the job; the budget alone is not
+      eligibility);
+    - collecting the edge list (E rows × 24 B) survives it too: on a
+      session whose limit barely admits X, a high-degree graph's edge
+      collect could still abort after the X collect succeeded;
+    - with `handoff` (the pass hands X back to Spark), the matrix can
+      go back to executors (`handoff_eligible`), or a non-local
+      deployment with no scratch dir would do the driver arithmetic and
+      then hit the boxed-row OOM refusal."""
+    x_bytes = int(n) * int(nf) * 8
+    return (driver_price(n, nf, n_edges, x_copies) <= DRIVER_BUDGET_BYTES
+            and collect_eligible(spark, x_bytes)
+            and collect_eligible(spark, int(n_edges) * 24)
+            and (not handoff or handoff_eligible(spark, x_bytes)))
+
+
+def census(items: DataFrame, edges: DataFrame,
+           feat_col: str = "features") -> "tuple[int, int, int]":
+    """(N, F, E) in ONE aggregate over both frames (one shuffle of
+    two-int rows): the item count, the longest feature array and the
+    edge count — the statistics `driver_fits` prices. (0, 0, E) for an
+    empty items frame."""
+    rows = (items.select(F.lit(0).alias("_t"),
+                         F.size(feat_col).alias("_f"))
+            .unionByName(edges.select(F.lit(1).alias("_t"),
+                                      F.lit(0).alias("_f")))
+            .groupBy("_t")
+            .agg(F.count("*").alias("_c"), F.max("_f").alias("_f"))
+            .collect())
+    got = {int(r["_t"]): r for r in rows}
+    n, nf = ((int(got[0]["_c"]), int(got[0]["_f"])) if 0 in got
+             else (0, 0))
+    return n, nf, int(got[1]["_c"]) if 1 in got else 0
+
+
+def collect_graph(items: DataFrame, edges: DataFrame,
+                  id_col: str = "item_id", feat_col: str = "features"):
+    """The one collect of every driver pass: (ids ascending, X's rows in
+    that order, src, dst, w), each edge as the row positions of its
+    endpoints, in the edge frame's order. X is collected once (Arrow
+    path) and sorted on the driver (a Spark orderBy would pay a range
+    exchange for it) by stacking its rows in id order, so no second
+    N×F copy is made; the E edge rows are collected once. Raises
+    ValueError on repeated ids and KeyError on an edge endpoint absent
+    from the items (`sorted_index`, `positions_of`)."""
+    pdf = items.select(id_col, feat_col).toPandas()
+    s_ids, order = sorted_index(pdf[id_col].to_numpy(dtype=np.int64))
+    X = np.stack(pdf[feat_col].to_numpy()[order]).astype(np.float64,
+                                                          copy=False)
+    del pdf, order
+    rows = np.arange(len(s_ids), dtype=np.int64)
+    epdf = edges.select("src", "dst", "weight").toPandas()
+    src = positions_of(epdf["src"].to_numpy(np.int64), s_ids, rows)
+    dst = positions_of(epdf["dst"].to_numpy(np.int64), s_ids, rows)
+    return s_ids, X, src, dst, epdf["weight"].to_numpy(np.float64)
 
 
 def matrix_to_frame(
@@ -370,6 +457,15 @@ def dst_segments(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
     if len(udst):
         deg[udst] = np.add.reduceat(w, starts)
     return DstSegments(src, w, udst, np.append(starts, len(dst)), deg)
+
+
+def sym_segments(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
+                 n: int) -> DstSegments:
+    """`dst_segments` of an undirected edge list over both orientations:
+    every edge (s, d, w), then every (d, s, w)."""
+    return dst_segments(np.concatenate([src, dst]),
+                        np.concatenate([dst, src]),
+                        np.concatenate([w, w]), n)
 
 
 def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:

@@ -1,20 +1,20 @@
 """Energy/diffusion pipeline (reference build_energy/search_energy,
 src/lib.rs:303-376; stage list doc src/lib.rs:305-318).
 
-Two build tiers. One census aggregate (N, F, E) picks the tier. Below
-`knn.EXACT_PATH_MAX_ROWS` items, when `driver_tier` holds (X and the
-edge list fit the driver, the rule `diffuse` reads), `build_energy`
-collects X once and the edge list once, runs stages 2-5 in numpy in the
-Spark flow's operation order, and hands back one frame: the items, as
-an eager-released parquet handoff (8 Spark jobs for a build plus the
-items and centroids counts, where the Spark flow ran ~42). Beyond it
-the Spark flow runs the stages below as distributed operators. λ,
-e_raw, τ, L_F and the assignment agree between the tiers.
+Two build tiers. One census aggregate (N, F, E) picks the tier by the
+one driver-tier rule, `functions.matrix.driver_fits`. When it holds,
+`build_energy` collects X once and the edge list once, runs stages 2-5
+in numpy in the Spark flow's operation order, and hands back one frame:
+the items, as an eager-released parquet handoff (8 Spark jobs for a
+build plus the items and centroids counts, where the Spark flow ran
+~42). Beyond it the Spark flow runs the stages below as distributed
+operators, where diffusion and L_F each apply the rule at their own
+price. λ, e_raw, τ, L_F and the assignment agree between the tiers.
 
 Stages (Spark flow):
   1. λτ-graph (shared with the standard build).
   2. Heat diffusion G12: X ← X − η·L·X for `steps` iterations, exact
-     fp64. Driver tier (chunked numpy segment-sum) while X fits; beyond
+     fp64. Driver tier (numpy segment-sum) under `driver_fits`; beyond
      it one distributed plan: an fp64 iterate spool on worker-visible
      scratch and one exchange-free gather job per step, written by
      tasks on `local*` masters and streamed through parquet on
@@ -59,11 +59,9 @@ from ..functions import stats
 from ..functions import matrix as matrix_mod
 from ..functions.matrix import (
     collect_id_matrix,
-    dst_segments,
     matrix_to_frame,
     positions_of,
     segment_sum,
-    sorted_index,
 )
 from ..params import EnergyParams, GraphParams
 from . import knn as knn_ops
@@ -85,18 +83,6 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-# Driver-tier ceiling for the diffusion matrix: below this many f64
-# bytes (N x F x 8) the whole loop runs as chunked numpy on the driver
-# (the narrow edge list is a few % of X's size, so it fits whenever X
-# does). The first formulation of this operator exploded features into
-# (node, fi, v) rows and joined them to the edges — an E x F-row
-# shuffle per step, ~90 GB/step at N=313k, F=384, which filled the
-# bench host's disk. Beyond the ceiling `_diffuse_spool` runs: one
-# exchange-free gather job per step over a shared fp64 iterate spool.
-DIFFUSE_BROADCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DIFFUSE_BCAST_MAX", str(4 * 1024**3))
-)
-
 # Set by `diffuse` on each invocation: the chosen tier, the spool
 # write mode and the symmetrized edge count. Instrumentation
 # breadcrumb for the measurement harness; `build_energy` copies it
@@ -105,42 +91,22 @@ DIFFUSE_BROADCAST_MAX_BYTES = int(
 _LAST_DIFFUSE_INFO: dict | None = None
 
 
-def diffuse_plan(n_items: int, nf: int) -> dict:
+def diffuse_plan(n_items: int, nf: int, n_edges: int) -> dict:
     """Self-description of the tier `diffuse` chooses for a corpus of
-    this shape: the size-based rule N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES
-    → driver tier (0), else the distributed spool tier (1).
+    this shape: the byte part of `matrix.driver_fits` at diffusion's
+    price → driver tier (0), else the distributed spool tier (1).
 
-    Pure arithmetic over (N, F) and the env-backed ceiling, so the
+    Pure arithmetic over (N, F, E) and the env-backed budget, so the
     DuckDB oracle can replay it row-for-row (`build_diagnostics`
     section 'diffuse_plan'). Runtime eligibility (driver maxResultSize
     / scratch handoff) can additionally demote the driver tier on
     constrained sessions; the authoritative record of what a build
     actually ran is `EnergyIndex.diffusion_info`.
     """
-    driver = int(n_items) * int(nf) * 8 <= DIFFUSE_BROADCAST_MAX_BYTES
+    driver = (matrix_mod.driver_price(n_items, nf, n_edges,
+                                      matrix_mod.DIFFUSE_X_COPIES)
+              <= matrix_mod.DRIVER_BUDGET_BYTES)
     return {"distributed_tier": 0 if driver else 1}
-
-
-def driver_tier(spark, n: int, nf: int, n_edges: int) -> bool:
-    """The driver-tier rule `diffuse` and `build_energy` share. X
-    (N·F·8 bytes) must be under DIFFUSE_BROADCAST_MAX_BYTES, and:
-
-    - collecting X must survive spark.driver.maxResultSize (a collect
-      over it ABORTS the job; the byte ceiling alone is not
-      eligibility);
-    - the result must be able to go BACK to executors (local master,
-      shared scratch dir, or small enough for the portable fallback),
-      or a non-local deployment with no scratch dir would do all the
-      driver-side arithmetic and then hit the boxed-row OOM refusal;
-    - collecting the symmetrized edge list (2·E rows × 24 B + framing)
-      must survive maxResultSize too: on a session whose limit barely
-      admits X, a high-degree graph's edge collect could still abort
-      after the X collect succeeded."""
-    x_bytes = int(n) * int(nf) * 8
-    return (x_bytes <= DIFFUSE_BROADCAST_MAX_BYTES
-            and matrix_mod.collect_eligible(spark, x_bytes)
-            and matrix_mod.handoff_eligible(spark, x_bytes)
-            and matrix_mod.collect_eligible(spark, int(n_edges) * 2 * 24))
 
 
 # worker-side (pid-scoped) cache of the current step's X-spool mmap —
@@ -321,13 +287,8 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         raise RuntimeError(
             f"diffuse: items returned {len(ids_arr)} ids but counted "
             f"{n} rows — the items frame is not deterministic")
-    s_ids = np.sort(ids_arr)
-    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
-    if dup.size:
-        # a scatter by id would silently overwrite rows
-        raise ValueError(
-            f"diffuse: {id_col} must be unique; {len(np.unique(dup))} "
-            f"ids repeat (e.g. {int(dup[0])})")
+    # a scatter by id would silently overwrite repeated ids: raise
+    s_ids, _ = matrix_mod.sorted_index(ids_arr)
     d = spool.make_dir(root, "pyarrowspace-diffspool-")
     try:
         out = _spool_steps(items, edges, eta, steps, id_col, feat_col,
@@ -522,9 +483,9 @@ def _diffuse_steps(X: np.ndarray, seg, eta: float,
     η·W·X, with W·X one neighbour combine (`matrix.segment_sum`) over
     the directed edges grouped by `matrix.dst_segments`.
 
-    X is updated IN PLACE and returned: the callers own it, and the
-    step then holds X and W·X only, two N×F arrays, where rebinding a
-    new iterate each step held four (the caller's X among them)."""
+    X is updated IN PLACE and returned: the callers own it, and a step
+    holds X and W·X only (`matrix.DIFFUSE_X_COPIES`); W·X is dropped
+    before the next step allocates its own."""
     eta_f = float(eta)
     keep = (1.0 - eta_f * seg.deg)[:, None]
     for _ in range(int(steps)):
@@ -532,51 +493,27 @@ def _diffuse_steps(X: np.ndarray, seg, eta: float,
         wx *= eta_f
         X *= keep
         X += wx
+        del wx
     return X
 
 
-def _diffuse_driver(
-    items: DataFrame, edges: DataFrame, eta: float, steps: int,
-    id_col: str, feat_col: str,
-    out_matrix: "list | None" = None,
-) -> DataFrame:
-    """Driver-tier diffusion: X and the narrow edge list both fit on
-    the driver below the tier ceiling (same policy as lambda_index's
-    driver-BLAS tier), so the whole multi-step loop is numpy — each
-    step one neighbour combine W·X by `matrix.segment_sum`, the helper
-    the driver-tier feature Laplacian shares — with no per-step
-    broadcast/collect round trip.
-    A first cut of this tier round-tripped X through a distributed
-    kernel every step; the 1 GB broadcast + toPandas + re-stack per
-    step cost ~2 min/step at N=313k while the arithmetic itself is
-    ~20 s — the round trip WAS the cost, so it was removed.
+def _diffuse_driver(items: DataFrame, edges: DataFrame, eta: float,
+                    steps: int, id_col: str, feat_col: str) -> DataFrame:
+    """Driver-tier diffusion: X and the edge list are collected once
+    (`matrix.collect_graph`, the collect every driver pass shares) and
+    the whole multi-step loop is numpy — each step one neighbour combine
+    W·X by `matrix.segment_sum`, the helper the driver-tier feature
+    Laplacian shares — with no per-step broadcast/collect round trip.
 
-    `out_matrix`: pass a list and the tier appends the diffused
-    (sorted_ids, X) pair before handing the frame back — callers that
-    immediately need the matrix again (build_energy's Laplacian spool
-    and quantizer training both collected the SAME matrix straight
-    back from the frame, r13-opt) reuse it driver-side for free."""
+    `diffuse` is a public operator, so the "endpoints come from these
+    items" guarantee does not hold: an edge endpoint absent from items
+    raises KeyError (`positions_of`) instead of gathering the wrong row
+    (ADVICE r5), and a repeated id raises ValueError."""
     spark = items.sparkSession
-    # Collect unsorted and sort driver-side: the old
-    # `items.orderBy(id_col)` paid a full N×F range exchange + sort
-    # just to order the collect; one argsort over the collected ids is
-    # the same total order (ids are unique) for ~zero cost.
-    ids, X = collect_id_matrix(items, id_col, feat_col)
-    perm = np.argsort(ids, kind="stable")
-    ids, X = ids[perm], np.ascontiguousarray(X[perm])
-    epdf = _symmetrize(edges).toPandas()
-    # positions_of raises KeyError on any edge endpoint absent from
-    # items — `diffuse` is a public operator, so the "endpoints come
-    # from these items" guarantee only holds for build_energy's
-    # internal call; a bare searchsorted would silently gather the
-    # WRONG row and corrupt every step (ADVICE r5).
-    sids, order = sorted_index(ids)
-    src = positions_of(epdf["src"].to_numpy(np.int64), sids, order)
-    dst = positions_of(epdf["dst"].to_numpy(np.int64), sids, order)
-    seg = dst_segments(src, dst, epdf["weight"].to_numpy(np.float64),
-                       len(ids))
-    del epdf, src, dst
-    X = _diffuse_steps(X, seg, eta, steps)
+    ids, X, src, dst, w = matrix_mod.collect_graph(items, edges, id_col,
+                                                   feat_col)
+    X = _diffuse_steps(X, matrix_mod.sym_segments(src, dst, w, len(ids)),
+                       eta, steps)
     # Hand the diffused matrix back as a parquet scan, NOT a
     # createDataFrame: the latter embeds X in task binaries (12 MB
     # task-size warnings at 78k×384) and — under a non-Arrow session
@@ -585,23 +522,21 @@ def _diffuse_driver(
     # eager_release: the scan is absorbed into Spark block storage and
     # its scratch files deleted at once, so a session building many
     # indexes doesn't accumulate one N×F parquet per diffuse call.
-    if out_matrix is not None:
-        out_matrix.append((ids, X))
-    return matrix_to_frame(spark, ids, X, id_col, feat_col,
-                           eager_release=True)
+    # parts: one file per shuffle partition, not ⌈N/32,768⌉ scan tasks.
+    return matrix_to_frame(
+        spark, ids, X, id_col, feat_col, eager_release=True,
+        parts=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
 
 
 def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
             id_col: str = "item_id", feat_col: str = "features",
-            step_times: "list[float] | None" = None,
-            out_matrix: "list | None" = None) -> DataFrame:
+            step_times: "list[float] | None" = None) -> DataFrame:
     """G12 heat diffusion, `steps` iterations, exact fp64 on every
     tier. Physical tiers:
 
-    - driver tier (`driver_tier`: N·F·8 ≤ DIFFUSE_BROADCAST_MAX_BYTES,
-      default 4 GiB ≈ 1.4M items at F=384, and X and the edge list fit
-      the driver's result limit): the whole loop is chunked numpy
-      gather/segment-sum on the driver.
+    - driver tier, when `matrix.driver_fits` holds at diffusion's price
+      with the handoff check: the whole loop is numpy segment-sums on
+      the driver.
     - distributed tier beyond (`_diffuse_spool`): the iterate lives in
       one id-sorted fp64 spool per step on a worker-visible scratch
       dir, edges are persisted pre-partitioned by dst, and each step is
@@ -623,17 +558,14 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     """
     if int(steps) <= 0:
         return items.select(id_col, feat_col)
-    row = items.select(F.size(feat_col).alias("f")).first()
-    if row is None:  # empty corpus: diffusion is the identity
+    n, nf, n_edges = matrix_mod.census(items, edges, feat_col)
+    if n == 0:  # empty corpus: diffusion is the identity
         return items.select(id_col, feat_col)
-    nf = int(row["f"])
-    n = items.count()
-    # edges.count() is cheap: a narrow frame, usually already persisted
-    if driver_tier(items.sparkSession, n, nf, edges.count()):
+    if matrix_mod.driver_fits(items.sparkSession, n, nf, n_edges, True,
+                              matrix_mod.DIFFUSE_X_COPIES):
         global _LAST_DIFFUSE_INFO
         _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
-        return _diffuse_driver(items, edges, eta, steps, id_col, feat_col,
-                               out_matrix=out_matrix)
+        return _diffuse_driver(items, edges, eta, steps, id_col, feat_col)
     return _diffuse_spool(items, edges, eta, steps, id_col, feat_col,
                           nf, n, step_times)
 
@@ -646,7 +578,8 @@ def trim_edges(edges: DataFrame, trim_quantile: float,
     oracle-replayable — below the ceiling, Greenwald-Khanna approx
     beyond, where an exact per-distinct-double state over billions of
     edge weights would OOM the merging task. `n_edges` is counted if
-    not supplied (cheap on the persisted edge list)."""
+    not supplied (cheap on the persisted edge list). No edges: the
+    percentile is NULL and the edges come back as they are."""
     if trim_quantile <= 0:
         return edges
     if n_edges is None:
@@ -655,6 +588,8 @@ def trim_edges(edges: DataFrame, trim_quantile: float,
         stats.percentile_expr("weight", float(trim_quantile),
                               n_edges).alias("c")
     ).collect()[0]["c"]
+    if cut is None:
+        return edges
     return edges.filter(F.col("weight") >= F.lit(float(cut)))
 
 
@@ -814,25 +749,6 @@ def _split_children(M: np.ndarray, split_tau: float) -> "np.ndarray | None":
     return lloyd_kmeans(M, 2, init=init, iters=10)
 
 
-def _census(base: DataFrame, edges: DataFrame) -> "tuple[int, int, int]":
-    """(N, F, E) of a build in ONE aggregate over both frames (one
-    shuffle of two-int rows): the item count, the longest feature
-    array and the edge count, which the tier rule, the percentile
-    tiers and the λ pass read. An empty items frame raises."""
-    rows = (base.select(F.lit(0).alias("_t"),
-                        F.size("features").alias("_f"))
-            .unionByName(edges.select(F.lit(1).alias("_t"),
-                                      F.lit(0).alias("_f")))
-            .groupBy("_t")
-            .agg(F.count("*").alias("_c"), F.max("_f").alias("_f"))
-            .collect())
-    got = {int(r["_t"]): r for r in rows}
-    if 0 not in got:
-        raise ValueError("build_energy: the items frame is empty")
-    return (int(got[0]["_c"]), int(got[0]["_f"]),
-            int(got[1]["_c"]) if 1 in got else 0)
-
-
 def _build_energy_driver(base: DataFrame, edges: DataFrame,
                          eparams: EnergyParams, gparams: GraphParams,
                          k_tokens: int) -> EnergyIndex:
@@ -848,18 +764,8 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     # row block of the λ and assignment passes: lambda_kernel holds ~7
     # block×F temporaries, which a bounded block keeps small at any N
     blk = 1024
-    ids, X = collect_id_matrix(base, "item_id", "features")
-    s_ids, order = sorted_index(ids)
-    if np.any(order[1:] < order[:-1]):
-        X = X[order]
-    del ids, order
+    s_ids, X, src, dst, w = matrix_mod.collect_graph(base, edges)
     n = len(s_ids)
-    rows = np.arange(n, dtype=np.int64)
-    epdf = edges.select("src", "dst", "weight").toPandas()
-    src = positions_of(epdf["src"].to_numpy(np.int64), s_ids, rows)
-    dst = positions_of(epdf["dst"].to_numpy(np.int64), s_ids, rows)
-    w = epdf["weight"].to_numpy(np.float64)
-    del epdf
 
     # G13a: the trim cut `trim_edges` takes, on the untrimmed weights
     cut = (stats.exact_percentile(w, eparams.trim_quantile)
@@ -868,15 +774,11 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     kept_edges = (edges.filter(F.col("weight") >= F.lit(cut))
                   if cut is not None else edges).persist()
 
-    # G12 on the untrimmed graph: both orientations in the order
-    # `_diffuse_driver` collects `_symmetrize(edges)`
+    # G12 on the untrimmed graph, as `_diffuse_driver` runs it
     dinfo = None
     if eparams.steps > 0:
-        seg = dst_segments(np.concatenate([src, dst]),
-                           np.concatenate([dst, src]),
-                           np.concatenate([w, w]), n)
-        X = _diffuse_steps(X, seg, eparams.eta, eparams.steps)
-        del seg
+        X = _diffuse_steps(X, matrix_mod.sym_segments(src, dst, w, n),
+                           eparams.eta, eparams.steps)
         global _LAST_DIFFUSE_INFO
         _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
         dinfo = dict(_LAST_DIFFUSE_INFO)
@@ -969,19 +871,23 @@ def build_energy(
 
     Two tiers, chosen after one census aggregate (N, F, E):
 
-    - driver tier, when N ≤ knn.EXACT_PATH_MAX_ROWS and `driver_tier`
-      holds (the rule `diffuse` reads): X and the edge list are each
+    - driver tier, when `matrix.driver_fits` (the one driver-tier
+      rule) holds with the handoff check: X and the edge list are each
       collected once, trim cut, diffusion, L_F, e_raw/g, τ, λ, the
       quantizer, the assignment, the centroid moments and the split all
       run in numpy (`_build_energy_driver`), and the items go back as
       one eager-released parquet handoff. λ, e_raw, τ, L_F and the
       assignment equal the Spark flow's.
-    - the Spark flow beyond: `trim_edges`, `diffuse`,
-      `lambda_index.feature_laplacian` and `with_energy_components`,
-      the ivf_assign pass and the grouped centroid kernel.
+    - the Spark flow beyond: `trim_edges`, `diffuse` and
+      `lambda_index.feature_laplacian` (each applies the rule at its
+      own price), `with_energy_components`, the ivf_assign pass and the
+      grouped centroid kernel. Each intermediate cache is dropped once
+      every frame that reads it is materialized.
 
-    Raises ValueError on an empty items frame, on duplicate ids (driver
-    tier) and on a collapsed spectrum (median energy ≤ 0)."""
+    The index holds three caches: its items, its centroids and its
+    (trimmed) edges. Raises ValueError on an empty items frame, on
+    duplicate ids (driver tier) and on a collapsed spectrum (median
+    energy ≤ 0)."""
     base = items.select(F.col(id_col).alias("item_id"),
                         F.col(feat_col).alias("features"))
     # same single-row-group scan-parallelism guard as the standard
@@ -1003,19 +909,30 @@ def build_energy(
 
         base = base.withColumn("features", V.l2_normalize("features"))
 
-    if edges is None:
+    own_edges = edges is None
+    if own_edges:
         base = base.persist()
         edges = knn_ops.knn_edges(base, gparams).persist()
     else:
         # caller-owned frame (usually already persisted by the standard
         # build) — re-persisting it would double-cache the same plan
         edges = edges.select("src", "dst", "weight")
-    n_items, n_features, n_edges = _census(base, edges)
+    # materializes base and our edges, if persisted
+    n_items, n_features, n_edges = matrix_mod.census(base, edges)
+    if n_items == 0:
+        raise ValueError("build_energy: the items frame is empty")
     k_tokens = int(eparams.optical_tokens or 40)
-    if (n_items <= knn_ops.EXACT_PATH_MAX_ROWS
-            and driver_tier(items.sparkSession, n_items, n_features,
-                            n_edges)):
-        return _build_energy_driver(base, edges, eparams, gparams, k_tokens)
+    if matrix_mod.driver_fits(items.sparkSession, n_items, n_features,
+                              n_edges, handoff=True):
+        idx = _build_energy_driver(base, edges, eparams, gparams, k_tokens)
+        if own_edges:
+            # the items went back as a handoff; the lazily trimmed
+            # edges are the kNN graph's last reader
+            if idx.edges is not edges:
+                idx.edges.count()
+                edges.unpersist()
+            base.unpersist()
+        return idx
     if not base.is_cached:
         base = base.persist()
 
@@ -1026,17 +943,8 @@ def build_energy(
     kept_edges = trim_edges(edges, eparams.trim_quantile,
                             n_edges=n_edges).persist()
 
-    # G12: diffusion smoothing (reads the now-cached edges). The
-    # driver tier hands the diffused (ids, X) matrix back via
-    # out_matrix so the Laplacian spool and the quantizer below reuse
-    # it instead of re-collecting the same N×F doubles from the frame
-    # (two full toPandas passes saved per build, r13-opt; row order is
-    # the id-sorted order those collects returned anyway, so every
-    # value is bit-identical).
-    _xy_out: list = []
-    diffused = diffuse(base, edges, eparams.eta, eparams.steps,
-                       out_matrix=_xy_out).persist()
-    xy = _xy_out[0] if _xy_out else None
+    # G12: diffusion smoothing (reads the now-cached edges)
+    diffused = diffuse(base, edges, eparams.eta, eparams.steps).persist()
     # snapshot how the stage ran (tier/plan/write mode) for the index's
     # self-description before any other diffuse call overwrites it
     dinfo = dict(_LAST_DIFFUSE_INFO) if (
@@ -1045,11 +953,16 @@ def build_energy(
     # λ/e on the *diffused* space — one kernel pass for the
     # τ-independent components, τ-synthesis + blend JVM-side (same
     # single-pass pattern as the standard builder).
-    lf = lam_ops.feature_laplacian(diffused, kept_edges, n_features,
-                                   x_matrix=xy)
+    lf = lam_ops.feature_laplacian(diffused, kept_edges, n_features)
+    # its census materialized diffused and kept_edges, the last readers
+    # of base and of our untrimmed edges
+    if own_edges and kept_edges is not edges:
+        edges.unpersist()
+    base.unpersist()
     comp = lam_ops.with_energy_components(diffused, lf).persist()
     tau_row = comp.select(
         stats.percentile_expr("_ec.e_raw", 0.5, n_items).alias("m")).first()
+    diffused.unpersist()
     tau_synth = _checked_tau(tau_row["m"])
     indexed = comp.select(
         "*", F.col("_ec.e_raw").alias("e_raw")
@@ -1066,21 +979,13 @@ def build_energy(
     # argmin), so the plan scales exactly like IVF.
     from .simsearch import deterministic_cap, ivf_assign, lloyd_kmeans
 
-    if xy is not None and n_items <= COMPRESS_MAX_TRAIN:
-        # below the training cap, deterministic_cap is the identity
-        # and orderBy(item_id) is exactly the id-sorted diffused
-        # matrix already on the driver — same rows, same order, same
-        # doubles, one full collect saved
-        x_train = xy[1]
-    else:
-        train = deterministic_cap(indexed.select("item_id", "features"),
-                                  "item_id", COMPRESS_MAX_TRAIN,
-                                  n_rows=n_items)
-        _, x_train = collect_id_matrix(train.orderBy("item_id"),
-                                       "item_id", "features")
+    train = deterministic_cap(indexed.select("item_id", "features"),
+                              "item_id", COMPRESS_MAX_TRAIN, n_rows=n_items)
+    _, x_train = collect_id_matrix(train.orderBy("item_id"),
+                                   "item_id", "features")
+    comp.unpersist()  # the collect scanned, so materialized, indexed
     centers0 = lloyd_kmeans(x_train, k_tokens, seed=42)
-    del x_train, xy
-    _xy_out.clear()  # release the driver-resident N×F matrix
+    del x_train
     # Assignment as a column on `indexed` directly (r13-opt): the old
     # shape computed `assigned` on a SELECT of indexed and joined it
     # back on item_id — a full N-row self-join (two exchanges + an
@@ -1105,6 +1010,7 @@ def build_energy(
     # (`stats.exact_percentile`), bit for bit, so a centroid landing
     # exactly on the cut compares as the oracle's does.
     crows = centroids.select("centroid_id", "disp_c").collect()
+    indexed.unpersist()  # the kernel read, so materialized, with_c
     split_cut = stats.exact_percentile([r["disp_c"] for r in crows],
                                        eparams.split_quantile)
     to_split = sorted(
@@ -1196,16 +1102,17 @@ def build_energy(
             with_c0.unpersist()
             child_attrs = _centroid_attrs(
                 with_c.filter(F.col("centroid_id") >= F.lit(k_tokens)))
+            cents0 = centroids
             centroids = (
-                centroids.filter(~F.col("centroid_id").isin(split_ids))
-                .unionByName(child_attrs)
+                cents0.filter(~F.col("centroid_id").isin(split_ids))
+                .unionByName(child_attrs).persist()
             )
+            centroids.count()
+            cents0.unpersist()
 
     return EnergyIndex(
-        # with_c is already persisted above (a second .persist() here
-        # only logged "Asked to cache already cached data")
         items=with_c,
-        centroids=centroids.persist(),
+        centroids=centroids,
         edges=kept_edges,
         feature_laplacian=lf,
         graph_params=gparams,

@@ -24,9 +24,10 @@ Build-time τ uses Median synthesis: τ_synth = median(e_raw) over items
 suggested_eps.md:3).
 
 Scale design: L_F is F×F (384² ≈ 1.2 MB) — tiny. `feature_laplacian`
-has two tiers: driver numpy while X fits the driver, else one spool
-plan — X written once, exact fp64 and id-sorted, to scratch every
-executor reads, and per-partition F×F partials gathered from it over
+has two tiers: driver numpy when the one driver-tier rule
+(`functions.matrix.driver_fits`) holds, else one spool plan — X
+written once, exact fp64 and id-sorted, to scratch every executor
+reads, and per-partition F×F partials gathered from it over
 the edge list (mapInPandas → driver sum); no vector is shuffled. L_F is
 then broadcast back for the per-item λ pass, which is a narrow,
 Arrow-batched vectorized map. No N×N materialization anywhere.
@@ -54,17 +55,20 @@ def feature_laplacian(
     id_col: str = "item_id",
     feat_col: str = "features",
     x_source: dict | None = None,
-    x_matrix: "tuple[np.ndarray, np.ndarray] | None" = None,
 ) -> np.ndarray:
     """Compute L_F = Xᵀ (D - W) X.
 
     Decomposition:  L_F = Σ_i deg_i·x_i x_iᵀ  -  Σ_{(i,j)∈E} w_ij·(x_i x_jᵀ + x_j x_iᵀ)
 
-    Two physical tiers, one logical contract:
+    Two physical tiers, one logical contract; one census aggregate
+    (N, F, E) picks the tier. The census scans `edges` in full before
+    either tier reads it again, so pass a persisted edge frame: an
+    unpersisted plan (a fresh kNN graph, say) is computed twice.
 
-    - driver tier (N ≤ EXACT_PATH_MAX_ROWS and X fits
-      spark.driver.maxResultSize): driver-side numpy (the exact kNN
-      scan already collects X to broadcast it) as Xᵀ·(deg∘X − W·X): one
+    - driver tier, when `matrix.driver_fits` holds without the handoff
+      check (the one driver-tier rule; nothing goes back to Spark):
+      X and the edge list collected once (`matrix.collect_graph`), then
+      driver-side numpy as Xᵀ·(deg∘X − W·X): one
       neighbour combine W·X over both orientations of the edge list
       (`matrix.segment_sum`, E·F flops, one N×F output) and one N×F²
       gemm. Memory is O(N·F) whatever the edge count — X, deg∘X − W·X
@@ -81,8 +85,7 @@ def feature_laplacian(
       vector is shuffled; communication is #partitions × F² doubles,
       independent of N. The diagonal term is one chunked driver gemm
       over the spool, with degrees from one SQL aggregate.
-      The spool's source, first that applies: the `x_matrix` handoff
-      (id-sorted (ids, X) already on the driver); the proven corpus
+      The spool's source, first that applies: the proven corpus
       parquet `x_source` (`spool.parquet_scan_source`), streamed; a
       collect when X fits spark.driver.maxResultSize; else a
       task-written parquet copy of `items` in the spool dir, streamed.
@@ -95,44 +98,23 @@ def feature_laplacian(
     directory), and ValueError on duplicate ids. Its spool dir is
     removed on every path.
     """
-    from .knn import EXACT_PATH_MAX_ROWS
+    from ..functions import matrix
 
-    from ..functions.matrix import (collect_eligible, collect_id_matrix,
-                                    positions_of, sorted_index)
-
-    n = items.count()
-    # The driver tier collects X (N·F doubles): a collect over
-    # spark.driver.maxResultSize ABORTS the job rather than spilling,
-    # so the row ceiling alone isn't sufficient eligibility — the
-    # session's own result limit is.
-    x_fits = collect_eligible(items.sparkSession, n * n_features * 8)
-    # `x_matrix` = (id-sorted ids, X in that order) already on the
-    # driver — build_energy's diffusion tier just PRODUCED this exact
-    # matrix, and re-collecting it from the frame it was handed back
-    # as cost a full N×F toPandas per consumer. Row order is identical
-    # to what a collect produces once sorted, so every downstream value
-    # is bit-identical.
-    if x_matrix is not None and len(x_matrix[0]) != n:
-        x_matrix = None  # stale/mismatched handoff: fall back safely
-    if n <= EXACT_PATH_MAX_ROWS and x_fits:
-        if x_matrix is not None:
-            ids_arr, X = x_matrix
-        else:
-            ids_arr, X = collect_id_matrix(items, id_col, feat_col)
-        s_ids, order = sorted_index(ids_arr)
-        e_pdf = edges.select("src", "dst", "weight").toPandas()
-        si = positions_of(e_pdf["src"].to_numpy(dtype=np.int64), s_ids, order)
-        di = positions_of(e_pdf["dst"].to_numpy(dtype=np.int64), s_ids, order)
-        w = e_pdf["weight"].to_numpy(dtype=np.float64)
-        del e_pdf
+    spark = items.sparkSession
+    n, _, n_edges = matrix.census(items, edges, feat_col)
+    if matrix.driver_fits(spark, n, n_features, n_edges, handoff=False):
+        _, X, si, di, w = matrix.collect_graph(items, edges, id_col,
+                                               feat_col)
         return laplacian_from_edges(X, si, di, w)
 
     op = "feature_laplacian: the spool tier"
     fdim = n_features
-    root, _ = spool.scratch(items.sparkSession, op)
-    # the parquet copy is the source only where X is neither handed
-    # over nor collectable; a failed corpus stream may fall to it too
-    copy = x_matrix is None and not x_fits
+    root, _ = spool.scratch(spark, op)
+    # A collect over spark.driver.maxResultSize ABORTS the job rather
+    # than spilling; where X is not collectable the parquet copy is the
+    # source, and a failed corpus stream may fall to it too.
+    x_fits = matrix.collect_eligible(spark, n * fdim * 8)
+    copy = not x_fits
     what = ("N·F·8 for the spool and N·F·8 for the parquet copy" if copy
             else "N·F·8")
     spool.check_free(root, n * fdim * 8 * (2 if copy else 1) + (64 << 20),
@@ -140,7 +122,7 @@ def feature_laplacian(
     d = spool.make_dir(root, "pyarrowspace-lfx-")
     try:
         s_ids = _write_x_spool(items, id_col, feat_col, n, fdim, x_source,
-                               x_matrix, x_fits, d)
+                               x_fits, d)
         spool.seal(d)
         # Diagonal term Σ deg_i·x_i x_iᵀ: ONE driver gemm over the
         # spool, not a per-partition fold — each partition touches
@@ -156,7 +138,7 @@ def feature_laplacian(
         ).toPandas()
         deg = np.zeros(n, dtype=np.float64)
         if len(deg_pdf):
-            deg[positions_of(deg_pdf["_n"].to_numpy(dtype=np.int64), s_ids,
+            deg[matrix.positions_of(deg_pdf["_n"].to_numpy(dtype=np.int64), s_ids,
                              np.arange(n, dtype=np.int64))] = (
                 deg_pdf["_d"].to_numpy(dtype=np.float64))
         Xs = np.load(os.path.join(d, "x.npy"), mmap_mode="r")
@@ -197,10 +179,9 @@ def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
     as row positions (si, di) with weights w: L·X = deg∘X − W·X over
     both orientations of each edge (the neighbour combine diffusion
     runs, `matrix.segment_sum`), then one N×F² gemm, symmetrized."""
-    from ..functions.matrix import dst_segments, segment_sum
+    from ..functions.matrix import segment_sum, sym_segments
 
-    seg = dst_segments(np.concatenate([si, di]), np.concatenate([di, si]),
-                       np.concatenate([w, w]), len(X))
+    seg = sym_segments(si, di, w, len(X))
     LX = seg.deg[:, None] * X
     LX -= segment_sum(X, seg)
     lf = X.T @ LX
@@ -209,7 +190,6 @@ def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
 
 def _write_x_spool(items: DataFrame, id_col: str, feat_col: str, n: int,
                    fdim: int, x_source: dict | None,
-                   x_matrix: "tuple[np.ndarray, np.ndarray] | None",
                    x_fits: bool, d: str) -> np.ndarray:
     """Write X (fp64, id-sorted) to `d`/x.npy and its sorted ids to
     `d`/sids.npy from the first source that applies (see
@@ -219,12 +199,11 @@ def _write_x_spool(items: DataFrame, id_col: str, feat_col: str, n: int,
 
     x_path = os.path.join(d, "x.npy")
     s_ids = None
-    if x_matrix is None and x_source is not None:
+    if x_source is not None:
         s_ids = spool.from_parquet(x_source["files"], x_source["id_col"],
                                    x_source["feat_col"], n, fdim, x_path)
-    if s_ids is None and (x_matrix is not None or x_fits):
-        ids, X = (x_matrix if x_matrix is not None
-                  else collect_id_matrix(items, id_col, feat_col))
+    if s_ids is None and x_fits:
+        ids, X = collect_id_matrix(items, id_col, feat_col)
         s_ids, order = sorted_index(ids)
         out = np.lib.format.open_memmap(x_path, mode="w+",
                                         dtype=np.float64, shape=(n, fdim))

@@ -407,10 +407,11 @@ def _run_dd_phase(spark, big, idx, out: dict, scratch: str) -> None:
     dd_steps = int(os.environ.get("M1M_DIFFUSE_DIST_STEPS", "0"))
     if dd_steps <= 0:
         return
+    from pyarrowspace_spark.functions import matrix as matrix_mod
     from pyarrowspace_spark.operators import energy as energy_mod
 
-    ceil0 = energy_mod.DIFFUSE_BROADCAST_MAX_BYTES
-    energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = 0
+    budget0 = matrix_mod.DRIVER_BUDGET_BYTES
+    matrix_mod.DRIVER_BUDGET_BYTES = 0
     try:
         st: list[float] = []
         # reset the per-phase peak to CURRENT usage so the reported
@@ -428,7 +429,7 @@ def _run_dd_phase(spark, big, idx, out: dict, scratch: str) -> None:
             out["diffuse_dist_n_sym_edges"] = info["n_sym_edges"]
             out["diffuse_dist_plan"] = info.get("plan")
     finally:
-        energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = ceil0
+        matrix_mod.DRIVER_BUDGET_BYTES = budget0
 
 
 def main() -> None:

@@ -139,10 +139,11 @@ def main() -> None:
     dump_plan("energy_build_centroids", eidx.centroids)
 
     # --- phase 3: forced-distributed 2-step diffusion ---
+    from pyarrowspace_spark.functions import matrix as matrix_mod
     from pyarrowspace_spark.operators import energy as energy_mod
 
-    ceil0 = energy_mod.DIFFUSE_BROADCAST_MAX_BYTES
-    energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = 0
+    budget0 = matrix_mod.DRIVER_BUDGET_BYTES
+    matrix_mod.DRIVER_BUDGET_BYTES = 0
     try:
         spark.sparkContext._jvm.System.gc()
         step_secs: list[float] = []
@@ -168,7 +169,7 @@ def main() -> None:
         timers["diffuse_step2"] = (step_secs[1]
                                    if len(step_secs) > 1 else None)
     finally:
-        energy_mod.DIFFUSE_BROADCAST_MAX_BYTES = ceil0
+        matrix_mod.DRIVER_BUDGET_BYTES = budget0
 
     # --- phase 4: ANN search 50q ---
     n_tables = auto_lsh_tables(n_planes=10, target_recall=0.95, n_items=n)

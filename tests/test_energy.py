@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.params import EnergyParams, GraphParams
 from pyarrowspace_spark.operators import knn as knn_ops
 from pyarrowspace_spark.operators import energy as E
@@ -29,7 +30,7 @@ def test_diffuse_one_step_matches_numpy(spark, test0_items_df, edges,
                                       monkeypatch):
     """One step of the distributed (spool) tier is exact fp64."""
     eta = 0.1
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     out = E.diffuse(test0_items_df, edges, eta, steps=1)
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got = {r["item_id"]: np.array(r["features"])
@@ -128,7 +129,7 @@ def test_diffuse_tiers_agree(spark, test0_items_df, edges, monkeypatch):
     assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
     # force the beyond-broadcast tier
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}

@@ -44,7 +44,7 @@ def _items(spark, ids, X):
         schema="item_id long, features array<double>")
 
 
-def _x_matrix(ids, X):
+def _id_sorted(ids, X):
     p = np.argsort(ids)
     return ids[p], np.ascontiguousarray(X[p])
 
@@ -76,17 +76,17 @@ def _graph(ids, case, seed=3):
 
 @pytest.mark.parametrize("case", ["isolated", "self_loop",
                                   "repeated_edge", "empty"])
-@pytest.mark.parametrize("x_input", ["x_matrix", "collect"])
+# one value since the collect is X's only source
+# (`matrix.collect_graph`); kept so the test ids stay `[collect-…]`
+@pytest.mark.parametrize("x_input", ["collect"])
 def test_driver_laplacian_matches_dense(spark, case, x_input):
     """Pin: the driver tier equals a dense numpy Xᵀ(D−W)X at rtol 1e-12,
-    on isolated nodes, a self-loop, a repeated edge and no edges at all,
-    from a handed-over matrix and from a collect."""
+    on isolated nodes, a self-loop, a repeated edge and no edges at all."""
     ids, X = _matrix(40, 12, seed=11)
     edges = _graph(ids, case)
     lf = L.feature_laplacian(
         _items(spark, ids, X), spark.createDataFrame(edges, EDGE_SCHEMA),
-        X.shape[1],
-        x_matrix=_x_matrix(ids, X) if x_input == "x_matrix" else None)
+        X.shape[1])
     ref = _dense_lf(ids, X, edges)
     np.testing.assert_allclose(lf, ref, rtol=1e-12,
                                atol=1e-12 * np.abs(ref).max())
@@ -95,17 +95,17 @@ def test_driver_laplacian_matches_dense(spark, case, x_input):
         assert not lf.any()
 
 
-@pytest.mark.parametrize("x_input", ["x_matrix", "collect"])
+@pytest.mark.parametrize("x_input", ["collect"])  # as above
 def test_driver_laplacian_memory_is_o_nf(spark, x_input):
     """Contract: the driver tier's peak traced allocation stays within
-    4·N·F·8 bytes plus O(E) scalars whatever the edge count — the
+    its price, `matrix.driver_price` (4·N·F·8 bytes plus 384 bytes per
+    edge), whatever the edge count — the
     edge-side form held three E×F float64 temporaries (3·E·F·8 bytes,
     38× X on the benchmark graph)."""
     n, f = 200, 96
     ids, X = _matrix(n, f, seed=5)
     items = _items(spark, ids, X).persist()
     items.count()
-    xm = _x_matrix(ids, X) if x_input == "x_matrix" else None
     rng = np.random.default_rng(6)
     for n_edges in (400, 8000):
         src, dst = rng.integers(0, n, (2, n_edges))
@@ -116,11 +116,11 @@ def test_driver_laplacian_memory_is_o_nf(spark, x_input):
         edges.count()
         tracemalloc.start()
         try:
-            L.feature_laplacian(items, edges, f, x_matrix=xm)
+            L.feature_laplacian(items, edges, f)
             peak = tracemalloc.get_traced_memory()[1]
         finally:
             tracemalloc.stop()
-        bound = 4 * n * f * 8 + 48 * 8 * n_edges + (1 << 20)
+        bound = M.driver_price(n, f, n_edges) + (1 << 20)
         assert peak <= bound, (n_edges, peak, bound)
         edges.unpersist()
     items.unpersist()
@@ -187,10 +187,9 @@ def test_driver_diffusion_equals_matvec_loop(spark):
     edges = K.knn_edges(items, GraphParams(eps=0.9, k=10, topk=5, p=2.0),
                         strategy="exact").persist()
     eta, steps = 0.05, 3
-    out = []
-    E._diffuse_driver(items, edges, eta, steps, "item_id", "features",
-                      out_matrix=out)
-    ids, X = _x_matrix(*M.collect_id_matrix(items, "item_id", "features"))
+    out = E._diffuse_driver(items, edges, eta, steps, "item_id",
+                            "features").toPandas().sort_values("item_id")
+    ids, X = _id_sorted(*M.collect_id_matrix(items, "item_id", "features"))
     epdf = E._symmetrize(edges).toPandas()
     sids, order = M.sorted_index(ids)
     src = M.positions_of(epdf["src"].to_numpy(np.int64), sids, order)
@@ -209,8 +208,8 @@ def test_driver_diffusion_equals_matvec_loop(spark):
             s, e = bounds[i], bounds[i + 1]
             nsum[udst[i]] = w[s:e] @ X[src[s:e]]
         X = (1.0 - eta * deg)[:, None] * X + eta * nsum
-    assert np.array_equal(out[0][0], ids)
-    assert np.array_equal(out[0][1], X)
+    assert np.array_equal(out["item_id"].to_numpy(), ids)
+    assert np.array_equal(np.stack(out["features"].to_numpy()), X)
     edges.unpersist()
     items.unpersist()
 
@@ -254,7 +253,7 @@ def test_spool_tier_exact_vs_driver_tier(spark, test0_items_df,
     gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
     edges = K.knn_edges(test0_items_df, gp, strategy="exact")
     lf_exact = L.feature_laplacian(test0_items_df, edges, 24)
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force spool tier
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)  # force spool tier
     lf64 = L.feature_laplacian(test0_items_df, edges, 24)
     scale = max(float(np.abs(lf_exact).max()), 1e-30)
     assert float(np.abs(lf64 - lf_exact).max()) / scale < 1e-12
@@ -341,7 +340,7 @@ def test_edges_reuse_build_uses_scan_spool(spark, tmp_path, monkeypatch):
     p, _ = _write_corpus(spark, tmp_path, n=220, f=8)
     items = spark.read.parquet(p).select("item_id", "features")
     gp = {"eps": 0.9, "k": 5, "topk": 5, "p": 2.0, "sigma": 0.2}
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force spool tier
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)  # force spool tier
     streamed = []
     real = spool.from_parquet
 
@@ -386,7 +385,7 @@ def test_spool_tier_rejects_duplicate_ids(spark, tmp_path, monkeypatch,
            if source == "parquet" else None)
     assert (src is None) == (source == "collect")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match=r"unique; 1 ids repeat \(e\.g\. 1\)"):
         L.feature_laplacian(items, edges, 3, x_source=src)
     assert _lfx_dirs(tmp_path) == []
@@ -399,7 +398,7 @@ def test_spool_tier_refuses_full_scratch(spark, test0_items_df, monkeypatch,
     and no spool dir is created."""
     edges = spark.createDataFrame([(0, 1, 0.5)], EDGE_SCHEMA)
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     usage = namedtuple("usage", "total used free")
     monkeypatch.setattr(shutil, "disk_usage",
                         lambda p: usage(1 << 30, (1 << 30) - 1000, 1000))
@@ -419,7 +418,7 @@ def test_spool_tier_multi_host_needs_scratch(spark, test0_items_df,
     cannot run the spool tier: a RuntimeError names
     SPARK_GRAFT_SCRATCH_DIR, as in diffusion and the LSH build."""
     edges = spark.createDataFrame([(0, 1, 0.5)], EDGE_SCHEMA)
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):
@@ -433,7 +432,7 @@ def test_spool_tier_failure_removes_spool(spark, test0_items_df,
     matrix._SCRATCH_DIRS."""
     edges = spark.createDataFrame([(0, 1, 0.5), (2, 3, 0.4)], EDGE_SCHEMA)
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
 
     def _boom_factory(*a, **k):
         def kernel(batches):

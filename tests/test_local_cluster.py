@@ -31,7 +31,6 @@ from pyarrowspace_spark.session import get_spark
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
-from pyarrowspace_spark.operators import knn as knn_mod
 from pyarrowspace_spark.operators import lambda_index as lam_mod
 
 spark = get_spark(
@@ -60,21 +59,21 @@ lam_sum = float(idx.items.agg({"lambda": "sum"}).collect()[0][0])
 # used) against the spool tier, whose X spool comes from a collect and,
 # when X does not fit spark.driver.maxResultSize, from a parquet copy
 # the executor tasks write.
-exact0 = knn_mod.EXACT_PATH_MAX_ROWS
-knn_mod.EXACT_PATH_MAX_ROWS = 0          # -> spool tier
+budget0 = M.DRIVER_BUDGET_BYTES
+M.DRIVER_BUDGET_BYTES = 0                # -> spool tier
 lf_collect = lam_mod.feature_laplacian(items, idx.edges, 24)
 eligible0 = M.collect_eligible
 M.collect_eligible = lambda spark, nbytes: False   # -> parquet copy
 lf_copy = lam_mod.feature_laplacian(items, idx.edges, 24)
 M.collect_eligible = eligible0
-knn_mod.EXACT_PATH_MAX_ROWS = exact0
+M.DRIVER_BUDGET_BYTES = budget0
 collect_err = float(np.abs(lf_collect - idx.feature_laplacian).max())
 copy_err = float(np.abs(lf_copy - idx.feature_laplacian).max())
 
 # Distributed diffusion tier (the 100-TB path) across two executor
 # JVMs: the exact fp64 spool plan with task writes, pinned against the
 # driver tier at 1e-9
-E.DIFFUSE_BROADCAST_MAX_BYTES = 0
+M.DRIVER_BUDGET_BYTES = 0
 d = E.diffuse(items, idx.edges, eta=0.05, steps=2)
 d_sum = float(np.sum([float(np.sum(r["features"])) for r in d.collect()]))
 

@@ -1,7 +1,7 @@
 """Source guards over the package: the set of SPARK_GRAFT_* env levers
-it reads, and the rule that an operator module uses no underscore name
-of another operator module (shared helpers are public, or live in
-`spool`/`functions`)."""
+it reads and where the driver-tier levers are read, and the rule that
+an operator module uses no underscore name of another operator module
+(shared helpers are public, or live in `spool`/`functions`)."""
 
 import ast
 import pathlib
@@ -59,6 +59,25 @@ def test_env_levers_pinned():
             if isinstance(key := _env_key(node), str)
             and key.startswith("SPARK_GRAFT_")}
     assert read == ENV_LEVERS
+
+
+def test_one_driver_tier_rule():
+    """Guard: the driver-tier budget lever is read only in
+    `functions/matrix.py` (by `driver_fits`), and the kNN strategy
+    switch `EXACT_PATH_MAX_ROWS` only by the kNN and dedup operators —
+    no driver tier borrows it."""
+    budget_readers, switch_readers = set(), set()
+    for path, tree in _trees(PKG):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(tree):
+            if _env_key(node) == "SPARK_GRAFT_DIFFUSE_BCAST_MAX":
+                budget_readers.add(rel)
+            if "EXACT_PATH_MAX_ROWS" in (
+                    getattr(node, "id", None), getattr(node, "attr", None),
+                    getattr(node, "name", None)):
+                switch_readers.add(rel)
+    assert budget_readers == {"functions/matrix.py"}
+    assert switch_readers == {"operators/knn.py", "operators/dedup.py"}
 
 
 def test_operators_import_no_private_operator_names():

@@ -9,6 +9,7 @@ import os
 import numpy as np
 import pytest
 
+from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
 
@@ -69,14 +70,13 @@ def test_gather_diag_hoist_matches_driver_tier(spark):
     gp = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
     edges = K.knn_edges(items, gp, strategy="exact").persist()
     lf_driver = LAM.feature_laplacian(items, edges, 16)
-    # force the gather tier by dropping the driver-tier row ceiling
-    import pyarrowspace_spark.operators.knn as KM
-    old = KM.EXACT_PATH_MAX_ROWS
+    # force the gather tier by dropping the driver-tier budget
+    old = M.DRIVER_BUDGET_BYTES
     try:
-        KM.EXACT_PATH_MAX_ROWS = 0
+        M.DRIVER_BUDGET_BYTES = 0
         lf_gather = LAM.feature_laplacian(items, edges, 16)
     finally:
-        KM.EXACT_PATH_MAX_ROWS = old
+        M.DRIVER_BUDGET_BYTES = old
     edges.unpersist()
     assert np.allclose(lf_gather, lf_driver, rtol=1e-9, atol=1e-9)
     assert float(np.abs(lf_gather).max()) > 0
@@ -94,7 +94,7 @@ def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):
     a = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=3).collect()}
     assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     steps_sec: list = []
     b_df = E.diffuse(items, edges, eta=0.05, steps=3,
                      step_times=steps_sec)
@@ -120,7 +120,7 @@ def test_diffuse_spool_isolated_nodes_identity(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(0, 1, 0.5), (1, 2, 0.25), (2, 3, 0.75)],
         schema="src long, dst long, weight double")
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     out = {r["item_id"]: np.array(r["features"])
            for r in E.diffuse(items, edges, eta=0.1, steps=2).collect()}
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
@@ -146,7 +146,7 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch,
     edges = K.knn_edges(items, gp, strategy="exact")
     a = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     probed = []
@@ -177,14 +177,13 @@ def test_diffuse_spool_dir_removed_when_step_fails(spark, monkeypatch,
     """Fault injection: a step kernel that raises mid-diffusion makes
     `diffuse` raise and leaves no spool dir under the scratch dir, nor
     a registration in matrix._SCRATCH_DIRS."""
-    from pyarrowspace_spark.functions import matrix as M
     from pyarrowspace_spark.operators import energy as E
 
     items = _corpus(spark, n=120, f=6, seed=2)
     gp = GraphParams(eps=0.9, k=4, topk=4, p=2.0)
     edges = K.knn_edges(items, gp, strategy="exact")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
 
     def _boom_factory(*a, **k):
         def kernel(batches):
@@ -211,7 +210,7 @@ def test_diffuse_spool_rejects_duplicate_ids(spark, monkeypatch):
         schema="item_id long, features array<double>")
     edges = spark.createDataFrame(
         [(0, 1, 0.5)], schema="src long, dst long, weight double")
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match="unique"):
         E.diffuse(items, edges, eta=0.1, steps=1)
 
@@ -229,7 +228,7 @@ def test_diffuse_spool_refuses_full_scratch(spark, monkeypatch, tmp_path):
     edges = spark.createDataFrame(
         [(0, 1, 0.5)], schema="src long, dst long, weight double")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     usage = namedtuple("usage", "total used free")
     monkeypatch.setattr(shutil, "disk_usage",
                         lambda p: usage(1 << 30, (1 << 30) - 1000, 1000))
@@ -251,7 +250,7 @@ def test_diffuse_spool_multi_host_needs_scratch(spark, monkeypatch):
     items = _corpus(spark, n=50, f=4, seed=1)
     edges = spark.createDataFrame(
         [(0, 1, 0.5)], schema="src long, dst long, weight double")
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     with pytest.raises(RuntimeError, match="SPARK_GRAFT_SCRATCH_DIR"):

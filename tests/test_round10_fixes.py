@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.params import EnergyParams, GraphParams
 
@@ -98,7 +99,7 @@ def test_diffuse_chunked_matches_driver_at_sf0001(spark, sf_items,
     edges = knn_edges(sf_items, gp, strategy="exact")
     a = E.diffuse(sf_items, edges, eta=0.05, steps=2)
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     b = E.diffuse(sf_items, edges, eta=0.05, steps=2)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
@@ -119,7 +120,7 @@ def test_diffuse_distributed_default_fp32(spark, test0_items_df,
     edges = knn_edges(test0_items_df, gp, strategy="exact")
     a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
     assert E._LAST_DIFFUSE_INFO["tier"] == "distributed"

@@ -109,12 +109,12 @@ def test_lsh_census_cap_lazy_fallback(spark, monkeypatch):
 
 
 def test_diffuse_plan_driver_tier():
-    assert E.diffuse_plan(500, 64) == {"distributed_tier": 0}
+    assert E.diffuse_plan(500, 64, 5_000) == {"distributed_tier": 0}
 
 
 def test_diffuse_plan_distributed_chunks():
-    # N·F·8 = 6.1e9 > the 4 GiB ceiling → distributed spool tier
-    assert E.diffuse_plan(2_000_000, 384) == {"distributed_tier": 1}
+    # 2·N·F·8 + 384·E = 12.3e9 > the 4 GiB budget → distributed spool tier
+    assert E.diffuse_plan(2_000_000, 384, 0) == {"distributed_tier": 1}
 
 
 def test_energy_index_records_diffusion_info(spark, sf_items, tmp_path):

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from pyarrowspace_spark import spool
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
+from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
@@ -139,7 +140,7 @@ def test_fp32_messages_high_degree_star(spark, monkeypatch):
         [(0, j, float(w[j - 1])) for j in range(1, n)],
         schema="src long, dst long, weight double")
     eta = 0.001  # keep the hub update contractive at deg≈300
-    monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     out = E.diffuse(items, edges, eta, steps=1)
     assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
     got = np.stack([r["features"] for r in

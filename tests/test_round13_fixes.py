@@ -42,7 +42,7 @@ def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0, sigma=0.2)
     edges = K.knn_edges(items, gp, strategy="exact").persist()
     edges.count()
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)  # force spool tier
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)  # force spool tier
     src = spool.parquet_scan_source(items, "item_id", "features")
     assert src is not None
     lf_scan = LAM.feature_laplacian(items, edges, 8, x_source=src)

@@ -177,6 +177,7 @@ def test_laplacian_falls_back_distributed_when_collect_too_big(
 
     monkeypatch.setattr(M, "collect_eligible", lambda s, b: False)
     monkeypatch.setattr(M, "collect_id_matrix", _no_collect)
+    monkeypatch.setattr(M, "collect_graph", _no_collect)
     got = L.feature_laplacian(test0_items_df, edges, nf)
     np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
 

@@ -47,7 +47,7 @@ def test_driver_result_capacity_accepts_pib():
 
 def test_diffuse_checks_edge_collect_eligibility(spark, test0_items_df,
                                                  monkeypatch):
-    """ADVICE r7: _diffuse_driver collects the symmetrized edge list
+    """ADVICE r7: _diffuse_driver collects the edge list
     too — a session whose maxResultSize barely admits X must not take
     the driver tier when the edge collect would abort. Simulated by an
     eligibility stub that admits the X collect but rejects the
@@ -57,7 +57,7 @@ def test_diffuse_checks_edge_collect_eligibility(spark, test0_items_df,
 
     edges = KNN.knn_edges(test0_items_df, GP, strategy="exact")
     n_edges = edges.count()
-    edge_bytes = n_edges * 2 * 24
+    edge_bytes = n_edges * 24
     want = {r["item_id"]: r["features"]
             for r in E.diffuse(test0_items_df, edges,
                                eta=0.05, steps=2).collect()}
