@@ -45,11 +45,11 @@ class ArrowSpaceIndex:
     n_features: int
     _nitems: int | None = None  # lazily cached count
     #: Measured record of THIS build's LSH pair stage (group count,
-    #: spool bytes, per-stage metrics — knn.lsh_group_summary), None
-    #: only when the build ran the exact strategy or was given its
-    #: edges. Session-only instrumentation (not persisted by save): the
-    #: deterministic plan twin is the `lsh_plan` build_diagnostics
-    #: section.
+    #: spool bytes, per-stage metrics — the `info` dict
+    #: `knn.knn_edges` fills), None when the build ran the exact
+    #: strategy or was given its edges. Session-only instrumentation
+    #: (not persisted by save): the deterministic plan twin is the
+    #: `lsh_plan` build_diagnostics section.
     lsh_build_info: dict | None = None
 
     @property
@@ -164,6 +164,28 @@ class ArrowSpaceIndex:
         )
 
 
+def _checked_shape(base: DataFrame) -> "tuple[int, int]":
+    """(N, F) of the persisted `base` from ONE aggregate (which fills
+    its cache). Empty, ragged or null feature rows release `base` and
+    raise ValueError naming the lengths (the reference rejects
+    empty/ragged input, src/helpers.rs:24-29)."""
+    feats = F.col("features")
+    size = F.when(feats.isNotNull(), F.size(feats))
+    row = base.agg(F.count(F.lit(1)).alias("n"), F.min(size).alias("lo"),
+                   F.max(size).alias("hi"),
+                   F.count(F.when(feats.isNull(), 1)).alias("nulls")).first()
+    n, lo, hi, nulls = row["n"], row["lo"], row["hi"], row["nulls"]
+    if not hi or lo != hi or nulls:
+        base.unpersist()
+        if not hi:
+            raise ValueError(
+                "items must be a non-empty DataFrame of non-empty vectors")
+        raise ValueError(
+            f"items must be rectangular: feature lengths range from {lo} "
+            f"to {hi} over {n} rows, {nulls} of them with null features")
+    return int(n), int(hi)
+
+
 class ArrowSpaceBuilder:
     """Mirror of reference ArrowSpaceBuilder (src/lib.rs:270-300)."""
 
@@ -230,13 +252,6 @@ class ArrowSpaceBuilder:
             params = graph_params
         else:
             params = GraphParams.from_dict(graph_params)
-        # Validate rectangularity once (reference rejects empty/ragged,
-        # src/helpers.rs:24-29). `first` touches one partition only.
-        first = items.select(F.size(feat_col).alias("n")).first()
-        if first is None or first["n"] in (None, 0):
-            raise ValueError("items must be a non-empty DataFrame of non-empty vectors")
-        n_features = int(first["n"])
-
         # Spool-source provenance — resolved BEFORE base.persist():
         # caching substitutes InMemoryRelation into the SOURCE df's
         # optimized plan via plan-fragment matching, which the trivial-
@@ -271,12 +286,14 @@ class ArrowSpaceBuilder:
                                         "32")))
         # Edges + λ both traverse base twice — cache across the build.
         base = base.persist()
+        n_rows, n_features = _checked_shape(base)
 
-        graph_input = base
+        graph_input, graph_rows = base, n_rows
         if sample_rate is not None and sample_rate < 1.0:
             graph_input = base.sample(
                 withReplacement=False, fraction=float(sample_rate),
                 seed=int(seed)).persist()
+            graph_rows = None
 
         graph_feat = "features"
         if dims_reduction:
@@ -293,9 +310,9 @@ class ArrowSpaceBuilder:
                     f"build: dims_reduction on — graph stage at k={k_red} "
                     f"of F={n_features}")
 
+        lsh_info: dict = {}
         if edges is not None:
             edges = edges.persist()
-            lsh_info = None
         else:
             # x_src (trivial-scan provenance, resolved above) also
             # feeds the LSH build's U spool: the spool streams straight
@@ -310,11 +327,9 @@ class ArrowSpaceBuilder:
                                       feat_col=graph_feat,
                                       lsh_bits=lsh_bits,
                                       lsh_bands=lsh_bands,
-                                      x_source=knn_x_src).persist()
-            # The grouped LSH pair stage runs EAGERLY inside knn_edges
-            # (its spools are written group by group), so its measured
-            # record is complete here; None when exact ran.
-            lsh_info = knn_ops.lsh_group_summary()
+                                      n_rows=graph_rows,
+                                      x_source=knn_x_src,
+                                      info=lsh_info).persist()
         # λ spool source: stream the X spool from the corpus
         # parquet only when the graph ran on the UNTRANSFORMED input
         # (no sample/projection; normalise already gated x_src above)
@@ -329,11 +344,9 @@ class ArrowSpaceBuilder:
         # scale-tiered median (functions.stats): exact below the
         # ceiling (oracle parity), percentile_approx beyond — the
         # exact per-distinct-double state over billions of e_raw
-        # values would OOM the merging task. base is cached, the
-        # count is one trivial job.
+        # values would OOM the merging task.
         from .functions import stats
 
-        n_rows = base.count()
         tau_row = comp.select(
             stats.percentile_expr("_ec.e_raw", 0.5, n_rows).alias("m")
         ).first()
@@ -371,7 +384,7 @@ class ArrowSpaceBuilder:
             params=params,
             tau_synth=tau_synth,
             n_features=n_features,
-            lsh_build_info=lsh_info,
+            lsh_build_info=lsh_info or None,
         )
 
     @staticmethod

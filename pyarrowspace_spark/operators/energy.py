@@ -83,14 +83,6 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-# Set by `diffuse` on each invocation: the chosen tier, the spool
-# write mode and the symmetrized edge count. Instrumentation
-# breadcrumb for the measurement harness; `build_energy` copies it
-# into `EnergyIndex.diffusion_info` so an index self-describes the
-# step that produced it.
-_LAST_DIFFUSE_INFO: dict | None = None
-
-
 def diffuse_plan(n_items: int, nf: int, n_edges: int) -> dict:
     """Self-description of the tier `diffuse` chooses for a corpus of
     this shape: the byte part of `matrix.driver_fits` at diffusion's
@@ -256,8 +248,7 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
 
 def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                    steps: int, id_col: str, feat_col: str, nf: int,
-                   n: int,
-                   step_times: "list[float] | None") -> DataFrame:
+                   n: int) -> "tuple[DataFrame, dict]":
     """Distributed diffusion (guide §8: shuffle keys and metadata, move
     heavy bytes once). The iterate X_t lives in ONE id-sorted fp64
     spool per step on a worker-visible scratch filesystem, the
@@ -271,6 +262,7 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     (Pregelix runs it as a dataflow join against the vertex relation):
     no per-edge message is ever materialized or shuffled.
 
+    Returns the frame and the tier's record (`_spool_steps`).
     Raises instead of degrading: RuntimeError when a multi-host master
     has no worker-visible SPARK_GRAFT_SCRATCH_DIR or the scratch
     filesystem lacks 3·N·F·8 + 64 MiB free; ValueError on duplicate
@@ -291,24 +283,25 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     s_ids, _ = matrix_mod.sorted_index(ids_arr)
     d = spool.make_dir(root, "pyarrowspace-diffspool-")
     try:
-        out = _spool_steps(items, edges, eta, steps, id_col, feat_col,
-                           nf, s_ids, d, task_write, step_times)
+        out, info = _spool_steps(items, edges, eta, steps, id_col,
+                                 feat_col, nf, s_ids, d, task_write)
     except BaseException:
         spool.drop_dir(d)
         raise
-    if out is None:
-        # no edges: diffusion is the identity
+    if out is None:  # no edges: diffusion is the identity
         spool.drop_dir(d)
-        return items.select(id_col, feat_col)
-    return out
+        out = items.select(id_col, feat_col)
+    return out, info
 
 
 def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                  steps: int, id_col: str, feat_col: str, nf: int,
-                 s_ids: np.ndarray, d: str, task_write: bool,
-                 step_times: "list[float] | None") -> "DataFrame | None":
+                 s_ids: np.ndarray, d: str,
+                 task_write: bool) -> "tuple[DataFrame | None, dict]":
     """The seed + step loop of `_diffuse_spool` inside spool dir `d`.
-    Returns None when the graph has no edges.
+    Returns the frame (None when the graph has no edges) and the
+    record, with each step's wall seconds as `step_sec` (step 1 also
+    carries the loop-invariant edge materialization).
 
     Write modes: with `task_write` (single-host masters) the tasks
     scatter rows straight into the pre-allocated mmap — writers and
@@ -372,12 +365,11 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
             .persist())
     try:
         n_sym = both.count()
+        info = {"tier": "distributed", "plan": "spool",
+                "write": "task" if task_write else "stream",
+                "n_sym_edges": int(n_sym), "step_sec": []}
         if n_sym == 0:
-            return None
-        global _LAST_DIFFUSE_INFO
-        _LAST_DIFFUSE_INFO = {"tier": "distributed", "plan": "spool",
-                              "write": "task" if task_write else "stream",
-                              "n_sym_edges": int(n_sym)}
+            return None, info
         # isolated nodes (no edges at all) never appear as dst OR src;
         # their rows are the identity under diffusion — captured once
         # from the seed spool and appended to the final output only
@@ -399,7 +391,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
             del x0
         step_dir = ""
         for t in range(int(steps)):
-            t0 = time.time() if step_times is not None else 0.0
+            t0 = time.time()
             nxt_path = os.path.join(d, f"x{t + 1}.npy")
             if task_write:
                 # one exchange-free job gathers, updates AND scatters
@@ -444,8 +436,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                     os.remove(cur_path)
                     shutil.rmtree(step_dir, ignore_errors=True)
                     cur_path = nxt_path
-            if step_times is not None:
-                step_times.append(round(time.time() - t0, 3))
+            info["step_sec"].append(round(time.time() - t0, 3))
         if task_write:
             # returned frame = distributed chunked read of the final
             # spool (only dst-covered positions; iso rows appended
@@ -472,7 +463,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
         if len(iso_pos):
             out = out.unionAll(matrix_to_frame(
                 spark, iso_ids, iso_X, id_col, feat_col))
-        return out
+        return out, info
     finally:
         both.unpersist()
 
@@ -528,9 +519,26 @@ def _diffuse_driver(items: DataFrame, edges: DataFrame, eta: float,
         parts=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
 
 
+def _diffuse_tiered(items: DataFrame, edges: DataFrame, eta: float,
+                    steps: int, id_col: str, feat_col: str, n: int,
+                    nf: int, n_edges: int) -> "tuple[DataFrame, dict | None]":
+    """`diffuse` past its census: the tier the one driver-tier rule
+    picks for (N, F, E) = (`n`, `nf`, `n_edges`), run. Returns the
+    frame and the tier's record, None when nothing ran (`steps` ≤ 0 or
+    no items)."""
+    if int(steps) <= 0 or n == 0:
+        return items.select(id_col, feat_col), None
+    if matrix_mod.driver_fits(items.sparkSession, n, nf, n_edges, True,
+                              matrix_mod.DIFFUSE_X_COPIES):
+        return (_diffuse_driver(items, edges, eta, steps, id_col, feat_col),
+                {"tier": "driver", "n_sym_edges": None})
+    return _diffuse_spool(items, edges, eta, steps, id_col, feat_col,
+                          nf, n)
+
+
 def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
             id_col: str = "item_id", feat_col: str = "features",
-            step_times: "list[float] | None" = None) -> DataFrame:
+            info: "dict | None" = None) -> DataFrame:
     """G12 heat diffusion, `steps` iterations, exact fp64 on every
     tier. Physical tiers:
 
@@ -551,23 +559,18 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     free (the message states both byte counts and the directory), and
     ValueError on duplicate ids. Its spool dir is removed on any error.
 
-    `step_times` (bench instrumentation, distributed tier only): pass a
-    list and each step's wall time is appended (every step is one
-    eager job; step 1 also carries the loop-invariant edge
-    materialization).
+    `info`: pass a dict and the call fills it with the record of the
+    tier it ran: `tier` and `n_sym_edges` (None on the driver), plus
+    `plan`, `write` ("task"/"stream") and the per-step wall seconds
+    `step_sec` on the distributed tier; empty when nothing ran.
     """
     if int(steps) <= 0:
         return items.select(id_col, feat_col)
-    n, nf, n_edges = matrix_mod.census(items, edges, feat_col)
-    if n == 0:  # empty corpus: diffusion is the identity
-        return items.select(id_col, feat_col)
-    if matrix_mod.driver_fits(items.sparkSession, n, nf, n_edges, True,
-                              matrix_mod.DIFFUSE_X_COPIES):
-        global _LAST_DIFFUSE_INFO
-        _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
-        return _diffuse_driver(items, edges, eta, steps, id_col, feat_col)
-    return _diffuse_spool(items, edges, eta, steps, id_col, feat_col,
-                          nf, n, step_times)
+    out, rec = _diffuse_tiered(items, edges, eta, steps, id_col, feat_col,
+                               *matrix_mod.census(items, edges, feat_col))
+    if info is not None and rec:
+        info.update(rec)
+    return out
 
 
 def trim_edges(edges: DataFrame, trim_quantile: float,
@@ -606,10 +609,9 @@ class EnergyIndex:
     graph_params: GraphParams
     energy_params: EnergyParams
     tau_synth: float
-    # How the diffusion stage actually ran (tier; for the distributed
-    # tier also plan, spool write mode and n_sym_edges), so an index
-    # self-describes its physical plan. None on steps=0 builds and
-    # indexes saved before round 11.
+    # How the diffusion stage actually ran, the record `diffuse`
+    # fills, so an index self-describes its physical plan. None on
+    # steps=0 builds and indexes saved before round 11.
     diffusion_info: dict | None = None
     # (centroids frame, its scalars) for `search_energy`'s shortlist;
     # see `_centroid_scalars`
@@ -779,9 +781,7 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     if eparams.steps > 0:
         X = _diffuse_steps(X, matrix_mod.sym_segments(src, dst, w, n),
                            eparams.eta, eparams.steps)
-        global _LAST_DIFFUSE_INFO
-        _LAST_DIFFUSE_INFO = {"tier": "driver", "n_sym_edges": None}
-        dinfo = dict(_LAST_DIFFUSE_INFO)
+        dinfo = {"tier": "driver", "n_sym_edges": None}
     lf = lam_ops.laplacian_from_edges(X, src[keep], dst[keep], w[keep])
     del src, dst, w, keep
 
@@ -943,12 +943,12 @@ def build_energy(
     kept_edges = trim_edges(edges, eparams.trim_quantile,
                             n_edges=n_edges).persist()
 
-    # G12: diffusion smoothing (reads the now-cached edges)
-    diffused = diffuse(base, edges, eparams.eta, eparams.steps).persist()
-    # snapshot how the stage ran (tier/plan/write mode) for the index's
-    # self-description before any other diffuse call overwrites it
-    dinfo = dict(_LAST_DIFFUSE_INFO) if (
-        eparams.steps > 0 and _LAST_DIFFUSE_INFO) else None
+    # G12: diffusion smoothing (reads the now-cached edges), tiered by
+    # the census above; its record is the index's `diffusion_info`
+    diffused, dinfo = _diffuse_tiered(
+        base, edges, eparams.eta, eparams.steps, "item_id", "features",
+        n_items, n_features, n_edges)
+    diffused = diffused.persist()
 
     # λ/e on the *diffused* space — one kernel pass for the
     # τ-independent components, τ-synthesis + blend JVM-side (same

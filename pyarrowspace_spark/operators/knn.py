@@ -46,13 +46,6 @@ from .. import spool
 from ..params import GraphParams
 from ..functions import vector as V
 
-# Set by the grouped LSH pair stage on each run: per-group pair-spool
-# bytes, disk free after the group, wall time, and (when the Spark UI
-# is reachable) the group's per-stage metrics (wall/task time, spill,
-# shuffle bytes). Instrumentation breadcrumb for measurement harnesses
-# sizing the group budget — not a public API.
-_LAST_LSH_GROUP_INFO: list | None = None
-
 #: Scratch-disk spill multiplier for one band group: the group's
 #: (band,key) shuffle sorts N·gsize rows; measured peak transient over
 #: shuffle-input bytes was ~2.3x at N=800k and ~3.9x at the N=2M abort
@@ -347,26 +340,16 @@ def auto_lsh_bands(n_bits: int) -> int:
     the correct asymptotic; a fixed band count silently degrades recall
     as the corpus grows (observed: 0.977 @ 78k → 0.914 @ 313k).
 
-    $SPARK_GRAFT_LSH_MISS_BUDGET overrides the −ln(miss) budget
-    (default 3.0). Measured margin by scale (r13, multi-seed at every
-    anchor): 0.9584–0.9623 @ 313k (10 bits, three seeds),
-    0.9539/0.9540 @ 800k (12 bits, two seeds), 0.9561/0.9591 @ 2M
-    (13 bits, two seeds) — the 800k dip is stable across seeds, i.e. model drift at the bit-rounding boundary
-    (log2(800k/256) = 11.61 rounds UP hardest of the three), not
-    sampling noise. The contract holds everywhere; deployments wanting
-    more margin in the 0.5–1.2M window can raise the budget to ~3.5
-    (≈ +19% bands → build cost) without a code change — MEASURED at
-    800k (BENCH_800k_r13mb35.json): budget 3.5 → 37 bands → recall
-    0.9768 over the same 2000-sample estimator (0.9539/0.9540 at the
-    default 3.0), matching the e^-3.5 ≈ 0.97 miss-model prediction.
-    The default stays 3.0: the contract is ≥0.95 and the +19% build
-    cost is not free at 100 TB."""
-    import math as _m
-
-    budget = float(os.environ.get("SPARK_GRAFT_LSH_MISS_BUDGET",
-                                  str(LSH_MISS_BUDGET)))
+    The budget is the constant LSH_MISS_BUDGET, which the `lsh_plan`
+    oracle twin embeds. Measured recall holds the contract at every
+    anchor, thinnest at 800k (0.954, 12 bits: log2(800k/256) rounds up
+    hardest). A build wanting more margin passes its band count,
+    `ArrowSpaceBuilder.build(lsh_bands=37)` (the schedule at a 3.5
+    budget: recall 0.9768 at 800k for ≈ +19% build cost,
+    BENCH_800k_r13mb35.json)."""
     p = LSH_DESIGN_COLLISION ** int(n_bits)
-    return max(16, int(_m.ceil(budget / -_m.log(max(1.0 - p, 1e-12)))))
+    return max(16, int(math.ceil(
+        LSH_MISS_BUDGET / -math.log(max(1.0 - p, 1e-12)))))
 
 
 def _band_group_size(n_items: int, n_bands: int,
@@ -389,8 +372,9 @@ def lsh_plan(n_items: int, fdim: int, k: int,
     (band, key) exchange bytes and per-group (k-capped) pair-spool
     bytes. The hashed rows are narrow, so `fdim` does not enter the
     exchange price. The MEASURED per-run record (spool bytes, stage
-    metrics, wall) lives in `lsh_group_summary()`; this is the
-    deterministic twin the DuckDB oracle replays."""
+    metrics, wall) is the `info` dict `knn_edges` fills
+    (`ArrowSpaceIndex.lsh_build_info`); this is the deterministic twin
+    the DuckDB oracle replays."""
     n_bits = int(min(20, max(6, round(math.log2(max(n_items / 256, 2))))))
     n_bands = auto_lsh_bands(n_bits)
     gsize = _band_group_size(n_items, n_bands, group_budget_bytes)
@@ -403,37 +387,22 @@ def lsh_plan(n_items: int, fdim: int, k: int,
     }
 
 
-def lsh_group_summary() -> dict | None:
-    """Measured record of the MOST RECENT grouped LSH pair stage in
-    this process: group count, total/max pair-spool bytes, total wall
-    seconds, and peak per-stage shuffle-write/spill bytes (when the UI
-    REST API was reachable). Every LSH build spools its pairs per band
-    group, so a normal build shows one group here; None after an exact
-    build, an empty corpus, or when no LSH build has run. Successor to
-    reading the `_LAST_LSH_GROUP_INFO` breadcrumb directly (r11 verdict
-    finding 2); the raw per-group records stay available for
-    measurement harnesses as the ``groups`` key."""
-    info = _LAST_LSH_GROUP_INFO
-    if not info:
-        return None
-    stage_rows = [s for g in info for s in (g.get("stages") or [])]
-
-    def _peak(key: str) -> float:
-        return max((float(s.get(key, 0.0) or 0.0) for s in stage_rows),
-                   default=0.0)
-
+def _group_summary(groups: list) -> dict:
+    """The measured record of one LSH pair stage from its per-group
+    records: group count, total/max pair-spool bytes, total wall
+    seconds, peak per-stage shuffle-write/spill GB and the records
+    themselves as ``groups``."""
+    stages = [s for g in groups for s in g["stages"]]
+    spools = [g["spool_bytes"] for g in groups]
     return {
-        "n_groups": len(info),
-        "bands_total": sum(len(g.get("bands", ())) for g in info),
-        "spool_bytes_total": sum(int(g.get("spool_bytes", 0))
-                                 for g in info),
-        "spool_bytes_max_group": max(int(g.get("spool_bytes", 0))
-                                     for g in info),
-        "wall_sec_total": round(sum(float(g.get("sec", 0.0))
-                                    for g in info), 1),
-        "peak_stage_shuffle_write_gb": _peak("shuffle_write_gb"),
-        "peak_stage_disk_spill_gb": _peak("disk_spill_gb"),
-        "groups": info,
+        "n_groups": len(groups),
+        "bands_total": sum(len(g["bands"]) for g in groups),
+        "spool_bytes_total": sum(spools),
+        "spool_bytes_max_group": max(spools),
+        "wall_sec_total": round(sum(g["sec"] for g in groups), 1),
+        **{f"peak_stage_{k}": max((s[k] for s in stages), default=0.0)
+           for k in ("shuffle_write_gb", "disk_spill_gb")},
+        "groups": groups,
     }
 
 
@@ -449,6 +418,7 @@ def pairwise_candidates_lsh(
     n_items: int | None = None,
     bucket_max: int | None = None,
     x_source: dict | None = None,
+    info: dict | None = None,
 ) -> DataFrame:
     """Bucketed candidate pairs within the cosine eps-ball via
     sign-random-projection band LSH.
@@ -485,6 +455,8 @@ def pairwise_candidates_lsh(
     same `_normalize_f32`): the distance error (~1e-7 relative) is far
     below any eps/ranking decision and the path is approximate by
     contract (recall ≥ 0.95, SURVEY §7.3 #2).
+
+    `info`: pass a dict to get the pair stage's `_group_summary`.
 
     An empty `items` frame yields no pairs. Raises ValueError on
     duplicate ids; RuntimeError when a multi-host master has no
@@ -737,8 +709,7 @@ def pairwise_candidates_lsh(
     pair_dirs: list[str] = []
     parts: list[DataFrame] = []
     hashed = None
-    global _LAST_LSH_GROUP_INFO
-    _LAST_LSH_GROUP_INFO = []
+    groups: list[dict] = []  # this build's per-group records
     try:
         _build_u_spool(items, id_col, feat_col, n_items, fdim, x_source,
                        *u_paths)
@@ -842,7 +813,7 @@ def pairwise_candidates_lsh(
             pairs_g.write.mode("overwrite").parquet(d)
             parts.append(spark.read.parquet(d))
             try:
-                _LAST_LSH_GROUP_INFO.append(
+                groups.append(
                     {"bands": gband, "spool_bytes": int(_dir_bytes(d)),
                      "disk_free_bytes": int(shutil.disk_usage(probe).free),
                      "sec": round(time.time() - g_t0, 1),
@@ -852,10 +823,10 @@ def pairwise_candidates_lsh(
                 # charges), per band otherwise — so the remaining groups
                 # (and the out-of-disk check) use ground truth
                 if k_i:
-                    meas = [g["spool_bytes"] for g in _LAST_LSH_GROUP_INFO]
+                    meas = [g["spool_bytes"] for g in groups]
                 else:
                     meas = [g["spool_bytes"] / max(len(g["bands"]), 1)
-                            for g in _LAST_LSH_GROUP_INFO]
+                            for g in groups]
                 spool_unit = max(sum(meas) / len(meas), 1.0)
             except OSError:
                 pass
@@ -871,6 +842,8 @@ def pairwise_candidates_lsh(
     # at session exit
     hashed.unpersist()
     spool.drop_dir(u_dir)
+    if info is not None and groups:
+        info.update(_group_summary(groups))
     bucket_pairs = parts[0]
     for p in parts[1:]:
         bucket_pairs = bucket_pairs.unionAll(p)
@@ -895,6 +868,7 @@ def knn_edges(
     lsh_bands: int | None = None,
     n_rows: int | None = None,
     x_source: dict | None = None,
+    info: dict | None = None,
 ) -> DataFrame:
     """Build the symmetrized, weighted kNN edge list.
 
@@ -906,17 +880,18 @@ def knn_edges(
       == row_number window (GRAPH_VARIABLES.md:8) -> symmetrize ->
       kernel weight (GRAPH_VARIABLES.md:9).
 
-    `n_rows`: pass a precomputed count to skip the strategy-switch
-    Spark job (an extra eager count per call otherwise).
+    `n_rows`: pass the precomputed row count of `items` to skip the
+    strategy switch's count and the LSH build's own (an extra eager
+    Spark job each otherwise).
+
+    `info`: pass a dict and an LSH build fills it with its pair
+    stage's measured record (`_group_summary`), complete on return as
+    the stage runs eagerly; an exact build leaves it empty.
     """
-    # Clear the grouped-stage record up front: without this an earlier
-    # LSH build's record would leak onto a later exact build's
-    # `lsh_group_summary()` / index attachment.
-    global _LAST_LSH_GROUP_INFO
-    _LAST_LSH_GROUP_INFO = None
     if strategy == "auto":
-        n = items.count() if n_rows is None else int(n_rows)
-        strategy = "exact" if n <= EXACT_PATH_MAX_ROWS else "lsh"
+        if n_rows is None:
+            n_rows = items.count()
+        strategy = "exact" if n_rows <= EXACT_PATH_MAX_ROWS else "lsh"
     if strategy == "exact":
         # eps + per-node top-k already applied partition-locally.
         knn = _knn_directed_broadcast_scan(
@@ -925,7 +900,8 @@ def knn_edges(
     elif strategy == "lsh":
         cand = pairwise_candidates_lsh(
             items, id_col, feat_col, params.eps, k=params.k,
-            n_bits=lsh_bits, n_bands=lsh_bands, x_source=x_source,
+            n_bits=lsh_bits, n_bands=lsh_bands, n_items=n_rows,
+            x_source=x_source, info=info,
         )
 
         # eps predicate BEFORE the top-k window: Catalyst pushes the

@@ -135,6 +135,11 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "2min")
         # Quiet progress bars in test logs.
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark's DataFrame call-site capture: on, every Column API
+        # call walks the Python stack and pays py4j round trips, and the
+        # first one imports IPython (~540 modules, ~27 MB of driver
+        # RSS). `extra_conf` can turn it back on for debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

@@ -413,18 +413,17 @@ def _run_dd_phase(spark, big, idx, out: dict, scratch: str) -> None:
     budget0 = matrix_mod.DRIVER_BUDGET_BYTES
     matrix_mod.DRIVER_BUDGET_BYTES = 0
     try:
-        st: list[float] = []
         # reset the per-phase peak to CURRENT usage so the reported
         # peak is this phase's own, not the cumulative process max
         # (ADVICE r10)
         _PHASE_PEAK_GB[0] = shutil.disk_usage(scratch).used / 1024**3
         t0 = time.time()
+        info: dict = {}
         energy_mod.diffuse(big, idx.edges, eta=0.05, steps=dd_steps,
-                           step_times=st).count()
+                           info=info).count()
         out["diffuse_dist_total_sec"] = round(time.time() - t0, 1)
-        out["diffuse_dist_step_secs"] = st
+        out["diffuse_dist_step_secs"] = info.get("step_sec", [])
         out["diffuse_dist_peak_used_gb"] = round(_PHASE_PEAK_GB[0], 1)
-        info = getattr(energy_mod, "_LAST_DIFFUSE_INFO", None)
         if info:
             out["diffuse_dist_n_sym_edges"] = info["n_sym_edges"]
             out["diffuse_dist_plan"] = info.get("plan")
@@ -633,9 +632,7 @@ def main() -> None:
             out["edges_save_sec"] = round(time.time() - t0, 1)
         # per-band-group pair-spool sizes + disk free (r10: the data
         # needed to fix the group budget that under-split at N=2M)
-        from pyarrowspace_spark.operators import knn as knn_mod
-
-        ginfo = getattr(knn_mod, "_LAST_LSH_GROUP_INFO", None)
+        ginfo = (idx.lsh_build_info or {}).get("groups")
         if ginfo:
             out["lsh_group_spool_gb"] = [
                 round(g["spool_bytes"] / 1024**3, 3) for g in ginfo]

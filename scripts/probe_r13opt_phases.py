@@ -146,10 +146,9 @@ def main() -> None:
     matrix_mod.DRIVER_BUDGET_BYTES = 0
     try:
         spark.sparkContext._jvm.System.gc()
-        step_secs: list[float] = []
+        info: dict = {}
         ddf = timed("diffuse_2step", lambda: energy_mod.diffuse(
-            big, bidx.edges, eta=0.05, steps=2,
-            step_times=step_secs))
+            big, bidx.edges, eta=0.05, steps=2, info=info))
         timers["diffuse_2step_count"] = None
         t0 = time.time()
         ddf.count()
@@ -165,6 +164,7 @@ def main() -> None:
             "x.npy", "sids.npy", 0.05, "item_id", "features")
         dump_plan("diffuse_distributed_step", both_p.mapInPandas(
             spool_kernel, "item_id long, features array<double>"))
+        step_secs = info.get("step_sec", [])
         timers["diffuse_step1"] = step_secs[0] if step_secs else None
         timers["diffuse_step2"] = (step_secs[1]
                                    if len(step_secs) > 1 else None)

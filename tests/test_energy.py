@@ -31,8 +31,9 @@ def test_diffuse_one_step_matches_numpy(spark, test0_items_df, edges,
     """One step of the distributed (spool) tier is exact fp64."""
     eta = 0.1
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    out = E.diffuse(test0_items_df, edges, eta, steps=1)
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    info: dict = {}
+    out = E.diffuse(test0_items_df, edges, eta, steps=1, info=info)
+    assert info["plan"] == "spool"
     got = {r["item_id"]: np.array(r["features"])
            for r in out.collect()}
 
@@ -125,13 +126,15 @@ def test_diffuse_tiers_agree(spark, test0_items_df, edges, monkeypatch):
     """The driver tier and the distributed spool tier are physical
     plans for the same operator; on the default path multi-step
     outputs must agree to fp noise."""
-    a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
-    assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
+    info_a: dict = {}
+    a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3, info=info_a)
+    assert info_a["tier"] == "driver"
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
     # force the beyond-broadcast tier
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    info_b: dict = {}
+    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3, info=info_b)
+    assert info_b["plan"] == "spool"
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
     assert set(got_a) == set(got_b)
     for i in got_a:

@@ -208,6 +208,27 @@ def test_driver_tier_matches_spark_flow(spark, sf_items, sf_edges,
     assert rows[0] == rows[1] and len(rows[0]) == 21
 
 
+def test_spark_flow_runs_two_censuses(spark, sf_items, sf_edges,
+                                      monkeypatch):
+    """Guard: the Spark flow takes (N, F, E) once for the tier rule and
+    diffuses with those counts; only the feature Laplacian's census
+    (on the diffused frame and the trimmed edges) runs again. Its
+    diffusion used to repeat the first census over the same frames."""
+    calls = []
+    real = M.census
+
+    def _counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(M, "census", _counted)
+    monkeypatch.setattr(M, "driver_fits", lambda *a, **k: False)
+    idx = E.build_energy(sf_items, EP, GP, edges=sf_edges)
+    assert len(calls) == 2
+    assert idx.diffusion_info["plan"] == "spool"
+    assert len(idx.diffusion_info["step_sec"]) == EP.steps
+
+
 def test_driver_tier_rejects_duplicate_ids(spark):
     """Pin: the tier's id sort raises on a repeated id, as the driver
     diffusion it replaces did."""
@@ -325,8 +346,9 @@ def test_driver_diffusion_hands_back_parallel_partitions(spark, sf_items,
     parquet file of one row group came back as partitions of
     [0, N, 0] rows)."""
     assert spark.sparkContext.defaultParallelism > 1
-    out = E.diffuse(sf_items, sf_edges, eta=0.05, steps=2)
-    assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
+    info: dict = {}
+    out = E.diffuse(sf_items, sf_edges, eta=0.05, steps=2, info=info)
+    assert info["tier"] == "driver"
     sizes = out.rdd.glom().map(len).collect()
     assert sum(sizes) == sf_items.count()
     assert sum(1 for c in sizes if c) > 1, sizes

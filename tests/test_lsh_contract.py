@@ -1,8 +1,10 @@
 """Input and resource contract of the LSH build (`knn.knn_edges`,
 strategy="lsh"): duplicate ids and empty frames, the scratch rule it
 shares with diffusion, the up-front disk budget, spool cleanup on
-failure, `lsh_plan` describing the plan that runs, and per-group stage
-metrics read without the UI's REST endpoint."""
+failure, `lsh_plan` describing the plan that runs, per-group stage
+metrics read without the UI's REST endpoint, a build record no nested
+build can change, and the builder's one input check on both
+strategies."""
 
 import os
 import shutil
@@ -12,6 +14,7 @@ import numpy as np
 import pytest
 
 from pyarrowspace_spark import spool
+from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
@@ -164,10 +167,12 @@ def test_lsh_plan_group_count_matches_build(spark, monkeypatch):
     monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
     gp = GraphParams(eps=0.35, k=k, topk=k, p=2.0, sigma=0.2)
-    K.knn_edges(_frame(spark, _rows(n, f=f)), gp, strategy="lsh").count()
+    info: dict = {}
+    K.knn_edges(_frame(spark, _rows(n, f=f)), gp, strategy="lsh",
+                info=info).count()
     plan = K.lsh_plan(n, f, k)
     assert plan["n_band_groups"] >= 2
-    assert K.lsh_group_summary()["n_groups"] == plan["n_band_groups"]
+    assert info["n_groups"] == plan["n_band_groups"]
 
 
 def test_lsh_group_stages_without_rest(spark, monkeypatch):
@@ -183,8 +188,10 @@ def test_lsh_group_stages_without_rest(spark, monkeypatch):
     monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
     gp = GraphParams(eps=0.35, k=6, topk=6, p=2.0, sigma=0.2)
-    K.knn_edges(_frame(spark, _rows(600, f=24)), gp, strategy="lsh").count()
-    groups = K._LAST_LSH_GROUP_INFO
+    info: dict = {}
+    K.knn_edges(_frame(spark, _rows(600, f=24)), gp, strategy="lsh",
+                info=info).count()
+    groups = info["groups"]
     assert len(groups) >= 2
     for g in groups:
         assert g["stages"]
@@ -195,3 +202,51 @@ def test_lsh_group_stages_without_rest(spark, monkeypatch):
             assert st["num_tasks"] >= 1 and st["wall_sec"] >= 0
     sids = [st["sid"] for g in groups for st in g["stages"]]
     assert sids == sorted(set(sids))  # each group: only its own stages
+
+
+def test_nested_build_cannot_change_the_outer_record(spark, monkeypatch):
+    """Contract: a call's record is its own. An exact `knn_edges` run
+    inside an LSH build's band-group loop (from the per-group
+    stage-metrics read) leaves the outer record whole: every group
+    recorded, n_groups ≥ 2, and the nested records empty. With a
+    module-global record the nested call reset it mid-loop and the
+    outer build died on the measured spool unit."""
+    monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    small = _frame(spark, _rows(40))
+    real = K._stages_since
+    nested = []
+
+    def _interleaved(spark_, watermark):
+        inner: dict = {}
+        K.knn_edges(small, GP, strategy="exact", info=inner)
+        nested.append(inner)
+        return real(spark_, watermark)
+
+    monkeypatch.setattr(K, "_stages_since", _interleaved)
+    gp = GraphParams(eps=0.35, k=6, topk=6, p=2.0, sigma=0.2)
+    info: dict = {}
+    K.knn_edges(_frame(spark, _rows(600, f=24)), gp, strategy="lsh",
+                info=info).count()
+    assert info["n_groups"] >= 2
+    assert info["n_groups"] == len(info["groups"]) == len(nested)
+    assert nested == [{}] * len(nested)
+
+
+@pytest.mark.parametrize("strategy", ["exact", "lsh"])
+@pytest.mark.parametrize("bad", ["ragged", "null"])
+def test_builder_rejects_ragged_and_null_rows(spark, monkeypatch,
+                                              strategy, bad):
+    """Contract: the builder's one shape aggregate rejects a ragged
+    corpus (row 40 has 7 of 8 features) and a null feature row with
+    one ValueError naming the lengths, on both strategies. The exact
+    path used to fail inside numpy's stack and the LSH path as a
+    "not deterministic" items frame."""
+    monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
+    rows = _rows(60, f=8)
+    rows[40] = (40, rows[40][1][:7] if bad == "ragged" else None)
+    want = ("lengths range from 7 to 8 over 60 rows, 0 of them"
+            if bad == "ragged" else
+            "lengths range from 8 to 8 over 60 rows, 1 of them")
+    with pytest.raises(ValueError, match=want):
+        ArrowSpaceBuilder.build(_frame(spark, rows), GP, strategy=strategy)

@@ -1,7 +1,8 @@
 """Source guards over the package: the set of SPARK_GRAFT_* env levers
-it reads and where the driver-tier levers are read, and the rule that
-an operator module uses no underscore name of another operator module
-(shared helpers are public, or live in `spool`/`functions`)."""
+it reads and where the driver-tier levers are read, the rule that an
+operator module uses no underscore name of another operator module
+(shared helpers are public, or live in `spool`/`functions`), and the
+rule that operators keep no per-call state in module globals."""
 
 import ast
 import pathlib
@@ -19,7 +20,6 @@ ENV_LEVERS = {
     "SPARK_GRAFT_DIFFUSE_BCAST_MAX",
     "SPARK_GRAFT_EXACT_PCT_MAX",
     "SPARK_GRAFT_LSH_MIN_FREE",
-    "SPARK_GRAFT_LSH_MISS_BUDGET",
 }
 
 
@@ -53,7 +53,7 @@ def _env_key(node):
 
 
 def test_env_levers_pinned():
-    """Guard: the package reads exactly the 9 pinned SPARK_GRAFT_* env
+    """Guard: the package reads exactly the 8 pinned SPARK_GRAFT_* env
     levers, so a new lever (or a dead one left behind) fails CI."""
     read = {key for _, tree in _trees(PKG) for node in ast.walk(tree)
             if isinstance(key := _env_key(node), str)
@@ -109,4 +109,24 @@ def test_operators_import_no_private_operator_names():
                     and node.value.id in aliases
                     and node.attr.startswith("_")):
                 bad.append(f"{path.name}: {node.value.id}.{node.attr}")
+    assert bad == []
+
+
+def test_operators_keep_no_call_records_in_globals():
+    """Guard: no module under operators/ has a `global` statement, and
+    no package module binds a `_LAST_*` name at module level: a call's
+    record travels with the call (`diffuse(info=)`,
+    `knn_edges(info=)`), so two builds in one process cannot overwrite
+    each other's."""
+    bad = [f"{path.name}:{node.lineno} global {', '.join(node.names)}"
+           for path, tree in _trees(OPERATORS)
+           for node in ast.walk(tree) if isinstance(node, ast.Global)]
+    for path, tree in _trees(PKG):
+        for node in tree.body:
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(
+                           node, (ast.AnnAssign, ast.AugAssign)) else [])
+            bad += [f"{path.name}: {t.id}" for t in targets
+                    if isinstance(t, ast.Name)
+                    and t.id.startswith("_LAST_")]
     assert bad == []

@@ -33,9 +33,11 @@ def test_lsh_matches_exact_at_saturating_recall(spark):
     LSH kernel gemms float32 unit vectors gathered from the spool)."""
     items = _corpus(spark)
     gp = GraphParams(eps=0.9, k=8, topk=8, p=2.0)
+    info: dict = {}
     lsh = {(r["src"], r["dst"]): r["dist"] for r in K.knn_edges(
-        items, gp, strategy="lsh", lsh_bits=2, lsh_bands=32).collect()}
-    assert K.lsh_group_summary() is not None  # the pair stage spooled
+        items, gp, strategy="lsh", lsh_bits=2, lsh_bands=32,
+        info=info).collect()}
+    assert info  # the pair stage spooled
     exact = {(r["src"], r["dst"]): r["dist"]
              for r in K.knn_edges(items, gp, strategy="exact").collect()}
     assert set(lsh) == set(exact) and len(lsh) > 0
@@ -91,17 +93,18 @@ def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):
     items = _corpus(spark, n=400, f=12, seed=5)
     gp = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
     edges = K.knn_edges(items, gp, strategy="exact").persist()
+    info_a: dict = {}
     a = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.05, steps=3).collect()}
-    assert E._LAST_DIFFUSE_INFO["tier"] == "driver"
+         for r in E.diffuse(items, edges, eta=0.05, steps=3,
+                            info=info_a).collect()}
+    assert info_a["tier"] == "driver"
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    steps_sec: list = []
-    b_df = E.diffuse(items, edges, eta=0.05, steps=3,
-                     step_times=steps_sec)
+    info: dict = {}
+    b_df = E.diffuse(items, edges, eta=0.05, steps=3, info=info)
     b = {r["item_id"]: np.array(r["features"]) for r in b_df.collect()}
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
-    assert E._LAST_DIFFUSE_INFO["write"] == "task"
-    assert len(steps_sec) == 3
+    assert info["plan"] == "spool"
+    assert info["write"] == "task"
+    assert len(info["step_sec"]) == 3
     edges.unpersist()
     assert set(a) == set(b)
     for i in a:
@@ -121,9 +124,11 @@ def test_diffuse_spool_isolated_nodes_identity(spark, monkeypatch):
         [(0, 1, 0.5), (1, 2, 0.25), (2, 3, 0.75)],
         schema="src long, dst long, weight double")
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    info: dict = {}
     out = {r["item_id"]: np.array(r["features"])
-           for r in E.diffuse(items, edges, eta=0.1, steps=2).collect()}
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+           for r in E.diffuse(items, edges, eta=0.1, steps=2,
+                              info=info).collect()}
+    assert info["plan"] == "spool"
     assert set(out) == set(range(6))
     for i in (4, 5):
         np.testing.assert_array_equal(
@@ -157,11 +162,13 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch,
         return real_probe(spark, d)
 
     monkeypatch.setattr(spool, "probe_worker_visible", _probe)
+    info: dict = {}
     b = {r["item_id"]: np.array(r["features"])
-         for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
+         for r in E.diffuse(items, edges, eta=0.05, steps=2,
+                            info=info).collect()}
     assert probed == [str(tmp_path)]
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
-    assert E._LAST_DIFFUSE_INFO["write"] == "stream"
+    assert info["plan"] == "spool"
+    assert info["write"] == "stream"
     assert set(a) == set(b)
     for i in a:
         np.testing.assert_allclose(b[i], a[i], rtol=1e-9)

@@ -100,9 +100,10 @@ def test_diffuse_chunked_matches_driver_at_sf0001(spark, sf_items,
     a = E.diffuse(sf_items, edges, eta=0.05, steps=2)
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    b = E.diffuse(sf_items, edges, eta=0.05, steps=2)
+    info: dict = {}
+    b = E.diffuse(sf_items, edges, eta=0.05, steps=2, info=info)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    assert info["plan"] == "spool"
     assert set(got_a) == set(got_b)
     for i in got_a:
         np.testing.assert_allclose(got_a[i], got_b[i], rtol=1e-9)
@@ -121,9 +122,10 @@ def test_diffuse_distributed_default_fp32(spark, test0_items_df,
     a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
+    info: dict = {}
+    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3, info=info)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
-    assert E._LAST_DIFFUSE_INFO["tier"] == "distributed"
+    assert info["tier"] == "distributed"
     assert set(got_a) == set(got_b)
     for i in got_a:
         np.testing.assert_allclose(got_a[i], got_b[i], rtol=1e-9)

@@ -61,11 +61,12 @@ def test_lsh_adaptive_groups_match_single_stage(spark, sf_items,
         sf_items, gp, strategy="lsh").select(
         "src", "dst", "dist").collect()}
     monkeypatch.setattr(knn_ops, "LSH_GROUP_BYTES", 64 << 10)
+    rec: dict = {}
     grouped = {(r["src"], r["dst"]): r["dist"] for r in knn_ops.knn_edges(
-        sf_items, gp, strategy="lsh").select(
+        sf_items, gp, strategy="lsh", info=rec).select(
         "src", "dst", "dist").collect()}
     assert single == grouped
-    info = knn_ops._LAST_LSH_GROUP_INFO
+    info = rec["groups"]
     assert info and len(info) > 1
     for g in info:
         assert g["spool_bytes"] > 0

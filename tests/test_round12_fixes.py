@@ -3,9 +3,9 @@
 - per-GROUP pair-spool projection under the k-cap (finding 3): the
   up-front refusal must accept a build whose disk fits the k-capped
   per-group spools even when the old per-band projection would refuse.
-- `lsh_plan` / `lsh_group_summary` diagnostics surface (finding 2):
-  the grouped-stage record is a structured accessor + index attachment,
-  no longer a module-global breadcrumb only measurement scripts read.
+- `lsh_plan` / LSH build record diagnostics surface (finding 2): the
+  grouped-stage record is the `info` dict `knn_edges` fills and the
+  index's `lsh_build_info`, no module-global breadcrumb.
 - diffusion on a HIGH-DEGREE graph (verdict gap 3): a star hub of
   degree 299 through the distributed tier, exact fp64 vs numpy.
 - worker-visibility probe of the spool scratch rule (ADVICE r11).
@@ -59,26 +59,31 @@ def test_lsh_plan_deterministic_twin():
 
 
 def test_group_summary_attached_and_reset(spark, monkeypatch):
-    """A grouped LSH build populates lsh_group_summary() and the built
-    index's lsh_build_info; a following exact build resets both to
-    None (no stale leak across builds — finding 2)."""
+    """A grouped LSH build fills the `knn_edges` record and the built
+    index's lsh_build_info; a following exact build leaves its record
+    empty and its index's lsh_build_info None (no stale leak across
+    builds — finding 2)."""
     # narrow 28 B rows: a 100 kB budget forces ≥2 groups at N=600
     monkeypatch.setattr(K, "LSH_GROUP_BYTES", 100_000)
     monkeypatch.setenv("SPARK_GRAFT_LSH_MIN_FREE", "1000000")
     items = _small_corpus(spark)
     gp = GraphParams(eps=0.35, k=6, topk=6, p=2.0, sigma=0.2)
     idx = ArrowSpaceBuilder.build(items, gp, strategy="lsh")
-    s = K.lsh_group_summary()
+    s = idx.lsh_build_info
     assert s is not None and s["n_groups"] >= 2
     assert s["bands_total"] == sum(len(g["bands"]) for g in s["groups"])
     assert s["spool_bytes_total"] > 0
     assert s["spool_bytes_max_group"] <= s["spool_bytes_total"]
-    assert idx.lsh_build_info == s
+    assert s["n_groups"] == len(s["groups"])
     assert idx.edges.count() > 0
-    # exact build afterwards: record cleared, nothing stale attached
+    # exact build afterwards: its record is empty, nothing attached,
+    # and the LSH index keeps its own record
+    rec: dict = {}
+    K.knn_edges(items, gp, strategy="exact", info=rec)
+    assert rec == {}
     idx2 = ArrowSpaceBuilder.build(items, gp, strategy="exact")
-    assert K.lsh_group_summary() is None
     assert idx2.lsh_build_info is None
+    assert idx.lsh_build_info is s and s["n_groups"] >= 2
 
 
 def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
@@ -114,12 +119,12 @@ def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
                                      free=fake_free)
 
     monkeypatch.setattr(K.shutil, "disk_usage", fake_usage)
+    s: dict = {}
     edges = K.knn_edges(
         _small_corpus(spark, n=n, f=f),
         GraphParams(eps=0.35, k=k, topk=k, p=2.0, sigma=0.2),
-        strategy="lsh")
+        strategy="lsh", info=s)
     assert edges.count() > 0
-    s = K.lsh_group_summary()
     assert s is not None and s["n_groups"] >= 2
     assert items is not None
 
@@ -141,8 +146,9 @@ def test_fp32_messages_high_degree_star(spark, monkeypatch):
         schema="src long, dst long, weight double")
     eta = 0.001  # keep the hub update contractive at deg≈300
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    out = E.diffuse(items, edges, eta, steps=1)
-    assert E._LAST_DIFFUSE_INFO["plan"] == "spool"
+    info: dict = {}
+    out = E.diffuse(items, edges, eta, steps=1, info=info)
+    assert info["plan"] == "spool"
     got = np.stack([r["features"] for r in
                     out.orderBy("item_id").collect()])
     # exact fp64: x' = x − η(Dx − Wx)
