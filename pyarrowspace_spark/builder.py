@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from .params import GraphParams, EnergyParams
 from . import spool
 from .session import debug_print
+from .functions import matrix
 from .operators import knn as knn_ops
 from .operators import lambda_index as lam_ops
 
@@ -139,9 +140,8 @@ class ArrowSpaceIndex:
     def load(cls, spark, path: str) -> "ArrowSpaceIndex":
         """Reopen a saved index: tables stay lazy/distributed, only the
         F×F Laplacian and metadata hit the driver."""
-        from .functions.matrix import laplacian_from_parquet
-
-        lf = laplacian_from_parquet(spark, f"{path}/feature_laplacian")
+        lf = matrix.laplacian_from_parquet(spark,
+                                           f"{path}/feature_laplacian")
         meta = spark.read.json(f"{path}/meta").collect()[0].asDict()
         # normalise/seed are load-bearing for extend(): a normalise=True
         # index reopened without them would append un-normalized vectors
@@ -162,28 +162,6 @@ class ArrowSpaceIndex:
             tau_synth=float(meta["tau_synth"]),
             n_features=int(meta["n_features"]),
         )
-
-
-def _checked_shape(base: DataFrame) -> "tuple[int, int]":
-    """(N, F) of the persisted `base` from ONE aggregate (which fills
-    its cache). Empty, ragged or null feature rows release `base` and
-    raise ValueError naming the lengths (the reference rejects
-    empty/ragged input, src/helpers.rs:24-29)."""
-    feats = F.col("features")
-    size = F.when(feats.isNotNull(), F.size(feats))
-    row = base.agg(F.count(F.lit(1)).alias("n"), F.min(size).alias("lo"),
-                   F.max(size).alias("hi"),
-                   F.count(F.when(feats.isNull(), 1)).alias("nulls")).first()
-    n, lo, hi, nulls = row["n"], row["lo"], row["hi"], row["nulls"]
-    if not hi or lo != hi or nulls:
-        base.unpersist()
-        if not hi:
-            raise ValueError(
-                "items must be a non-empty DataFrame of non-empty vectors")
-        raise ValueError(
-            f"items must be rectangular: feature lengths range from {lo} "
-            f"to {hi} over {n} rows, {nulls} of them with null features")
-    return int(n), int(hi)
 
 
 class ArrowSpaceBuilder:
@@ -279,21 +257,29 @@ class ArrowSpaceBuilder:
         # kernel, magnitude stats — ran on ONE task while 31 cores
         # idled (measured: 31 tasks at 0.25 s, one at 78 s). The cache
         # then preserves the balanced layout for every downstream pass.
-        from .functions.matrix import with_scan_parallelism
-
-        base = with_scan_parallelism(base, int(
+        base = matrix.with_scan_parallelism(base, int(
             items.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                         "32")))
         # Edges + λ both traverse base twice — cache across the build.
         base = base.persist()
-        n_rows, n_features = _checked_shape(base)
+        # the input contract: ragged, null or zero-length rows and null
+        # ids raise before the graph stage reads base
+        try:
+            n_rows, n_features, _ = matrix.census(base)
+            if n_rows == 0:
+                raise ValueError(
+                    "items must be a non-empty DataFrame of non-empty "
+                    "vectors")
+        except ValueError:
+            base.unpersist()
+            raise
 
-        graph_input, graph_rows = base, n_rows
+        graph_input, graph_shape = base, (n_rows, n_features)
         if sample_rate is not None and sample_rate < 1.0:
             graph_input = base.sample(
                 withReplacement=False, fraction=float(sample_rate),
                 seed=int(seed)).persist()
-            graph_rows = None
+            graph_shape = None
 
         graph_feat = "features"
         if dims_reduction:
@@ -306,6 +292,8 @@ class ArrowSpaceBuilder:
                     graph_input, k_red, n_features,
                     feat_col="features", out_col="_graph_feat")
                 graph_feat = "_graph_feat"
+                if graph_shape is not None:
+                    graph_shape = (n_rows, k_red)
                 debug_print(
                     f"build: dims_reduction on — graph stage at k={k_red} "
                     f"of F={n_features}")
@@ -327,7 +315,7 @@ class ArrowSpaceBuilder:
                                       feat_col=graph_feat,
                                       lsh_bits=lsh_bits,
                                       lsh_bands=lsh_bands,
-                                      n_rows=graph_rows,
+                                      shape=graph_shape,
                                       x_source=knn_x_src,
                                       info=lsh_info).persist()
         # λ spool source: stream the X spool from the corpus
@@ -339,18 +327,9 @@ class ArrowSpaceBuilder:
         lf = lam_ops.feature_laplacian(graph_input, edges, n_features,
                                        x_source=x_src)
         # ONE Python kernel pass computes the τ-independent (e_raw, g);
-        # τ-synthesis and the λ blend are JVM-side over that column.
-        comp = lam_ops.with_energy_components(base, lf).persist()
-        # scale-tiered median (functions.stats): exact below the
-        # ceiling (oracle parity), percentile_approx beyond — the
-        # exact per-distinct-double state over billions of e_raw
-        # values would OOM the merging task.
-        from .functions import stats
-
-        tau_row = comp.select(
-            stats.percentile_expr("_ec.e_raw", 0.5, n_rows).alias("m")
-        ).first()
-        tau_synth = float(tau_row["m"]) if tau_row["m"] is not None else 0.0
+        # τ-synthesis and the λ blend are JVM-side over its cache.
+        comp, median = lam_ops.components_with_median(base, lf, n_rows)
+        tau_synth = float(median) if median is not None else 0.0
         debug_print(
             f"build: eps={params.eps} k={params.k} sigma={params.sigma} "
             f"F={n_features} tau_synth(Median)={tau_synth}")
@@ -370,12 +349,7 @@ class ArrowSpaceBuilder:
         # search-time τ is then a JVM expression — search never pays a
         # Python pass over the corpus (reference recomputes item λ per
         # search call with the caller's τ, TAUMODE.md).
-        indexed = comp.select(
-            "*",
-            F.col("_ec.e_raw").alias("e_raw"),
-            F.col("_ec.g").alias("g"),
-        ).withColumn(
-            "lambda", lam_ops.blend_lambda("_ec", tau_synth)).drop("_ec")
+        indexed = lam_ops.blend(comp, tau_synth)
 
         return ArrowSpaceIndex(
             items=indexed,
@@ -406,27 +380,11 @@ class ArrowSpaceBuilder:
         New vectors must match the index's nfeatures; normalise is
         applied if the base index was built with it.
         """
-        first = new_items.select(F.size(feat_col).alias("n")).first()
-        if first is None:
+        indexed = lam_ops.indexed_batch(
+            new_items, index.feature_laplacian, index.tau_synth,
+            index.params.normalise, id_col, feat_col)
+        if indexed is None:
             return index
-        if int(first["n"]) != index.n_features:
-            raise ValueError(
-                f"new items have {first['n']} features, index has "
-                f"{index.n_features}")
-        add = new_items.select(
-            F.col(id_col).alias("item_id"), F.col(feat_col).alias("features"))
-        if index.params.normalise:
-            from .functions import vector as V
-
-            add = add.withColumn("features", V.l2_normalize("features"))
-        comp = lam_ops.with_energy_components(add, index.feature_laplacian)
-        indexed = comp.select(
-            "*",
-            F.col("_ec.e_raw").alias("e_raw"),
-            F.col("_ec.g").alias("g"),
-        ).withColumn(
-            "lambda", lam_ops.blend_lambda("_ec", index.tau_synth)
-        ).drop("_ec")
         return ArrowSpaceIndex(
             items=index.items.unionByName(indexed),
             edges=index.edges,

@@ -162,23 +162,48 @@ def driver_fits(spark, n: int, nf: int, n_edges: int,
             and (not handoff or handoff_eligible(spark, x_bytes)))
 
 
-def census(items: DataFrame, edges: DataFrame,
-           feat_col: str = "features") -> "tuple[int, int, int]":
-    """(N, F, E) in ONE aggregate over both frames (one shuffle of
-    two-int rows): the item count, the longest feature array and the
-    edge count — the statistics `driver_fits` prices. (0, 0, E) for an
-    empty items frame."""
-    rows = (items.select(F.lit(0).alias("_t"),
-                         F.size(feat_col).alias("_f"))
-            .unionByName(edges.select(F.lit(1).alias("_t"),
-                                      F.lit(0).alias("_f")))
-            .groupBy("_t")
-            .agg(F.count("*").alias("_c"), F.max("_f").alias("_f"))
-            .collect())
-    got = {int(r["_t"]): r for r in rows}
-    n, nf = ((int(got[0]["_c"]), int(got[0]["_f"])) if 0 in got
-             else (0, 0))
-    return n, nf, int(got[1]["_c"]) if 1 in got else 0
+def census(items: DataFrame, edges: "DataFrame | None" = None,
+           feat_col: str = "features",
+           id_col: str = "item_id") -> "tuple[int, int, int]":
+    """(N, F, E) in ONE aggregate over both frames (over `items` alone
+    without `edges`): the item count, the feature length and the edge
+    count, the statistics `driver_fits` prices; (0, 0, E) for no items.
+    It is also every build path's input contract (the reference checks
+    once, at its builder, src/helpers.rs:24-29): a ragged, null or
+    zero-length feature row or a null id raises ONE ValueError naming
+    the lengths. Duplicate ids are left to `sorted_index`, which every
+    driver tier and spool runs: a distinct count would cost a full
+    aggregate per build."""
+    feats = F.col(feat_col)
+    stats = [F.count(F.lit(1)).alias("n"), F.min("_f").alias("lo"),
+             F.max("_f").alias("hi"), F.sum("_nf").alias("nulls"),
+             F.sum("_ni").alias("null_ids")]
+    shape = items.select(F.when(feats.isNotNull(), F.size(feats)).alias("_f"),
+                         feats.isNull().cast("long").alias("_nf"),
+                         F.col(id_col).isNull().cast("long").alias("_ni"))
+    if edges is None:
+        row, n_edges = shape.agg(*stats).first(), 0
+    else:
+        rows = (shape.withColumn("_t", F.lit(0))
+                .unionByName(edges.select(
+                    F.lit(None).cast("int").alias("_f"),
+                    F.lit(0).cast("long").alias("_nf"),
+                    F.lit(0).cast("long").alias("_ni"),
+                    F.lit(1).alias("_t")))
+                .groupBy("_t").agg(*stats).collect())
+        got = {int(r["_t"]): r for r in rows}
+        row, n_edges = got.get(0), int(got[1]["n"]) if 1 in got else 0
+    n = int(row["n"]) if row is not None else 0
+    if n == 0:
+        return 0, 0, n_edges
+    lo, hi, nulls, null_ids = (row["lo"], row["hi"], int(row["nulls"]),
+                               int(row["null_ids"]))
+    if not hi or lo != hi or nulls or null_ids:
+        raise ValueError(
+            f"items must be rectangular with non-null ids: feature "
+            f"lengths range from {lo} to {hi} over {n} rows, {nulls} of "
+            f"them with null features and {null_ids} with a null id")
+    return n, int(hi), n_edges
 
 
 def collect_graph(items: DataFrame, edges: DataFrame,

@@ -9,7 +9,12 @@ the items, as an eager-released parquet handoff (8 Spark jobs for a
 build plus the items and centroids counts, where the Spark flow ran
 ~42). Beyond it the Spark flow runs the stages below as distributed
 operators, where diffusion and L_F each apply the rule at their own
-price. λ, e_raw, τ, L_F and the assignment agree between the tiers.
+price. The census also checks the input contract. The tiers share
+the step loop, the L_F helper, the blend's operation order, the nearest
+cell, the moments, the percentile replay, the training rows of the
+quantizer and the splits (all rows up to COMPRESS_MAX_TRAIN, else the
+same xxhash64 samples) and the split rule (`_nearest_child`), so λ,
+e_raw, τ, L_F and `centroid_id` agree between the tiers.
 
 Stages (Spark flow):
   1. λτ-graph (shared with the standard build).
@@ -26,7 +31,7 @@ Stages (Spark flow):
      centroids; centroid energy attributes (λ/e/dispersion means).
   5. Dispersion split G13b: centroids whose member-λ dispersion
      exceeds the `split_quantile` quantile are split once (2-means),
-     bounded driver loop.
+     bounded driver loop; one narrow pandas UDF moves their members.
   6. search_energy G15: cosine-free scoring
      score = w_lambda·1/(1+|λ_q−λ_x|) + w_dirichlet·1/(1+|e_q−e_x|),
      centroid shortlist of `candidate_m` then exact member rescore.
@@ -66,11 +71,12 @@ from ..functions.matrix import (
 from ..params import EnergyParams, GraphParams
 from . import knn as knn_ops
 from . import lambda_index as lam_ops
+from . import simsearch
 from .search import (QUERY_BLOCK, block_topk, check_query_ids, fold_dot,
                      ranked)
 
 # Optical-token / split training matrices are collected driver-side;
-# above this row count the collect runs on a deterministic hash-capped
+# above this row count both tiers train on a deterministic hash-capped
 # subset (same policy + helper as the IVF quantizer).
 COMPRESS_MAX_TRAIN = 100_000
 
@@ -566,8 +572,9 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     """
     if int(steps) <= 0:
         return items.select(id_col, feat_col)
-    out, rec = _diffuse_tiered(items, edges, eta, steps, id_col, feat_col,
-                               *matrix_mod.census(items, edges, feat_col))
+    out, rec = _diffuse_tiered(
+        items, edges, eta, steps, id_col, feat_col,
+        *matrix_mod.census(items, edges, feat_col, id_col))
     if info is not None and rec:
         info.update(rec)
     return out
@@ -732,8 +739,6 @@ def _split_children(M: np.ndarray, split_tau: float) -> "np.ndarray | None":
     member direction u, then Lloyd refines from that deterministic
     init. (Earlier rounds misused split_tau as a threshold offset,
     which *suppressed* splits as it grew — ADVICE r2 item 5.)"""
-    from .simsearch import lloyd_kmeans
-
     if len(M) < 2:
         return None
     c = M.mean(axis=0)
@@ -748,7 +753,67 @@ def _split_children(M: np.ndarray, split_tau: float) -> "np.ndarray | None":
         u = -u
     tau_off = float(split_tau)
     init = np.stack([c + tau_off * u, c - tau_off * u])
-    return lloyd_kmeans(M, 2, init=init, iters=10)
+    return simsearch.lloyd_kmeans(M, 2, init=init, iters=10)
+
+
+def _id64():
+    """The item id as a long, the key both tiers sample by."""
+    return F.col("item_id").cast("long")
+
+
+def _sample_keys(base: DataFrame, s_ids: np.ndarray):
+    """The Spark flow's sampling keys for the driver pass's rows (ids
+    ascending): xxhash64 of each id (the split windows' order) and
+    `deterministic_cap`'s thinning (the quantizer's), from one small
+    job above COMPRESS_MAX_TRAIN rows; (None, None) below."""
+    n = len(s_ids)
+    if n <= COMPRESS_MAX_TRAIN:
+        return None, None
+    pdf = (base.select(_id64().alias("item_id"))
+           .select("item_id", F.xxhash64("item_id").alias("h"),
+                   simsearch.cap_filter("item_id", COMPRESS_MAX_TRAIN,
+                                        n).alias("keep"))
+           .toPandas().sort_values("item_id"))
+    if not np.array_equal(pdf["item_id"].to_numpy(np.int64), s_ids):
+        raise RuntimeError("build_energy: the items frame is not "
+                           "deterministic")
+    return pdf["h"].to_numpy(np.int64), pdf["keep"].to_numpy(bool)
+
+
+def _nearest_child(M: np.ndarray, children: np.ndarray,
+                   first_id: int) -> np.ndarray:
+    """G13b's split rule, both tiers: each member row of M moves to the
+    child of least d² = x·x − 2·x·c + c·c, each dot folded as Spark's
+    aggregate(zip_with) (`search.fold_dot`); NaN ranks last, as Spark
+    sorts it, and ties go to the lower child, `first_id`."""
+    MT = M.T
+    ff = fold_dot((x, x) for x in MT)
+    d2 = [ff - 2.0 * fold_dot(zip(MT, ch)) + fold_dot(zip(ch, ch))
+          for ch in children]
+    second = (d2[1] < d2[0]) | (np.isnan(d2[0]) & ~np.isnan(d2[1]))
+    return np.where(second, first_id + 1, first_id).astype(np.int64)
+
+
+def _split_reassign(spark, children: dict):
+    """The Spark flow's G13b move: one narrow pandas UDF over
+    (centroid_id, features) that moves the members of each split token
+    (`children`: parent → (first child id, 2×F centers)) by
+    `_nearest_child` and passes every other row through."""
+    bc = spark.sparkContext.broadcast(children)
+
+    @F.pandas_udf("long")
+    def reassign(cid: pd.Series, feats: pd.Series) -> pd.Series:
+        cids = cid.to_numpy(np.int64)
+        out = cids.copy()
+        for parent, (first_id, ch) in bc.value.items():
+            rows = np.nonzero(cids == parent)[0]
+            if len(rows):
+                out[rows] = _nearest_child(
+                    np.stack(feats.to_numpy()[rows]).astype(np.float64),
+                    ch, first_id)
+        return pd.Series(out)
+
+    return reassign
 
 
 def _build_energy_driver(base: DataFrame, edges: DataFrame,
@@ -760,8 +825,6 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     Spark flow's values (centroid moments up to the member order of a
     mean). One frame goes back: the items, as one eager-released
     parquet handoff."""
-    from .simsearch import lloyd_kmeans, nearest_cells
-
     spark = base.sparkSession
     # row block of the λ and assignment passes: lambda_kernel holds ~7
     # block×F temporaries, which a bounded block keeps small at any N
@@ -790,38 +853,39 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
         e_raw[b:b + blk], g[b:b + blk], _ = (
             lam_ops.lambda_kernel(X[b:b + blk], lf, tau=1.0))
     tau_synth = _checked_tau(stats.exact_percentile(e_raw, 0.5))
-    # blend_lambda's SQL operation order
+    # lambda_index.blend's SQL operation order
     lam = tau_synth * (e_raw / (e_raw + tau_synth)) + (1.0 - tau_synth) * g
     del g
 
-    # G14: the Spark flow's quantizer and ivf_assign's nearest cell
-    centers0 = lloyd_kmeans(X, k_tokens, seed=42)
-    cid = np.concatenate([nearest_cells(X[b:b + blk], centers0)[:, 0]
-                          for b in range(0, n, blk)]).astype(np.int64)
+    # G14: the Spark flow's quantizer on its training rows (all of
+    # them up to COMPRESS_MAX_TRAIN) and ivf_assign's nearest cell
+    h, cap_keep = _sample_keys(base, s_ids)
+    train = (slice(None) if cap_keep is None
+             else np.nonzero(cap_keep)[0][:COMPRESS_MAX_TRAIN])
+    centers0 = simsearch.lloyd_kmeans(X[train], k_tokens, seed=42)
+    cid = np.concatenate([
+        simsearch.nearest_cells(X[b:b + blk], centers0)[:, 0]
+        for b in range(0, n, blk)]).astype(np.int64)
 
     def moments(c: int) -> dict:
         m = cid == c
         return _centroid_moments(X[m], lam[m], e_raw[m])
 
     attrs = {int(c): moments(c) for c in np.unique(cid)}
-    # G13b: split the tokens above the split_quantile of dispersion;
-    # members move to the child of least d² (child_id breaks ties), d²
-    # folded as the Spark flow's SQL computes it
+    # G13b: split the tokens above the split_quantile of dispersion
     split_cut = stats.exact_percentile(
         [a["disp_c"] for a in attrs.values()], eparams.split_quantile)
     next_id = k_tokens
     for c in sorted(c for c, a in attrs.items() if a["disp_c"] > split_cut):
-        members = np.nonzero(cid == c)[0]
-        children = _split_children(X[members], eparams.split_tau)
+        members = rows = np.nonzero(cid == c)[0]
+        if len(members) > COMPRESS_MAX_TRAIN:
+            # the Spark flow's member window: first by (xxhash64, id)
+            rows = np.sort(members[np.lexsort(
+                (s_ids[members], h[members]))[:COMPRESS_MAX_TRAIN]])
+        children = _split_children(X[rows], eparams.split_tau)
         if children is None:
             continue
-        MT = X[members].T
-        ff = fold_dot((x, x) for x in MT)
-        d2 = [ff - 2.0 * fold_dot(zip(MT, ch)) + fold_dot(zip(ch, ch))
-              for ch in children]
-        # Spark's ascending sort puts NaN last
-        second = (d2[1] < d2[0]) | (np.isnan(d2[0]) & ~np.isnan(d2[1]))
-        cid[members] = np.where(second, next_id + 1, next_id)
+        cid[members] = _nearest_child(X[members], children, next_id)
         del attrs[c]
         for child in (next_id, next_id + 1):
             if np.any(cid == child):
@@ -869,25 +933,30 @@ def build_energy(
     the SAME items/params): a real pipeline building both indexes from
     one corpus runs the expensive graph build once, not twice.
 
-    Two tiers, chosen after one census aggregate (N, F, E):
+    One census aggregate (`matrix.census`) checks the input contract
+    and takes N, F and, with `edges`, E; without `edges` it runs before
+    the kNN stage and hands it (N, F). Two tiers follow:
 
     - driver tier, when `matrix.driver_fits` (the one driver-tier
       rule) holds with the handoff check: X and the edge list are each
       collected once, trim cut, diffusion, L_F, e_raw/g, τ, λ, the
       quantizer, the assignment, the centroid moments and the split all
       run in numpy (`_build_energy_driver`), and the items go back as
-      one eager-released parquet handoff. λ, e_raw, τ, L_F and the
-      assignment equal the Spark flow's.
+      one eager-released parquet handoff.
     - the Spark flow beyond: `trim_edges`, `diffuse` and
       `lambda_index.feature_laplacian` (each applies the rule at its
-      own price), `with_energy_components`, the ivf_assign pass and the
-      grouped centroid kernel. Each intermediate cache is dropped once
-      every frame that reads it is materialized.
+      own price), the one λ pass, the ivf_assign pass, the grouped
+      centroid kernel and the split's pandas UDF. Each intermediate
+      cache is dropped once every frame that reads it is materialized.
+
+    Both tiers train the quantizer and each split on the same rows (all
+    up to COMPRESS_MAX_TRAIN, else the same xxhash64 samples of the
+    ids) and move members by one rule (`_nearest_child`), so λ, e_raw,
+    τ, L_F and `centroid_id` agree between them.
 
     The index holds three caches: its items, its centroids and its
-    (trimmed) edges. Raises ValueError on an empty items frame, on
-    duplicate ids (driver tier) and on a collapsed spectrum (median
-    energy ≤ 0)."""
+    (trimmed) edges. Raises the census's ValueError, and ValueError on
+    duplicate ids (driver tier) and a collapsed spectrum."""
     base = items.select(F.col(id_col).alias("item_id"),
                         F.col(feat_col).alias("features"))
     # same single-row-group scan-parallelism guard as the standard
@@ -912,15 +981,23 @@ def build_energy(
     own_edges = edges is None
     if own_edges:
         base = base.persist()
-        edges = knn_ops.knn_edges(base, gparams).persist()
     else:
         # caller-owned frame (usually already persisted by the standard
         # build) — re-persisting it would double-cache the same plan
         edges = edges.select("src", "dst", "weight")
-    # materializes base and our edges, if persisted
-    n_items, n_features, n_edges = matrix_mod.census(base, edges)
-    if n_items == 0:
-        raise ValueError("build_energy: the items frame is empty")
+    try:
+        # materializes base, if persisted, and the given edges
+        n_items, n_features, n_edges = matrix_mod.census(
+            base, None if own_edges else edges)
+        if n_items == 0:
+            raise ValueError("build_energy: the items frame is empty")
+    except ValueError:
+        base.unpersist()
+        raise
+    if own_edges:
+        edges = knn_ops.knn_edges(base, gparams,
+                                  shape=(n_items, n_features)).persist()
+        n_edges = edges.count()
     k_tokens = int(eparams.optical_tokens or 40)
     if matrix_mod.driver_fits(items.sparkSession, n_items, n_features,
                               n_edges, handoff=True):
@@ -950,25 +1027,19 @@ def build_energy(
         n_items, n_features, n_edges)
     diffused = diffused.persist()
 
-    # λ/e on the *diffused* space — one kernel pass for the
-    # τ-independent components, τ-synthesis + blend JVM-side (same
-    # single-pass pattern as the standard builder).
+    # λ/e on the *diffused* space: the one λ pass, τ-synthesis and the
+    # blend JVM-side (`lambda_index.components_with_median`)
     lf = lam_ops.feature_laplacian(diffused, kept_edges, n_features)
     # its census materialized diffused and kept_edges, the last readers
     # of base and of our untrimmed edges
     if own_edges and kept_edges is not edges:
         edges.unpersist()
     base.unpersist()
-    comp = lam_ops.with_energy_components(diffused, lf).persist()
-    tau_row = comp.select(
-        stats.percentile_expr("_ec.e_raw", 0.5, n_items).alias("m")).first()
+    comp, median = lam_ops.components_with_median(diffused, lf, n_items)
     diffused.unpersist()
-    tau_synth = _checked_tau(tau_row["m"])
-    indexed = comp.select(
-        "*", F.col("_ec.e_raw").alias("e_raw")
-    ).withColumn(
-        "lambda", lam_ops.blend_lambda("_ec", tau_synth)
-    ).drop("_ec").persist()
+    tau_synth = _checked_tau(median)
+    # the energy items keep e_raw and λ, as the driver pass's do
+    indexed = lam_ops.blend(comp, tau_synth).drop("g").persist()
 
     # G14: optical-token compression — the repo's deterministic seeded
     # Lloyd quantizer (operators/simsearch.lloyd_kmeans, shared with
@@ -977,23 +1048,19 @@ def build_energy(
     # Training collects a deterministically hash-capped matrix via the
     # Arrow path; assignment stays fully distributed (broadcast-gemm
     # argmin), so the plan scales exactly like IVF.
-    from .simsearch import deterministic_cap, ivf_assign, lloyd_kmeans
-
-    train = deterministic_cap(indexed.select("item_id", "features"),
-                              "item_id", COMPRESS_MAX_TRAIN, n_rows=n_items)
+    train = simsearch.deterministic_cap(
+        indexed.select(_id64().alias("item_id"), "features"), "item_id",
+        COMPRESS_MAX_TRAIN, n_rows=n_items)
     _, x_train = collect_id_matrix(train.orderBy("item_id"),
                                    "item_id", "features")
     comp.unpersist()  # the collect scanned, so materialized, indexed
-    centers0 = lloyd_kmeans(x_train, k_tokens, seed=42)
+    centers0 = simsearch.lloyd_kmeans(x_train, k_tokens, seed=42)
     del x_train
-    # Assignment as a column on `indexed` directly (r13-opt): the old
-    # shape computed `assigned` on a SELECT of indexed and joined it
-    # back on item_id — a full N-row self-join (two exchanges + an
-    # N×F sort) whose stage measured 483 task-sec at the 78k bench.
-    # ivf_assign is just a withColumn, so attaching it in place emits
-    # the identical rows with zero shuffle.
+    # the assignment is a column on `indexed` (ivf_assign is a
+    # withColumn): no self-join, no shuffle
     with_c = (
-        ivf_assign(indexed, centers0, "features", "cells", n_probe=1)
+        simsearch.ivf_assign(indexed, centers0, "features", "cells",
+                             n_probe=1)
         .withColumn("centroid_id", F.col("cells")[0].cast("long"))
         .drop("cells")
         # persisted: consumed by the first attrs pass, the split-member
@@ -1016,22 +1083,15 @@ def build_energy(
     to_split = sorted(
         int(r["centroid_id"]) for r in crows if r["disp_c"] > split_cut)
     if to_split:
-        # Batched split (round 5): the first cut looped per centroid —
-        # a full filter+collect per split plus an anti-join per split,
-        # then recomputed EVERY centroid's attributes; at N=313k that
-        # lineage chain was most of a 497 s materialize. Now: ONE
-        # capped member collect for all split tokens, driver-side
-        # SVD+Lloyd per token, ONE broadcast-join reassignment (members
-        # rank only their own parent's two children — the same
-        # (d², child_id) order as the oracle's reassign CTE), one
-        # anti-join, and attribute recompute for the children only.
+        # ONE capped member collect for all split tokens, driver-side
+        # SVD+Lloyd per token, then ONE narrow pass moves the members
+        # (`_split_reassign`) and the children's attributes are
+        # recomputed.
         spark = items.sparkSession
-        # Cap order = xxhash64(item_id): when a split token exceeds
-        # COMPRESS_MAX_TRAIN the training sample is a deterministic
-        # but UNBIASED hash sample (same policy as deterministic_cap),
-        # not the insertion-ordered first-100k-by-id (ADVICE r5).
+        # above COMPRESS_MAX_TRAIN a token trains on an unbiased,
+        # deterministic sample: its first members by xxhash64 of the id
         wcap = Window.partitionBy("centroid_id").orderBy(
-            F.xxhash64("item_id"), "item_id")
+            F.xxhash64(_id64()), "item_id")
         mem = (
             with_c.filter(
                 F.col("centroid_id").isin([int(c) for c in to_split]))
@@ -1042,69 +1102,31 @@ def build_energy(
             .toPandas()
         )
         next_id = k_tokens
-        child_rows: list[tuple[int, int, np.ndarray]] = []
+        children: dict = {}
         for cid in to_split:
             sub = mem[mem["centroid_id"] == cid].sort_values("item_id")
-            children = (_split_children(
+            ch = (_split_children(
                 np.stack(sub["features"].to_numpy()).astype(np.float64),
                 eparams.split_tau) if len(sub) else None)
-            if children is None:
+            if ch is None:
                 continue
-            child_rows.append((int(cid), int(next_id), children[0]))
-            child_rows.append((int(cid), int(next_id) + 1, children[1]))
+            children[cid] = (next_id, ch)
             next_id += 2
-        if child_rows:
-            # pure-python rows: numpy float64 elements are rejected by
-            # the non-Arrow session verifier (round-5 driver regression)
-            cdf = spark.createDataFrame(
-                [(int(r[0]), int(r[1]), [float(v) for v in r[2]])
-                 for r in child_rows],
-                schema="centroid_id long, child_id long, c array<double>")
-
-            def _dot(a, b):
-                return F.aggregate(
-                    F.zip_with(a, b, lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, v: acc + v)
-
-            split_ids = sorted({r[0] for r in child_rows})
-            wre = Window.partitionBy("item_id").orderBy(
-                F.col("_d2").asc(), F.col("child_id").asc())
-            reassigned = (
-                with_c.filter(F.col("centroid_id").isin(split_ids))
-                .select("item_id", "centroid_id", "features")
-                .join(F.broadcast(cdf), "centroid_id")
-                .withColumn(
-                    "_d2",
-                    _dot("features", "features")
-                    - 2.0 * _dot("features", "c") + _dot("c", "c"))
-                .withColumn("_rn", F.row_number().over(wre))
-                .filter(F.col("_rn") == 1)
-                .select("item_id", F.col("child_id").alias("centroid_id"))
-            )
+        if children:
+            # Materialize the moved members WHILE the pre-split cache
+            # is warm, THEN drop it (ADVICE r5 — without the unpersist
+            # it holds executor storage for the index lifetime).
             with_c0 = with_c
-            # Post-split members table as an UPDATE of the cached
-            # pre-split frame (r13-opt): the old shape rebuilt
-            # `assigned` (anti-join + union) and re-joined it against
-            # `indexed` — re-running the whole assignment UDF pass
-            # plus another N-row wide join. reassigned carries one row
-            # per member of a split token, so a left join + coalesce
-            # over the warm with_c0 cache emits the identical rows.
-            # Materialize WHILE the pre-split cache is warm, THEN drop
-            # it (ADVICE r5 — without the unpersist it holds executor
-            # storage for the index lifetime).
-            _new = reassigned.withColumnRenamed("centroid_id", "_new_cid")
-            with_c = (
-                with_c0.join(_new, "item_id", "left")
-                .withColumn("centroid_id",
-                            F.coalesce("_new_cid", "centroid_id"))
-                .drop("_new_cid").persist())
+            with_c = with_c0.withColumn(
+                "centroid_id", _split_reassign(spark, children)(
+                    "centroid_id", "features")).persist()
             with_c.count()
             with_c0.unpersist()
             child_attrs = _centroid_attrs(
                 with_c.filter(F.col("centroid_id") >= F.lit(k_tokens)))
             cents0 = centroids
             centroids = (
-                cents0.filter(~F.col("centroid_id").isin(split_ids))
+                cents0.filter(~F.col("centroid_id").isin(list(children)))
                 .unionByName(child_attrs).persist()
             )
             centroids.count()
@@ -1164,56 +1186,42 @@ def extend_energy(
     probe scans the existing items table, which breaks the O(new
     items) cost contract on a large index.
     """
-    first = new_items.select(F.size(feat_col).alias("n")).first()
-    if first is None:
+    # the energy items keep e_raw and λ, as the build's do
+    indexed = lam_ops.indexed_batch(
+        new_items, index.feature_laplacian, index.tau_synth,
+        index.graph_params.normalise, id_col, feat_col)
+    if indexed is None:
         return index
-    nf = int(index.feature_laplacian.shape[0])
-    if int(first["n"]) != nf:
-        raise ValueError(
-            f"new items have {first['n']} features, index has {nf}")
-    add = new_items.select(
-        F.col(id_col).alias("item_id"), F.col(feat_col).alias("features"))
+    indexed = indexed.drop("g")
     if check_ids:
         dup = (index.items.select("item_id")
-               .join(F.broadcast(add.select("item_id")), "item_id")
+               .join(F.broadcast(indexed.select("item_id")), "item_id")
                .first())
         if dup is not None:
             raise ValueError(
                 f"extend_energy: item_id {dup['item_id']} already "
                 "exists in the index (ids must be unique)")
-        dup_in = (add.groupBy("item_id").count()
+        dup_in = (indexed.groupBy("item_id").count()
                   .filter(F.col("count") > 1).first())
         if dup_in is not None:
             raise ValueError(
                 f"extend_energy: item_id {dup_in['item_id']} appears "
                 f"{dup_in['count']} times in the new batch "
                 "(ids must be unique)")
-    if index.graph_params.normalise:
-        from ..functions import vector as V
-
-        add = add.withColumn("features", V.l2_normalize("features"))
-    comp = lam_ops.with_energy_components(add, index.feature_laplacian)
-    indexed = comp.select(
-        "*", F.col("_ec.e_raw").alias("e_raw")
-    ).withColumn(
-        "lambda", lam_ops.blend_lambda("_ec", index.tau_synth)
-    ).drop("_ec")
 
     # Frozen centers: collect the (≤ ~2·optical_tokens)-row centroid
     # table once; ivf_assign returns POSITIONS into that matrix, which
     # a literal-array lookup maps back to centroid_ids (split children
     # are not contiguous: parents were removed, children start at
     # k_tokens).
-    from .simsearch import ivf_assign
-
     crows = (index.centroids.select("centroid_id", "center")
              .orderBy("centroid_id").collect())
     centers = np.stack([np.asarray(r["center"], dtype=np.float64)
                         for r in crows])
     cid_lits = F.array(*[F.lit(int(r["centroid_id"])) for r in crows])
     assigned = (
-        ivf_assign(indexed.select("item_id", "features"), centers,
-                   "features", "cells", n_probe=1)
+        simsearch.ivf_assign(indexed.select("item_id", "features"),
+                             centers, "features", "cells", n_probe=1)
         # element_at is 1-indexed
         .select("item_id",
                 F.element_at(cid_lits, F.col("cells")[0] + 1)

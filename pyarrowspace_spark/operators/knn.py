@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from .. import spool
 from ..params import GraphParams
 from ..functions import vector as V
+from ..functions.matrix import census
 
 #: Scratch-disk spill multiplier for one band group: the group's
 #: (band,key) shuffle sorts N·gsize rows; measured peak transient over
@@ -415,7 +416,7 @@ def pairwise_candidates_lsh(
     n_bits: int | None = None,
     n_bands: int | None = None,
     seed: int = 42,
-    n_items: int | None = None,
+    shape: "tuple[int, int] | None" = None,
     bucket_max: int | None = None,
     x_source: dict | None = None,
     info: dict | None = None,
@@ -458,6 +459,8 @@ def pairwise_candidates_lsh(
 
     `info`: pass a dict to get the pair stage's `_group_summary`.
 
+    `shape`: the (N, F) `matrix.census` of `items`; run here if None.
+
     An empty `items` frame yields no pairs. Raises ValueError on
     duplicate ids; RuntimeError when a multi-host master has no
     worker-visible SPARK_GRAFT_SCRATCH_DIR, or the scratch disk cannot
@@ -477,15 +480,14 @@ def pairwise_candidates_lsh(
         StructField("dst", LongType(), False),
         StructField("dist", DoubleType(), False),
     ])
-    if n_items is None:
-        n_items = items.count()
+    n_items, fdim = (shape if shape is not None
+                     else census(items, feat_col=feat_col, id_col=id_col)[:2])
     if n_items == 0:
         return spark.createDataFrame([], pair_schema)
     if n_bits is None:
         n_bits = int(min(20, max(6, round(math.log2(max(n_items / 256, 2))))))
     if n_bands is None:
         n_bands = auto_lsh_bands(n_bits)
-    fdim = int(items.select(F.size(feat_col).alias("n")).first()["n"])
     nb, bits = int(n_bands), int(n_bits)
     eps_f = float(eps)
     k_i = int(k) if k is not None else 0
@@ -866,7 +868,7 @@ def knn_edges(
     strategy: str = "auto",
     lsh_bits: int | None = None,
     lsh_bands: int | None = None,
-    n_rows: int | None = None,
+    shape: "tuple[int, int] | None" = None,
     x_source: dict | None = None,
     info: dict | None = None,
 ) -> DataFrame:
@@ -880,18 +882,18 @@ def knn_edges(
       == row_number window (GRAPH_VARIABLES.md:8) -> symmetrize ->
       kernel weight (GRAPH_VARIABLES.md:9).
 
-    `n_rows`: pass the precomputed row count of `items` to skip the
-    strategy switch's count and the LSH build's own (an extra eager
-    Spark job each otherwise).
+    `shape`: pass the (N, F) census of `items` (`matrix.census`,
+    which the builders run first) to skip this call's own, an extra
+    eager Spark job that also checks the input contract.
 
     `info`: pass a dict and an LSH build fills it with its pair
     stage's measured record (`_group_summary`), complete on return as
     the stage runs eagerly; an exact build leaves it empty.
     """
+    if shape is None:
+        shape = census(items, feat_col=feat_col, id_col=id_col)[:2]
     if strategy == "auto":
-        if n_rows is None:
-            n_rows = items.count()
-        strategy = "exact" if n_rows <= EXACT_PATH_MAX_ROWS else "lsh"
+        strategy = "exact" if shape[0] <= EXACT_PATH_MAX_ROWS else "lsh"
     if strategy == "exact":
         # eps + per-node top-k already applied partition-locally.
         knn = _knn_directed_broadcast_scan(
@@ -900,7 +902,7 @@ def knn_edges(
     elif strategy == "lsh":
         cand = pairwise_candidates_lsh(
             items, id_col, feat_col, params.eps, k=params.k,
-            n_bits=lsh_bits, n_bands=lsh_bands, n_items=n_rows,
+            n_bits=lsh_bits, n_bands=lsh_bands, shape=shape,
             x_source=x_source, info=info,
         )
 

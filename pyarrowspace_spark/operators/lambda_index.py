@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import spool
+from ..functions import matrix, stats
+from ..functions import vector as V
 
 
 def feature_laplacian(
@@ -61,9 +63,11 @@ def feature_laplacian(
     Decomposition:  L_F = Σ_i deg_i·x_i x_iᵀ  -  Σ_{(i,j)∈E} w_ij·(x_i x_jᵀ + x_j x_iᵀ)
 
     Two physical tiers, one logical contract; one census aggregate
-    (N, F, E) picks the tier. The census scans `edges` in full before
-    either tier reads it again, so pass a persisted edge frame: an
-    unpersisted plan (a fresh kNN graph, say) is computed twice.
+    (N, F, E) checks the input contract (`matrix.census`; an empty
+    items frame raises too) and picks the tier. The census scans
+    `edges` in full before either tier reads it again, so pass a
+    persisted edge frame: an unpersisted plan (a fresh kNN graph, say)
+    is computed twice.
 
     - driver tier, when `matrix.driver_fits` holds without the handoff
       check (the one driver-tier rule; nothing goes back to Spark):
@@ -98,10 +102,10 @@ def feature_laplacian(
     directory), and ValueError on duplicate ids. Its spool dir is
     removed on every path.
     """
-    from ..functions import matrix
-
     spark = items.sparkSession
-    n, _, n_edges = matrix.census(items, edges, feat_col)
+    n, _, n_edges = matrix.census(items, edges, feat_col, id_col)
+    if n == 0:
+        raise ValueError("feature_laplacian: the items frame is empty")
     if matrix.driver_fits(spark, n, n_features, n_edges, handoff=False):
         _, X, si, di, w = matrix.collect_graph(items, edges, id_col,
                                                feat_col)
@@ -179,11 +183,9 @@ def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
     as row positions (si, di) with weights w: L·X = deg∘X − W·X over
     both orientations of each edge (the neighbour combine diffusion
     runs, `matrix.segment_sum`), then one N×F² gemm, symmetrized."""
-    from ..functions.matrix import segment_sum, sym_segments
-
-    seg = sym_segments(si, di, w, len(X))
+    seg = matrix.sym_segments(si, di, w, len(X))
     LX = seg.deg[:, None] * X
-    LX -= segment_sum(X, seg)
+    LX -= matrix.segment_sum(X, seg)
     lf = X.T @ LX
     return (lf + lf.T) / 2.0
 
@@ -195,16 +197,14 @@ def _write_x_spool(items: DataFrame, id_col: str, feat_col: str, n: int,
     `d`/sids.npy from the first source that applies (see
     `feature_laplacian`); returns the sorted ids. Raises ValueError on
     duplicate ids."""
-    from ..functions.matrix import collect_id_matrix, sorted_index
-
     x_path = os.path.join(d, "x.npy")
     s_ids = None
     if x_source is not None:
         s_ids = spool.from_parquet(x_source["files"], x_source["id_col"],
                                    x_source["feat_col"], n, fdim, x_path)
     if s_ids is None and x_fits:
-        ids, X = collect_id_matrix(items, id_col, feat_col)
-        s_ids, order = sorted_index(ids)
+        ids, X = matrix.collect_id_matrix(items, id_col, feat_col)
+        s_ids, order = matrix.sorted_index(ids)
         out = np.lib.format.open_memmap(x_path, mode="w+",
                                         dtype=np.float64, shape=(n, fdim))
         for t0 in range(0, n, 65536):
@@ -234,8 +234,6 @@ def _make_edge_partials_kernel(d: str, fdim: int):
     s_path = os.path.join(d, "sids.npy")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.matrix import positions_of
-
         X = np.load(x_path, mmap_mode="r")
         s_ids = np.load(s_path)
         order = np.arange(len(s_ids), dtype=np.int64)
@@ -243,10 +241,10 @@ def _make_edge_partials_kernel(d: str, fdim: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            si = positions_of(pdf["src"].to_numpy(dtype=np.int64),
-                              s_ids, order)
-            di = positions_of(pdf["dst"].to_numpy(dtype=np.int64),
-                              s_ids, order)
+            si = matrix.positions_of(
+                pdf["src"].to_numpy(dtype=np.int64), s_ids, order)
+            di = matrix.positions_of(
+                pdf["dst"].to_numpy(dtype=np.int64), s_ids, order)
             w = pdf["weight"].to_numpy(dtype=np.float64)
             C = (X[si] * w[:, None]).T @ X[di]
             acc -= C + C.T
@@ -296,55 +294,6 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     return e_raw, g, s_val
 
 
-def median_tau(items: DataFrame, lf: np.ndarray,
-               feat_col: str = "features") -> float:
-    """τ_synth = median of e_raw over all items (TauMode::Median).
-
-    Scale-tiered percentile (`functions.stats`, SURVEY §7.3 #4): exact
-    below the row ceiling — oracle parity — `percentile_approx` beyond,
-    where the exact per-distinct-double aggregation state would OOM.
-    """
-    from ..functions import stats
-
-    spark = items.sparkSession
-    blf = spark.sparkContext.broadcast(lf)
-
-    @F.pandas_udf(DoubleType())
-    def e_raw_udf(feats: pd.Series) -> pd.Series:
-        X = np.stack(feats.to_numpy())
-        LF = blf.value
-        return pd.Series(np.einsum("bi,bi->b", X @ LF, X))
-
-    med = (
-        items.select(e_raw_udf(F.col(feat_col)).alias("e_raw"))
-        .select(stats.percentile_expr("e_raw", 0.5, items.count()).alias("m"))
-        .collect()[0]["m"]
-    )
-    return float(med)
-
-
-def with_lambda(
-    items: DataFrame,
-    lf: np.ndarray,
-    tau: float,
-    feat_col: str = "features",
-    out_col: str = "lambda",
-) -> DataFrame:
-    """Append the synthetic index S(x) as `lambda` — a narrow,
-    Arrow-batched pass with the broadcast F×F Laplacian."""
-    spark = items.sparkSession
-    blf = spark.sparkContext.broadcast(lf)
-    t = float(tau)
-
-    @F.pandas_udf(DoubleType())
-    def lam_udf(feats: pd.Series) -> pd.Series:
-        X = np.stack(feats.to_numpy())
-        _, _, s_val = lambda_kernel(X, blf.value, t)
-        return pd.Series(s_val)
-
-    return items.withColumn(out_col, lam_udf(F.col(feat_col)))
-
-
 def lambda_for_vectors(X: np.ndarray, lf: np.ndarray, tau: float) -> np.ndarray:
     """Driver-side λ for a small batch of query vectors (λ_q synthesis,
     reference src/lib.rs:152-154). Raises if any λ is 0 — the reference
@@ -367,8 +316,6 @@ def magnitude_report(items: DataFrame,
     44-66 — we REPORT instead of panicking, SURVEY §7.3 #7):
     one row of [n_items, min/avg/max L2 norm, n_zero_vectors,
     n_nonfinite] computed in a single JVM aggregate pass."""
-    from ..functions import vector as V
-
     norm = V.l2_norm(feat_col)
     return items.agg(
         F.count("*").cast("long").alias("n_items"),
@@ -385,14 +332,12 @@ def with_energy_components(
     items: DataFrame,
     lf: np.ndarray,
     feat_col: str = "features",
-    out_col: str = "_ec",
 ) -> DataFrame:
-    """Append one struct column (e_raw, g): BOTH τ-independent spectral
-    components in a single Arrow-batched kernel pass.
-
-    τ-synthesis + the final blend are then pure SQL over this column —
-    the builder pays ONE Python pass per item instead of two (median-τ
-    pass + λ pass each re-deriving e_raw)."""
+    """Append one struct column `_ec` (e_raw, g): BOTH τ-independent
+    spectral components in a single Arrow-batched kernel pass, the one
+    Spark λ pass every build, extend and stream runs. τ-synthesis
+    (`components_with_median`) and the blend (`blend`) are then pure
+    SQL over this column, so a build pays ONE Python pass per item."""
     spark = items.sparkSession
     blf = spark.sparkContext.broadcast(lf)
     schema = StructType([
@@ -407,16 +352,62 @@ def with_energy_components(
         e_raw, g, _ = lambda_kernel(X, blf.value, tau=1.0)
         return pd.DataFrame({"e_raw": e_raw, "g": g})
 
-    return items.withColumn(out_col, ec_udf(F.col(feat_col)))
+    return items.withColumn("_ec", ec_udf(F.col(feat_col)))
+
+
+def components_with_median(items: DataFrame, lf: np.ndarray,
+                           n_rows: int | None,
+                           feat_col: str = "features"
+                           ) -> "tuple[DataFrame, float | None]":
+    """A build's λ pass up to its blend: `items` with the
+    `with_energy_components` column, persisted (the caller owns the
+    cache), and τ_synth, the median of its e_raw (TauMode::Median).
+    The percentile is `stats.percentile_expr`'s, tiered by `n_rows`."""
+    comp = with_energy_components(items, lf, feat_col).persist()
+    median = comp.select(
+        stats.percentile_expr("_ec.e_raw", 0.5, n_rows).alias("m")
+    ).first()["m"]
+    return comp, median
+
+
+def blend(comp: DataFrame, tau: float) -> DataFrame:
+    """The λ blend over a `with_energy_components` frame: replaces the
+    struct with `e_raw`, `g` and `lambda` = S(x) at `tau`, all JVM-side."""
+    return comp.select(
+        "*", F.col("_ec.e_raw").alias("e_raw"), F.col("_ec.g").alias("g"),
+    ).withColumn("lambda", blend_lambda_cols(
+        F.col("_ec.e_raw"), F.col("_ec.g"), tau)).drop("_ec")
+
+
+def with_lambda(items: DataFrame, lf: np.ndarray, tau: float,
+                feat_col: str = "features") -> DataFrame:
+    """Append `e_raw`, `g` and the synthetic index S(x) as `lambda` at
+    a given τ: the one λ pass plus its blend (a narrow, Arrow-batched
+    pass with the broadcast F×F Laplacian)."""
+    return blend(with_energy_components(items, lf, feat_col), tau)
+
+
+def indexed_batch(new_items: DataFrame, lf: np.ndarray, tau: float,
+                  normalise: bool, id_col: str = "item_id",
+                  feat_col: str = "features") -> "DataFrame | None":
+    """Both extends' new batch, λ-indexed against a frozen L_F and τ:
+    the census (the input contract, O(new items)), the F check, the
+    alias, normalisation if the base build ran it and `with_lambda`.
+    None for an empty batch."""
+    n, nf, _ = matrix.census(new_items, feat_col=feat_col, id_col=id_col)
+    if n == 0:
+        return None
+    if nf != lf.shape[0]:
+        raise ValueError(
+            f"new items have {nf} features, index has {lf.shape[0]}")
+    add = new_items.select(
+        F.col(id_col).alias("item_id"), F.col(feat_col).alias("features"))
+    if normalise:
+        add = add.withColumn("features", V.l2_normalize("features"))
+    return with_lambda(add, lf, tau)
 
 
 def blend_lambda_cols(e: F.Column, g: F.Column, tau: float) -> F.Column:
     """S(x) = τ·e/(e+τ) + (1−τ)·g from explicit component columns."""
     t = F.lit(float(tau))
     return t * (e / (e + t)) + (F.lit(1.0) - t) * g
-
-
-def blend_lambda(ec_col: str, tau: float) -> F.Column:
-    """Blend over the struct column from `with_energy_components`."""
-    return blend_lambda_cols(F.col(f"{ec_col}.e_raw"),
-                             F.col(f"{ec_col}.g"), tau)

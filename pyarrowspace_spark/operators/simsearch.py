@@ -364,13 +364,17 @@ def deterministic_cap(df: DataFrame, id_col: str, max_rows: int,
     n = df.count() if n_rows is None else int(n_rows)
     if n <= max_rows:
         return df
+    thinned = df.filter(cap_filter(id_col, max_rows, n, seed))
+    return thinned.orderBy(id_col).limit(int(max_rows))
+
+
+def cap_filter(id_col: str, max_rows: int, n: int, seed: int = 42):
+    """`deterministic_cap`'s thinning predicate for an n-row frame:
+    keeps ~1.2×max_rows rows by pmod(xxhash64(id, seed), 2²⁰)."""
     denom = 1 << 20
     num = max(1, min(denom, int(denom * 1.2 * max_rows / n)))
-    thinned = df.filter(
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(int(seed))), F.lit(denom))
-        < F.lit(num)
-    )
-    return thinned.orderBy(id_col).limit(int(max_rows))
+    return (F.pmod(F.xxhash64(F.col(id_col), F.lit(int(seed))),
+                   F.lit(denom)) < F.lit(num))
 
 
 def ivf_centroids(items: DataFrame, n_centroids: int, seed: int = 42,

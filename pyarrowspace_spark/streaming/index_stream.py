@@ -28,9 +28,11 @@ def incremental_lambda_stream(
     tau: float,
     feat_col: str = "features",
 ) -> DataFrame:
-    """Append-mode streaming DataFrame with the λ column computed
-    against the frozen base index's feature Laplacian. Works on any
-    streaming source with an array<double> feature column."""
+    """Append-mode streaming DataFrame with `e_raw`, `g` and `lambda`
+    computed against the frozen base index's feature Laplacian and τ by
+    the one λ pass (`lambda_index.with_lambda`), as `extend` computes
+    them. Works on any streaming source with an array<double> feature
+    column."""
     if not stream_items.isStreaming:
         raise ValueError("expected a streaming DataFrame (readStream source)")
     return with_lambda(stream_items, lf, tau, feat_col=feat_col)

@@ -1,7 +1,8 @@
 """The driver tier of `build_energy`: one X collect, one edge collect and
 one handoff under the one driver-tier rule, `matrix.driver_fits`. Its
 Spark-job budget, its priced peak, its parity with the all-spool Spark
-flow, the `stats.exact_percentile` replay it cuts with, the
+flow (above the training cap too), the Spark flow's join- and
+window-free split, the `stats.exact_percentile` replay it cuts with, the
 `centroid_id` type on every path, one evaluation of the assignment UDF
 per `ivf_assign`, the caches a build leaves and the driver diffusion
 handoff's partitions."""
@@ -227,6 +228,53 @@ def test_spark_flow_runs_two_censuses(spark, sf_items, sf_edges,
     assert len(calls) == 2
     assert idx.diffusion_info["plan"] == "spool"
     assert len(idx.diffusion_info["step_sec"]) == EP.steps
+
+
+def test_tiers_draw_the_same_training_rows_above_the_cap(
+        spark, sf_items, sf_edges, monkeypatch):
+    """Contract: above COMPRESS_MAX_TRAIN the driver pass trains the
+    quantizer on `deterministic_cap`'s sample and splits a token on its
+    first members by xxhash64 of the id, as the Spark flow does, so
+    both give the same centroid_id and centres (within 1e-14: member
+    order inside a mean). The driver pass used to train and split on
+    every row."""
+    n = sf_items.count()
+    cap = n // 3
+    monkeypatch.setattr(E, "COMPRESS_MAX_TRAIN", cap)
+    ep = EnergyParams(optical_tokens=2, eta=0.05, steps=2,
+                      trim_quantile=0.1)
+    drv = E.build_energy(sf_items, ep, GP, edges=sf_edges)
+    assert drv.diffusion_info["tier"] == "driver"
+    monkeypatch.setattr(M, "driver_fits", lambda *a, **k: False)
+    flow = E.build_energy(sf_items, ep, GP, edges=sf_edges)
+    a, b = _collect(drv), _collect(flow)
+    # a token split, and it held more members than the cap
+    assert (b[0]["centroid_id"] >= 2).sum() > cap
+    assert a[0]["centroid_id"].tolist() == b[0]["centroid_id"].tolist()
+    assert a[1]["centroid_id"].tolist() == b[1]["centroid_id"].tolist()
+    assert _rel(np.stack(a[1]["center"]), np.stack(b[1]["center"])) <= 1e-14
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_spark_flow_split_runs_no_window_or_join(spark, sf_items, sf_edges,
+                                                 monkeypatch):
+    """Guard: the Spark flow moves a split token's members in one
+    narrow pandas UDF (`_nearest_child`, the driver pass's rule), so
+    the items' plan holds no Window and no join. It used to rank each
+    member's two children in a window over a broadcast join and update
+    the members with a left join."""
+    monkeypatch.setattr(M, "driver_fits", lambda *a, **k: False)
+    idx = E.build_energy(sf_items, EP, GP, edges=sf_edges)
+    assert idx.centroids.agg(F.max("centroid_id")).first()[0] >= 16
+    plan = _plan(idx.items)
+    assert "InMemoryRelation" in plan
+    assert not re.search(r"Window|Join", plan)
 
 
 def test_driver_tier_rejects_duplicate_ids(spark):

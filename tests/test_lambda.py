@@ -4,8 +4,11 @@ combine the driver tier shares with driver-tier diffusion
 contracts of L_F and of the X collect, the duplicate-id contract on
 both tiers, driver diffusion pinned to its per-destination matvec loop
 bit for bit, the spool tier pinned to the driver tier, and the spool
-tier's contracts (scratch rule, disk budget, cleanup) and sources
-(`spool.parquet_scan_source`, `spool.from_parquet`, `spool.modes`)."""
+tier's contracts (scratch rule, disk budget, cleanup, worker
+visibility) and sources (`spool.parquet_scan_source`,
+`spool.from_parquet`, `spool.modes`, the collect and the parquet copy),
+a build reusing saved edges, and the one input contract
+(`matrix.census`) on every build path."""
 
 import os
 import shutil
@@ -22,12 +25,16 @@ from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.operators import lambda_index as L
-from pyarrowspace_spark.params import GraphParams
+from pyarrowspace_spark.params import EnergyParams, GraphParams
 from pyarrowspace_spark.sources.loaders import items_from_embeddings
 
 from .test_lsh_recall import SF_DIR
+from .test_r13opt import _corpus
 
 EDGE_SCHEMA = "src long, dst long, weight double"
+# the tiny test0 corpus's graph and energy params
+GP_T0 = GraphParams(eps=0.9, k=4, topk=5, p=2.0)
+EP_T0 = EnergyParams(optical_tokens=3, eta=0.05, steps=2, trim_quantile=0.1)
 
 
 def _matrix(n, f, seed):
@@ -447,3 +454,177 @@ def test_spool_tier_failure_removes_spool(spark, test0_items_df,
         L.feature_laplacian(test0_items_df, edges, 24)
     assert _lfx_dirs(tmp_path) == []
     assert M._SCRATCH_DIRS == before
+
+
+def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
+    """The spool tier with the corpus-parquet source is BITWISE equal to
+    the collect source and to the parquet copy source (same id-sorted
+    storage, same sorted edge scan, same fp64 accumulation — only the
+    spool's producer differs)."""
+    p, _ = _write_corpus(spark, tmp_path, n=220, f=8)
+    items = spark.read.parquet(p).select("item_id", "features")
+    gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0, sigma=0.2)
+    edges = K.knn_edges(items, gp, strategy="exact").persist()
+    edges.count()
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)  # force spool tier
+    src = spool.parquet_scan_source(items, "item_id", "features")
+    assert src is not None
+    lf_scan = L.feature_laplacian(items, edges, 8, x_source=src)
+    lf_collect = L.feature_laplacian(items, edges, 8, x_source=None)
+    assert np.array_equal(lf_scan, lf_collect)
+    monkeypatch.setattr(M, "collect_eligible", lambda s, b: False)
+    lf_copy = L.feature_laplacian(items, edges, 8, x_source=None)
+    assert np.array_equal(lf_copy, lf_collect)
+    edges.unpersist()
+
+
+def test_build_with_reused_edges_matches(spark, tmp_path):
+    """ArrowSpaceBuilder.build(edges=...) — the standard-build twin of
+    build_energy's one-graph-two-indexes reuse: rebuilding the index
+    from a saved edge list yields the same λ table and L_F as the
+    original build (the harness uses this to run the 2M ANN phase in
+    a fresh JVM without re-paying the kNN stage)."""
+    p, _ = _write_corpus(spark, tmp_path, n=150, f=8, seed=9)
+    items = spark.read.parquet(p).select("item_id", "features")
+    gp = {"eps": 0.9, "k": 5, "topk": 5, "p": 2.0}
+    idx = ArrowSpaceBuilder.build(items, gp, strategy="exact")
+    ep = str(tmp_path / "edges.parquet")
+    idx.edges.write.parquet(ep)
+    idx2 = ArrowSpaceBuilder.build(
+        items, gp, edges=spark.read.parquet(ep))
+    assert idx2.lsh_build_info is None
+    assert np.allclose(idx2.feature_laplacian, idx.feature_laplacian,
+                       rtol=1e-12, atol=0)
+    assert idx2.tau_synth == pytest.approx(idx.tau_synth, rel=1e-12)
+    lam1 = {r["item_id"]: r["lambda"]
+            for r in idx.items.select("item_id", "lambda").collect()}
+    lam2 = {r["item_id"]: r["lambda"]
+            for r in idx2.items.select("item_id", "lambda").collect()}
+    assert lam1.keys() == lam2.keys()
+    assert all(lam2[i] == pytest.approx(lam1[i], rel=1e-12)
+               for i in lam1)
+
+
+def test_laplacian_falls_back_distributed_when_collect_too_big(
+        spark, test0_items_df, monkeypatch):
+    """A collect over spark.driver.maxResultSize ABORTS the job, so
+    the driver-BLAS Laplacian tiers must not be picked when X would
+    not fit — the fully distributed tier computes the same L_F (the
+    N=600k p_bit run crashed on exactly this tier mis-selection)."""
+    edges = K.knn_edges(test0_items_df, GP_T0, strategy="exact")
+    nf = len(test0_items_df.first()["features"])
+    want = L.feature_laplacian(test0_items_df, edges, nf)
+
+    def _no_collect(*a, **k):
+        raise AssertionError("driver tier collected X despite "
+                             "maxResultSize ineligibility")
+
+    monkeypatch.setattr(M, "collect_eligible", lambda s, b: False)
+    monkeypatch.setattr(M, "collect_id_matrix", _no_collect)
+    monkeypatch.setattr(M, "collect_graph", _no_collect)
+    got = L.feature_laplacian(test0_items_df, edges, nf)
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
+
+
+def test_probe_worker_visible(spark, tmp_path):
+    """Scratch-rule visibility probe (ADVICE r11): a real shared dir
+    probes True; an unwritable/nonexistent dir probes False without
+    raising."""
+    assert spool.probe_worker_visible(spark, str(tmp_path)) is True
+    assert spool.probe_worker_visible(
+        spark, str(tmp_path / "does-not-exist")) is False
+    # no marker corpses left behind
+    assert not [p for p in os.listdir(tmp_path)
+                if p.startswith("pyarrowspace-visprobe-")]
+
+
+def test_gather_diag_hoist_matches_driver_tier(spark):
+    """feature_laplacian's gather tier (diagonal now one driver gemm +
+    SQL degree aggregate) still agrees with the driver-BLAS tier."""
+    items = _corpus(spark, n=300, f=16, seed=11)
+    gp = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
+    edges = K.knn_edges(items, gp, strategy="exact").persist()
+    lf_driver = L.feature_laplacian(items, edges, 16)
+    # force the gather tier by dropping the driver-tier budget
+    old = M.DRIVER_BUDGET_BYTES
+    try:
+        M.DRIVER_BUDGET_BYTES = 0
+        lf_gather = L.feature_laplacian(items, edges, 16)
+    finally:
+        M.DRIVER_BUDGET_BYTES = old
+    edges.unpersist()
+    assert np.allclose(lf_gather, lf_driver, rtol=1e-9, atol=1e-9)
+    assert float(np.abs(lf_gather).max()) > 0
+
+
+# One input contract (`matrix.census`) on every build path: bad rows
+# (row 3 ragged, its features null, or its id null) raise the one
+# ValueError naming the lengths before any kNN, collect or Python pass.
+BAD_MESSAGES = {
+    "ragged": "lengths range from 23 to 24 over 5 rows, 0 of them with "
+              "null features and 0 with a null id",
+    "null_features": "lengths range from 24 to 24 over 5 rows, 1 of them "
+                     "with null features and 0 with a null id",
+    "null_id": "lengths range from 24 to 24 over 5 rows, 0 of them with "
+               "null features and 1 with a null id",
+}
+
+
+def _bad_rows(spark, bad):
+    from .conftest import TEST0_ITEMS
+
+    rows = [(i, list(row)) for i, row in enumerate(TEST0_ITEMS)]
+    rows[3] = {"ragged": (3, rows[3][1][:23]),
+               "null_features": (3, None),
+               "null_id": (None, rows[3][1])}[bad]
+    return spark.createDataFrame(rows, "item_id long, features array<double>")
+
+
+@pytest.fixture(scope="module")
+def t0_indexes(test0_items_df):
+    edges = K.knn_edges(test0_items_df, GP_T0, strategy="exact").persist()
+    return (edges, ArrowSpaceBuilder.build(test0_items_df, GP_T0),
+            E.build_energy(test0_items_df, EP_T0, GP_T0, edges=edges))
+
+
+@pytest.mark.parametrize("bad", sorted(BAD_MESSAGES))
+@pytest.mark.parametrize("entry", [
+    "knn_edges", "build_energy_edges", "build_energy_knn", "diffuse",
+    "feature_laplacian", "extend", "extend_energy"])
+def test_every_build_path_rejects_bad_rows(spark, t0_indexes, entry, bad):
+    """Contract: exact knn_edges, build_energy (given edges or building
+    its own), diffuse, feature_laplacian and both extends reject ragged,
+    null-feature and null-id rows with the builder's one ValueError.
+    They used to die in numpy's stack, a Python worker or an id sort,
+    or to index the row."""
+    edges, idx, eidx = t0_indexes
+    items = _bad_rows(spark, bad)
+    calls = {
+        "knn_edges": lambda: K.knn_edges(items, GP_T0, strategy="exact"),
+        "build_energy_edges": lambda: E.build_energy(items, EP_T0, GP_T0,
+                                                     edges=edges),
+        "build_energy_knn": lambda: E.build_energy(items, EP_T0, GP_T0),
+        "diffuse": lambda: E.diffuse(items, edges, 0.05, 2),
+        "feature_laplacian": lambda: L.feature_laplacian(items, edges, 24),
+        "extend": lambda: ArrowSpaceBuilder.extend(idx, items),
+        "extend_energy": lambda: eidx.extend(items),
+    }
+    with pytest.raises(ValueError, match=BAD_MESSAGES[bad]):
+        calls[entry]()
+
+
+def test_empty_input_keeps_each_callers_outcome(spark, t0_indexes):
+    """Contract: on an empty items frame the census returns (0, 0, E)
+    and each caller keeps its outcome: feature_laplacian raises a
+    ValueError (it used to be numpy's stack error), diffuse returns its
+    input, build_energy raises and both extends return the index."""
+    edges, idx, eidx = t0_indexes
+    empty = spark.createDataFrame([], "item_id long, features array<double>")
+    assert M.census(empty, edges) == (0, 0, edges.count())
+    with pytest.raises(ValueError, match="items frame is empty"):
+        L.feature_laplacian(empty, edges, 24)
+    assert E.diffuse(empty, edges, 0.05, 2).count() == 0
+    with pytest.raises(ValueError, match="items frame is empty"):
+        E.build_energy(empty, EP_T0, GP_T0, edges=edges)
+    assert ArrowSpaceBuilder.extend(idx, empty) is idx
+    assert eidx.extend(empty) is eidx

@@ -130,3 +130,40 @@ def test_operators_keep_no_call_records_in_globals():
                     if isinstance(t, ast.Name)
                     and t.id.startswith("_LAST_")]
     assert bad == []
+
+
+def test_one_lambda_pass():
+    """Guard: the Spark λ pass `with_energy_components` and its `_ec`
+    struct column are named only in `operators/lambda_index.py`: every
+    build, extend and stream reaches them through its blend and median
+    helpers, so there is one blend, not one per caller."""
+    bad = []
+    for path, tree in _trees(PKG):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "operators/lambda_index.py":
+            continue
+        for node in ast.walk(tree):
+            name = (getattr(node, "id", None) or getattr(node, "attr", None)
+                    or getattr(node, "name", None))
+            if name == "with_energy_components":
+                bad.append(f"{rel}:{node.lineno} with_energy_components")
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and (node.value == "_ec"
+                         or node.value.startswith("_ec."))):
+                bad.append(f"{rel}:{node.lineno} {node.value!r}")
+    assert bad == []
+
+
+def test_builders_probe_shape_only_through_the_census():
+    """Guard: `builder.py` and `operators/energy.py` call no `F.size`:
+    their shape probes are `matrix.census`, the one aggregate that also
+    checks the input contract."""
+    bad = [f"{path.name}:{node.lineno}"
+           for path in (PKG / "builder.py", OPERATORS / "energy.py")
+           for node in ast.walk(ast.parse(path.read_text()))
+           if isinstance(node, ast.Call)
+           and isinstance(node.func, ast.Attribute)
+           and node.func.attr == "size"
+           and isinstance(node.func.value, ast.Name)
+           and node.func.value.id == "F"]
+    assert bad == []

@@ -1,7 +1,6 @@
 """r13 optimization-round pins: the narrow-shuffle LSH plan must match
-the exact strategy and its own unsplit buckets, the hoisted Laplacian
-diagonal must be value-identical to the plan it replaced; the spool
-diffusion plan must match the driver tier and fail cleanly (clear
+the exact strategy and its own unsplit buckets; the spool diffusion
+plan must match the driver tier and fail cleanly (clear
 errors, no leaked spool dir)."""
 
 import os
@@ -61,27 +60,6 @@ def test_narrow_shuffle_skew_guard_identical(spark, monkeypatch):
     split = {(r["src"], r["dst"]) for r in K.knn_edges(
         df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
     assert split == unsplit and len(split) > 0
-
-
-def test_gather_diag_hoist_matches_driver_tier(spark):
-    """feature_laplacian's gather tier (diagonal now one driver gemm +
-    SQL degree aggregate) still agrees with the driver-BLAS tier."""
-    from pyarrowspace_spark.operators import lambda_index as LAM
-
-    items = _corpus(spark, n=300, f=16, seed=11)
-    gp = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
-    edges = K.knn_edges(items, gp, strategy="exact").persist()
-    lf_driver = LAM.feature_laplacian(items, edges, 16)
-    # force the gather tier by dropping the driver-tier budget
-    old = M.DRIVER_BUDGET_BYTES
-    try:
-        M.DRIVER_BUDGET_BYTES = 0
-        lf_gather = LAM.feature_laplacian(items, edges, 16)
-    finally:
-        M.DRIVER_BUDGET_BYTES = old
-    edges.unpersist()
-    assert np.allclose(lf_gather, lf_driver, rtol=1e-9, atol=1e-9)
-    assert float(np.abs(lf_gather).max()) > 0
 
 
 def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):

@@ -8,9 +8,9 @@
   index's `lsh_build_info`, no module-global breadcrumb.
 - diffusion on a HIGH-DEGREE graph (verdict gap 3): a star hub of
   degree 299 through the distributed tier, exact fp64 vs numpy.
-- worker-visibility probe of the spool scratch rule (ADVICE r11).
 
-The fp64 half of the gather-tier pin lives in tests/test_lambda.py.
+The fp64 half of the gather-tier pin and the worker-visibility probe
+of the spool scratch rule live in tests/test_lambda.py.
 """
 
 import os
@@ -20,7 +20,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pyarrowspace_spark import spool
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
@@ -158,18 +157,6 @@ def test_fp32_messages_high_degree_star(spark, monkeypatch):
     deg = W.sum(axis=1)
     exact = X - eta * (deg[:, None] * X - W @ X)
     np.testing.assert_allclose(got, exact, rtol=1e-9)
-
-
-def test_probe_worker_visible(spark, tmp_path):
-    """Scratch-rule visibility probe (ADVICE r11): a real shared dir
-    probes True; an unwritable/nonexistent dir probes False without
-    raising."""
-    assert spool.probe_worker_visible(spark, str(tmp_path)) is True
-    assert spool.probe_worker_visible(
-        spark, str(tmp_path / "does-not-exist")) is False
-    # no marker corpses left behind
-    assert not [p for p in os.listdir(tmp_path)
-                if p.startswith("pyarrowspace-visprobe-")]
 
 
 def test_synth_tmp_name_unique(tmp_path):

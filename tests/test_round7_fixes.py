@@ -158,30 +158,6 @@ def test_driver_result_capacity_parses_spark_size_strings():
     assert M.driver_result_capacity(_FakeSpark("bogus")) == 1024**3
 
 
-def test_laplacian_falls_back_distributed_when_collect_too_big(
-        spark, test0_items_df, monkeypatch):
-    """A collect over spark.driver.maxResultSize ABORTS the job, so
-    the driver-BLAS Laplacian tiers must not be picked when X would
-    not fit — the fully distributed tier computes the same L_F (the
-    N=600k p_bit run crashed on exactly this tier mis-selection)."""
-    from pyarrowspace_spark.operators import knn as KNN
-    from pyarrowspace_spark.operators import lambda_index as L
-
-    edges = KNN.knn_edges(test0_items_df, GP, strategy="exact")
-    nf = len(test0_items_df.first()["features"])
-    want = L.feature_laplacian(test0_items_df, edges, nf)
-
-    def _no_collect(*a, **k):
-        raise AssertionError("driver tier collected X despite "
-                             "maxResultSize ineligibility")
-
-    monkeypatch.setattr(M, "collect_eligible", lambda s, b: False)
-    monkeypatch.setattr(M, "collect_id_matrix", _no_collect)
-    monkeypatch.setattr(M, "collect_graph", _no_collect)
-    got = L.feature_laplacian(test0_items_df, edges, nf)
-    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
-
-
 def test_diffuse_respects_max_result_size(spark, test0_items_df,
                                           monkeypatch):
     """Same contract for diffuse's driver tier: collect-ineligible →

@@ -24,7 +24,9 @@ def base_index(spark, test0_items_df):
     params = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
     edges = KNN.knn_edges(test0_items_df, params, strategy="exact")
     lf = LI.feature_laplacian(test0_items_df, edges, n_features=24)
-    tau = LI.median_tau(test0_items_df, lf)
+    comp, tau = LI.components_with_median(test0_items_df, lf,
+                                          test0_items_df.count())
+    comp.unpersist()
     return lf, tau
 
 
