@@ -12,10 +12,14 @@ Lifecycle as a Spark DAG (SURVEY §3.1):
   stage 2  kNN candidates (exact cross-join or LSH bucket join; shuffle)
   stage 3  eps filter → per-node top-k → symmetrize (shuffle on src)
   stage 4  degree aggregation (shuffle)
-  stage 5  F×F feature Laplacian (distributed partials → driver, F²
-           doubles per partition — independent of N)
-  stage 6  λ column (narrow, broadcast L_F)
-  stage 7  optional Parquet persist ("index tables")
+  stage 5  one census (N, E) picks the λ tier by the one driver-tier
+           rule (`matrix.driver_fits`). Driver pass: X and the edges
+           collected once, L_F, e_raw/g and τ in numpy, one handoff
+           back with λ blended JVM-side. Beyond it: the F×F feature
+           Laplacian (spool partials → driver, F² doubles per
+           partition — independent of N) and the λ column (narrow,
+           broadcast L_F)
+  stage 6  optional Parquet persist ("index tables")
 """
 
 from __future__ import annotations
@@ -162,6 +166,32 @@ class ArrowSpaceIndex:
             tau_synth=float(meta["tau_synth"]),
             n_features=int(meta["n_features"]),
         )
+
+
+def _lambda_on_driver(base: DataFrame, edges: DataFrame
+                      ) -> "tuple[DataFrame, np.ndarray, float]":
+    """The build's λ stages in one driver pass: X and the edges are
+    collected once (`matrix.collect_graph`), L_F comes from
+    `laplacian_from_edges`, (e_raw, g) and τ_synth from
+    `lambda_index.driver_components`, and the items go back as one
+    eager-released handoff, cast to `base`'s column types, with λ
+    blended JVM-side. Returns (items, L_F, τ_synth); the items are
+    id-sorted."""
+    spark = base.sparkSession
+    s_ids, X, si, di, w = matrix.collect_graph(base, edges)
+    lf = lam_ops.laplacian_from_edges(X, si, di, w)
+    del si, di, w
+    # base is non-empty (the census checked), so the median exists
+    e_raw, g, tau_synth = lam_ops.driver_components(X, lf)
+    comp = matrix.matrix_to_frame(
+        spark, s_ids, X, eager_release=True,
+        scalars={"e_raw": e_raw, "g": g},
+        parts=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    indexed = comp.select(
+        *[F.col(f.name).cast(f.dataType) for f in base.schema.fields],
+        "e_raw", "g", lam_ops.blend_lambda_cols(
+            F.col("e_raw"), F.col("g"), tau_synth).alias("lambda"))
+    return indexed, lf, tau_synth
 
 
 class ArrowSpaceBuilder:
@@ -324,12 +354,29 @@ class ArrowSpaceBuilder:
         # — values identical, the scan is a proven pure projection.
         if not (graph_input is base and graph_feat == "features"):
             x_src = None
-        lf = lam_ops.feature_laplacian(graph_input, edges, n_features,
-                                       x_source=x_src)
-        # ONE Python kernel pass computes the τ-independent (e_raw, g);
-        # τ-synthesis and the λ blend are JVM-side over its cache.
-        comp, median = lam_ops.components_with_median(base, lf, n_rows)
-        tau_synth = float(median) if median is not None else 0.0
+        # ONE census over the graph's items and its edges (it also
+        # materializes the edge cache) picks the λ tier by the one
+        # driver-tier rule, priced at every item the pass holds
+        spark = items.sparkSession
+        n_graph, _, n_edges = matrix.census(graph_input, edges)
+        if matrix.driver_fits(spark, n_rows, n_features, n_edges,
+                              handoff=True):
+            indexed, lf, tau_synth = _lambda_on_driver(base, edges)
+            base.unpersist()
+        else:
+            lf = lam_ops.feature_laplacian(graph_input, edges, n_features,
+                                           x_source=x_src,
+                                           counts=(n_graph, n_edges))
+            # ONE Python kernel pass computes the τ-independent
+            # (e_raw, g); τ-synthesis and the λ blend are JVM-side over
+            # its cache.
+            comp, median = lam_ops.components_with_median(base, lf, n_rows)
+            tau_synth = float(median) if median is not None else 0.0
+            # Keep the τ-independent components IN the index: λ at any
+            # search-time τ is then a JVM expression — search never
+            # pays a Python pass over the corpus (reference recomputes
+            # item λ per search call with the caller's τ, TAUMODE.md).
+            indexed = lam_ops.blend(comp, tau_synth)
         debug_print(
             f"build: eps={params.eps} k={params.k} sigma={params.sigma} "
             f"F={n_features} tau_synth(Median)={tau_synth}")
@@ -338,18 +385,12 @@ class ArrowSpaceBuilder:
             # edges, so every Rayleigh energy is 0. The reference panics
             # at query time (src/lib.rs:156-159); we fail the build with
             # actionable stats instead (SURVEY §7.3 risk 7).
-            n_edges = edges.count()
             raise ValueError(
                 f"degenerate index: median Rayleigh energy is {tau_synth} "
                 f"({n_edges} graph edges at eps={params.eps}). Increase eps "
                 f"(rectified-cosine distances lie in [0,1]) or rescale the "
                 f"input vectors (reference tests use x12/x100)."
             )
-        # Keep the τ-independent components IN the index: λ at any
-        # search-time τ is then a JVM expression — search never pays a
-        # Python pass over the corpus (reference recomputes item λ per
-        # search call with the caller's τ, TAUMODE.md).
-        indexed = lam_ops.blend(comp, tau_synth)
 
         return ArrowSpaceIndex(
             items=indexed,

@@ -848,11 +848,8 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     lf = lam_ops.laplacian_from_edges(X, src[keep], dst[keep], w[keep])
     del src, dst, w, keep
 
-    e_raw, g = np.empty(n), np.empty(n)
-    for b in range(0, n, blk):
-        e_raw[b:b + blk], g[b:b + blk], _ = (
-            lam_ops.lambda_kernel(X[b:b + blk], lf, tau=1.0))
-    tau_synth = _checked_tau(stats.exact_percentile(e_raw, 0.5))
+    e_raw, g, median = lam_ops.driver_components(X, lf)
+    tau_synth = _checked_tau(median)
     # lambda_index.blend's SQL operation order
     lam = tau_synth * (e_raw / (e_raw + tau_synth)) + (1.0 - tau_synth) * g
     del g
@@ -896,11 +893,16 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
         spark, s_ids, X, "item_id", "features", eager_release=True,
         scalars={"e_raw": e_raw, "lambda": lam, "centroid_id": cid},
         parts=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    # pure-python rows: numpy float64 elements are rejected by the
-    # non-Arrow session verifier (round-5 driver regression)
-    centroids = spark.createDataFrame(
-        [(c, int(a["n_members"]), a["lambda_c"], a["e_c"], a["disp_c"],
-          a["center"].tolist()) for c, a in sorted(attrs.items())],
+    # from pandas, so Arrow ships it (a frame of Python rows starts a
+    # PythonRDD and a plain Python worker); `center` as Python lists,
+    # which the non-Arrow fallback's type verifier accepts
+    cents = sorted(attrs.items())
+    centroids = spark.createDataFrame(pd.DataFrame({
+        "centroid_id": [c for c, _ in cents],
+        "n_members": [int(a["n_members"]) for _, a in cents],
+        **{m: [float(a[m]) for _, a in cents]
+           for m in ("lambda_c", "e_c", "disp_c")},
+        "center": [a["center"].tolist() for _, a in cents]}),
         _CENTROID_SCHEMA).coalesce(1).localCheckpoint(eager=False)
     return EnergyIndex(items=items, centroids=centroids, edges=kept_edges,
                        feature_laplacian=lf, graph_params=gparams,

@@ -77,11 +77,10 @@ LSH_PAIR_SPOOL_BYTES = 7.5
 #: on the driver covers every non-adversarial corpus to ~10^10 rows.
 LSH_CENSUS_COLLECT_MAX = 65536
 
-# worker-side (pid-scoped) cache of the most recent U spool mmap: the
-# bucket kernel is called once per (band, key) group — thousands of
-# times per build — and re-reading sids.npy per call would re-page
-# ~N·8 B each time. One entry only; a new build's spool path evicts
-# the old.
+# worker-side (pid-scoped) cache of the most recent U spool mmap: a
+# reused Python worker runs the bucket kernel for many tasks, and
+# re-reading sids.npy per task would re-page ~N·8 B each time. One
+# entry only; a new build's spool path evicts the old.
 _WORKER_U_SPOOL_CACHE: dict = {}
 
 
@@ -136,6 +135,94 @@ def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
                 f"of {fdim} features — it is not deterministic")
     np.save(s_path, s_ids)
     spool.seal(d)
+
+
+def _bucket_pairs(ids: np.ndarray, U: np.ndarray, eps_f: float,
+                  k_i: int) -> "list[tuple]":
+    """One bucket's in-ball pairs as (src, dst, dist) array triples:
+    the intra-bucket rectified-cosine distances by gemm, the eps mask
+    and, with `k_i`, the k smallest per src. `ids` must be ascending
+    (the rows of `U`, in order), so equal-distance ties resolve to the
+    LOWER dst by the stable sort — the reference tie-break
+    lexsort((dst, dist)) without a per-row Python loop."""
+    n = len(ids)
+    out = []
+    # Chunk rows so the chunk×n distance block stays bounded even in a
+    # pathologically skewed bucket.
+    chunk = int(max(64, min(1024, (64 << 20) // (n * 16))))
+    for c0 in range(0, n, chunk):
+        Uc = U[c0:c0 + chunk]
+        m = len(Uc)
+        cos = Uc @ U.T
+        dist = 1.0 - np.maximum(cos.astype(np.float64), 0.0)
+        # invalid = outside the eps ball, or the self-pair
+        bad = (dist > eps_f) | (ids[None, :] == ids[c0:c0 + m, None])
+        if k_i and n > k_i:
+            d2 = np.where(bad, np.inf, dist)
+            sel = np.argsort(d2, axis=1, kind="stable")[:, :k_i]
+            dsel = np.take_along_axis(d2, sel, axis=1)
+            valid = np.isfinite(dsel)
+            rows = np.nonzero(valid)[0]
+            out.append((ids[c0 + rows], ids[sel[valid]], dsel[valid]))
+        else:
+            rows, cols = np.nonzero(~bad)
+            out.append((ids[c0 + rows], ids[cols], dist[~bad]))
+    return out
+
+
+def _make_bucket_kernel(u_paths: "tuple[str, str]", keys: "list[str]",
+                        eps_f: float, k_i: int):
+    """The LSH pair stage's one partition-wide mapInPandas kernel over
+    (`keys`…, id) rows sorted by (`keys`, id) within each partition: it
+    finds the bucket boundaries with numpy, gathers each batch's unit
+    vectors from the U spool in one read and runs `_bucket_pairs` per
+    bucket. A bucket cut by an Arrow batch boundary is carried into the
+    next batch; a bucket holds at most LSH_BUCKET_MAX rows (larger ones
+    run as block pairs), so the carry stays bounded."""
+    import pandas as pd
+
+    def emit(g: np.ndarray, ids: np.ndarray):
+        Usp, s_l = _load_u_spool(*u_paths)
+        pos = np.searchsorted(s_l, ids)
+        if pos.max() >= len(s_l) or not np.array_equal(s_l[pos], ids):
+            raise RuntimeError(
+                "LSH U-spool does not cover this bucket's ids — "
+                "stale spool or corpus mismatch")
+        U = np.asarray(Usp[pos])
+        cuts = np.flatnonzero(np.any(g[1:] != g[:-1], axis=1)) + 1
+        bounds = np.concatenate([[0], cuts, [len(ids)]])
+        out = [t for s, e in zip(bounds[:-1], bounds[1:]) if e - s > 1
+               for t in _bucket_pairs(ids[s:e], U[s:e], eps_f, k_i)
+               if t[0].size]
+        if out:
+            return pd.DataFrame({
+                c: np.concatenate([t[i] for t in out])
+                for i, c in enumerate(("src", "dst", "dist"))})
+        return None
+
+    def kernel(batches):
+        held_g = np.empty((0, len(keys)), dtype=np.int64)
+        held_i = np.empty(0, dtype=np.int64)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            g = np.concatenate([held_g, np.stack(
+                [pdf[c].to_numpy(dtype=np.int64) for c in keys], axis=1)])
+            ids = np.concatenate([held_i, pdf["id"].to_numpy(dtype=np.int64)])
+            # the last bucket may continue in the next batch
+            last = np.flatnonzero(np.any(g != g[-1], axis=1))
+            cut = int(last[-1]) + 1 if len(last) else 0
+            held_g, held_i = g[cut:], ids[cut:]
+            if cut:
+                out = emit(g[:cut], ids[:cut])
+                if out is not None:
+                    yield out
+        if len(held_i):
+            out = emit(held_g, held_i)
+            if out is not None:
+                yield out
+
+    return kernel
 
 
 def _dir_bytes(path: str) -> int:
@@ -435,16 +522,27 @@ def pairwise_candidates_lsh(
          band's sign bits into an int64 key and emits ``n_bands``
          narrow (band, key, id) rows per item. The table is persisted:
          the bucket-size census and every band group read it.
-      3. Per band group, shuffle on (band, key); per bucket the kernel
-         gathers its rows' unit vectors from the spool, computes the
-         intra-bucket rectified-cosine distances by an Arrow gemm,
-         applies the eps predicate and (if ``k``) caps emission at the
-         k smallest per src — lossless for downstream top-k, since any
-         neighbor crowded out of a bucket's top-k is also outside the
-         global top-k. The group's pairs are written to a parquet pair
+      3. Per band group, shuffle on (band, key) and sort each
+         partition by (band, key, id); ONE partition-wide kernel
+         (`_make_bucket_kernel`) cuts the sorted rows into buckets,
+         gathers their unit vectors from the spool, computes the
+         intra-bucket rectified-cosine distances by gemm, applies the
+         eps predicate and (if ``k``) caps emission at the k smallest
+         per src — lossless for downstream top-k, since any neighbor
+         crowded out of a bucket's top-k is also outside the global
+         top-k. With ``k`` the group's pairs are deduped and capped at
+         each src's k nearest; they are written to a parquet pair
          spool.
-      4. groupBy(src,dst) min(dist) dedupes pairs found in >1 band
-         (map-side combinable).
+      4. With one group and ``k``, its spool is the answer. Otherwise
+         the spools' union is deduped by groupBy(src,dst) min(dist)
+         (map-side combinable) and, with ``k``, capped again at each
+         src's k nearest.
+
+    Contract: every returned (src, dst) is unique with dist ≤ eps. With
+    ``k``, each src has its ≤k nearest candidates by (dist, dst) — the
+    kNN graph's directed top-k, which `knn_edges` only symmetrizes.
+    With ``k=None`` every in-ball candidate pair is returned, uncapped
+    (the dedup path).
 
     Collision probability for a pair at angle θ is (1-θ/π)^n_bits per
     band; non-neighbors (θ≈π/2) collide at ~2^-n_bits, so candidate
@@ -613,81 +711,28 @@ def pairwise_candidates_lsh(
     u_dir = spool.make_dir(scratch_root, "pyarrowspace-lshu-")
     u_paths = (os.path.join(u_dir, "u.npy"), os.path.join(u_dir, "sids.npy"))
 
-    def bucket_knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                {"src": np.int64, "dst": np.int64, "dist": np.float64})
-        # Sort the bucket by id so that equal-distance ties resolve
-        # to the LOWER dst by plain stable ordering — the vectorized
-        # selection below then matches the reference tie-break
-        # lexsort((dst, dist)) without a per-row Python loop (guide
-        # §4.2 — hand whole batches to vectorized kernels). The
-        # ascending ids also make the spool gather a monotonic mmap
-        # walk.
-        ids = np.sort(pdf["id"].to_numpy(dtype=np.int64), kind="stable")
-        Usp, s_l = _load_u_spool(*u_paths)
-        pos = np.searchsorted(s_l, ids)
-        if pos[-1] >= len(s_l) or not np.array_equal(s_l[pos], ids):
-            raise RuntimeError(
-                "LSH U-spool does not cover this bucket's ids — "
-                "stale spool or corpus mismatch")
-        U = np.asarray(Usp[pos])
-        out_s, out_d, out_v = [], [], []
-        # Chunk rows so the chunk×n distance block stays bounded even
-        # in a pathologically skewed bucket.
-        chunk = int(max(64, min(1024, (64 << 20) // (n * 16))))
-        for c0 in range(0, n, chunk):
-            Uc = U[c0:c0 + chunk]
-            m = len(Uc)
-            cos = Uc @ U.T
-            dist = 1.0 - np.maximum(cos.astype(np.float64), 0.0)
-            # invalid = outside the eps ball, or the self-pair
-            bad = (dist > eps_f) | (ids[None, :] == ids[c0:c0 + m, None])
-            if k_i and n > k_i:
-                d2 = np.where(bad, np.inf, dist)
-                sel = np.argsort(d2, axis=1, kind="stable")[:, :k_i]
-                dsel = np.take_along_axis(d2, sel, axis=1)
-                valid = np.isfinite(dsel)
-                rows = np.nonzero(valid)[0]
-                out_s.append(ids[c0 + rows])
-                out_d.append(ids[sel[valid]])
-                out_v.append(dsel[valid])
-            else:
-                rows, cols = np.nonzero(~bad)
-                out_s.append(ids[c0 + rows])
-                out_d.append(ids[cols])
-                out_v.append(dist[~bad])
-        out_s = [a for a in out_s if a.size]
-        if not out_s:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                {"src": np.int64, "dst": np.int64, "dist": np.float64})
-        return pd.DataFrame({
-            "src": np.concatenate(out_s),
-            "dst": np.concatenate([a for a in out_d if a.size]),
-            "dist": np.concatenate([a for a in out_v if a.size]),
-        })
+    def _bucket_stage(rows: DataFrame, keys: "list[str]") -> DataFrame:
+        # Explicit exchange on the bucket keys feeding ONE partition-wide
+        # kernel over rows sorted by (keys, id): the narrow hash rows
+        # compress to tens of MB, and AQE's advisory coalescing
+        # collapsed an implicit exchange to 5 partitions at the 78k
+        # bench (27 cores idle); a user-specified repartition is not
+        # coalescible.
+        return (rows.repartition(n_parts, *keys)
+                .sortWithinPartitions(*keys, "id")
+                .mapInPandas(_make_bucket_kernel(u_paths, keys, eps_f, k_i),
+                             schema=pair_schema))
 
     def _group_pairs(src_frame: DataFrame,
-                     oversized: DataFrame) -> DataFrame:
+                     oversized: "DataFrame | None") -> DataFrame:
+        if oversized is None:
+            return _bucket_stage(src_frame, ["band", "key"])
         h2 = src_frame.join(F.broadcast(oversized), ["band", "key"], "left")
         normal = h2.filter(F.col("_cnt").isNull()).drop("_cnt")
-        # Explicit (band, key) exchange feeding the bucket kernel: the
-        # narrow hash rows compress to tens of MB, and AQE's advisory
-        # coalescing collapsed the kernel's implicit groupBy exchange
-        # to 5 partitions at the 78k bench — the build's CORE compute
-        # stage ran 5-wide while 27 cores idled. A user-specified
-        # repartition is not coalescible, and the groupBy reuses it
-        # (same keys, same count), so the plan still has exactly one
-        # exchange here.
-        bucket_pairs = normal.repartition(
-            n_parts, "band", "key"
-        ).groupBy("band", "key").applyInPandas(
-            bucket_knn, schema=pair_schema)
         big = h2.filter(F.col("_cnt").isNotNull())
         nblocks = F.ceil(F.col("_cnt") / F.lit(b_max)).cast("int")
         myblock = F.pmod(F.xxhash64("id"), nblocks).cast("int")
-        big_pairs = (
+        blocks = (
             big.withColumn("_b", myblock)
             .withColumn(
                 "_bp",
@@ -700,13 +745,26 @@ def pairwise_candidates_lsh(
                 )),
             )
             .select("band", "key", F.col("_bp.b1").alias("b1"),
-                    F.col("_bp.b2").alias("b2"), "id")
-            # same AQE-coalesce guard as the normal-bucket kernel above
-            .repartition(n_parts, "band", "key", "b1", "b2")
-            .groupBy("band", "key", "b1", "b2")
-            .applyInPandas(bucket_knn, schema=pair_schema)
-        )
-        return bucket_pairs.unionAll(big_pairs)
+                    F.col("_bp.b2").alias("b2"), "id"))
+        return _bucket_stage(normal, ["band", "key"]).unionAll(
+            _bucket_stage(blocks, ["band", "key", "b1", "b2"]))
+
+    def _top_k(pairs: DataFrame) -> DataFrame:
+        # Dedupe across bands (min() is a no-op on value — the distance
+        # is the same pair function in every band — but makes the agg
+        # map-side combinable), then, with k, each src's k nearest by
+        # (dist, dst). ONE explicit exchange on src feeds both the agg
+        # (hash(src) satisfies the (src, dst) clustering) and the
+        # window, and, being user-specified, AQE cannot coalesce it
+        # onto a handful of tasks.
+        out = (pairs.repartition(n_parts, "src")
+               .groupBy("src", "dst").agg(F.min("dist").alias("dist")))
+        if not k_i:
+            return out
+        wg = Window.partitionBy("src").orderBy(
+            F.col("dist").asc(), F.col("dst").asc())
+        return (out.withColumn("_rn", F.row_number().over(wg))
+                .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
 
     pair_dirs: list[str] = []
     parts: list[DataFrame] = []
@@ -742,11 +800,16 @@ def pairwise_candidates_lsh(
         ov_head = ov_lazy.limit(LSH_CENSUS_COLLECT_MAX + 1).collect()
         if len(ov_head) > LSH_CENSUS_COLLECT_MAX:
             oversized = ov_lazy
-        else:
-            oversized = spark.createDataFrame(
-                [(int(r["band"]), int(r["key"]), int(r["_cnt"]))
-                 for r in ov_head],
+        elif ov_head:
+            # from pandas, so Arrow ships it: a frame of Python rows
+            # starts a PythonRDD and a plain Python worker
+            oversized = spark.createDataFrame(pd.DataFrame({
+                c: [int(r[c]) for r in ov_head]
+                for c in ("band", "key", "_cnt")}),
                 schema="band int, key long, _cnt long")
+        else:
+            # every bucket is normal: no join, no block-pair exchange
+            oversized = None
 
         # Pair spools are PARQUET, not an eager Spark checkpoint: at N=1M
         # one group's pre-dedupe pairs are ~125M rows, and the
@@ -798,18 +861,8 @@ def pairwise_candidates_lsh(
                 # pairs in its group is outside the global top-k a
                 # fortiori — the bucket-cap argument one level up), and it
                 # bounds each group's spool at N·k rows regardless of band
-                # count. ONE explicit exchange on src feeds BOTH the dedupe
-                # agg (hash(src) satisfies the (src,dst) clustering) and the
-                # window, and, being user-specified, AQE cannot coalesce it
-                # onto a handful of tasks.
-                wg = Window.partitionBy("src").orderBy(
-                    F.col("dist").asc(), F.col("dst").asc())
-                pairs_g = (
-                    pairs_g.repartition(n_parts, "src")
-                    .groupBy("src", "dst")
-                    .agg(F.min("dist").alias("dist"))
-                    .withColumn("_rn", F.row_number().over(wg))
-                    .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
+                # count.
+                pairs_g = _top_k(pairs_g)
             d = spool.make_dir(scratch_root, "pyarrowspace-lshpairs-")
             pair_dirs.append(d)
             pairs_g.write.mode("overwrite").parquet(d)
@@ -846,18 +899,13 @@ def pairwise_candidates_lsh(
     spool.drop_dir(u_dir)
     if info is not None and groups:
         info.update(_group_summary(groups))
+    if k_i and len(parts) == 1:
+        # one group's spool is already deduped and k-capped per src
+        return parts[0]
     bucket_pairs = parts[0]
     for p in parts[1:]:
         bucket_pairs = bucket_pairs.unionAll(p)
-    # Dedupe across bands; min() is a no-op on value (the distance is
-    # the same pair function in every band) but makes the agg
-    # map-side combinable. The explicit src repartition serves this
-    # agg (subset rule), the eps filter, AND knn_edges' top-k window
-    # downstream with ONE exchange AQE cannot shrink — the deduped
-    # pairs compress to a few MB and AQE-coalesced window sorts ran
-    # on a handful of tasks otherwise.
-    return (bucket_pairs.repartition(n_parts, "src")
-            .groupBy("src", "dst").agg(F.min("dist").alias("dist")))
+    return _top_k(bucket_pairs)
 
 
 def knn_edges(
@@ -900,24 +948,12 @@ def knn_edges(
             items, id_col, feat_col, params.eps, params.k
         )
     elif strategy == "lsh":
-        cand = pairwise_candidates_lsh(
+        # eps and each src's top-k by (dist, dst) already applied
+        knn = pairwise_candidates_lsh(
             items, id_col, feat_col, params.eps, k=params.k,
             n_bits=lsh_bits, n_bands=lsh_bands, shape=shape,
             x_source=x_source, info=info,
         )
-
-        # eps predicate BEFORE the top-k window: Catalyst pushes the
-        # filter below the shuffle, so the window sorts only survivors.
-        in_ball = cand.filter(F.col("dist") <= F.lit(float(params.eps)))
-
-        # Per-node k smallest; tie-break by dst for determinism across
-        # nondeterministic shuffle order (risk register SURVEY §7.3).
-        w = Window.partitionBy("src").orderBy(
-            F.col("dist").asc(), F.col("dst").asc()
-        )
-        knn = in_ball.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= F.lit(int(params.k))
-        ).drop("_rn")
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 

@@ -57,6 +57,7 @@ def feature_laplacian(
     id_col: str = "item_id",
     feat_col: str = "features",
     x_source: dict | None = None,
+    counts: "tuple[int, int] | None" = None,
 ) -> np.ndarray:
     """Compute L_F = Xᵀ (D - W) X.
 
@@ -67,7 +68,8 @@ def feature_laplacian(
     items frame raises too) and picks the tier. The census scans
     `edges` in full before either tier reads it again, so pass a
     persisted edge frame: an unpersisted plan (a fresh kNN graph, say)
-    is computed twice.
+    is computed twice. `counts`: the caller's (N, E) from
+    `matrix.census(items, edges)`, so the census is not run twice.
 
     - driver tier, when `matrix.driver_fits` holds without the handoff
       check (the one driver-tier rule; nothing goes back to Spark):
@@ -103,7 +105,8 @@ def feature_laplacian(
     removed on every path.
     """
     spark = items.sparkSession
-    n, _, n_edges = matrix.census(items, edges, feat_col, id_col)
+    n, n_edges = (counts if counts is not None else
+                  matrix.census(items, edges, feat_col, id_col)[::2])
     if n == 0:
         raise ValueError("feature_laplacian: the items frame is empty")
     if matrix.driver_fits(spark, n, n_features, n_edges, handoff=False):
@@ -292,6 +295,22 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     g = np.clip(g_raw, 0.0, 1.0)
     s_val = tau * e_b + (1.0 - tau) * g
     return e_raw, g, s_val
+
+
+def driver_components(X: np.ndarray, lf: np.ndarray, blk: int = 1024
+                      ) -> "tuple[np.ndarray, np.ndarray, float | None]":
+    """The driver passes' λ pass up to the blend: (e_raw, g) of every
+    row of X by `lambda_kernel` in row blocks (the kernel holds ~7
+    block×F temporaries, which a bounded block keeps small at any N),
+    and τ_synth, their e_raw median by `stats.exact_percentile` — the
+    values `components_with_median` computes in Spark."""
+    n = len(X)
+    e_raw, g = np.empty(n), np.empty(n)
+    for b in range(0, n, blk):
+        # tau only scales e_bounded/S — e_raw and g don't depend on it
+        e_raw[b:b + blk], g[b:b + blk], _ = lambda_kernel(
+            X[b:b + blk], lf, tau=1.0)
+    return e_raw, g, stats.exact_percentile(e_raw, 0.5)
 
 
 def lambda_for_vectors(X: np.ndarray, lf: np.ndarray, tau: float) -> np.ndarray:

@@ -167,3 +167,13 @@ def test_builders_probe_shape_only_through_the_census():
            and isinstance(node.func.value, ast.Name)
            and node.func.value.id == "F"]
     assert bad == []
+
+
+def test_lsh_pair_stage_runs_no_grouped_pandas_kernel():
+    """Guard: `operators/knn.py` calls no `applyInPandas`: the LSH pair
+    stage is one partition-wide mapInPandas kernel over sorted rows, not
+    two pandas frames per bucket."""
+    bad = [node.lineno
+           for node in ast.walk(ast.parse((OPERATORS / "knn.py").read_text()))
+           if isinstance(node, ast.Attribute) and node.attr == "applyInPandas"]
+    assert bad == []
