@@ -132,8 +132,9 @@ def driver_price(n: int, nf: int, n_edges: int, x_copies: int = 4) -> int:
     """Priced driver peak of a pass over N×F float64 items and E
     undirected edges: `x_copies` N×F matrices plus 384·E bytes of edge
     arrays (both orientations, their sort and segment indexes). L_F and
-    the energy driver pass hold 4 (X, the combine's output, L·X and a
-    gather or collect transient), diffusion `DIFFUSE_X_COPIES`; each
+    the index and energy builds' driver passes hold 4 (X, the combine's
+    output, L·X and a gather or collect transient), diffusion
+    `DIFFUSE_X_COPIES`; each
     pass's traced peak is pinned to its price by a tracemalloc test."""
     return int(x_copies) * int(n) * int(nf) * 8 + 384 * int(n_edges)
 
@@ -141,8 +142,8 @@ def driver_price(n: int, nf: int, n_edges: int, x_copies: int = 4) -> int:
 def driver_fits(spark, n: int, nf: int, n_edges: int,
                 handoff: bool, x_copies: int = 4) -> bool:
     """THE driver-tier rule, read by `energy.diffuse`,
-    `lambda_index.feature_laplacian` and `energy.build_energy` and by
-    nothing else: the pass's `driver_price` is within
+    `lambda_index.feature_laplacian`, `energy.build_energy` and
+    `ArrowSpaceBuilder.build` and by nothing else: the pass's `driver_price` is within
     DRIVER_BUDGET_BYTES (env `SPARK_GRAFT_DIFFUSE_BCAST_MAX`), and
 
     - collecting X (N·F·8 bytes) survives spark.driver.maxResultSize (a

@@ -826,9 +826,7 @@ def _build_energy_driver(base: DataFrame, edges: DataFrame,
     mean). One frame goes back: the items, as one eager-released
     parquet handoff."""
     spark = base.sparkSession
-    # row block of the λ and assignment passes: lambda_kernel holds ~7
-    # block×F temporaries, which a bounded block keeps small at any N
-    blk = 1024
+    blk = lam_ops.DRIVER_BLOCK  # the assignment pass's row block
     s_ids, X, src, dst, w = matrix_mod.collect_graph(base, edges)
     n = len(s_ids)
 

@@ -297,14 +297,21 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     return e_raw, g, s_val
 
 
-def driver_components(X: np.ndarray, lf: np.ndarray, blk: int = 1024
+# Row block of every driver pass's per-row kernels: `lambda_kernel`
+# holds ~7 block×F temporaries, which a bounded block keeps small at
+# any N. Fixed, not a parameter: g's matrix-vector products round the
+# trailing rows of a call differently, so the block layout is part of
+# the stored values.
+DRIVER_BLOCK = 1024
+
+
+def driver_components(X: np.ndarray, lf: np.ndarray
                       ) -> "tuple[np.ndarray, np.ndarray, float | None]":
     """The driver passes' λ pass up to the blend: (e_raw, g) of every
-    row of X by `lambda_kernel` in row blocks (the kernel holds ~7
-    block×F temporaries, which a bounded block keeps small at any N),
-    and τ_synth, their e_raw median by `stats.exact_percentile` — the
+    row of X by `lambda_kernel` in `DRIVER_BLOCK` row blocks, and
+    τ_synth, their e_raw median by `stats.exact_percentile` — the
     values `components_with_median` computes in Spark."""
-    n = len(X)
+    n, blk = len(X), DRIVER_BLOCK
     e_raw, g = np.empty(n), np.empty(n)
     for b in range(0, n, blk):
         # tau only scales e_bounded/S — e_raw and g don't depend on it

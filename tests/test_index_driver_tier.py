@@ -190,6 +190,24 @@ def test_driver_pass_matches_the_spark_flow(spark, sf_items, strategy,
     assert _rel(drv.feature_laplacian, flow.feature_laplacian) <= 1e-12
 
 
+def test_driver_pass_peak_within_price(spark):
+    """Guard: the index build's driver λ pass (collects, L_F, λ blocks,
+    handoff) stays within its price, `matrix.driver_price(N, F, E)`,
+    + 1 MiB, on a corpus whose X (N·F·8 = 1.5 MB) is larger than the
+    slack."""
+    from pyarrowspace_spark.builder import _lambda_on_driver
+
+    from .test_energy_driver_tier import _random_graph, _traced_peak
+
+    n, nf, n_edges = 2000, 96, 6000
+    items, edges = _random_graph(spark, n, nf, n_edges)
+    peak = _traced_peak(lambda: _lambda_on_driver(items, edges))
+    price = M.driver_price(n, nf, n_edges)
+    assert peak <= price + (1 << 20), (peak, price)
+    items.unpersist()
+    edges.unpersist()
+
+
 def test_sampled_build_takes_the_driver_pass(spark, sf_items, monkeypatch):
     """Contract: a sampled build's driver pass computes L_F over the
     sampled graph and λ for every item, as its Spark flow does."""
