@@ -129,13 +129,8 @@ class ArrowSpaceIndex:
             self.items.write.mode("overwrite").parquet(f"{path}/items")
             self.edges.write.mode("overwrite").parquet(f"{path}/edges")
         spark = self.items.sparkSession
-        lf_rows = [
-            (int(i), [float(v) for v in row])
-            for i, row in enumerate(self.feature_laplacian)
-        ]
-        spark.createDataFrame(
-            lf_rows, schema="row_idx long, row array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/feature_laplacian")
+        matrix.laplacian_to_parquet(spark, self.feature_laplacian,
+                                    f"{path}/feature_laplacian")
         meta = dict(self.params.to_dict(), tau_synth=self.tau_synth,
                     n_features=self.n_features)
         spark.createDataFrame([meta]).write.mode("overwrite").json(f"{path}/meta")
@@ -305,8 +300,9 @@ class ArrowSpaceBuilder:
             raise
 
         graph_input, graph_shape = base, (n_rows, n_features)
+        sample = None
         if sample_rate is not None and sample_rate < 1.0:
-            graph_input = base.sample(
+            sample = graph_input = base.sample(
                 withReplacement=False, fraction=float(sample_rate),
                 seed=int(seed)).persist()
             graph_shape = None
@@ -334,8 +330,8 @@ class ArrowSpaceBuilder:
         else:
             # x_src (trivial-scan provenance, resolved above) also
             # feeds the LSH build's U spool: the spool streams straight
-            # from the corpus parquet instead of a parquet copy of the
-            # input. Only valid when the graph runs on the
+            # from the corpus parquet instead of `spool.write`'s other
+            # sources. Only valid when the graph runs on the
             # untransformed input — the same condition the λ spool tier
             # checks below.
             knn_x_src = (x_src if (graph_input is base
@@ -369,14 +365,18 @@ class ArrowSpaceBuilder:
                                            counts=(n_graph, n_edges))
             # ONE Python kernel pass computes the τ-independent
             # (e_raw, g); τ-synthesis and the λ blend are JVM-side over
-            # its cache.
+            # its cache, which the median materializes: base is dead.
             comp, median = lam_ops.components_with_median(base, lf, n_rows)
+            base.unpersist()
             tau_synth = float(median) if median is not None else 0.0
             # Keep the τ-independent components IN the index: λ at any
             # search-time τ is then a JVM expression — search never
             # pays a Python pass over the corpus (reference recomputes
             # item λ per search call with the caller's τ, TAUMODE.md).
             indexed = lam_ops.blend(comp, tau_synth)
+        if sample is not None:
+            # its last reader, the census or the λ spool tier, has run
+            sample.unpersist()
         debug_print(
             f"build: eps={params.eps} k={params.k} sigma={params.sigma} "
             f"F={n_features} tau_synth(Median)={tau_synth}")

@@ -414,6 +414,16 @@ def with_scan_parallelism(df: DataFrame, n_target: int) -> DataFrame:
     return df.repartition(int(n_target))
 
 
+def laplacian_to_parquet(spark, lf: np.ndarray, path: str) -> None:
+    """Save an F×F Laplacian as parquet [row_idx long, row
+    array<double>], the twin of `laplacian_from_parquet`: one row per
+    matrix row, handed to Spark by `matrix_to_frame` (no F² boxed
+    Python floats) and written through Spark, so `path` may be on any
+    filesystem Spark writes."""
+    matrix_to_frame(spark, np.arange(len(lf)), lf, "row_idx", "row"
+                    ).write.mode("overwrite").parquet(path)
+
+
 def laplacian_from_parquet(spark, path: str) -> np.ndarray:
     """Reopen a saved F×F Laplacian (schema [row_idx long, row
     array<double>]) as a dense float64 matrix via the Arrow columnar

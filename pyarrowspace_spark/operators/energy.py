@@ -107,22 +107,6 @@ def diffuse_plan(n_items: int, nf: int, n_edges: int) -> dict:
     return {"distributed_tier": 0 if driver else 1}
 
 
-# worker-side (pid-scoped) cache of the current step's X-spool mmap —
-# same single-entry policy as knn._WORKER_U_SPOOL_CACHE: each step's
-# spool path evicts the previous step's.
-_WORKER_X_SPOOL_CACHE: dict = {}
-
-
-def _load_x_spool(x_path: str, s_path: str):
-    key = (x_path, os.getpid())
-    ent = _WORKER_X_SPOOL_CACHE.get(key)
-    if ent is None:
-        ent = (np.load(x_path, mmap_mode="r"), np.load(s_path))
-        _WORKER_X_SPOOL_CACHE.clear()
-        _WORKER_X_SPOOL_CACHE[key] = ent
-    return ent
-
-
 def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
                             n_chunks: int, id_col: str, feat_col: str):
     """mapInPandas kernel over `spark.range(0, n_chunks, 1, n_chunks)`
@@ -134,8 +118,7 @@ def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
     def kernel(batches):
         import pandas as pd
 
-        X = np.load(x_path, mmap_mode="r")
-        s_ids = np.load(s_path)
+        X, s_ids = spool.reopen(x_path, s_path)
         pos = np.load(pos_path)
         per = -(-len(pos) // max(n_chunks, 1))
         for pdf in batches:
@@ -147,39 +130,6 @@ def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
                     id_col: s_ids[sl],
                     feat_col: list(np.asarray(X[sl], dtype=np.float64)),
                 })
-
-    return kernel
-
-
-def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
-                             feat_col: str):
-    """mapInPandas kernel that scatters its rows of (id, features)
-    into the pre-allocated id-sorted spool at `x_path` and emits only
-    a per-partition row count. Single-host masters only (the writers
-    and the next step's readers share one page cache, so no msync is
-    needed and coherence is the kernel's); on retry/speculation the
-    re-write is byte-identical, hence idempotent."""
-
-    def kernel(batches):
-        X = np.load(x_path, mmap_mode="r+")
-        s_ids = np.load(s_path)
-        wrote = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            bids = pdf[id_col].to_numpy(np.int64)
-            vals = np.stack(pdf[feat_col].to_numpy()).astype(
-                np.float64, copy=False)
-            pos = np.searchsorted(s_ids, bids)
-            if (pos.max(initial=0) >= len(s_ids)
-                    or not np.array_equal(s_ids[pos], bids)):
-                raise RuntimeError(
-                    "diffusion seed spool: ids not covered by the "
-                    "collected id index")
-            X[pos] = vals
-            wrote += len(bids)
-        del X
-        yield pd.DataFrame({"cnt": np.array([wrote], dtype=np.int64)})
 
     return kernel
 
@@ -209,7 +159,7 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
             return
         pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(
             pdfs, ignore_index=True)
-        X, s_ids = _load_x_spool(x_path, s_path)
+        X, s_ids = spool.reopen(x_path, s_path)
         dstv = pdf["dst"].to_numpy(np.int64)
         # stable: preserves the sortWithinPartitions (dst, src) order,
         # so within-segment summation order is deterministic
@@ -219,18 +169,12 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
         w = pdf["weight"].to_numpy(np.float64)[order]
         udst, starts = np.unique(dstv, return_index=True)
         bounds = np.append(starts, len(dstv))
-        dpos = np.searchsorted(s_ids, udst)
-        if len(udst) and (dpos[-1] >= len(s_ids)
-                          or not np.array_equal(s_ids[dpos], udst)):
-            raise RuntimeError(
-                "diffusion X spool does not cover this partition's "
-                "destinations — stale spool or corpus mismatch")
-        spos = np.searchsorted(s_ids, srcv)
-        if len(srcv) and (spos.max(initial=0) >= len(s_ids)
-                          or not np.array_equal(s_ids[spos], srcv)):
-            raise RuntimeError(
-                "diffusion X spool does not cover this partition's "
-                "sources — stale spool or corpus mismatch")
+        dpos = spool.positions(
+            s_ids, udst, "diffusion X spool does not cover this "
+            "partition's destinations")
+        spos = spool.positions(
+            s_ids, srcv, "diffusion X spool does not cover this "
+            "partition's sources")
         out = np.empty((len(udst), X.shape[1]))
         for i in range(len(udst)):
             s, e = bounds[i], bounds[i + 1]
@@ -279,16 +223,10 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     # budget: two live spools + one step parquet, all ~N·F·8
     spool.check_free(root, 3 * n * nf * 8 + (64 << 20), op,
                      f"3·N·F·8 + 64 MiB at N={n}, F={nf}")
-    ids_arr = (items.select(id_col).toPandas()[id_col]
-               .to_numpy(np.int64))
-    if len(ids_arr) != n:
-        raise RuntimeError(
-            f"diffuse: items returned {len(ids_arr)} ids but counted "
-            f"{n} rows — the items frame is not deterministic")
-    # a scatter by id would silently overwrite repeated ids: raise
-    s_ids, _ = matrix_mod.sorted_index(ids_arr)
     d = spool.make_dir(root, "pyarrowspace-diffspool-")
     try:
+        # the seed spool x0 (the initial iterate), from `spool.write`
+        s_ids = spool.write(items, id_col, feat_col, n, nf, d, "x0", op)
         out, info = _spool_steps(items, edges, eta, steps, id_col,
                                  feat_col, nf, s_ids, d, task_write)
     except BaseException:
@@ -304,61 +242,31 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                  steps: int, id_col: str, feat_col: str, nf: int,
                  s_ids: np.ndarray, d: str,
                  task_write: bool) -> "tuple[DataFrame | None, dict]":
-    """The seed + step loop of `_diffuse_spool` inside spool dir `d`.
-    Returns the frame (None when the graph has no edges) and the
-    record, with each step's wall seconds as `step_sec` (step 1 also
-    carries the loop-invariant edge materialization).
+    """The step loop of `_diffuse_spool` inside spool dir `d`, from the
+    seed spool x0.npy and its ids sids.npy (`spool.write`). Returns the
+    frame (None when the graph has no edges) and the record, with each
+    step's wall seconds as `step_sec` (step 1 also carries the
+    loop-invariant edge materialization).
 
     Write modes: with `task_write` (single-host masters) the tasks
     scatter rows straight into the pre-allocated mmap — writers and
-    next-step readers share one page cache, so the whole seed/step
+    next-step readers share one page cache, so each step's
     materialization is one parallel job with ZERO serial driver I/O.
-    Otherwise (stream writes) every seed/step emits parquet, which the
+    Otherwise (stream writes) every step emits parquet, which the
     driver streams into the next spool (`spool.from_parquet`); a step
     emits only the destination rows, so those spools hold exactly the
     destination ids, in their own id index. The final step's parquet
     is the returned frame."""
     spark = items.sparkSession
     n = len(s_ids)
-    dmode, fmode = spool.modes()
-    os.chmod(d, dmode)
     s_path = os.path.join(d, "sids.npy")
-    np.save(s_path, s_ids)
-    os.chmod(s_path, fmode)
     schema = f"{id_col} long, {feat_col} array<double>"
-
-    def _prealloc(path: str) -> None:
-        sp = np.lib.format.open_memmap(
-            path, mode="w+", dtype=np.float64, shape=(n, nf))
-        del sp
-        os.chmod(path, fmode)
 
     def _count_of(df: DataFrame) -> int:
         row = df.agg(F.sum("cnt")).collect()[0][0]
         return int(row or 0)
 
-    # ---- seed spool x0 (the initial iterate) ----
     cur_path = os.path.join(d, "x0.npy")
-    if task_write:
-        _prealloc(cur_path)
-        wrote = _count_of(items.select(id_col, feat_col).mapInPandas(
-            _make_spool_write_kernel(cur_path, s_path, id_col, feat_col),
-            "cnt long"))
-        if wrote != n:
-            raise RuntimeError(
-                f"diffusion seed spool wrote {wrote} of {n} rows")
-    else:
-        seed_dir = os.path.join(d, "seed")
-        items.select(id_col, feat_col).write.mode("overwrite").parquet(
-            seed_dir)
-        got = spool.from_parquet(spool.part_files(seed_dir), id_col,
-                                 feat_col, n, nf, cur_path)
-        shutil.rmtree(seed_dir, ignore_errors=True)
-        if got is None or not np.array_equal(got, s_ids):
-            raise RuntimeError(
-                f"diffusion seed spool does not hold the {n} collected "
-                "ids")
-    os.chmod(cur_path, fmode)
     cur_sids = s_path
 
     # loop-invariant: symmetrized edges hash-partitioned by dst (every
@@ -405,7 +313,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                 # final step too (the returned frame is a chunked
                 # reader over the final spool, page-cache-warm from the
                 # writers)
-                _prealloc(nxt_path)
+                spool.alloc(nxt_path, (n, nf))
                 kernel = _make_spool_step_kernel(
                     cur_path, s_path, eta, id_col, feat_col,
                     out_path=nxt_path)
@@ -436,9 +344,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
                             f"the {n_dst} destination ids")
                     if cur_sids == s_path:
                         cur_sids = os.path.join(d, "dst_sids.npy")
-                        np.save(cur_sids, got)
-                        os.chmod(cur_sids, fmode)
-                    os.chmod(nxt_path, fmode)
+                        spool.save(cur_sids, got)
                     os.remove(cur_path)
                     shutil.rmtree(step_dir, ignore_errors=True)
                     cur_path = nxt_path
@@ -449,8 +355,7 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
             # below). The spool + index files live until the scratch
             # dir is reclaimed at exit.
             pos_path = os.path.join(d, "outpos.npy")
-            np.save(pos_path, np.where(covered)[0].astype(np.int64))
-            os.chmod(pos_path, fmode)
+            spool.save(pos_path, np.where(covered)[0].astype(np.int64))
             n_part_rd = max(1, min(n_part, n_dst))
             out = (spark.range(0, n_part_rd, 1, n_part_rd)
                    .mapInPandas(
@@ -554,10 +459,11 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
     - distributed tier beyond (`_diffuse_spool`): the iterate lives in
       one id-sorted fp64 spool per step on a worker-visible scratch
       dir, edges are persisted pre-partitioned by dst, and each step is
-      a single exchange-free gather/update job. On `local*` masters
-      (local-cluster included) tasks write the spools directly; on
-      multi-host masters each step writes parquet that the driver
-      streams into the next spool.
+      a single exchange-free gather/update job. The seed spool is
+      `spool.write`'s, the writer the L_F and LSH spools share. On
+      `local*` masters (local-cluster included) tasks write the spools
+      directly; on multi-host masters the seed and each step write
+      parquet that the driver streams into the next spool.
 
     The distributed tier raises rather than degrade: RuntimeError when
     a multi-host master has no worker-visible SPARK_GRAFT_SCRATCH_DIR,
@@ -642,13 +548,8 @@ class EnergyIndex:
         self.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
         self.edges.write.mode("overwrite").parquet(f"{path}/edges")
         spark = self.items.sparkSession
-        lf_rows = [
-            (int(i), [float(v) for v in row])
-            for i, row in enumerate(self.feature_laplacian)
-        ]
-        spark.createDataFrame(
-            lf_rows, schema="row_idx long, row array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/feature_laplacian")
+        matrix_mod.laplacian_to_parquet(spark, self.feature_laplacian,
+                                        f"{path}/feature_laplacian")
         meta = {
             "tau_synth": float(self.tau_synth),
             "graph_params": _json.dumps(self.graph_params.to_dict()),

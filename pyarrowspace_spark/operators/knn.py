@@ -77,22 +77,6 @@ LSH_PAIR_SPOOL_BYTES = 7.5
 #: on the driver covers every non-adversarial corpus to ~10^10 rows.
 LSH_CENSUS_COLLECT_MAX = 65536
 
-# worker-side (pid-scoped) cache of the most recent U spool mmap: a
-# reused Python worker runs the bucket kernel for many tasks, and
-# re-reading sids.npy per task would re-page ~N·8 B each time. One
-# entry only; a new build's spool path evicts the old.
-_WORKER_U_SPOOL_CACHE: dict = {}
-
-
-def _load_u_spool(u_path: str, s_path: str):
-    key = (u_path, os.getpid())
-    ent = _WORKER_U_SPOOL_CACHE.get(key)
-    if ent is None:
-        ent = (np.load(u_path, mmap_mode="r"), np.load(s_path))
-        _WORKER_U_SPOOL_CACHE.clear()
-        _WORKER_U_SPOOL_CACHE[key] = ent
-    return ent
-
 
 def _normalize_f32(X) -> np.ndarray:
     """EXACTLY the unit-normalization the hash pass applies (float32
@@ -105,46 +89,39 @@ def _normalize_f32(X) -> np.ndarray:
     return X32 / norms[:, None]
 
 
-def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
-                   n: int, fdim: int, x_source: dict | None,
-                   u_path: str, s_path: str) -> None:
-    """Write the id-sorted float32 unit-vector spool (`u_path`) and its
-    sorted ids (`s_path`) into one scratch dir: the payload the LSH
-    pair stage gathers bucket-locally, so its shuffle carries only
-    (band, key, id) rows (guide §8: shuffle keys, not payloads). The
-    input is the corpus parquet when `x_source` proves a trivial scan,
-    else a parquet copy of `items` written into the dir by the tasks
-    and deleted once streamed — nothing N-sized is collected on the
-    driver. Each batch is normalized by `_normalize_f32`, so U is
-    bit-identical to the hash pass's."""
-    d = os.path.dirname(u_path)
-    s_ids = (spool.from_parquet(x_source["files"], x_source["id_col"],
-                                x_source["feat_col"], n, fdim, u_path,
-                                np.float32, _normalize_f32)
-             if x_source else None)
-    if s_ids is None:
-        copy_dir = os.path.join(d, "items")
-        items.select(id_col, feat_col).write.parquet(copy_dir)
-        s_ids = spool.from_parquet(spool.part_files(copy_dir), id_col,
-                                   feat_col, n, fdim, u_path, np.float32,
-                                   _normalize_f32)
-        shutil.rmtree(copy_dir, ignore_errors=True)
-        if s_ids is None:
-            raise RuntimeError(
-                f"knn_edges: the items frame did not re-read as {n} rows "
-                f"of {fdim} features — it is not deterministic")
-    np.save(s_path, s_ids)
-    spool.seal(d)
+def _in_ball_topk(dist: np.ndarray, bad: np.ndarray,
+                  k_i: int) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """The eps-ball selection the exact scan and the LSH buckets share:
+    over an m×n distance block whose columns are in ascending id order,
+    the (row, column, dist) triples outside the `bad` mask, row-major,
+    and with `k_i` only each row's k smallest by (dist, column), in
+    that order — the reference tie-break lexsort((dst, dist)) without
+    a per-row Python loop or a sort of whole rows. `bad` must hold
+    `~(dist <= eps)`, so a NaN distance stays out."""
+    keep = ~bad
+    capped = bool(k_i) and dist.shape[1] > k_i
+    if capped:
+        # at most the k-th smallest in-ball distance: k candidates a
+        # row, more only on a tie at the k-th
+        kth = np.partition(np.where(bad, np.inf, dist), k_i - 1,
+                           axis=1)[:, k_i - 1:k_i]
+        keep &= dist <= kth
+    rows, cols = np.nonzero(keep)
+    dv = dist[rows, cols]
+    if capped:
+        order = np.lexsort((cols, dv, rows))
+        rows, cols, dv = rows[order], cols[order], dv[order]
+        first = np.arange(len(rows)) - np.searchsorted(rows, rows) < k_i
+        rows, cols, dv = rows[first], cols[first], dv[first]
+    return rows, cols, dv
 
 
 def _bucket_pairs(ids: np.ndarray, U: np.ndarray, eps_f: float,
                   k_i: int) -> "list[tuple]":
     """One bucket's in-ball pairs as (src, dst, dist) array triples:
-    the intra-bucket rectified-cosine distances by gemm, the eps mask
-    and, with `k_i`, the k smallest per src. `ids` must be ascending
-    (the rows of `U`, in order), so equal-distance ties resolve to the
-    LOWER dst by the stable sort — the reference tie-break
-    lexsort((dst, dist)) without a per-row Python loop."""
+    the intra-bucket rectified-cosine distances by gemm, then
+    `_in_ball_topk`. `ids` must be ascending (the rows of `U`, in
+    order)."""
     n = len(ids)
     out = []
     # Chunk rows so the chunk×n distance block stays bounded even in a
@@ -156,17 +133,9 @@ def _bucket_pairs(ids: np.ndarray, U: np.ndarray, eps_f: float,
         cos = Uc @ U.T
         dist = 1.0 - np.maximum(cos.astype(np.float64), 0.0)
         # invalid = outside the eps ball, or the self-pair
-        bad = (dist > eps_f) | (ids[None, :] == ids[c0:c0 + m, None])
-        if k_i and n > k_i:
-            d2 = np.where(bad, np.inf, dist)
-            sel = np.argsort(d2, axis=1, kind="stable")[:, :k_i]
-            dsel = np.take_along_axis(d2, sel, axis=1)
-            valid = np.isfinite(dsel)
-            rows = np.nonzero(valid)[0]
-            out.append((ids[c0 + rows], ids[sel[valid]], dsel[valid]))
-        else:
-            rows, cols = np.nonzero(~bad)
-            out.append((ids[c0 + rows], ids[cols], dist[~bad]))
+        bad = ~(dist <= eps_f) | (ids[None, :] == ids[c0:c0 + m, None])
+        rows, cols, dv = _in_ball_topk(dist, bad, k_i)
+        out.append((ids[c0 + rows], ids[cols], dv))
     return out
 
 
@@ -181,14 +150,9 @@ def _make_bucket_kernel(u_paths: "tuple[str, str]", keys: "list[str]",
     run as block pairs), so the carry stays bounded."""
     import pandas as pd
 
-    def emit(g: np.ndarray, ids: np.ndarray):
-        Usp, s_l = _load_u_spool(*u_paths)
-        pos = np.searchsorted(s_l, ids)
-        if pos.max() >= len(s_l) or not np.array_equal(s_l[pos], ids):
-            raise RuntimeError(
-                "LSH U-spool does not cover this bucket's ids — "
-                "stale spool or corpus mismatch")
-        U = np.asarray(Usp[pos])
+    def emit(Usp, s_l, g: np.ndarray, ids: np.ndarray):
+        U = np.asarray(Usp[spool.positions(
+            s_l, ids, "LSH U-spool does not cover this bucket's ids")])
         cuts = np.flatnonzero(np.any(g[1:] != g[:-1], axis=1)) + 1
         bounds = np.concatenate([[0], cuts, [len(ids)]])
         out = [t for s, e in zip(bounds[:-1], bounds[1:]) if e - s > 1
@@ -201,6 +165,7 @@ def _make_bucket_kernel(u_paths: "tuple[str, str]", keys: "list[str]",
         return None
 
     def kernel(batches):
+        Usp, s_l = spool.reopen(*u_paths)
         held_g = np.empty((0, len(keys)), dtype=np.int64)
         held_i = np.empty(0, dtype=np.int64)
         for pdf in batches:
@@ -214,11 +179,11 @@ def _make_bucket_kernel(u_paths: "tuple[str, str]", keys: "list[str]",
             cut = int(last[-1]) + 1 if len(last) else 0
             held_g, held_i = g[cut:], ids[cut:]
             if cut:
-                out = emit(g[:cut], ids[:cut])
+                out = emit(Usp, s_l, g[:cut], ids[:cut])
                 if out is not None:
                     yield out
         if len(held_i):
-            out = emit(held_g, held_i)
+            out = emit(Usp, s_l, held_g, held_i)
             if out is not None:
                 yield out
 
@@ -326,11 +291,13 @@ def _knn_directed_broadcast_scan(
     """Directed kNN candidates via broadcast corpus + partition-local
     numpy scan.
 
-    Each partition multiplies its rows against the broadcast corpus
-    matrix (one BLAS gemm per Arrow batch), applies the eps predicate
-    and the per-row k-smallest cap (ties broken by dst asc, matching
-    the SQL window `ORDER BY dist ASC, dst ASC`), and emits at most
-    k rows per item — the N^2 candidate space never hits the shuffle.
+    Each partition multiplies its rows against the id-sorted broadcast
+    corpus matrix (one BLAS gemm per Arrow batch) and applies the eps
+    predicate and the per-row k-smallest cap by `_in_ball_topk`, the
+    LSH buckets' selection (ties broken by dst asc, matching the SQL
+    window `ORDER BY dist ASC, dst ASC`); it emits at most k rows per
+    item — the N^2 candidate space never hits the shuffle. Raises
+    ValueError on duplicate ids.
 
     Scale contract: corpus matrix must fit in executor memory
     (N x F x 8B; ~1 GB at N=314k, F=384 — the reference's own ceiling).
@@ -338,10 +305,14 @@ def _knn_directed_broadcast_scan(
     """
     import pandas as pd
 
-    from ..functions.matrix import collect_id_matrix
+    from ..functions.matrix import collect_id_matrix, sorted_index
 
     spark = items.sparkSession
     ids, X = collect_id_matrix(items, id_col, feat_col)
+    # id-sorted columns make `_in_ball_topk`'s column tie-break the
+    # lower dst; a repeated id raises ValueError
+    ids, order = sorted_index(ids)
+    X = X[order]
     norms = np.linalg.norm(X, axis=1)
     b_ids = spark.sparkContext.broadcast(ids)
     b_X = spark.sparkContext.broadcast(X)
@@ -373,26 +344,11 @@ def _knn_directed_broadcast_scan(
                 qn = np.linalg.norm(Q, axis=1)
                 cos = (Q @ X_all.T) / np.outer(qn, n_all)
                 dist = 1.0 - np.maximum(cos, 0.0)
-                out_s, out_d, out_v = [], [], []
-                for r in range(dist.shape[0]):
-                    drow = dist[r]
-                    mask = (drow <= eps_f) & (ids_all != qids[r])
-                    cand = np.nonzero(mask)[0]
-                    if cand.size == 0:
-                        continue
-                    if cand.size > k_i:
-                        # k smallest by (dist, dst): lexsort minor->major
-                        order = np.lexsort((ids_all[cand], drow[cand]))[:k_i]
-                        cand = cand[order]
-                    out_s.append(np.full(cand.size, qids[r], dtype=np.int64))
-                    out_d.append(ids_all[cand])
-                    out_v.append(drow[cand])
-                if out_s:
-                    yield pd.DataFrame({
-                        "src": np.concatenate(out_s),
-                        "dst": np.concatenate(out_d),
-                        "dist": np.concatenate(out_v),
-                    })
+                bad = ~(dist <= eps_f) | (ids_all[None, :] == qids[:, None])
+                rows, cols, dv = _in_ball_topk(dist, bad, k_i)
+                if len(rows):
+                    yield pd.DataFrame({"src": qids[rows],
+                                        "dst": ids_all[cols], "dist": dv})
 
     # Spread the gemm across cores: a single-file (or single-ROW-GROUP
     # — see matrix.scan_split_info) parquet scan arrives effectively
@@ -516,7 +472,13 @@ def pairwise_candidates_lsh(
     N-sized is materialized on the driver.
 
       1. The unit vectors are written ONCE to an id-sorted float32
-         spool (`_build_u_spool`) on scratch every executor can read.
+         spool on scratch every executor can read, by `spool.write`:
+         streamed from the corpus parquet when `x_source` proves a
+         trivial scan, else scattered by the tasks on single-host
+         masters, else streamed from a task-written parquet copy on
+         multi-host ones. Nothing N-sized is collected on the driver;
+         each row is normalized by `_normalize_f32`, so U is
+         bit-identical to the hash pass's.
       2. ONE Arrow pass per partition gemms the unit-normalized batch
          against a broadcast F×(bands·bits) Gaussian matrix, packs each
          band's sign bits into an int64 key and emits ``n_bands``
@@ -591,7 +553,8 @@ def pairwise_candidates_lsh(
     k_i = int(k) if k is not None else 0
     b_max = int(bucket_max if bucket_max is not None else LSH_BUCKET_MAX)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    scratch_root, _ = spool.scratch(spark, "knn_edges: the LSH build")
+    op = "knn_edges: the LSH build"
+    scratch_root, task_write = spool.scratch(spark, op)
 
     # Scratch-disk budget. Each band's (band, key) exchange carries N
     # narrow rows and its sort spills up to LSH_SPILL_FACTOR times that.
@@ -601,9 +564,10 @@ def pairwise_candidates_lsh(
     # divides by the group count while the pair union is
     # band-order-invariant — the output is IDENTICAL (pinned by
     # tests/test_lsh_recall.py). The up-front projection prices what
-    # the build writes — the U spool (N·F·4), the parquet copy it is
-    # streamed from when there is no proven corpus scan (N·F·8), the
-    # final group's shuffle and every group's pair spool — and REFUSES
+    # the build writes — the U spool (N·F·4), the parquet copy
+    # `spool.write` streams it from on a multi-host master with no
+    # proven corpus scan (N·F·8), the final group's shuffle and every
+    # group's pair spool — and REFUSES
     # the build before any of it is written when it cannot fit above
     # the free-disk floor: a clear arithmetic error beats a watchdog
     # abort 90 minutes in (the r10 2M failure). Each byte is priced on
@@ -620,7 +584,7 @@ def pairwise_candidates_lsh(
     # emission really is ~N·k per band). VERDICT r11 finding 3.
     spool_unit = n_items * (k_i if k_i else 64) * LSH_PAIR_SPOOL_BYTES
     n_units_end = -(-nb // gsize) if k_i else nb
-    u_bytes = n_items * fdim * (4 if x_source else 12)
+    u_bytes = n_items * fdim * (4 if x_source or task_write else 12)
     spill = LSH_SPILL_FACTOR
     floor_b = parse_size_bytes(
         os.environ.get("SPARK_GRAFT_LSH_MIN_FREE", str(LSH_MIN_FREE_BYTES)),
@@ -771,11 +735,15 @@ def pairwise_candidates_lsh(
     hashed = None
     groups: list[dict] = []  # this build's per-group records
     try:
-        _build_u_spool(items, id_col, feat_col, n_items, fdim, x_source,
-                       *u_paths)
         # ~28 B/row: the corpus is hashed exactly ONCE per build
         hashed = hash_src.mapInPandas(hash_bands,
                                       schema=hash_schema).persist()
+        # a task scatter reads its ids from the hash table's first band,
+        # so that one job also materializes the hash cache
+        spool.write(items, id_col, feat_col, n_items, fdim, u_dir, "u", op,
+                    x_source, np.float32, _normalize_f32,
+                    id_rows=hashed.filter(F.col("band") == 0).select(
+                        F.col("id").alias(id_col)))
         # Skew guard: a degenerate corpus (mass-duplicate vectors — common
         # in the dedup-adjacent corpora this engine targets) can land one
         # giant bucket on ONE task; the chunked gemm bounds memory but not

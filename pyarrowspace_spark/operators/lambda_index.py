@@ -36,7 +36,6 @@ Arrow-batched vectorized map. No N×N materialization anywhere.
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Iterator
 
 import numpy as np
@@ -91,18 +90,21 @@ def feature_laplacian(
       vector is shuffled; communication is #partitions × F² doubles,
       independent of N. The diagonal term is one chunked driver gemm
       over the spool, with degrees from one SQL aggregate.
-      The spool's source, first that applies: the proven corpus
-      parquet `x_source` (`spool.parquet_scan_source`), streamed; a
-      collect when X fits spark.driver.maxResultSize; else a
-      task-written parquet copy of `items` in the spool dir, streamed.
+      The spool comes from `spool.write`'s one source rule: the proven
+      corpus parquet `x_source` (`spool.parquet_scan_source`),
+      streamed; else, on single-host masters, tasks scatter their rows
+      of `items` into it after one narrow ids job; else, on multi-host
+      masters, a task-written parquet copy of `items`, streamed. X is
+      never collected on the driver; the partials kernel reopens the
+      spool through `spool.reopen`.
 
     The spool tier raises rather than degrade: RuntimeError when a
     multi-host master has no worker-visible SPARK_GRAFT_SCRATCH_DIR,
     RuntimeError when the scratch filesystem lacks N·F·8 + 64 MiB free
-    (plus N·F·8 where the parquet copy may be needed; checked before
-    any byte is written, the message states both byte counts and the
-    directory), and ValueError on duplicate ids. Its spool dir is
-    removed on every path.
+    (plus N·F·8 on a multi-host master with no `x_source`, where the
+    parquet copy runs; checked before any byte is written, the message
+    states both byte counts and the directory), and ValueError on
+    duplicate ids. Its spool dir is removed on every path.
     """
     spark = items.sparkSession
     n, n_edges = (counts if counts is not None else
@@ -116,21 +118,18 @@ def feature_laplacian(
 
     op = "feature_laplacian: the spool tier"
     fdim = n_features
-    root, _ = spool.scratch(spark, op)
-    # A collect over spark.driver.maxResultSize ABORTS the job rather
-    # than spilling; where X is not collectable the parquet copy is the
-    # source, and a failed corpus stream may fall to it too.
-    x_fits = matrix.collect_eligible(spark, n * fdim * 8)
-    copy = not x_fits
+    root, task_write = spool.scratch(spark, op)
+    # the parquet copy, the one source that writes N·F·8 twice, runs
+    # only on multi-host masters with no proven corpus scan
+    copy = x_source is None and not task_write
     what = ("N·F·8 for the spool and N·F·8 for the parquet copy" if copy
             else "N·F·8")
     spool.check_free(root, n * fdim * 8 * (2 if copy else 1) + (64 << 20),
                      op, f"{what} + 64 MiB at N={n}, F={fdim}")
     d = spool.make_dir(root, "pyarrowspace-lfx-")
     try:
-        s_ids = _write_x_spool(items, id_col, feat_col, n, fdim, x_source,
-                               x_fits, d)
-        spool.seal(d)
+        s_ids = spool.write(items, id_col, feat_col, n, fdim, d, "x", op,
+                            x_source)
         # Diagonal term Σ deg_i·x_i x_iᵀ: ONE driver gemm over the
         # spool, not a per-partition fold — each partition touches
         # nearly all N rows of a connected graph, so a per-task
@@ -193,41 +192,6 @@ def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
     return (lf + lf.T) / 2.0
 
 
-def _write_x_spool(items: DataFrame, id_col: str, feat_col: str, n: int,
-                   fdim: int, x_source: dict | None,
-                   x_fits: bool, d: str) -> np.ndarray:
-    """Write X (fp64, id-sorted) to `d`/x.npy and its sorted ids to
-    `d`/sids.npy from the first source that applies (see
-    `feature_laplacian`); returns the sorted ids. Raises ValueError on
-    duplicate ids."""
-    x_path = os.path.join(d, "x.npy")
-    s_ids = None
-    if x_source is not None:
-        s_ids = spool.from_parquet(x_source["files"], x_source["id_col"],
-                                   x_source["feat_col"], n, fdim, x_path)
-    if s_ids is None and x_fits:
-        ids, X = matrix.collect_id_matrix(items, id_col, feat_col)
-        s_ids, order = matrix.sorted_index(ids)
-        out = np.lib.format.open_memmap(x_path, mode="w+",
-                                        dtype=np.float64, shape=(n, fdim))
-        for t0 in range(0, n, 65536):
-            out[t0:t0 + 65536] = X[order[t0:t0 + 65536]]
-        out.flush()
-        del out, X
-    if s_ids is None:
-        copy_dir = os.path.join(d, "items")
-        items.select(id_col, feat_col).write.parquet(copy_dir)
-        s_ids = spool.from_parquet(spool.part_files(copy_dir), id_col,
-                                   feat_col, n, fdim, x_path)
-        shutil.rmtree(copy_dir, ignore_errors=True)
-        if s_ids is None:
-            raise RuntimeError(
-                f"feature_laplacian: the items frame did not re-read as "
-                f"{n} rows of {fdim} features — it is not deterministic")
-    np.save(os.path.join(d, "sids.npy"), s_ids)
-    return s_ids
-
-
 def _make_edge_partials_kernel(d: str, fdim: int):
     """mapInPandas kernel over (src, dst, weight) edge batches: gathers
     both endpoints' rows from the id-sorted X spool in `d` and emits
@@ -237,8 +201,7 @@ def _make_edge_partials_kernel(d: str, fdim: int):
     s_path = os.path.join(d, "sids.npy")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        X = np.load(x_path, mmap_mode="r")
-        s_ids = np.load(s_path)
+        X, s_ids = spool.reopen(x_path, s_path)
         order = np.arange(len(s_ids), dtype=np.int64)
         acc = np.zeros((fdim, fdim), dtype=np.float64)
         for pdf in batches:

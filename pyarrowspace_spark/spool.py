@@ -4,8 +4,8 @@ The distributed tiers of the feature Laplacian, of diffusion and of the
 LSH build shuffle keys, not vectors: each writes its vectors ONCE to an
 id-sorted `.npy` file on scratch every executor can read, and its tasks
 gather rows from that file through the page cache — the index-join form
-of a vertex-relation join (Pregelix). This module holds what those
-plans share:
+of a vertex-relation join (Pregelix). This module is the only one that
+knows the spool format; it holds what those plans share:
 
 - the scratch rule (`scratch`, `single_host_master`,
   `probe_worker_visible`, `spill_dir`) and the file modes (`modes`);
@@ -13,10 +13,18 @@ plans share:
   budgets that write to both the scratch root and the spill dir;
 - the spool-dir lifecycle (`make_dir`, `seal`, `drop_dir`), registered
   in `matrix._SCRATCH_DIRS` so a dir no error path reached is still
-  removed at interpreter exit;
-- `parquet_scan_source`, the proof that a frame is a trivial parquet
-  scan whose files can be streamed instead of collected;
-- ONE parquet → id-sorted spool producer (`from_parquet`).
+  removed at interpreter exit, and the moded file helpers (`alloc`,
+  `save`);
+- ONE writer (`write`): `<name>.npy` plus `sids.npy` from the first
+  source that applies — the proven corpus parquet
+  (`parquet_scan_source`, streamed by `from_parquet`); else, on
+  single-host masters, tasks scatter their rows into a pre-allocated
+  spool after one narrow ids job; else, on multi-host masters, a
+  task-written parquet copy the driver streams. X is never collected
+  on the driver;
+- ONE reopen for the kernels that read a spool (`reopen`: the mmap,
+  plus its ids through one worker-side cache) and ONE id-coverage
+  check (`positions`).
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ import shutil
 import tempfile
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from .functions import matrix as matrix_mod
@@ -175,6 +184,22 @@ def seal(d: str) -> None:
         os.chmod(os.path.join(d, fn), fmode)
 
 
+def alloc(path: str, shape: "tuple[int, int]",
+          dtype=np.float64) -> np.memmap:
+    """Pre-allocate the spool `path`, a zero `shape` .npy of `dtype`
+    with the spool file mode, and return it as a writable mmap."""
+    X = np.lib.format.open_memmap(path, mode="w+", dtype=dtype,
+                                  shape=shape)
+    os.chmod(path, modes()[1])
+    return X
+
+
+def save(path: str, arr: np.ndarray) -> None:
+    """`np.save` `arr` to `path` with the spool file mode."""
+    np.save(path, arr)
+    os.chmod(path, modes()[1])
+
+
 def drop_dir(d: str) -> None:
     """Remove spool dir `d` and its registration."""
     shutil.rmtree(d, ignore_errors=True)
@@ -273,15 +298,9 @@ def from_parquet(files: "list[str]", id_col: str, feat_col: str, n: int,
         return None
     if len(ids) != n:
         return None
-    s_ids = np.sort(ids)
-    dup = s_ids[1:][s_ids[1:] == s_ids[:-1]]
-    if dup.size:
-        raise ValueError(
-            f"item ids must be unique; {len(np.unique(dup))} ids repeat "
-            f"(e.g. {int(dup[0])})")
+    s_ids, _ = matrix_mod.sorted_index(ids)
     try:
-        X = np.lib.format.open_memmap(path, mode="w+", dtype=dtype,
-                                      shape=(n, fdim))
+        X = alloc(path, (n, fdim), dtype)
         total = 0
         for f in files:
             for batch in pq.ParquetFile(f).iter_batches(
@@ -303,3 +322,121 @@ def from_parquet(files: "list[str]", id_col: str, feat_col: str, n: int,
         return s_ids
     except (OSError, KeyError, pa.ArrowException):
         return None
+
+
+def write(items: DataFrame, id_col: str, feat_col: str, n: int, fdim: int,
+          d: str, name: str, op: str, x_source: dict | None = None,
+          dtype=np.float64, transform=None,
+          id_rows: DataFrame | None = None) -> np.ndarray:
+    """THE spool writer: the n×fdim `dtype` spool `d`/`name`.npy in
+    id-sorted row order and its sorted ids `d`/sids.npy, from the first
+    source that applies:
+
+    1. the proven corpus parquet `x_source` (`parquet_scan_source`),
+       streamed by `from_parquet`;
+    2. else, on single-host masters, one narrow job collects the ids
+       and tasks scatter their rows of `items` into the pre-allocated
+       spool (writers and readers share one page cache);
+    3. else, on multi-host masters, a parquet copy of `items` the tasks
+       write into `d`, streamed by `from_parquet` and then deleted.
+
+    `transform` maps each batch's float64 rows before they are stored,
+    on every source. `id_rows`, a frame of `items`' ids under `id_col`
+    that the caller needs materialized anyway, is what the scatter's
+    ids job reads instead of `items`. Seals `d` and returns the sorted
+    ids. Raises ValueError on duplicate ids and RuntimeError, prefixed
+    with `op`, when `items` does not read as `n` rows of `fdim`
+    values."""
+    path = os.path.join(d, f"{name}.npy")
+    s_path = os.path.join(d, "sids.npy")
+    s_ids = None
+    if x_source is not None:
+        s_ids = from_parquet(x_source["files"], x_source["id_col"],
+                             x_source["feat_col"], n, fdim, path, dtype,
+                             transform)
+    if s_ids is None and single_host_master(items.sparkSession):
+        ids = (items if id_rows is None else id_rows).select(
+            id_col).toPandas()[id_col].to_numpy(np.int64)
+        if len(ids) == n:
+            s_ids, _ = matrix_mod.sorted_index(ids)
+            save(s_path, s_ids)
+            alloc(path, (n, fdim), dtype)
+            # one job: each task's row count comes back as one row
+            wrote = items.select(id_col, feat_col).mapInPandas(
+                _scatter_kernel(path, s_path, id_col, feat_col, transform),
+                "cnt long").toPandas()["cnt"].sum()
+            if wrote != n:
+                s_ids = None
+    elif s_ids is None:
+        copy_dir = os.path.join(d, "items")
+        items.select(id_col, feat_col).write.parquet(copy_dir)
+        s_ids = from_parquet(part_files(copy_dir), id_col, feat_col, n,
+                             fdim, path, dtype, transform)
+        shutil.rmtree(copy_dir, ignore_errors=True)
+    if s_ids is None:
+        raise RuntimeError(
+            f"{op}: the items frame did not re-read as {n} rows of "
+            f"{fdim} features — it is not deterministic")
+    save(s_path, s_ids)
+    seal(d)
+    return s_ids
+
+
+def _scatter_kernel(path: str, s_path: str, id_col: str, feat_col: str,
+                    transform):
+    """`write`'s scatter step: a mapInPandas kernel that writes its
+    rows of (id, features) into the pre-allocated spool at their
+    id-sorted positions and emits only its row count. Single-host
+    masters only (no msync is needed: writers and readers share one
+    page cache); a retried or speculative task re-writes the same
+    bytes, so the scatter is idempotent."""
+
+    def kernel(batches):
+        X = np.load(path, mmap_mode="r+")
+        s_ids = np.load(s_path)
+        wrote = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            bids = pdf[id_col].to_numpy(np.int64)
+            rows = np.stack(pdf[feat_col].to_numpy()).astype(
+                np.float64, copy=False)
+            X[positions(s_ids, bids,
+                        "spool ids do not cover this partition's rows")] = (
+                transform(rows) if transform is not None else rows)
+            wrote += len(bids)
+        del X
+        yield pd.DataFrame({"cnt": np.array([wrote], dtype=np.int64)})
+
+    return kernel
+
+
+# Worker-side (pid-scoped) cache of the most recently read spool ids: a
+# reused Python worker runs a spool kernel for many tasks, and
+# re-reading sids.npy per task would re-page ~N·8 B each time. One
+# entry only; the next spool evicts it. The spool itself is mapped per
+# call: a cached mmap would keep a dropped spool's disk blocks
+# allocated in every idle worker until its next spool kernel.
+_SIDS: dict = {}
+
+
+def reopen(path: str, s_path: str) -> "tuple[np.ndarray, np.ndarray]":
+    """(read-only mmap of the spool `path`, its sorted ids from
+    `s_path`, through the one worker-side cache)."""
+    key = (s_path, os.getpid())
+    s_ids = _SIDS.get(key)
+    if s_ids is None:
+        _SIDS.clear()
+        s_ids = _SIDS[key] = np.load(s_path)
+    return np.load(path, mmap_mode="r"), s_ids
+
+
+def positions(s_ids: np.ndarray, ids: np.ndarray, what: str) -> np.ndarray:
+    """Row positions of `ids` in a spool with sorted ids `s_ids`.
+    Raises RuntimeError("`what` — stale spool or corpus mismatch") when
+    the spool does not hold every one of them."""
+    pos = np.searchsorted(s_ids, ids)
+    if len(ids) and (pos.max() >= len(s_ids)
+                     or not np.array_equal(s_ids[pos], ids)):
+        raise RuntimeError(f"{what} — stale spool or corpus mismatch")
+    return pos

@@ -69,8 +69,9 @@ def test_matrix_to_frame_without_arrow(spark_no_arrow):
 
 
 def test_builder_save_load_without_arrow(spark_no_arrow, tmp_path):
-    """builder.save feeds createDataFrame with the F×F Laplacian rows —
-    must stay pure-python typed under a non-Arrow session."""
+    """builder.save writes the F×F Laplacian through
+    `matrix.laplacian_to_parquet`, which must work under a non-Arrow
+    session and store it bit for bit."""
     from pyarrowspace_spark.builder import ArrowSpaceBuilder, ArrowSpaceIndex
 
     rows = [(i, [float(i == j) * 2.0 + 0.1 * j for j in range(6)])
@@ -82,4 +83,4 @@ def test_builder_save_load_without_arrow(spark_no_arrow, tmp_path):
     path = str(tmp_path / "idx")
     idx.save(path)
     back = ArrowSpaceIndex.load(spark_no_arrow, path)
-    assert back.feature_laplacian.shape == idx.feature_laplacian.shape
+    assert np.array_equal(back.feature_laplacian, idx.feature_laplacian)

@@ -2,13 +2,15 @@
 partition-wide bucket kernel (its carry across Arrow batches, its plan,
 one top-k per source over one or several band groups), the index
 build's one driver λ pass under `matrix.driver_fits` (its parity with
-`components_with_median` and with the Spark flow, its Spark-job budget)
-and the small driver frames that go to Spark through Arrow."""
+`components_with_median` and with the Spark flow, its Spark-job budget),
+the small driver frames that go to Spark through Arrow, the U spool
+from a frame that is not a proven scan, and the caches a build leaves."""
 
 import numpy as np
 import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
+from pyarrowspace_spark import spool
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.functions import stats
@@ -66,6 +68,95 @@ def test_bucket_kernel_carries_buckets_across_batches(spark, sf_items, k):
     finally:
         spark.conf.set(conf, old)
     assert small == default and len(default) > 1000
+
+
+def _row_loop_topk(dist, bad, k):
+    """The exact scan's former per-row selection: each row's in-ball
+    columns, capped at the k smallest by lexsort((column, dist))."""
+    out = []
+    for r in range(dist.shape[0]):
+        cand = np.nonzero(~bad[r])[0]
+        if k and cand.size > k:
+            cand = cand[np.lexsort((cand, dist[r, cand]))[:k]]
+        out += [(r, int(c), float(dist[r, c])) for c in cand]
+    return out
+
+
+def test_in_ball_topk_matches_the_row_loop():
+    """Pin: `knn._in_ball_topk` keeps, per row, the triples the former
+    per-row loop kept, ties at the k-th distance included (quantized
+    distances make them common), with NaN distances out."""
+    rng = np.random.default_rng(0)
+    for _ in range(500):
+        m, n = int(rng.integers(1, 20)), int(rng.integers(1, 40))
+        dist = np.round(rng.random((m, n)) * 5) / 5
+        dist[rng.random((m, n)) < 0.05] = np.nan
+        bad = ~(dist <= rng.random())
+        k = int(rng.integers(0, 10))
+        rows, cols, dv = K._in_ball_topk(dist, bad, k)
+        got = sorted(zip(rows.tolist(), cols.tolist(), dv.tolist()))
+        assert got == sorted(_row_loop_topk(dist, bad, k))
+
+
+def test_lsh_u_spool_from_non_scan_frame(spark, sf_items, tmp_path,
+                                         monkeypatch):
+    """Contract: an LSH build over a frame that is not a proven parquet
+    scan (its U spool scattered by the tasks), at 7-row Arrow batches
+    and at the default, gives the edges of the proven-scan build (its U
+    spool streamed from the corpus parquet), bit for bit."""
+    p = str(tmp_path / "corpus.parquet")
+    sf_items.write.parquet(p)
+    scan = spark.read.parquet(p)
+    src = spool.parquet_scan_source(scan, "item_id", "features")
+    assert src is not None
+    want = _edges(K.knn_edges(scan, GP, strategy="lsh", x_source=src))
+    rows = scan.filter("item_id >= 0")
+    assert spool.parquet_scan_source(rows, "item_id", "features") is None
+    streamed = []
+    real = spool.from_parquet
+    monkeypatch.setattr(spool, "from_parquet",
+                        lambda *a, **k: streamed.append(a) or real(*a, **k))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    got = {}
+    for batch in (old, "7"):
+        spark.conf.set(conf, batch)
+        try:
+            got[batch] = _edges(K.knn_edges(rows, GP, strategy="lsh"))
+        finally:
+            spark.conf.set(conf, old)
+    assert streamed == []
+    assert got[old] == want and got["7"] == want and len(want) > 1000
+
+
+def _cached_datasets(spark) -> int:
+    """The entries of the session's cache manager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.mark.parametrize("flow,rate,want", [("driver", 0.6, 1),
+                                            ("spark", None, 2),
+                                            ("spark", 0.6, 2)])
+def test_build_leaves_only_the_index_caches(spark, sf_items, monkeypatch,
+                                            flow, rate, want):
+    """Contract: a build leaves cached only what its index reads — the
+    edges, and on the Spark flow (budget patched to 0) the λ
+    components its items blend — not its input or its sampled graph
+    input."""
+    if flow == "spark":
+        monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    spark.catalog.clearCache()
+    try:
+        idx = ArrowSpaceBuilder.build(sf_items, GP, strategy="exact",
+                                      sample_rate=rate)
+        idx.items.count(), idx.edges.count()
+        assert _cached_datasets(spark) == want
+    finally:
+        spark.catalog.clearCache()
+        sf_items.persist()
 
 
 def test_pair_stage_plan_has_no_grouped_pandas_or_join(spark, sf_items,

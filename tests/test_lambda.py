@@ -6,7 +6,8 @@ both tiers, driver diffusion pinned to its per-destination matvec loop
 bit for bit, the spool tier pinned to the driver tier, and the spool
 tier's contracts (scratch rule, disk budget, cleanup, worker
 visibility) and sources (`spool.parquet_scan_source`,
-`spool.from_parquet`, `spool.modes`, the collect and the parquet copy),
+`spool.from_parquet`, `spool.modes`, the scatter and the parquet copy
+of `spool.write`, which never collects X),
 a build reusing saved edges, and the one input contract
 (`matrix.census`) on every build path."""
 
@@ -378,19 +379,19 @@ def test_edges_reuse_build_uses_scan_spool(spark, tmp_path, monkeypatch):
                for i in a)
 
 
-@pytest.mark.parametrize("source", ["collect", "parquet"])
+@pytest.mark.parametrize("source", ["scatter", "parquet"])
 def test_spool_tier_rejects_duplicate_ids(spark, tmp_path, monkeypatch,
                                           source):
     """Contract: a repeated id raises ValueError in the spool tier, as in
-    the driver tier, from a collect and from the corpus parquet — it
-    used to return an L_F built from one copy's row, and the spool dir
-    is removed."""
+    the driver tier, from the task scatter and from the corpus parquet
+    — it used to return an L_F built from one copy's row, and the spool
+    dir is removed."""
     p, _ = _write_corpus(spark, tmp_path, n=4, f=3, ids=[0, 1, 1, 2])
     items = spark.read.parquet(p).select("item_id", "features")
     edges = spark.createDataFrame([(0, 1, 0.5), (1, 2, 0.25)], EDGE_SCHEMA)
     src = (spool.parquet_scan_source(items, "item_id", "features")
            if source == "parquet" else None)
-    assert (src is None) == (source == "collect")
+    assert (src is None) == (source == "scatter")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match=r"unique; 1 ids repeat \(e\.g\. 1\)"):
@@ -456,11 +457,47 @@ def test_spool_tier_failure_removes_spool(spark, test0_items_df,
     assert M._SCRATCH_DIRS == before
 
 
+def _held_spools() -> set:
+    """Spool files some Python worker still maps after their dir was
+    removed, read from /proc."""
+    held = set()
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                if b"pyspark" not in fh.read():
+                    continue
+            with open(f"/proc/{pid}/maps") as fh:
+                held |= {ln.split()[-2] for ln in fh
+                         if "pyarrowspace-" in ln
+                         and ln.rstrip().endswith("(deleted)")}
+        except OSError:
+            continue
+    return held
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/self/maps"),
+                    reason="reads the workers' maps under /proc")
+def test_dropped_spools_are_not_held_by_workers(spark, test0_items_df,
+                                                monkeypatch):
+    """Contract: once an LSH build and an L_F spool tier return, no
+    Python worker still maps their removed spool files. The worker-side
+    cache (`spool.reopen`) keeps the spool's ids, not its mmap: a cached
+    mmap kept a dropped spool's disk blocks allocated in every idle
+    worker until its next spool kernel."""
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    edges = K.knn_edges(test0_items_df, GP_T0, strategy="lsh").persist()
+    edges.count()
+    L.feature_laplacian(test0_items_df, edges, 24)
+    edges.unpersist()
+    assert _held_spools() == set()
+
+
 def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
-    """The spool tier with the corpus-parquet source is BITWISE equal to
-    the collect source and to the parquet copy source (same id-sorted
-    storage, same sorted edge scan, same fp64 accumulation — only the
-    spool's producer differs)."""
+    """The spool tier is BITWISE equal from each of `spool.write`'s
+    three sources — the corpus parquet scan, the task scatter and the
+    parquet copy of multi-host masters (same id-sorted storage, same
+    sorted edge scan, same fp64 accumulation — only the spool's
+    producer differs)."""
     p, _ = _write_corpus(spark, tmp_path, n=220, f=8)
     items = spark.read.parquet(p).select("item_id", "features")
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0, sigma=0.2)
@@ -470,12 +507,48 @@ def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
     src = spool.parquet_scan_source(items, "item_id", "features")
     assert src is not None
     lf_scan = L.feature_laplacian(items, edges, 8, x_source=src)
-    lf_collect = L.feature_laplacian(items, edges, 8, x_source=None)
-    assert np.array_equal(lf_scan, lf_collect)
-    monkeypatch.setattr(M, "collect_eligible", lambda s, b: False)
+    lf_scatter = L.feature_laplacian(items, edges, 8, x_source=None)
+    assert np.array_equal(lf_scan, lf_scatter)
+    monkeypatch.setattr(spool, "single_host_master", lambda spark: False)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    copies = []
+    real = spool.part_files
+
+    def _spy(d):
+        copies.append(d)
+        return real(d)
+
+    monkeypatch.setattr(spool, "part_files", _spy)
     lf_copy = L.feature_laplacian(items, edges, 8, x_source=None)
-    assert np.array_equal(lf_copy, lf_collect)
+    assert len(copies) == 1 and _lfx_dirs(tmp_path) == []
+    assert np.array_equal(lf_copy, lf_scan)
     edges.unpersist()
+
+
+def test_spool_tier_never_collects_x(spark, tmp_path, monkeypatch):
+    """With `matrix.collect_id_matrix` raising, the spool tier over a
+    `createDataFrame` frame (no proven scan: the task scatter) gives
+    L_F `==` to the same rows read through a proven parquet scan: X is
+    never collected on the driver."""
+    p, X = _write_corpus(spark, tmp_path, n=180, f=8, seed=5)
+    scan = spark.read.parquet(p).select("item_id", "features")
+    rows = _items(spark, np.arange(180), X)
+    gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0, sigma=0.2)
+    edges = K.knn_edges(scan, gp, strategy="exact").persist()
+    edges.count()
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)  # force spool tier
+    src = spool.parquet_scan_source(scan, "item_id", "features")
+    assert src is not None
+    assert spool.parquet_scan_source(rows, "item_id", "features") is None
+    want = L.feature_laplacian(scan, edges, 8, x_source=src)
+
+    def _no_collect(*a, **k):
+        raise AssertionError("the spool tier collected X")
+
+    monkeypatch.setattr(M, "collect_id_matrix", _no_collect)
+    got = L.feature_laplacian(rows, edges, 8)
+    edges.unpersist()
+    assert np.array_equal(got, want)
 
 
 def test_build_with_reused_edges_matches(spark, tmp_path):

@@ -2,9 +2,10 @@
 branches the monkeypatch tests simulate, exercised under
 ``local-cluster[2,2,2048]`` — two separate executor JVMs, real package
 shipping via addPyFile (executor Python workers cannot see the driver's
-module state), the Laplacian spool tier from a collect and from a
-task-written parquet copy, and the distributed diffusion tier, with
-values compared against the in-process local[*] session.
+module state), the Laplacian spool tier from the task scatter and from
+the task-written parquet copy of multi-host masters, and the
+distributed diffusion tier, with values compared against the
+in-process local[*] session.
 
 Runs the cluster session in a SUBPROCESS: a Python process admits one
 SparkContext and the session fixture already owns a local[*] one.
@@ -27,6 +28,7 @@ sys.path.insert(0, repo)
 import pyspark
 
 os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
+from pyarrowspace_spark import spool
 from pyarrowspace_spark.session import get_spark
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
@@ -56,18 +58,21 @@ idx = ArrowSpaceBuilder.build(
 lam_sum = float(idx.items.agg({"lambda": "sum"}).collect()[0][0])
 
 # Laplacian tiers under real multi-JVM: the driver tier (what build
-# used) against the spool tier, whose X spool comes from a collect and,
-# when X does not fit spark.driver.maxResultSize, from a parquet copy
-# the executor tasks write.
+# used) against the spool tier, whose X spool the executor tasks
+# scatter and, with the master reported multi-host and a shared
+# scratch dir set, streams from a parquet copy the tasks write.
 budget0 = M.DRIVER_BUDGET_BYTES
 M.DRIVER_BUDGET_BYTES = 0                # -> spool tier
-lf_collect = lam_mod.feature_laplacian(items, idx.edges, 24)
-eligible0 = M.collect_eligible
-M.collect_eligible = lambda spark, nbytes: False   # -> parquet copy
+lf_scatter = lam_mod.feature_laplacian(items, idx.edges, 24)
+single0 = spool.single_host_master
+spool.single_host_master = lambda spark: False   # -> parquet copy
+os.environ["SPARK_GRAFT_SCRATCH_DIR"] = scratch_dir = tempfile.mkdtemp()
 lf_copy = lam_mod.feature_laplacian(items, idx.edges, 24)
-M.collect_eligible = eligible0
+del os.environ["SPARK_GRAFT_SCRATCH_DIR"]
+shutil.rmtree(scratch_dir)
+spool.single_host_master = single0
 M.DRIVER_BUDGET_BYTES = budget0
-collect_err = float(np.abs(lf_collect - idx.feature_laplacian).max())
+scatter_err = float(np.abs(lf_scatter - idx.feature_laplacian).max())
 copy_err = float(np.abs(lf_copy - idx.feature_laplacian).max())
 
 # Distributed diffusion tier (the 100-TB path) across two executor
@@ -82,7 +87,7 @@ print("RESULT " + json.dumps({
     "n_edges": idx.edges.count(),
     "tau": idx.tau_synth,
     "lam_sum": lam_sum,
-    "collect_err": collect_err,
+    "scatter_err": scatter_err,
     "copy_err": copy_err,
     "d_sum": d_sum,
 }))
@@ -109,7 +114,7 @@ def test_local_cluster_distributed_tiers(spark):
 
     # The spool tier agreed with the driver tier inside the cluster
     # session, from both of its X sources
-    assert got["collect_err"] < 1e-9
+    assert got["scatter_err"] < 1e-9
     assert got["copy_err"] < 1e-9
 
     # Values identical to the same computation on this local[*] session

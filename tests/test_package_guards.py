@@ -1,8 +1,9 @@
 """Source guards over the package: the set of SPARK_GRAFT_* env levers
 it reads and where the driver-tier levers are read, the rule that an
 operator module uses no underscore name of another operator module
-(shared helpers are public, or live in `spool`/`functions`), and the
-rule that operators keep no per-call state in module globals."""
+(shared helpers are public, or live in `spool`/`functions`), the
+rule that operators keep no per-call state in module globals, and the
+rule that only `spool.py` creates, modes and caches spool files."""
 
 import ast
 import pathlib
@@ -176,4 +177,31 @@ def test_lsh_pair_stage_runs_no_grouped_pandas_kernel():
     bad = [node.lineno
            for node in ast.walk(ast.parse((OPERATORS / "knn.py").read_text()))
            if isinstance(node, ast.Attribute) and node.attr == "applyInPandas"]
+    assert bad == []
+
+
+def test_spool_files_only_in_spool_module():
+    """Guard: no module under operators/ calls `np.lib.format.open_memmap`,
+    `np.save` or `os.chmod`, or binds a module-level dict: spool files
+    are created, moded and cached (`spool.write`, `alloc`, `save`,
+    `reopen`) only by `spool.py`, so one module knows the format."""
+    bad = []
+    for path, tree in _trees(OPERATORS):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = ast.unparse(node.func)
+                if (name.endswith("open_memmap")
+                        or name in ("np.save", "numpy.save", "os.chmod")):
+                    bad.append(f"{path.name}:{node.lineno} {name}")
+        for node in tree.body:
+            if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+                continue
+            value = node.value
+            if (isinstance(value, (ast.Dict, ast.DictComp))
+                    or (isinstance(value, ast.Call)
+                        and ast.unparse(value.func) == "dict")
+                    or (isinstance(node, ast.AnnAssign)
+                        and ast.unparse(node.annotation).startswith(
+                            ("dict", "Dict")))):
+                bad.append(f"{path.name}:{node.lineno} module-level dict")
     assert bad == []

@@ -100,9 +100,10 @@ def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
     plan = K.lsh_plan(n, f, k)
     nb = plan["n_bands"]
     band_bytes = n * K.LSH_ROW_BYTES
-    # the U spool (N·F·4) plus the parquet copy it streams from (N·F·8):
-    # a createDataFrame input has no proven corpus scan
-    u_bytes = n * f * 12
+    # the U spool (N·F·4) alone: a createDataFrame input has no proven
+    # corpus scan, but on a single-host master the tasks scatter it,
+    # with no parquet copy
+    u_bytes = n * f * 4
     spool_unit = n * k * K.LSH_PAIR_SPOOL_BYTES
     floor_b, spill = 1_000_000, 4.0
     old_need = nb * spool_unit + band_bytes * spill + u_bytes + floor_b

@@ -97,7 +97,7 @@ def test_index_save_load_roundtrip(spark, tmp_path):
     assert idx2.nitems == idx.nitems
     assert idx2.n_features == idx.n_features
     assert idx2.tau_synth == pytest.approx(idx.tau_synth, rel=1e-12)
-    assert np.allclose(idx2.feature_laplacian, idx.feature_laplacian)
+    assert np.array_equal(idx2.feature_laplacian, idx.feature_laplacian)
     q = np.array(items.filter("item_id = 7").first()["features"]) * 1.05
     r1 = search(idx.items, idx.feature_laplacian, q, tau=0.62, k=5).collect()
     r2 = search(idx2.items, idx2.feature_laplacian, q, tau=0.62, k=5).collect()
