@@ -14,8 +14,10 @@ collect of every driver pass (diffusion, L_F, the energy build).
 `positions_of` replaces per-edge Python dict lookups with a vectorized
 sorted-search: works for arbitrary int64 ids (including 60-bit hashes),
 no densification assumption. `dst_segments` + `segment_sum` are the
-one neighbour combine W·X of the driver tiers (diffusion steps and the
-feature Laplacian).
+one neighbour combine W·X of every tier: the driver tiers' diffusion
+steps and feature Laplacian, and the spool tiers' partition kernels,
+which read the one edge layout `dst_layout` through
+`partition_segments`.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import tempfile
 from typing import NamedTuple
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -485,8 +488,10 @@ class DstSegments(NamedTuple):
 def dst_segments(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
                  n: int) -> DstSegments:
     """Group edges (row positions `src` → `dst`, weights `w`) of an
-    n-row matrix by destination, stable in input order."""
-    order = np.argsort(dst, kind="stable")
+    n-row output by destination, in (dst, src) order: the order
+    `dst_layout` gives a spool partition, so every tier sums a segment
+    in one order, whatever the edge frame's row order."""
+    order = np.lexsort((src, dst))
     src, dst, w = src[order], dst[order], w[order]
     udst, starts = np.unique(dst, return_index=True)
     deg = np.zeros(n)
@@ -506,7 +511,10 @@ def sym_segments(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
 
 def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:
     """W·X as a per-destination combine: row d of the result is
-    Σ w·X[src] over the edges into d (zero for rows with none).
+    Σ w·X[src] over the edges into d (zero for rows with none). The
+    result has `len(seg.deg)` rows, the `n` of `dst_segments`, so X
+    may be a whole spool while the segments cover one partition's
+    destinations.
 
     E·F flops and one N×F output. Each destination is one BLAS matvec
     w[s:e] @ X[src[s:e]] — measured 24 s per step over 9.4M edges at
@@ -516,7 +524,7 @@ def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:
     buffer the matvec never materializes. A segment longer than X
     (only repeated edges make one) is summed in X-sized slices, so the
     gather transient never exceeds N·F whatever the edge count."""
-    out = np.zeros_like(X)
+    out = np.zeros((len(seg.deg), X.shape[1]))
     cap = max(len(X), 1)
     src, w, udst, bounds = seg.src, seg.w, seg.udst, seg.bounds
     for i in range(len(udst)):
@@ -528,3 +536,39 @@ def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:
                 c1 = min(c + cap, e)
                 out[udst[i]] += w[c:c1] @ X[src[c:c1]]
     return out
+
+
+def both_directions(edges: DataFrame) -> DataFrame:
+    """An undirected (src, dst, weight) edge list as both directed
+    halves: every edge, then every edge reversed."""
+    return edges.select("src", "dst", "weight").unionAll(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
+                     "weight"))
+
+
+def dst_layout(edges: DataFrame, n_parts: int) -> DataFrame:
+    """The spool plans' one edge layout: `both_directions`,
+    hash-partitioned by dst into `n_parts` (every edge into a
+    destination in one partition) and sorted by (dst, src) within each
+    partition, the segment order of `dst_segments`."""
+    return (both_directions(edges).repartition(n_parts, "dst")
+            .sortWithinPartitions("dst", "src"))
+
+
+def partition_segments(batches, positions
+                       ) -> "tuple[np.ndarray, np.ndarray, DstSegments] | None":
+    """One `dst_layout` partition as `dst_segments`: its (src, dst,
+    weight) batches concatenated (a segment may span Arrow batches),
+    ids mapped to spool rows by `positions` (which raises on an id the
+    spool lacks) and destinations numbered 0..m−1. Returns (the m
+    destination ids, their spool rows, the segments), or None for an
+    empty partition."""
+    pdfs = [pdf for pdf in batches if len(pdf)]
+    if not pdfs:
+        return None
+    pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+    udst, local = np.unique(pdf["dst"].to_numpy(np.int64),
+                            return_inverse=True)
+    seg = dst_segments(positions(pdf["src"].to_numpy(np.int64)), local,
+                       pdf["weight"].to_numpy(np.float64), len(udst))
+    return udst, positions(udst), seg

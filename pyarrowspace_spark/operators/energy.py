@@ -19,12 +19,15 @@ e_raw, τ, L_F and `centroid_id` agree between the tiers.
 Stages (Spark flow):
   1. λτ-graph (shared with the standard build).
   2. Heat diffusion G12: X ← X − η·L·X for `steps` iterations, exact
-     fp64. Driver tier (numpy segment-sum) under `driver_fits`; beyond
-     it one distributed plan: an fp64 iterate spool on worker-visible
-     scratch and one exchange-free gather job per step, written by
-     tasks on `local*` masters and streamed through parquet on
-     multi-host ones. No scratch, too little scratch or duplicate ids
-     raise. See `diffuse` for the tier split.
+     fp64. Both tiers run one step, W·X by the one neighbour combine
+     `matrix.segment_sum`, so their iterates are equal. Driver tier
+     under `driver_fits`; beyond it one distributed plan: an fp64
+     iterate spool on worker-visible scratch, the edges persisted in
+     the one dst-partitioned layout (`matrix.dst_layout`) and one
+     exchange-free job per step, written by tasks on `local*` masters
+     and streamed through parquet on multi-host ones. No scratch, too
+     little scratch or duplicate ids raise. See `diffuse` for the tier
+     split.
   3. Edge trim G13a: drop edges below the `trim_quantile` weight
      quantile.
   4. Optical-token compression G14: seeded KMeans to ~optical_tokens
@@ -81,14 +84,6 @@ from .search import (QUERY_BLOCK, block_topk, check_query_ids, fold_dot,
 COMPRESS_MAX_TRAIN = 100_000
 
 
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected edge list as both directed halves."""
-    return edges.select("src", "dst", "weight").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                     "weight")
-    )
-
-
 def diffuse_plan(n_items: int, nf: int, n_edges: int) -> dict:
     """Self-description of the tier `diffuse` chooses for a corpus of
     this shape: the byte part of `matrix.driver_fits` at diffusion's
@@ -137,14 +132,12 @@ def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
 def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
                             id_col: str, feat_col: str,
                             out_path: "str | None" = None):
-    """mapInPandas kernel for one diffusion step: the partition holds
-    ALL incoming edges of its destinations (narrow (src, dst, weight)
-    rows, hash-partitioned by dst), source rows are gathered from the
-    shared id-sorted X spool, and the kernel emits the fully UPDATED
-    destination rows x' = (1 − η·deg)·x + η·Σ w·x_src in fp64 — so no
-    update join and no degree aggregation exist in the plan at all
-    (deg is the in-segment weight sum; the segment holds every
-    incoming edge).
+    """mapInPandas kernel for one diffusion step over one
+    `matrix.dst_layout` partition: its destinations hold ALL their
+    incoming edges, so the kernel runs the driver tiers' step on them,
+    x' = (1 − η·deg)·x + η·W·x in fp64 with W·x the one neighbour
+    combine (`matrix.segment_sum`) over the shared id-sorted X spool —
+    no update join and no degree aggregation exist in the plan at all.
 
     `out_path` (task writes): write the updated rows straight into the
     pre-allocated NEXT spool at their id-sorted positions (dpos is
@@ -154,36 +147,19 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
     eta_f = float(eta)
 
     def kernel(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(
-            pdfs, ignore_index=True)
         X, s_ids = spool.reopen(x_path, s_path)
-        dstv = pdf["dst"].to_numpy(np.int64)
-        # stable: preserves the sortWithinPartitions (dst, src) order,
-        # so within-segment summation order is deterministic
-        order = np.argsort(dstv, kind="stable")
-        dstv = dstv[order]
-        srcv = pdf["src"].to_numpy(np.int64)[order]
-        w = pdf["weight"].to_numpy(np.float64)[order]
-        udst, starts = np.unique(dstv, return_index=True)
-        bounds = np.append(starts, len(dstv))
-        dpos = spool.positions(
-            s_ids, udst, "diffusion X spool does not cover this "
-            "partition's destinations")
-        spos = spool.positions(
-            s_ids, srcv, "diffusion X spool does not cover this "
-            "partition's sources")
-        out = np.empty((len(udst), X.shape[1]))
-        for i in range(len(udst)):
-            s, e = bounds[i], bounds[i + 1]
-            # fused per-segment matvec — see _diffuse_driver for why
-            # this beats np.add.reduceat(…, axis=0) on wide rows
-            msum = w[s:e] @ np.asarray(X[spos[s:e]])
-            deg = float(w[s:e].sum())
-            out[i] = ((1.0 - eta_f * deg) * np.asarray(X[dpos[i]])
-                      + eta_f * msum)
+        part = matrix_mod.partition_segments(
+            batches, lambda ids: spool.positions(
+                s_ids, ids, "diffusion X spool does not cover this "
+                "partition's edges"))
+        if part is None:
+            return
+        udst, dpos, seg = part
+        # the operation order of `_diffuse_steps`, so the tiers agree
+        out = (1.0 - eta_f * seg.deg)[:, None] * X[dpos]
+        wx = segment_sum(X, seg)
+        wx *= eta_f
+        out += wx
         if out_path is not None:
             nxt = np.load(out_path, mmap_mode="r+")
             nxt[dpos] = out
@@ -269,14 +245,11 @@ def _spool_steps(items: DataFrame, edges: DataFrame, eta: float,
     cur_path = os.path.join(d, "x0.npy")
     cur_sids = s_path
 
-    # loop-invariant: symmetrized edges hash-partitioned by dst (every
-    # incoming edge of a dst in one partition) in deterministic
-    # (dst, src) order; persisted once, ZERO per-step exchange.
+    # loop-invariant: the one edge layout (every incoming edge of a dst
+    # in one partition, in (dst, src) order); persisted once, ZERO
+    # per-step exchange.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    both = (_symmetrize(edges)
-            .repartition(n_part, "dst")
-            .sortWithinPartitions("dst", "src")
-            .persist())
+    both = matrix_mod.dst_layout(edges, n_part).persist()
     try:
         n_sym = both.count()
         info = {"tier": "distributed", "plan": "spool",

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from .. import spool
 from ..params import GraphParams
 from ..functions import vector as V
-from ..functions.matrix import census
+from ..functions.matrix import both_directions, census
 
 #: Scratch-disk spill multiplier for one band group: the group's
 #: (band,key) shuffle sorts N·gsize rows; measured peak transient over
@@ -943,12 +943,10 @@ def degrees(edges: DataFrame) -> DataFrame:
 
     This is the diagonal of L = D - W (reference GRAPH_VARIABLES.md:8,
     TAUMODE.md:26). Map-side partial aggregation makes this one cheap
-    shuffle at any scale.
+    shuffle at any scale. Returns DataFrame[node, degree].
     """
-    both = edges.select(F.col("src").alias("node"), "weight").unionAll(
-        edges.select(F.col("dst").alias("node"), "weight")
-    )
-    return both.groupBy("node").agg(F.sum("weight").alias("degree"))
+    return both_directions(edges).groupBy(F.col("src").alias("node")).agg(
+        F.sum("weight").alias("degree"))
 
 
 def sparsity(edges: DataFrame, n_items: int) -> float:

@@ -24,12 +24,14 @@ Build-time τ uses Median synthesis: τ_synth = median(e_raw) over items
 suggested_eps.md:3).
 
 Scale design: L_F is F×F (384² ≈ 1.2 MB) — tiny. `feature_laplacian`
-has two tiers: driver numpy when the one driver-tier rule
-(`functions.matrix.driver_fits`) holds, else one spool plan — X
-written once, exact fp64 and id-sorted, to scratch every executor
-reads, and per-partition F×F partials gathered from it over
-the edge list (mapInPandas → driver sum); no vector is shuffled. L_F is
-then broadcast back for the per-item λ pass, which is a narrow,
+has two tiers, one algebra: Xᵀ(deg∘X − W·X) with W·X the one
+neighbour combine `functions.matrix.segment_sum`. Driver numpy when
+the one driver-tier rule (`functions.matrix.driver_fits`) holds, else
+one spool plan — X written once, exact fp64 and id-sorted, to scratch
+every executor reads, the edge list in the one dst-partitioned layout
+(`functions.matrix.dst_layout`), and one F×F partial per partition over
+its destinations (mapInPandas → driver sum); no vector is shuffled. L_F
+is then broadcast back for the per-item λ pass, which is a narrow,
 Arrow-batched vectorized map. No N×N materialization anywhere.
 """
 
@@ -84,19 +86,21 @@ def feature_laplacian(
       graph, against 26 MB and 0.29–0.34 s for this form (4-core host).
     - spool tier beyond, with no row ceiling: X is written ONCE, exact
       fp64 and id-sorted, to a spool on scratch every executor reads
-      (`spool.scratch`), and one exchange-free job over the edge list,
-      sorted by src within each partition, gathers both endpoints' rows
-      from the shared mmap and emits one F×F partial per partition. No
-      vector is shuffled; communication is #partitions × F² doubles,
-      independent of N. The diagonal term is one chunked driver gemm
-      over the spool, with degrees from one SQL aggregate.
+      (`spool.scratch`), and one job runs the driver tier's algebra by
+      destination: the edge list, both orientations, is hash-partitioned
+      by dst and sorted by (dst, src) (`matrix.dst_layout`, 2E narrow
+      rows exchanged), and each partition's kernel combines W·X for its
+      destinations D from the shared mmap (`matrix.segment_sum`) and
+      emits one F×F partial X_Dᵀ·(deg∘X_D − W·X)_D. No vector is
+      shuffled; the driver sums #partitions × F² doubles in partition
+      order, independent of N.
       The spool comes from `spool.write`'s one source rule: the proven
       corpus parquet `x_source` (`spool.parquet_scan_source`),
       streamed; else, on single-host masters, tasks scatter their rows
       of `items` into it after one narrow ids job; else, on multi-host
       masters, a task-written parquet copy of `items`, streamed. X is
-      never collected on the driver; the partials kernel reopens the
-      spool through `spool.reopen`.
+      never collected on the driver; the kernel reopens the spool
+      through `spool.reopen`.
 
     The spool tier raises rather than degrade: RuntimeError when a
     multi-host master has no worker-visible SPARK_GRAFT_SCRATCH_DIR,
@@ -128,54 +132,20 @@ def feature_laplacian(
                      op, f"{what} + 64 MiB at N={n}, F={fdim}")
     d = spool.make_dir(root, "pyarrowspace-lfx-")
     try:
-        s_ids = spool.write(items, id_col, feat_col, n, fdim, d, "x", op,
-                            x_source)
-        # Diagonal term Σ deg_i·x_i x_iᵀ: ONE driver gemm over the
-        # spool, not a per-partition fold — each partition touches
-        # nearly all N rows of a connected graph, so a per-task
-        # diagonal costs P·N·F² (736 GFLOP at the 78k bench against
-        # 354 GFLOP for the edge term). Degrees come from one
-        # map-side-combined SQL aggregate (2E narrow rows); the gemm is
-        # chunked to bound its transient.
-        deg_pdf = (
-            edges.select(F.col("src").alias("_n"), "weight")
-            .unionAll(edges.select(F.col("dst").alias("_n"), "weight"))
-            .groupBy("_n").agg(F.sum("weight").alias("_d"))
-        ).toPandas()
-        deg = np.zeros(n, dtype=np.float64)
-        if len(deg_pdf):
-            deg[matrix.positions_of(deg_pdf["_n"].to_numpy(dtype=np.int64), s_ids,
-                             np.arange(n, dtype=np.int64))] = (
-                deg_pdf["_d"].to_numpy(dtype=np.float64))
-        Xs = np.load(os.path.join(d, "x.npy"), mmap_mode="r")
-        diag = np.zeros((fdim, fdim), dtype=np.float64)
-        for t0 in range(0, n, 65536):
-            Xt = np.asarray(Xs[t0:t0 + 65536], dtype=np.float64)
-            diag += (Xt * deg[t0:t0 + 65536, None]).T @ Xt
-        del Xs
-        # Sort each edge partition by src before the gather: X is
-        # stored id-sorted, so sorted src batches make the X[si]
-        # gather walk the spool monotonically (sequential page-ins)
-        # instead of random-paging it — the gather stage was 33% of
-        # the r12 flagship build and page-in-bound. A local sort only
-        # (no exchange).
+        spool.write(items, id_col, feat_col, n, fdim, d, "x", op, x_source)
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         # Arrow fetch, not .collect(): the result is P×F² scalar rows
-        # (32×147,456 = 4.7M at F=384) and the row path paid ~27 s of
-        # driver pickle.loads + Row construction per build; the same
-        # doubles arrive in the same partition order.
-        parts_pdf = (
-            edges.select("src", "dst", "weight")
-            .sortWithinPartitions("src")
-            .mapInPandas(_make_edge_partials_kernel(d, fdim),
-                         schema=StructType([StructField(
-                             "partial", DoubleType(), False)]))
-        ).toPandas()
+        # (32×147,456 = 4.7M at F=384), which the row path pays for in
+        # driver pickle.loads and Row construction
+        parts_pdf = (matrix.dst_layout(edges, n_parts)
+                     .mapInPandas(_make_laplacian_kernel(d), "partial double")
+                     ).toPandas()
     finally:
         # toPandas() is eager, so nothing can re-read the spool: it
         # dies here, not at session exit
         spool.drop_dir(d)
     flat = parts_pdf["partial"].to_numpy(dtype=np.float64)
-    lf = flat.reshape(-1, fdim, fdim).sum(axis=0) + diag
+    lf = flat.reshape(-1, fdim, fdim).sum(axis=0)
     return (lf + lf.T) / 2.0
 
 
@@ -192,29 +162,28 @@ def laplacian_from_edges(X: np.ndarray, si: np.ndarray, di: np.ndarray,
     return (lf + lf.T) / 2.0
 
 
-def _make_edge_partials_kernel(d: str, fdim: int):
-    """mapInPandas kernel over (src, dst, weight) edge batches: gathers
-    both endpoints' rows from the id-sorted X spool in `d` and emits
-    the partition's F×F edge partial −Σ w·(x_s x_dᵀ + x_d x_sᵀ) as F²
-    rows of one double, accumulated in fp64."""
+def _make_laplacian_kernel(d: str):
+    """mapInPandas kernel over one `matrix.dst_layout` partition of the
+    edges: the partition's destinations D hold all their incoming
+    edges, so it emits its share of L_F, X_Dᵀ·(deg∘X_D − W·X)_D, as F²
+    rows of one double — `laplacian_from_edges`'s algebra split by
+    destination, with W·X from `matrix.segment_sum` over the id-sorted
+    X spool in `d`."""
     x_path = os.path.join(d, "x.npy")
     s_path = os.path.join(d, "sids.npy")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         X, s_ids = spool.reopen(x_path, s_path)
-        order = np.arange(len(s_ids), dtype=np.int64)
-        acc = np.zeros((fdim, fdim), dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            si = matrix.positions_of(
-                pdf["src"].to_numpy(dtype=np.int64), s_ids, order)
-            di = matrix.positions_of(
-                pdf["dst"].to_numpy(dtype=np.int64), s_ids, order)
-            w = pdf["weight"].to_numpy(dtype=np.float64)
-            C = (X[si] * w[:, None]).T @ X[di]
-            acc -= C + C.T
-        yield pd.DataFrame({"partial": acc.ravel()})
+        rows = np.arange(len(s_ids), dtype=np.int64)
+        part = matrix.partition_segments(
+            batches, lambda ids: matrix.positions_of(ids, s_ids, rows))
+        if part is None:
+            return
+        _, dpos, seg = part
+        XD = X[dpos]
+        LX = seg.deg[:, None] * XD
+        LX -= matrix.segment_sum(X, seg)
+        yield pd.DataFrame({"partial": (XD.T @ LX).ravel()})
 
     return kernel
 
@@ -235,7 +204,17 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     the λ pass stays a rounding error next to the graph build even at
     N in the hundreds of thousands. Exact algebraic identities — only
     float summation order differs from the naive edge loop.
+
+    A row's values do not depend on the other rows of the call (the
+    Arrow batch, the driver block or the query mix) at one BLAS thread
+    count: the products with a vector are einsum loops, not BLAS
+    matrix-vector calls, which round a call's trailing rows
+    differently, and an odd X gets a copy of its last row, since this
+    OpenBLAS build's dgemm rounds an odd trailing row as a gemv does.
     """
+    n = len(X)
+    if n % 2:
+        X = np.concatenate([X, X[-1:]])
     # e_raw = x^T L_F x, batched: rowwise sum of (X @ LF) * X
     e_raw = np.einsum("bi,bi->b", X @ LF, X)
     e_b = e_raw / (e_raw + tau)
@@ -249,22 +228,22 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     X2 = X * X
     X3 = X2 * X
     X4 = X2 * X2
-    tot = 2.0 * (X2 @ s1 - np.einsum("bi,bi->b", X @ w_pos, X))
-    sumsq = (2.0 * (X4 @ s2)
+    tot = 2.0 * (np.einsum("bi,i->b", X2, s1)
+                 - np.einsum("bi,bi->b", X @ w_pos, X))
+    sumsq = (2.0 * np.einsum("bi,i->b", X4, s2)
              + 6.0 * np.einsum("bi,bi->b", X2 @ W2, X2)
              - 8.0 * np.einsum("bi,bi->b", X3 @ W2, X))
     with np.errstate(divide="ignore", invalid="ignore"):
         g_raw = np.where(tot > 0, sumsq / (tot * tot), 0.0)
     g = np.clip(g_raw, 0.0, 1.0)
     s_val = tau * e_b + (1.0 - tau) * g
-    return e_raw, g, s_val
+    return e_raw[:n], g[:n], s_val[:n]
 
 
 # Row block of every driver pass's per-row kernels: `lambda_kernel`
 # holds ~7 block×F temporaries, which a bounded block keeps small at
-# any N. Fixed, not a parameter: g's matrix-vector products round the
-# trailing rows of a call differently, so the block layout is part of
-# the stored values.
+# any N. It bounds memory only: `lambda_kernel`'s rows do not depend on
+# the block they are computed in.
 DRIVER_BLOCK = 1024
 
 

@@ -27,7 +27,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .topology import weighted_degrees
+from .knn import degrees
 
 W_PPR, W_COND, W_MOD = 0.4, 0.3, 0.3          # LAMBDA_WEIGHTS :52
 MU_COND, MU_MOD, MU_PPR = 0.4, 0.3, 0.3       # MU_WEIGHTS :53
@@ -68,7 +68,7 @@ def prefix_conductance(edges: DataFrame, rankings: DataFrame,
         .groupBy("query_id", "d").agg(F.sum("weight").alias("cut"))
     )
 
-    deg = weighted_degrees(edges)
+    deg = degrees(edges)
     vol_total = edges.agg((2.0 * F.sum("weight")).alias("v")).collect()[0]["v"]
     w = (Window.partitionBy("query_id").orderBy("rank")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -16,18 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _both_dirs(edges: DataFrame) -> DataFrame:
-    return edges.select("src", "dst", "weight").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                     "weight")
-    )
-
-
-def weighted_degrees(edges: DataFrame) -> DataFrame:
-    return _both_dirs(edges).groupBy(F.col("src").alias("node")).agg(
-        F.sum("weight").alias("degree")
-    )
+from ..functions.matrix import both_directions
+from .knn import degrees
 
 
 def personalized_pagerank(
@@ -46,8 +36,8 @@ def personalized_pagerank(
     Returns DataFrame[source, node, ppr].
     """
     spark = edges.sparkSession
-    both = _both_dirs(edges)
-    deg = weighted_degrees(edges)
+    both = both_directions(edges)
+    deg = degrees(edges)
     # persisted PRE-PARTITIONED on the per-iteration join key:
     # InMemoryRelation keeps outputPartitioning, so each power-method
     # step exchanges only the pr side — the E-row transition table
@@ -142,7 +132,7 @@ def modularity(edges: DataFrame, communities: DataFrame,
         .groupBy(F.col("c_src").alias("community"))
         .agg(F.sum("weight").alias("in_weight"))
     )
-    deg = weighted_degrees(edges).join(
+    deg = degrees(edges).join(
         comm.withColumnRenamed("_n", "node"), "node"
     ).groupBy(F.col("_c").alias("community")).agg(
         F.sum("degree").alias("deg_sum")
@@ -172,7 +162,7 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     # eager final checkpoint (same pattern as personalized_pagerank)
     n_part = int(edges.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"))
-    both = _both_dirs(edges).repartition(n_part, "src").persist()
+    both = both_directions(edges).repartition(n_part, "src").persist()
     try:
         labels = both.select(
             F.col("src").alias("node")).distinct().withColumn(

@@ -154,12 +154,10 @@ def main() -> None:
         ddf.count()
         timers["diffuse_2step_count"] = round(time.time() - t0, 2)
         # the distributed-tier single-step plan for the plans/
-        # deliverable: one exchange-free mapInPandas over the
-        # dst-partitioned edge cache
+        # deliverable: one mapInPandas over the one dst-partitioned
+        # edge layout (`matrix.dst_layout`)
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        both_p = (energy_mod._symmetrize(bidx.edges)
-                  .repartition(n_part, "dst")
-                  .sortWithinPartitions("dst", "src"))
+        both_p = matrix_mod.dst_layout(bidx.edges, n_part)
         spool_kernel = energy_mod._make_spool_step_kernel(
             "x.npy", "sids.npy", 0.05, "item_id", "features")
         dump_plan("diffuse_distributed_step", both_p.mapInPandas(

@@ -21,6 +21,17 @@ from .test_lsh_recall import SF_DIR
 GP = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
 
 
+def _corpus(spark, n=700, f=24, seed=3):
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((5, f))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    X = centers[rng.integers(0, 5, n)] + 0.08 * rng.standard_normal((n, f))
+    X *= 12.0
+    return spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(n)],
+        schema="item_id long, features array<double>")
+
+
 @pytest.fixture(scope="module")
 def edges(test0_items_df):
     return knn_ops.knn_edges(test0_items_df, GP, strategy="exact").persist()
@@ -426,3 +437,78 @@ def test_search_energy_rejects_duplicate_or_null_query_ids(energy_index,
     Q = _sf_queries(energy_index, 2)
     with pytest.raises(ValueError, match="duplicate or null query_id"):
         E.search_energy(energy_index, Q, k=3, query_ids=qids)
+
+
+# ---- the distributed diffusion tier against the driver tier ----
+
+
+def test_diffuse_chunked_matches_driver_at_sf0001(spark, sf_items,
+                                                  monkeypatch):
+    """Distributed spool tier vs exact driver tier on a REAL graph
+    (500 items, sf0.001 embeddings), 2 steps: both tiers run one exact
+    fp64 step in one segment order, so they are equal. (The name
+    predates the removal of feature chunking; the sf0.001 pin it
+    carried is kept.)"""
+    gp = GraphParams(eps=0.9, k=10, topk=5, p=2.0)
+    edges = knn_ops.knn_edges(sf_items, gp, strategy="exact")
+    a = E.diffuse(sf_items, edges, eta=0.05, steps=2)
+    got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    info: dict = {}
+    b = E.diffuse(sf_items, edges, eta=0.05, steps=2, info=info)
+    got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
+    assert info["plan"] == "spool"
+    assert set(got_a) == set(got_b)
+    for i in got_a:
+        assert np.array_equal(got_a[i], got_b[i]), i
+
+
+def test_diffuse_distributed_default_fp32(spark, test0_items_df,
+                                          monkeypatch):
+    """The distributed tier's DEFAULT plan, run for several steps, must
+    equal the driver tier's: both run one exact fp64 step in one
+    segment order. (The name predates the removal of the fp32 message
+    default; the 3-step default-path pin it carried is kept.)"""
+    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
+    edges = knn_ops.knn_edges(test0_items_df, gp, strategy="exact")
+    a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
+    got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    info: dict = {}
+    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3, info=info)
+    got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
+    assert info["tier"] == "distributed"
+    assert set(got_a) == set(got_b)
+    for i in got_a:
+        assert np.array_equal(got_a[i], got_b[i]), i
+
+
+def test_fp32_messages_high_degree_star(spark, monkeypatch):
+    """High-degree pin (the name predates the removal of fp32
+    messages): on a deg=299 star the distributed spool tier sums the
+    hub's 299 contributions in fp64, so one step matches the exact
+    numpy step at rtol 1e-9 on the hub and every leaf."""
+    rng = np.random.default_rng(11)
+    n, f = 300, 8
+    X = rng.standard_normal((n, f))
+    items = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(n)],
+        schema="item_id long, features array<double>")
+    w = rng.uniform(0.5, 1.0, n - 1)
+    edges = spark.createDataFrame(
+        [(0, j, float(w[j - 1])) for j in range(1, n)],
+        schema="src long, dst long, weight double")
+    eta = 0.001  # keep the hub update contractive at deg≈300
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    info: dict = {}
+    out = E.diffuse(items, edges, eta, steps=1, info=info)
+    assert info["plan"] == "spool"
+    got = np.stack([r["features"] for r in
+                    out.orderBy("item_id").collect()])
+    # exact fp64: x' = x − η(Dx − Wx)
+    W = np.zeros((n, n))
+    W[0, 1:] = w
+    W[1:, 0] = w
+    deg = W.sum(axis=1)
+    exact = X - eta * (deg[:, None] * X - W @ X)
+    np.testing.assert_allclose(got, exact, rtol=1e-9)

@@ -17,6 +17,7 @@ from pyarrowspace_spark.functions import stats
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.operators import lambda_index as L
+from pyarrowspace_spark.operators import search as search_mod
 from pyarrowspace_spark.params import EnergyParams, GraphParams
 
 from .test_lsh_recall import SF_DIR
@@ -230,10 +231,7 @@ def test_small_driver_frames_skip_python_rows(spark, sf_items, monkeypatch):
 
 def test_driver_components_match_the_spark_pass(spark, sf_items):
     """Contract: on the same L_F the driver pass's (e_raw, g) and τ are
-    the Spark λ pass's. e_raw and τ are equal; g agrees within 1e-15
-    relative — its two matrix-vector products round the trailing rows
-    of a BLAS call differently, so g moves with the Arrow batch layout
-    and BLAS threads in the Spark pass itself."""
+    the Spark λ pass's, with ==."""
     edges = K.knn_edges(sf_items, GP, strategy="exact").persist()
     lf = L.feature_laplacian(sf_items, edges, 64)
     comp, median = L.components_with_median(sf_items, lf, None)
@@ -245,8 +243,64 @@ def test_driver_components_match_the_spark_pass(spark, sf_items):
     assert pdf["item_id"].tolist() == s_ids.tolist()
     assert e_raw.tolist() == pdf["e_raw"].tolist()
     assert tau == median == stats.exact_percentile(pdf["e_raw"], 0.5)
-    assert np.max(np.abs(g - pdf["g"].to_numpy())) <= 1e-15 * np.max(g)
+    assert g.tolist() == pdf["g"].tolist()
     comp.unpersist()
+    edges.unpersist()
+
+
+def test_lambda_does_not_move_with_the_layout(spark, sf_items):
+    """Contract: an item's (e_raw, g, λ) does not depend on the rows it
+    is computed with. The Spark λ pass gives == values at
+    maxRecordsPerBatch 1, 7 and the default, over 1 and 4 partitions;
+    the driver pass gives the same, also from a shuffled edge frame;
+    a query searched alone gets the λ and scores it gets among 49
+    others. This rests on the BLAS build: at one thread count its
+    dgemm rounds a row alike in any even-row call. A multi-threaded
+    dgemm rounds differently from a single-threaded one, so the driver
+    pass runs in a Python worker here, at the λ pass's thread count;
+    the query λ calls are below OpenBLAS's threading size."""
+    edges = K.knn_edges(sf_items, GP, strategy="exact").persist()
+    lf = L.feature_laplacian(sf_items, edges, 64)
+    tau = 0.62
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    want = None
+    for parts in (1, 4):
+        for batch in ("1", "7", default):
+            spark.conf.set(key, batch)
+            try:
+                got = (L.with_lambda(sf_items.repartition(parts), lf, tau)
+                       .select("item_id", "e_raw", "g", "lambda")
+                       .toPandas().sort_values("item_id"))
+            finally:
+                spark.conf.set(key, default)
+            got = [got[c].tolist() for c in ("item_id", "e_raw", "g",
+                                             "lambda")]
+            if want is None:
+                want = got
+            assert got == want, (parts, batch)
+    s_ids, X = M.collect_id_matrix(sf_items.orderBy("item_id"), "item_id",
+                                   "features")
+    assert s_ids.tolist() == want[0]
+    epdf = edges.select("src", "dst", "weight").toPandas()
+    shuffled = spark.createDataFrame(
+        epdf.sample(frac=1.0, random_state=5).reset_index(drop=True))
+    lf_shuffled = L.feature_laplacian(sf_items, shuffled, 64)
+    assert np.array_equal(lf_shuffled, lf)
+    for m in (lf, lf_shuffled):
+        e_raw, g, _ = spark.sparkContext.parallelize([0], 1).map(
+            lambda _, m=m: L.driver_components(X, m)).collect()[0]
+        assert e_raw.tolist() == want[1] and g.tolist() == want[2]
+    Q = X[:50] * 1.05
+    lam = L.lambda_for_vectors(Q, lf, tau)
+    among = search_mod.search(sf_items, lf, Q, tau, 5).toPandas()
+    for j in (0, 17, 49):
+        assert L.lambda_for_vectors(Q[j:j + 1], lf, tau).tolist() == [lam[j]]
+        alone = search_mod.search(sf_items, lf, Q[j:j + 1], tau, 5
+                                  ).toPandas().sort_values("rank")
+        mine = among[among["query_id"] == j].sort_values("rank")
+        assert alone["item_id"].tolist() == mine["item_id"].tolist()
+        assert alone["score"].tolist() == mine["score"].tolist()
     edges.unpersist()
 
 

@@ -30,7 +30,7 @@ from pyarrowspace_spark.params import EnergyParams, GraphParams
 from pyarrowspace_spark.sources.loaders import items_from_embeddings
 
 from .test_lsh_recall import SF_DIR
-from .test_r13opt import _corpus
+from .test_energy import _corpus
 
 EDGE_SCHEMA = "src long, dst long, weight double"
 # the tiny test0 corpus's graph and energy params
@@ -186,8 +186,9 @@ def test_driver_diffusion_rejects_duplicate_ids(spark):
 
 
 def test_driver_diffusion_equals_matvec_loop(spark):
-    """Pin: driver diffusion through `segment_sum` equals, with ==, the
-    per-destination matvec loop it ran inline before, on sf0.001."""
+    """Pin: driver diffusion through `segment_sum` equals, with ==, a
+    per-destination matvec loop over the edges in (dst, src) order, on
+    sf0.001."""
     from pyarrowspace_spark.operators import knn as K
 
     items = items_from_embeddings(spark, SF_DIR).select(
@@ -198,12 +199,12 @@ def test_driver_diffusion_equals_matvec_loop(spark):
     out = E._diffuse_driver(items, edges, eta, steps, "item_id",
                             "features").toPandas().sort_values("item_id")
     ids, X = _id_sorted(*M.collect_id_matrix(items, "item_id", "features"))
-    epdf = E._symmetrize(edges).toPandas()
+    epdf = M.both_directions(edges).toPandas()
     sids, order = M.sorted_index(ids)
     src = M.positions_of(epdf["src"].to_numpy(np.int64), sids, order)
     dst = M.positions_of(epdf["dst"].to_numpy(np.int64), sids, order)
     w = epdf["weight"].to_numpy(np.float64)
-    order = np.argsort(dst, kind="stable")
+    order = np.lexsort((src, dst))
     src, dst, w = src[order], dst[order], w[order]
     udst, starts = np.unique(dst, return_index=True)
     bounds = np.append(starts, len(dst))
@@ -435,7 +436,7 @@ def test_spool_tier_multi_host_needs_scratch(spark, test0_items_df,
 
 def test_spool_tier_failure_removes_spool(spark, test0_items_df,
                                           monkeypatch, tmp_path):
-    """Contract: a failure in the edge-partials kernel leaves no spool
+    """Contract: a failure in the L_F partition kernel leaves no spool
     dir under the scratch dir and no registration in
     matrix._SCRATCH_DIRS."""
     edges = spark.createDataFrame([(0, 1, 0.5), (2, 3, 0.4)], EDGE_SCHEMA)
@@ -444,17 +445,46 @@ def test_spool_tier_failure_removes_spool(spark, test0_items_df,
 
     def _boom_factory(*a, **k):
         def kernel(batches):
-            raise RuntimeError("injected edge-partials failure")
+            raise RuntimeError("injected L_F kernel failure")
             yield  # pragma: no cover - makes this a generator
 
         return kernel
 
-    monkeypatch.setattr(L, "_make_edge_partials_kernel", _boom_factory)
+    monkeypatch.setattr(L, "_make_laplacian_kernel", _boom_factory)
     before = list(M._SCRATCH_DIRS)
-    with pytest.raises(Exception, match="injected edge-partials failure"):
+    with pytest.raises(Exception, match="injected L_F kernel failure"):
         L.feature_laplacian(test0_items_df, edges, 24)
     assert _lfx_dirs(tmp_path) == []
     assert M._SCRATCH_DIRS == before
+
+
+def test_spool_tier_plan_is_one_dst_partitioned_kernel(spark, monkeypatch):
+    """Plan pin: the spool tier's jobs hold no HashAggregate (each
+    partition's segments carry their own degrees, so no degree
+    aggregate runs) and exactly one mapInPandas over the edges
+    hash-partitioned by dst (`matrix.dst_layout`)."""
+    ids, X = _matrix(60, 6, seed=3)
+    items = _items(spark, ids, X)
+    graph = _graph(ids, "isolated")
+    edges = spark.createDataFrame(graph, EDGE_SCHEMA)
+    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
+    plans = []
+    cls = type(items)
+    real = cls.toPandas
+
+    def _spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self)
+
+    monkeypatch.setattr(cls, "toPandas", _spy)
+    lf = L.feature_laplacian(items, edges, 6, counts=(60, len(graph)))
+    monkeypatch.undo()
+    assert [p for p in plans if "HashAggregate" in p] == []
+    kernels = [p for p in plans if "hashpartitioning(dst" in p]
+    assert len(kernels) == 1 and kernels[0].count("MapInPandas") == 1
+    ref = _dense_lf(ids, X, graph)
+    np.testing.assert_allclose(lf, ref, rtol=1e-12,
+                               atol=1e-12 * np.abs(ref).max())
 
 
 def _held_spools() -> set:
@@ -496,8 +526,8 @@ def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
     """The spool tier is BITWISE equal from each of `spool.write`'s
     three sources — the corpus parquet scan, the task scatter and the
     parquet copy of multi-host masters (same id-sorted storage, same
-    sorted edge scan, same fp64 accumulation — only the spool's
-    producer differs)."""
+    edge layout, same fp64 accumulation — only the spool's producer
+    differs)."""
     p, _ = _write_corpus(spark, tmp_path, n=220, f=8)
     items = spark.read.parquet(p).select("item_id", "features")
     gp = GraphParams(eps=0.9, k=5, topk=5, p=2.0, sigma=0.2)
@@ -612,8 +642,9 @@ def test_probe_worker_visible(spark, tmp_path):
 
 
 def test_gather_diag_hoist_matches_driver_tier(spark):
-    """feature_laplacian's gather tier (diagonal now one driver gemm +
-    SQL degree aggregate) still agrees with the driver-BLAS tier."""
+    """feature_laplacian's spool tier (one partial per dst partition,
+    with the degrees from its own segments) still agrees with the
+    driver-BLAS tier."""
     items = _corpus(spark, n=300, f=16, seed=11)
     gp = GraphParams(eps=0.9, k=6, topk=6, p=2.0)
     edges = K.knn_edges(items, gp, strategy="exact").persist()

@@ -89,6 +89,7 @@ print("RESULT " + json.dumps({
     "lam_sum": lam_sum,
     "scatter_err": scatter_err,
     "copy_err": copy_err,
+    "scatter_eq_copy": bool(np.array_equal(lf_scatter, lf_copy)),
     "d_sum": d_sum,
 }))
 spark.stop()
@@ -113,9 +114,12 @@ def test_local_cluster_distributed_tiers(spark):
     assert got["master"].startswith("local-cluster")
 
     # The spool tier agreed with the driver tier inside the cluster
-    # session, from both of its X sources
+    # session, from both of its X sources, and the two sources gave
+    # the same bits: the spools hold the same bytes, and each partial's
+    # sum order is fixed by the (dst, src) layout
     assert got["scatter_err"] < 1e-9
     assert got["copy_err"] < 1e-9
+    assert got["scatter_eq_copy"]
 
     # Values identical to the same computation on this local[*] session
     from pyarrowspace_spark.builder import ArrowSpaceBuilder

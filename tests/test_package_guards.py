@@ -205,3 +205,35 @@ def test_spool_files_only_in_spool_module():
                             ("dict", "Dict")))):
                 bad.append(f"{path.name}:{node.lineno} module-level dict")
     assert bad == []
+
+
+def test_one_neighbour_combine():
+    """Guard: `functions/matrix.py` holds the package's one
+    per-destination combine (`segment_sum`) and its one edge layout
+    (`dst_layout`): no other module takes a per-segment matvec
+    `w[s:e] @ …` or sorts a partition by ("dst", "src"), and the edge
+    partials kernel and the per-operator orientation helpers are gone."""
+    segment_matvecs, layouts, gone = [], [], []
+    for path, tree in _trees(PKG):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.BinOp)
+                    and isinstance(node.op, ast.MatMult)
+                    and isinstance(node.left, ast.Subscript)
+                    and isinstance(node.left.slice, ast.Slice)):
+                segment_matvecs.append(f"{rel}:{node.lineno}")
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "sortWithinPartitions"
+                    and [ast.unparse(a) for a in node.args]
+                    == ["'dst'", "'src'"]):
+                layouts.append(rel)
+            if (getattr(node, "name", None) or getattr(node, "attr", None)
+                    or getattr(node, "id", None)) in (
+                    "_make_edge_partials_kernel", "_symmetrize",
+                    "_both_dirs"):
+                gone.append(f"{rel}:{node.lineno}")
+    assert {p.split(":")[0] for p in segment_matvecs} <= {
+        "functions/matrix.py"}, segment_matvecs
+    assert layouts == ["functions/matrix.py"]
+    assert gone == []

@@ -1,14 +1,12 @@
 """Round-10 contract pins: build_energy normalise=True scale parity
-(the round-9 fix shipped untested — VERDICT r9 'What's wrong' #1),
-extend_energy check_ids probes, and distributed-vs-driver diffusion
-parity on the sf0.001 graph. The extend-then-search roundtrip lives in
-test_energy.py."""
+(the round-9 fix shipped untested — VERDICT r9 'What's wrong' #1) and
+extend_energy check_ids probes. The extend-then-search roundtrip and
+the distributed-vs-driver diffusion pins live in test_energy.py."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pyarrowspace_spark.functions import matrix as M
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.params import EnergyParams, GraphParams
 
@@ -85,47 +83,3 @@ def test_extend_energy_check_ids(spark, sf_items):
         idx.extend(dup_batch, check_ids=True)
     # default off: the caller's contract, no probe, append proceeds
     assert idx.extend(clash).items.count() == idx.items.count() + 1
-
-
-def test_diffuse_chunked_matches_driver_at_sf0001(spark, sf_items,
-                                                  monkeypatch):
-    """Distributed spool tier vs exact driver tier on a REAL graph
-    (500 items, sf0.001 embeddings), 2 steps: both tiers are exact
-    fp64, so they agree to fp noise. (The name predates the removal of
-    feature chunking; the sf0.001 pin it carried is kept.)"""
-    from pyarrowspace_spark.operators.knn import knn_edges
-
-    gp = GraphParams(eps=0.9, k=10, topk=5, p=2.0)
-    edges = knn_edges(sf_items, gp, strategy="exact")
-    a = E.diffuse(sf_items, edges, eta=0.05, steps=2)
-    got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
-    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    info: dict = {}
-    b = E.diffuse(sf_items, edges, eta=0.05, steps=2, info=info)
-    got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
-    assert info["plan"] == "spool"
-    assert set(got_a) == set(got_b)
-    for i in got_a:
-        np.testing.assert_allclose(got_a[i], got_b[i], rtol=1e-9)
-
-
-def test_diffuse_distributed_default_fp32(spark, test0_items_df,
-                                          monkeypatch):
-    """The distributed tier's DEFAULT plan, run for several steps, must
-    agree with the driver tier. Both tiers are now exact fp64, so the
-    bound is fp noise. (The name predates the removal of the fp32
-    message default; the 3-step default-path pin it carried is kept.)"""
-    from pyarrowspace_spark.operators.knn import knn_edges
-
-    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
-    edges = knn_edges(test0_items_df, gp, strategy="exact")
-    a = E.diffuse(test0_items_df, edges, eta=0.1, steps=3)
-    got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
-    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    info: dict = {}
-    b = E.diffuse(test0_items_df, edges, eta=0.1, steps=3, info=info)
-    got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
-    assert info["tier"] == "distributed"
-    assert set(got_a) == set(got_b)
-    for i in got_a:
-        np.testing.assert_allclose(got_a[i], got_b[i], rtol=1e-9)

@@ -6,11 +6,10 @@
 - `lsh_plan` / LSH build record diagnostics surface (finding 2): the
   grouped-stage record is the `info` dict `knn_edges` fills and the
   index's `lsh_build_info`, no module-global breadcrumb.
-- diffusion on a HIGH-DEGREE graph (verdict gap 3): a star hub of
-  degree 299 through the distributed tier, exact fp64 vs numpy.
 
 The fp64 half of the gather-tier pin and the worker-visibility probe
-of the spool scratch rule live in tests/test_lambda.py.
+of the spool scratch rule live in tests/test_lambda.py; the
+high-degree star diffusion pin lives in tests/test_energy.py.
 """
 
 import os
@@ -21,8 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
-from pyarrowspace_spark.functions import matrix as M
-from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
 
@@ -127,37 +124,6 @@ def test_spool_projection_per_group_not_per_band(spark, monkeypatch):
     assert edges.count() > 0
     assert s is not None and s["n_groups"] >= 2
     assert items is not None
-
-
-def test_fp32_messages_high_degree_star(spark, monkeypatch):
-    """High-degree pin (the name predates the removal of fp32
-    messages): on a deg=299 star the distributed spool tier sums the
-    hub's 299 contributions in fp64, so one step matches the exact
-    numpy step at rtol 1e-9 on the hub and every leaf."""
-    rng = np.random.default_rng(11)
-    n, f = 300, 8
-    X = rng.standard_normal((n, f))
-    items = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(n)],
-        schema="item_id long, features array<double>")
-    w = rng.uniform(0.5, 1.0, n - 1)
-    edges = spark.createDataFrame(
-        [(0, j, float(w[j - 1])) for j in range(1, n)],
-        schema="src long, dst long, weight double")
-    eta = 0.001  # keep the hub update contractive at deg≈300
-    monkeypatch.setattr(M, "DRIVER_BUDGET_BYTES", 0)
-    info: dict = {}
-    out = E.diffuse(items, edges, eta, steps=1, info=info)
-    assert info["plan"] == "spool"
-    got = np.stack([r["features"] for r in
-                    out.orderBy("item_id").collect()])
-    # exact fp64: x' = x − η(Dx − Wx)
-    W = np.zeros((n, n))
-    W[0, 1:] = w
-    W[1:, 0] = w
-    deg = W.sum(axis=1)
-    exact = X - eta * (deg[:, None] * X - W @ X)
-    np.testing.assert_allclose(got, exact, rtol=1e-9)
 
 
 def test_synth_tmp_name_unique(tmp_path):
