@@ -23,9 +23,13 @@ which read the one edge layout `dst_layout` through
 from __future__ import annotations
 
 import atexit
+import contextlib
+import ctypes
+import glob
 import os
 import shutil
 import tempfile
+import threading
 from typing import NamedTuple
 
 import numpy as np
@@ -536,6 +540,61 @@ def segment_sum(X: np.ndarray, seg: DstSegments) -> np.ndarray:
                 c1 = min(c + cap, e)
                 out[udst[i]] += w[c:c1] @ X[src[c:c1]]
     return out
+
+
+def _openblas_threads():
+    """(get, set) of the thread count of the OpenBLAS that numpy's
+    wheel bundles, or None where there is none (another BLAS, or a
+    numpy built against a system library)."""
+    libs = os.path.join(os.path.dirname(np.__file__), os.pardir, "numpy.libs")
+    for path in sorted(glob.glob(os.path.join(libs, "lib*openblas*.so*"))):
+        lib = ctypes.CDLL(path)
+        for name in ("scipy_openblas_%s_num_threads64_",
+                     "openblas_%s_num_threads64_", "openblas_%s_num_threads"):
+            get = getattr(lib, name % "get", None)
+            put = getattr(lib, name % "set", None)
+            if get is not None and put is not None:
+                return get, put
+    return None
+
+
+class _BlasPin:
+    """The process's one-thread pin: how many callers hold it and the
+    pool width it restores."""
+    api = _openblas_threads()
+    lock = threading.Lock()
+    depth = 0
+    saved = 1
+
+
+@contextlib.contextmanager
+def one_blas_thread():
+    """Run the block on one OpenBLAS thread, the count PySpark gives
+    its Python workers (OMP_NUM_THREADS = spark.task.cpus): a dgemm
+    split over threads rounds some rows differently from a one-thread
+    dgemm, so a driver pass on a wider pool would not give the Spark
+    pass's values. The pool is shared by the process, so overlapping
+    callers pin it once and the last one out restores it. Yields the
+    pool's width outside the pin (1 where the BLAS is not found)."""
+    pin = _BlasPin
+    if pin.api is None:
+        yield 1
+        return
+    get, put = pin.api
+    with pin.lock:
+        if pin.depth == 0:
+            pin.saved = get()
+            if pin.saved != 1:
+                put(1)
+        pin.depth += 1
+        width = pin.saved
+    try:
+        yield width
+    finally:
+        with pin.lock:
+            pin.depth -= 1
+            if pin.depth == 0 and pin.saved != 1:
+                put(pin.saved)
 
 
 def both_directions(edges: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ Arrow-batched vectorized map. No N×N materialization anywhere.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
@@ -206,12 +207,20 @@ def lambda_kernel(X: np.ndarray, LF: np.ndarray, tau: float,
     float summation order differs from the naive edge loop.
 
     A row's values do not depend on the other rows of the call (the
-    Arrow batch, the driver block or the query mix) at one BLAS thread
-    count: the products with a vector are einsum loops, not BLAS
-    matrix-vector calls, which round a call's trailing rows
+    Arrow batch, the driver block or the query mix) nor on the caller's
+    BLAS pool: the matrix products run on one OpenBLAS thread
+    (`matrix.one_blas_thread`), the products with a vector are einsum loops,
+    not BLAS matrix-vector calls, which round a call's trailing rows
     differently, and an odd X gets a copy of its last row, since this
     OpenBLAS build's dgemm rounds an odd trailing row as a gemv does.
     """
+    with matrix.one_blas_thread():
+        return _lambda_rows(X, LF, tau, w_pos)
+
+
+def _lambda_rows(X: np.ndarray, LF: np.ndarray, tau: float,
+                 w_pos: np.ndarray | None
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     n = len(X)
     if n % 2:
         X = np.concatenate([X, X[-1:]])
@@ -252,13 +261,24 @@ def driver_components(X: np.ndarray, lf: np.ndarray
     """The driver passes' λ pass up to the blend: (e_raw, g) of every
     row of X by `lambda_kernel` in `DRIVER_BLOCK` row blocks, and
     τ_synth, their e_raw median by `stats.exact_percentile` — the
-    values `components_with_median` computes in Spark."""
+    values `components_with_median` computes in Spark. Each block is
+    cut into one slice per thread of the caller's BLAS pool, run on a
+    Python thread pool with BLAS on one thread: the slices, not the
+    dgemm, share the cores, so the pass keeps the pool's speed and no
+    row's rounding moves with its width."""
     n, blk = len(X), DRIVER_BLOCK
     e_raw, g = np.empty(n), np.empty(n)
-    for b in range(0, n, blk):
+
+    def run(lo: int, hi: int) -> None:
         # tau only scales e_bounded/S — e_raw and g don't depend on it
-        e_raw[b:b + blk], g[b:b + blk], _ = lambda_kernel(
-            X[b:b + blk], lf, tau=1.0)
+        e_raw[lo:hi], g[lo:hi], _ = lambda_kernel(X[lo:hi], lf, tau=1.0)
+
+    with matrix.one_blas_thread() as width, ThreadPoolExecutor(width) as pool:
+        step = -(-blk // width)
+        for b in range(0, n, blk):
+            end = min(b + blk, n)
+            list(pool.map(run, range(b, end, step),
+                          [min(lo + step, end) for lo in range(b, end, step)]))
     return e_raw, g, stats.exact_percentile(e_raw, 0.5)
 
 

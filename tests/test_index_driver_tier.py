@@ -99,6 +99,24 @@ def test_in_ball_topk_matches_the_row_loop():
         assert got == sorted(_row_loop_topk(dist, bad, k))
 
 
+def test_driver_pass_rows_do_not_move_with_the_blas_pool():
+    """Contract: the driver λ pass, split over the caller's BLAS pool,
+    gives each row the values `lambda_kernel` gives it in 7-row calls,
+    with ==, and leaves the pool's width as it found it."""
+    rng = np.random.default_rng(3)
+    X = rng.standard_normal((2 * L.DRIVER_BLOCK + 37, 96))
+    A = rng.standard_normal((96, 96))
+    lf = A @ A.T
+    api = M._BlasPin.api
+    width = api[0]() if api else None
+    e_raw, g, _ = L.driver_components(X, lf)
+    assert (api[0]() if api else None) == width
+    for lo in range(0, len(X), 7):
+        e7, g7, _ = L.lambda_kernel(X[lo:lo + 7], lf, tau=1.0)
+        assert e_raw[lo:lo + 7].tolist() == e7.tolist()
+        assert g[lo:lo + 7].tolist() == g7.tolist()
+
+
 def test_lsh_u_spool_from_non_scan_frame(spark, sf_items, tmp_path,
                                          monkeypatch):
     """Contract: an LSH build over a frame that is not a proven parquet
